@@ -111,29 +111,34 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _session_key(spark: SparkSession) -> str:
-    """Cache key for per-session memoization: the Spark applicationId is
-    unique per SparkContext lifetime, unlike id(spark), which a GC'd
-    session's successor can in principle reuse (round-2 verdict nit)."""
-    return spark.sparkContext.applicationId
+_SESSION_MEMO: dict[tuple, object] = {}
 
 
-_CRAWL_CACHE: dict[tuple[str, str, int], object] = {}
-_FL_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _session_memo(spark: SparkSession, name: str, key: tuple, build):
+    """`build()` once per (name, session, *key), then the stored value: the
+    flagship crawl and the persisted indexes feed several queries() entries
+    and repeated runs in one session. The session part of the key is the
+    Spark applicationId — unique per SparkContext lifetime, unlike id(spark),
+    which a GC'd session's successor can in principle reuse (round-2 verdict
+    nit) — so a cached DataFrame never outlives the session that created
+    it."""
+    memo_key = (name, spark.sparkContext.applicationId, *key)
+    if memo_key not in _SESSION_MEMO:
+        _SESSION_MEMO[memo_key] = build()
+    return _SESSION_MEMO[memo_key]
 
 
 def _flagship_tables(spark: SparkSession, sf_dir: str, max_depth: int = 2):
-    """The flagship crawl feeds several queries() entries; run it once per
-    (session, sf_dir, max_depth) — the output tables are deterministic
-    parquet, so reuse is sound; keying on the applicationId keeps a cached
-    DataFrame from outliving the SparkSession that created it."""
-    key = (_session_key(spark), sf_dir, max_depth)
-    if key not in _CRAWL_CACHE:
-        from crawler_german_localpoliticans_spark.sources.webcorpus import run_flagship_crawl
+    """The flagship crawl, run once per (session, sf_dir, max_depth) — the
+    output tables are deterministic parquet, so reuse is sound."""
+    from crawler_german_localpoliticans_spark.sources.webcorpus import run_flagship_crawl
 
-        tables, _ = run_flagship_crawl(spark, sf_dir, max_depth=max_depth)
-        _CRAWL_CACHE[key] = tables
-    return _CRAWL_CACHE[key]
+    return _session_memo(
+        spark,
+        "crawl",
+        (sf_dir, max_depth),
+        lambda: run_flagship_crawl(spark, sf_dir, max_depth=max_depth)[0],
+    )
 
 
 def _q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,7 +192,6 @@ def _q_found_links_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_from_documents,
     )
 
-    pages, _, _ = corpus_from_documents(spark, sf_dir)
     # Optimization barrier (with_found_links docstring): exploding its
     # output directly lets InferFiltersFromGenerate push an inferred
     # size()>0 filter down BY SUBSTITUTION, duplicating the whole
@@ -195,14 +199,15 @@ def _q_found_links_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 5x). Persist the pruned (url, fl) projection — html is
     # dropped so the cache holds only the link arrays — and explode from
     # the InMemoryRelation, which the rule cannot see through. The cache
-    # entry is SESSION-SCOPED (keyed like _IVF_CACHE): rebuilding the query
-    # in a long-lived session reuses the one persisted projection instead
-    # of leaking a fresh one per call.
-    key = (_session_key(spark), sf_dir)
-    if key not in _FL_CACHE:
-        out = with_found_links(pages, "url", "html", "fl")
-        _FL_CACHE[key] = out.select("url", "fl").persist()
-    return _FL_CACHE[key].select("url", F.explode("fl").alias("link"))
+    # entry is SESSION-SCOPED (_session_memo): rebuilding the query in a
+    # long-lived session reuses the one persisted projection instead of
+    # leaking a fresh one per call.
+    def build():
+        pages, _, _ = corpus_from_documents(spark, sf_dir)
+        return with_found_links(pages, "url", "html", "fl").select("url", "fl").persist()
+
+    fl = _session_memo(spark, "found_links", (sf_dir,), build)
+    return fl.select("url", F.explode("fl").alias("link"))
 
 
 def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -403,9 +408,6 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.select("id", _e6(F.col("score")).alias("score_e6"))
 
 
-_LSH_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH ANN with the index built ONCE per (session, sf_dir): the
     bucketed vector table persists (bucket = partition key in production =>
@@ -418,13 +420,13 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_lsh_bucket,
     )
 
-    key = (_session_key(spark), sf_dir)
-    if key not in _LSH_CACHE:
+    def build():
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         bucketed = with_lsh_bucket(emb, "embedding", dim=64, n_planes=8).persist()
         bucketed.count()
-        _LSH_CACHE[key] = bucketed
-    bucketed = _LSH_CACHE[key]
+        return bucketed
+
+    bucketed = _session_memo(spark, "ann_lsh", (sf_dir,), build)
     q = _query_vec(spark, sf_dir)
     cand = bucketed.where(F.col("bucket") == query_bucket(q, n_planes=8, dim=64))
     return cosine_topk_bruteforce(cand, "vec_id", "embedding", q, k=5).select(
@@ -872,9 +874,6 @@ def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index built ONCE per (session, sf_dir) — persisted assigned table
     + centroid metadata, then probed; the KMeans fit never runs on the query
@@ -901,30 +900,27 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_index(spark: SparkSession, sf_dir: str):
     from crawler_german_localpoliticans_spark.operators.similarity import ivf_build
 
-    key = (_session_key(spark), sf_dir)
-    if key not in _IVF_CACHE:
+    def build():
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         assigned, centroids = ivf_build(emb, "vec_id", "embedding", n_cells=8)
         assigned = assigned.persist()
         assigned.count()
-        _IVF_CACHE[key] = (assigned, centroids)
-    return _IVF_CACHE[key]
+        return assigned, centroids
 
-
-_IVF_SEEDED_CACHE: dict[tuple[str, str], tuple] = {}
+    return _session_memo(spark, "ivf", (sf_dir,), build)
 
 
 def _ivf_seeded_index(spark: SparkSession, sf_dir: str):
     from crawler_german_localpoliticans_spark.operators.similarity import ivf_build_seeded
 
-    key = (_session_key(spark), sf_dir)
-    if key not in _IVF_SEEDED_CACHE:
+    def build():
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         assigned, centroids = ivf_build_seeded(emb, "vec_id", "embedding", "label")
         assigned = assigned.persist()
         assigned.count()
-        _IVF_SEEDED_CACHE[key] = (assigned, centroids)
-    return _IVF_SEEDED_CACHE[key]
+        return assigned, centroids
+
+    return _session_memo(spark, "ivf_seeded", (sf_dir,), build)
 
 
 def _q_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,14 +4,16 @@ reference: worker_config.toml (max_depth=2 :17, politeness_delay_ms=2000 :21,
 concurrent_tasks=4 :24, keywords :28-35), src/main.rs:47 (user agent),
 :615-617 (SAVE_ALL_HTML override).
 
-Scale knobs (bloom sizing, partition counts, per-wave slice budget) are ours:
-they parameterize the same code paths from the sandbox's sf fixtures up to the
-10^10-URL posture demanded by BASELINE.json.
+Scale knobs (bloom sizing, partition counts, per-wave slice budget, hot-host
+salting) are ours: they size the one crawl path from the sf fixtures up to the
+10^10-URL posture demanded by BASELINE.json. None of them selects a second
+code path: the bloom prefilter always runs and every wave is fetched and
+written as one batch.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from .functions.keywords import DEFAULT_KEYWORDS
 from .functions.robots import DEFAULT_USER_AGENT
@@ -37,19 +39,14 @@ class CrawlConfig:
     broadcast_policies_max_hosts: int = 1_000_000
     bloom_capacity_per_partition: int = 1 << 17
     bloom_fpp: float = 0.01
-    use_bloom_prefilter: bool = True
-    # politeness wave-slicing: when >0, each BFS depth wave is fetched in
-    # slices capped at ceil(slice_budget_ms / effective_delay_ms) pages per
-    # host per slice; expansion is committed only once the whole wave is
-    # fetched, so (depth, seq) parity with the reference is preserved
+    # politeness wave-slicing: when >0, each BFS depth wave's schedule is cut
+    # into slices capped at ceil(slice_budget_ms / effective_delay_ms) pages
+    # per host per slice (reported as politeness.slices); the wave is still
+    # fetched as one batch and expansion is committed only once the whole
+    # wave is fetched, so (depth, seq) parity with the reference is preserved
     slice_budget_ms: int = 0
     # per-host hard cap per slice as a skew guard (0 = unlimited)
     max_pages_per_host_per_slice: int = 0
-    # execute each wave slice-by-slice (sequential fetch materialization in
-    # politeness order) instead of as one batch; results are identical
-    # either way (expansion is depth-synchronized) — this mode makes the
-    # crawl-delay budget operationally gate the fetch work
-    execute_by_slice: bool = False
     # hot-host skew salting for the politeness window (plans/politeness.py):
     # 1 = exact single-window schedule (reference-faithful slot order);
     # >1 = salted two-phase slots for hosts with massive waves — crawl

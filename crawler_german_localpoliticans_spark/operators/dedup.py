@@ -7,12 +7,12 @@ operator here is shuffle-conscious:
 
 - exact: one hash-groupBy on md5(text) — map-side partial aggregation, one
   shuffle, keeps the min doc_id per group (deterministic representative);
-- MinHash: signatures come from an Arrow-batched numpy kernel (default) — a
+- MinHash: signatures come from an Arrow-batched numpy kernel — a
   SHUFFLE-FREE map pass producing byte-identical values to the JVM
-  explode->crc32->64-min-aggregates form, which is kept as
-  `minhash_signatures` (engine="jvm") and measured ~20x slower at sf0.1
+  explode->crc32->64-min-aggregates form (kept only as the tests' parity
+  reference, tests/dedup_reference.py; measured ~20x slower at sf0.1
   because its higher-order shingle expressions evaluate interpreted
-  per-element; LSH bands turn the quadratic pair search into an equi-join
+  per-element); LSH bands turn the quadratic pair search into an equi-join
   on (band, band_hash) buckets — the only pairs ever materialized are
   bucket collisions, which is what makes this run at 10^10 docs;
 - SimHash: 64-bit weighted bit votes in a vectorized pandas UDF, near-dup
@@ -20,8 +20,8 @@ operator here is shuffle-conscious:
   >=1 identical band), verified by exact Hamming distance;
 - n-gram Jaccard: exact verification operator (and small-scale oracle) —
   shingle equi-join, never a cross join;
-- embedding cosine: label-blocked BLAS gramian per block (applyInPandas),
-  with a streaming equi-join variant for unbounded blocks.
+- embedding cosine: label-blocked BLAS gramian per block (applyInPandas);
+  blocks (label / LSH bucket / IVF cell) are bounded by construction.
 
 Portability contract: all hash primitives are crc32 (zlib == JVM CRC32 ==
 Spark `F.crc32`), so the pytest oracle recomputes identical signatures in
@@ -119,29 +119,14 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_perm: int = NUM_PERM, k: int = 3
-) -> DataFrame:
-    """(id, sig array<long>) — 64 permutation minima over crc32 shingle
-    hashes, all JVM-side: explode -> crc32 -> one groupBy with num_perm
-    min() aggregates."""
-    sh = word_shingles(df, id_col, text_col, k)
-    h = sh.withColumn("h", F.crc32(F.encode(F.col("shingle"), "UTF-8")))
-    params = _permutation_params(num_perm)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"s{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    sigs = h.groupBy("id").agg(*aggs)
-    return sigs.select("id", F.array(*[f"s{i}" for i in range(num_perm)]).alias("sig"))
-
-
 def minhash_signatures_arrow(
     df: DataFrame, id_col: str, text_col: str, num_perm: int = NUM_PERM, k: int = 3
 ) -> DataFrame:
     """(id, sig array<long>) in ONE Arrow-batched map pass — byte-identical
-    to minhash_signatures (same crc32 + (a*x+b) mod p params, pinned by
-    tests/test_dedup.py) but with NO shingle explode and NO groupBy shuffle:
+    to the JVM explode -> crc32 -> min-aggregates form (same crc32 +
+    (a*x+b) mod p params, pinned by tests/test_dedup.py against
+    tests/dedup_reference.py) but with NO shingle explode and NO groupBy
+    shuffle:
     per doc, the shingle set is built in Python (zlib.crc32 is C), and all
     num_perm permutation minima fall out of a single numpy
     (num_perm, n_shingles) broadcast-min. Measured ~20x faster than the JVM
@@ -200,7 +185,7 @@ def minhash_signatures_xx(
     literal index, giving num_perm independent 64-bit functions directly
     (no (a*x+b) mod p permutation arithmetic, hence no modulus-width
     overflow concerns). All JVM-side: explode -> one groupBy with num_perm
-    min() aggregates, identical shuffle shape to minhash_signatures.
+    min() aggregates.
     XXH64 isn't recomputable in DuckDB/stdlib Python, so this family is
     verified by the planted-corpus invariant (identical text => identical
     signatures => detected == planted), not signature parity."""
@@ -431,7 +416,6 @@ def minhash_dedup_pairs(
     num_perm: int = NUM_PERM,
     k: int = 3,
     hash_family: str = "crc32",
-    engine: str | None = None,
     max_bucket_size: int | None = LSH_MAX_BUCKET,
     observation=None,
 ) -> DataFrame:
@@ -439,30 +423,18 @@ def minhash_dedup_pairs(
     signatures -> LSH buckets -> candidate pairs -> signature-agreement
     verification (fraction of equal components estimates Jaccard).
 
-    hash_family: "crc32" (default; Python/DuckDB-recomputable parity) or
-    "xxhash64" (64-bit family for >= ~1e9 distinct shingles — see the
-    module scale note).
-    engine: None picks the best available per family (crc32 -> "arrow",
-    the shuffle-free numpy kernel, ~20x faster with byte-identical
-    signatures; xxhash64 -> "jvm", its only implementation). Explicit
-    values are validated loudly — asking xxhash64 for the Arrow engine is
-    an error, never a silent fallback to the shuffling JVM path."""
-    if engine not in ("arrow", "jvm", None):
-        raise ValueError(f"unknown engine: {engine!r}")
+    hash_family: "crc32" (default; the shuffle-free Arrow kernel, with
+    Python/DuckDB-recomputable parity) or "xxhash64" (the JVM 64-bit family
+    for >= ~1e9 distinct shingles — see the module scale note)."""
     if hash_family == "crc32":
-        sig_fn = minhash_signatures if engine == "jvm" else minhash_signatures_arrow
+        sig_fn = minhash_signatures_arrow
     elif hash_family == "xxhash64":
-        if engine == "arrow":
-            raise ValueError(
-                "hash_family='xxhash64' has no Arrow engine (no Python xxhash64 "
-                "in this environment) — use engine='jvm' or leave it unset"
-            )
         sig_fn = minhash_signatures_xx
     else:
         raise ValueError(f"unknown hash_family: {hash_family!r}")
     # the signature table feeds the band join AND both sides of the
-    # verification join — persist so the (UDF-free but shuffle-heavy)
-    # signature computation runs once, not three times
+    # verification join — persist so the signature computation runs once,
+    # not three times
     sigs = sig_fn(df, id_col, text_col, num_perm, k).persist()
     cands = lsh_candidate_pairs(
         sigs, max_bucket_size=max_bucket_size, observation=observation
@@ -641,10 +613,11 @@ def ngram_jaccard_pairs(
 def _vec_length_groups(pdf: pd.DataFrame, vec_col: str = "vec"):
     """Yield the block's rows grouped by vector length (nulls dropped),
     ascending length for determinism. Pairing WITHIN each length group makes
-    a block kernel exactly equivalent to the streaming join variant: a
-    mixed-length pair has a null zip_with dot there (filtered out), while two
-    same-length vectors always pair — even when their length is a minority in
-    the block (the round-2 dominant-length filter silently dropped those)."""
+    a block kernel exactly equivalent to the blocked self-join form
+    (tests/dedup_reference.py): a mixed-length pair has a null zip_with dot
+    there (filtered out), while two same-length vectors always pair — even
+    when their length is a minority in the block (the round-2 dominant-length
+    filter silently dropped those)."""
     lengths = pdf[vec_col].map(lambda v: -1 if v is None else len(v))
     for length in sorted(lengths[lengths >= 0].unique()):
         yield pdf[lengths == length]
@@ -678,10 +651,9 @@ def embedding_neardup_pairs(
     two vector copies per PAIR, and no per-element lambda interpretation
     (the round-1 zip_with/aggregate path was interpreter-bound). Vectors
     pair within same-LENGTH groups of the block (mixed-length pairs are
-    skipped, exactly as the join variant's null cosines are filtered — the
-    two variants return identical pair sets). Blocks are bounded by
-    construction; for unbounded blocks use `embedding_neardup_pairs_join`,
-    which streams pair rows."""
+    skipped, exactly as the blocked self-join reference filters its null
+    cosines — both return identical pair sets, pinned by
+    tests/test_dedup.py). Blocks are bounded by construction."""
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -723,42 +695,6 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), F.col(block_col).alias("blk")
     )
     return base.groupBy("blk").applyInPandas(block_pairs, out_schema)
-
-
-def embedding_neardup_pairs_join(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    block_col: str,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Streaming variant of embedding_neardup_pairs for UNBOUNDED blocks:
-    blocked self-equi-join with per-row precomputed norms (O(n) not O(pairs))
-    and a JVM-side dot per pair — no single task ever has to hold a whole
-    block in memory."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-        F.col(block_col).alias("blk"),
-    ).withColumn(
-        "norm",
-        F.sqrt(F.aggregate(F.transform("vec", lambda x: x * x), F.lit(0.0), lambda a, v: a + v)),
-    )
-    l, r = base.alias("l"), base.alias("r")
-    pairs = l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.id") < F.col("r.id")))
-    dot = F.aggregate(
-        F.zip_with(F.col("l.vec"), F.col("r.vec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
-        pairs.select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.round(dot / (F.col("l.norm") * F.col("r.norm")), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -17,10 +17,10 @@ n_packs_spanned; the gather is an equi-join on pack_id after a cheap
 interval explode).
 
 Scale shape: the global prefix sum is the same two-pass pattern as
-plans/ordering.py assign_global_seq — a naive `SUM() OVER (ORDER BY id)`
-funnels the corpus through ONE partition; instead rows are range-bucketed
-by id, summed within buckets (partitionBy window), and the tiny per-bucket
-totals become broadcast offsets. Deterministic, shuffle-safe, never
+plans/ordering.py assign_global_seq_counted — a naive
+`SUM() OVER (ORDER BY id)` funnels the corpus through ONE partition; instead
+rows are range-bucketed by id, summed within buckets (partitionBy window),
+and the tiny per-bucket totals become broadcast offsets. Deterministic, shuffle-safe, never
 depends on partition iteration order.
 """
 

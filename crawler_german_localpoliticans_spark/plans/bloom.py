@@ -216,8 +216,3 @@ class BloomSidecar:
             return pdf
 
         return candidates.groupBy("part").applyInPandas(test, schema=out_schema)
-
-
-def false_positive_stats(total_maybe: int, truly_seen: int) -> dict:
-    fp = total_maybe - truly_seen
-    return {"maybe_seen": total_maybe, "exact_seen": truly_seen, "bloom_false_positives": fp}

@@ -47,7 +47,7 @@ import time
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -151,19 +151,6 @@ def evaluate_robots(
         )
         .drop("allow", "disallow")
     )
-
-
-def build_robots_state(
-    spark: SparkSession, robots_df: DataFrame, config: CrawlConfig
-) -> dict[str, tuple[tuple[str, ...], tuple[str, ...], int | None]]:
-    """Collected dict form of parse_policies_df — kept for parity tests and
-    driver-side tooling ONLY; the crawl path uses `evaluate_robots` (a join)
-    so no O(hosts) state ever reaches the driver."""
-    rows = parse_policies_df(robots_df, config).collect()
-    return {
-        r["host_key"]: (tuple(r["allow"]), tuple(r["disallow"]), r["crawl_delay_ms"])
-        for r in rows
-    }
 
 
 class CrawlDriver:
@@ -288,21 +275,9 @@ class CrawlDriver:
 
         # 4. fetched table rows for the whole wave; wave counters ride along
         #    as observed metrics on the write job (no second pass)
-        from pyspark.sql import Observation
-
-        def fetched_select(df):
-            return df.select(
-                "seq",
-                "url",
-                "depth",
-                F.when(F.col("ok"), F.col("warc_ts")).alias("scraped_at"),
-                "found_links",
-                "keyword_hit",
-                "robots_blocked",
-                "fetch_failed",
-            )
-
-        wave_aggs = [
+        obs = Observation(f"wave-{r}")
+        observed = wave.observe(
+            obs,
             F.count(F.lit(1)).alias("scheduled"),
             F.sum(F.col("robots_blocked").cast("long")).alias("blocked"),
             F.sum(F.col("keyword_hit").cast("long")).alias("keyword"),
@@ -312,24 +287,21 @@ class CrawlDriver:
             F.max("host_slot").alias("max_host_slot"),
             F.max(F.col("sched_offset_ms") + F.col("effective_delay_ms")).alias("sim_ms"),
             F.max("slice").alias("max_slice"),
-        ]
-        if cfg.execute_by_slice:
-            # sequential slice materialization: slice s's fetch work runs
-            # (and lands in the round dir) before slice s+1 starts —
-            # robots-blocked rows (never fetched) ride with slice 0
-            n_slices = wave.agg(F.max("slice")).collect()[0][0]
-            n_slices = int(n_slices) if n_slices is not None else 0
-            slice_col = F.coalesce(F.col("slice"), F.lit(0))
-            cat.write_round_parts(
-                "fetched",
-                r,
-                [fetched_select(wave.where(slice_col == s)) for s in range(n_slices + 1)],
-            )
-            stats = wave.agg(*wave_aggs).collect()[0]
-        else:
-            obs = Observation(f"wave-{r}")
-            cat.write_round("fetched", r, fetched_select(wave.observe(obs, *wave_aggs)))
-            stats = None  # resolved below after the write ran
+        )
+        cat.write_round(
+            "fetched",
+            r,
+            observed.select(
+                "seq",
+                "url",
+                "depth",
+                F.when(F.col("ok"), F.col("warc_ts")).alias("scraped_at"),
+                "found_links",
+                "keyword_hit",
+                "robots_blocked",
+                "fetch_failed",
+            ),
+        )
 
         # 5. extraction stage: keyword-gated fetched pages only
         #    (src/main.rs:824); clean_html + text in one pandas UDF.
@@ -350,10 +322,8 @@ class CrawlDriver:
         )
         cat.write_round("extracted", r, extracted)
 
-        # 6. wave counters + politeness metrics (observed on the write job,
-        #    or aggregated once in slice-execution mode)
-        if stats is None:
-            stats = obs.get
+        # 6. wave counters + politeness metrics (observed on the write job)
+        stats = obs.get
         ok_count = int(stats["ok"] or 0)
         metrics.update(
             scheduled=stats["scheduled"],
@@ -397,13 +367,9 @@ class CrawlDriver:
                 )
             )
             first = with_hashes(first, "url", cfg.seen_partitions)
-            if cfg.use_bloom_prefilter:
-                pref = self.bloom.prefilter(first, bloom_version)
-                definite_new = pref.where(~F.col("maybe_seen")).drop("maybe_seen")
-                maybe = pref.where(F.col("maybe_seen")).drop("maybe_seen")
-            else:
-                definite_new = first.where(F.lit(False))
-                maybe = first
+            pref = self.bloom.prefilter(first, bloom_version)
+            definite_new = pref.where(~F.col("maybe_seen")).drop("maybe_seen")
+            maybe = pref.where(F.col("maybe_seen")).drop("maybe_seen")
 
             if r == 0:
                 # Reference quirk (seeder.rs:146; src/main.rs:644-654): seeds

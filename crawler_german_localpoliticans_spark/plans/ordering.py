@@ -3,8 +3,9 @@
 The reference's crawl order is the single-worker FIFO order (SURVEY.md §2.7
 O1); the rebuild pins it as an explicit `seq` column. A naive
 `row_number() OVER (ORDER BY ...)` funnels the whole round through one
-partition — fine at sf0.001, a wall at 10^10 URLs — so `assign_global_seq`
-computes the same total order in two distributed passes:
+partition — fine at sf0.001, a wall at 10^10 URLs — so
+`assign_global_seq_counted` computes the same total order in two distributed
+passes:
 
 1. range-bucket rows by the leading order column (order-aligned buckets),
    rank within each bucket (`partitionBy(bucket)` window);
@@ -21,19 +22,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assign_global_seq(
-    df: DataFrame,
-    order_cols: list[str],
-    base: int = 0,
-    buckets: int = 32,
-    out_col: str = "seq",
-) -> DataFrame:
-    """Add `out_col` = base + 0-based dense position of the row in the total
-    order defined by `order_cols` (which must be duplicate-free)."""
-    out, _ = assign_global_seq_counted(df, order_cols, base, buckets, out_col)
-    return out
-
-
 def assign_global_seq_counted(
     df: DataFrame,
     order_cols: list[str],
@@ -42,9 +30,10 @@ def assign_global_seq_counted(
     out_col: str = "seq",
     known_bounds: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, int]:
-    """Like assign_global_seq, also returning the total row count — the
-    per-bucket counts already pay for it, so callers never need an extra
-    count() action.
+    """Add `out_col` = base + 0-based dense position of the row in the total
+    order defined by `order_cols` (which must be duplicate-free), and return
+    it with the total row count — the per-bucket counts already pay for it,
+    so callers never need an extra count() action.
 
     `known_bounds=(lo, hi)` skips the bounds scan when the caller already
     knows the leading column's inclusive range (e.g. crawl expansion:

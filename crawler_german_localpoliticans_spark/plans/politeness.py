@@ -37,21 +37,20 @@ def effective_delay_col(crawl_delay_col, config: CrawlConfig):
 def schedule_wave(allowed: DataFrame, config: CrawlConfig) -> DataFrame:
     """Add politeness schedule columns to a wave of frontier rows.
 
-    Input needs: host, seq, keyword_hit, crawl_delay_ms (nullable), and
-    optionally robots_blocked. Adds: effective_delay_ms, host_slot (0-based
-    per-host fetch slot in priority order), sched_offset_ms (simulated fetch
-    time within the wave), slice (0-based wave slice honoring the per-host
-    rate cap).
+    Input needs: host, seq, keyword_hit, robots_blocked, crawl_delay_ms
+    (nullable). Adds: effective_delay_ms, host_slot (0-based per-host fetch
+    slot in priority order), sched_offset_ms (simulated fetch time within the
+    wave), slice (0-based wave slice honoring the per-host rate cap).
 
-    Robots-blocked rows may ride along (they cost no fetch budget): they
+    Robots-blocked rows ride along (they cost no fetch budget): they
     sort LAST within their host's window, so allowed rows receive exactly
     the slots they would get alone, and the blocked rows' schedule columns
     are nulled afterwards. This keeps the whole wave a single scan — no
     split/union, no second robots evaluation (see the plan notes in
     plans/crawl.py).
     """
-    has_blocked = "robots_blocked" in allowed.columns
-    blocked_col = F.col("robots_blocked") if has_blocked else F.lit(False)
+    blocked_col = F.col("robots_blocked")
+    priority = (blocked_col.asc(), F.col("keyword_hit").desc(), F.col("seq").asc())
     df = allowed.withColumn(
         "effective_delay_ms", effective_delay_col(F.col("crawl_delay_ms"), config)
     )
@@ -67,22 +66,15 @@ def schedule_wave(allowed: DataFrame, config: CrawlConfig) -> DataFrame:
         # result parity is untouched (asserted in tests).
         salt = F.pmod(F.xxhash64("url"), F.lit(config.salt_buckets)).cast("int")
         df = df.withColumn("_salt", salt)
-        w = Window.partitionBy("host", "_salt").orderBy(
-            blocked_col.asc(), F.col("keyword_hit").desc(), F.col("seq").asc()
-        )
+        w = Window.partitionBy("host", "_salt").orderBy(*priority)
         df = df.withColumn(
             "host_slot",
             ((F.row_number().over(w) - F.lit(1)) * F.lit(config.salt_buckets) + F.col("_salt")),
         ).drop("_salt")
     else:
-        w = Window.partitionBy("host").orderBy(
-            blocked_col.asc(), F.col("keyword_hit").desc(), F.col("seq").asc()
-        )
+        w = Window.partitionBy("host").orderBy(*priority)
         df = df.withColumn("host_slot", F.row_number().over(w) - F.lit(1))
-    if has_blocked:
-        df = df.withColumn(
-            "host_slot", F.when(~blocked_col, F.col("host_slot"))
-        )
+    df = df.withColumn("host_slot", F.when(~blocked_col, F.col("host_slot")))
     df = df.withColumn(
         "sched_offset_ms", F.col("host_slot") * F.col("effective_delay_ms")
     )

@@ -137,33 +137,6 @@ class Catalog:
             shutil.rmtree(final)
         os.rename(tmp, final)
 
-    def write_round_parts(self, table: str, round_no: int, dfs: list[DataFrame]) -> None:
-        """Atomic multi-part round write: each df is materialized IN ORDER
-        (the politeness slice execution order), then the whole round becomes
-        visible at once.
-
-        Each slice lands in its own staging dir with mode=overwrite — a
-        retried slice write replaces itself instead of double-appending —
-        and its part files move into the round dir under a slice-indexed
-        name, so the execution order stays readable from the file listing
-        (partition_lineage)."""
-        final = self.round_dir(table, round_no)
-        tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
-        os.makedirs(tmp, exist_ok=True)
-        for i, df in enumerate(dfs):
-            stage = f"{tmp}-slice{i}"
-            df.write.mode("overwrite").parquet(stage)
-            for fn in sorted(os.listdir(stage)):
-                if fn.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(stage, fn),
-                        os.path.join(tmp, f"slice{i:04d}-{fn}"),
-                    )
-            shutil.rmtree(stage)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-
     def has_round(self, table: str, round_no: int) -> bool:
         return os.path.isdir(self.round_dir(table, round_no))
 

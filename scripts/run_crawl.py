@@ -42,8 +42,13 @@ def main() -> None:
     p.add_argument("--salt-buckets", type=int, default=1)
     p.add_argument("--seen-partitions", type=int, default=32)
     p.add_argument("--shuffle-partitions", type=int, default=0, help="0 = keep session value")
-    p.add_argument("--slice-budget-ms", type=int, default=0)
-    p.add_argument("--execute-by-slice", action="store_true")
+    p.add_argument(
+        "--slice-budget-ms",
+        type=int,
+        default=0,
+        help="cut each wave's politeness schedule into slices of this crawl-delay "
+        "budget per host (0 = one slice); the wave is still fetched as one batch",
+    )
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -68,7 +73,6 @@ def main() -> None:
         salt_buckets=args.salt_buckets,
         seen_partitions=args.seen_partitions,
         slice_budget_ms=args.slice_budget_ms,
-        execute_by_slice=args.execute_by_slice,
     )
     driver = CrawlDriver(spark, args.work_dir, args.pages, read_robots(spark, args.robots), config)
     if args.resume:

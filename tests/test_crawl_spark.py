@@ -5,8 +5,6 @@ byte-identical extracted text per url)."""
 
 from __future__ import annotations
 
-import pytest
-
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle
@@ -62,9 +60,8 @@ def assert_exact_match(tables, oracle_res):
     assert engine_ext == oracle_ext
 
 
-@pytest.mark.parametrize("use_bloom", [True, False])
-def test_smoke_exact_match(spark, smoke_fixture, smoke_dir, tmp_path, use_bloom):
-    config = CrawlConfig(use_bloom_prefilter=use_bloom, seen_partitions=8, shuffle_partitions=8)
+def test_smoke_exact_match(spark, smoke_fixture, smoke_dir, tmp_path):
+    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)
     tables, _ = run_engine(spark, smoke_dir, tmp_path, config)
     assert_exact_match(tables, oracle_res)
@@ -83,12 +80,11 @@ def test_correctness_exact_match(spark, correctness_fixture, correctness_dir, tm
 
 
 def test_politeness_slicing_does_not_change_results(spark, smoke_fixture, smoke_dir, tmp_path):
-    """FIXTURES.md scenario 4: per-host rate caps honored — and actually
-    EXECUTED slice-by-slice — with results unchanged."""
+    """FIXTURES.md scenario 4: per-host rate caps cut each wave's schedule
+    into slices, with results unchanged."""
     config = CrawlConfig(
         slice_budget_ms=4000,  # cap = 4000/eff_delay pages per host per slice
         max_pages_per_host_per_slice=2,
-        execute_by_slice=True,
         seen_partitions=8,
         shuffle_partitions=8,
     )

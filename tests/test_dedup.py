@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.operators import dedup
+from dedup_reference import embedding_neardup_pairs_join, minhash_signatures
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,7 +43,7 @@ def test_minhash_signature_matches_python_oracle(spark, docs):
     rows = docs.limit(8).collect()
     sigs = {
         r["id"]: list(r["sig"])
-        for r in dedup.minhash_signatures(docs.limit(8), "doc_id", "text").collect()
+        for r in minhash_signatures(docs.limit(8), "doc_id", "text").collect()
     }
     for r in rows:
         assert sigs[r["doc_id"]] == dedup.minhash_signature_py(r["text"]), r["doc_id"]
@@ -56,7 +57,7 @@ def test_minhash_arrow_kernel_matches_jvm_signatures(spark, docs):
     text yields no signature row on either path."""
     jvm = {
         r["id"]: list(r["sig"])
-        for r in dedup.minhash_signatures(docs.limit(30), "doc_id", "text").collect()
+        for r in minhash_signatures(docs.limit(30), "doc_id", "text").collect()
     }
     arrow = {
         r["id"]: list(r["sig"])
@@ -65,7 +66,7 @@ def test_minhash_arrow_kernel_matches_jvm_signatures(spark, docs):
     assert arrow == jvm
 
     empty = spark.createDataFrame([(1, "   "), (2, "a b c d")], "doc_id long, text string")
-    assert {r["id"] for r in dedup.minhash_signatures(empty, "doc_id", "text").collect()} == {2}
+    assert {r["id"] for r in minhash_signatures(empty, "doc_id", "text").collect()} == {2}
     assert {r["id"] for r in dedup.minhash_signatures_arrow(empty, "doc_id", "text").collect()} == {2}
 
 
@@ -172,7 +173,7 @@ def test_embedding_neardup_blas_equals_join_variant(spark):
     physical strategies for ONE operator — identical pairs and cosines."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     blas = dedup.embedding_neardup_pairs(emb, "vec_id", "embedding", "label", threshold=0.5)
-    join = dedup.embedding_neardup_pairs_join(emb, "vec_id", "embedding", "label", threshold=0.5)
+    join = embedding_neardup_pairs_join(emb, "vec_id", "embedding", "label", threshold=0.5)
     b = {(r["id_a"], r["id_b"]): r["cosine"] for r in blas.collect()}
     j = {(r["id_a"], r["id_b"]): r["cosine"] for r in join.collect()}
     assert set(b) == set(j)
@@ -221,7 +222,7 @@ def test_embedding_kernel_pairs_minority_lengths(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label string")
     blas = dedup.embedding_neardup_pairs(df, "vec_id", "embedding", "label", threshold=0.9)
-    join = dedup.embedding_neardup_pairs_join(df, "vec_id", "embedding", "label", threshold=0.9)
+    join = embedding_neardup_pairs_join(df, "vec_id", "embedding", "label", threshold=0.9)
     expected = {(1, 2), (1, 3), (2, 3), (10, 11)}
     assert {(r["id_a"], r["id_b"]) for r in blas.collect()} == expected
     assert {(r["id_a"], r["id_b"]) for r in join.collect()} == expected
@@ -258,7 +259,7 @@ def test_tokenizer_parity_on_nasty_whitespace(spark):
     df = spark.createDataFrame(nasty, "doc_id long, text string")
     jvm = {
         r["id"]: list(r["sig"])
-        for r in dedup.minhash_signatures(df, "doc_id", "text").collect()
+        for r in minhash_signatures(df, "doc_id", "text").collect()
     }
     arrow = {
         r["id"]: list(r["sig"])

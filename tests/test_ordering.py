@@ -4,17 +4,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crawler_german_localpoliticans_spark.plans.ordering import (
-    assign_global_seq,
-    assign_global_seq_counted,
-)
+from crawler_german_localpoliticans_spark.plans.ordering import assign_global_seq_counted
 
 
 def test_seq_equals_total_order_rank(spark):
     df = spark.range(1000).select(
         (F.col("id") * 37 % 1000).alias("k"), F.col("id").alias("tie")
     )
-    out = assign_global_seq(df, ["k", "tie"], base=10, buckets=8).collect()
+    out = assign_global_seq_counted(df, ["k", "tie"], base=10, buckets=8)[0].collect()
     expected = sorted(((r["k"], r["tie"]) for r in out))
     for r in out:
         assert r["seq"] == 10 + expected.index((r["k"], r["tie"]))

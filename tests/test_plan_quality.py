@@ -72,10 +72,8 @@ def test_exact_dedup_has_partial_aggregation(spark):
 
 
 def test_minhash_signatures_no_python(spark):
-    from crawler_german_localpoliticans_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_xx,
-    )
+    from crawler_german_localpoliticans_spark.operators.dedup import minhash_signatures_xx
+    from dedup_reference import minhash_signatures
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
     plan = plan_of(minhash_signatures(docs, "doc_id", "text"))

@@ -10,10 +10,12 @@ from crawler_german_localpoliticans_spark.plans.politeness import schedule_wave
 
 
 def wave_df(spark, n_a=10, n_b=3):
-    rows = [(i, f"https://a.de/s{i}", "a.de", i % 3 == 0, 5000) for i in range(n_a)]
-    rows += [(100 + i, f"https://b.de/s{i}", "b.de", False, None) for i in range(n_b)]
+    rows = [(i, f"https://a.de/s{i}", "a.de", i % 3 == 0, False, 5000) for i in range(n_a)]
+    rows += [(100 + i, f"https://b.de/s{i}", "b.de", False, False, None) for i in range(n_b)]
     return spark.createDataFrame(
-        rows, "seq long, url string, host string, keyword_hit boolean, crawl_delay_ms long"
+        rows,
+        "seq long, url string, host string, keyword_hit boolean, robots_blocked boolean,"
+        " crawl_delay_ms long",
     )
 
 

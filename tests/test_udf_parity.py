@@ -16,7 +16,7 @@ from crawler_german_localpoliticans_spark.functions.urls import (
     url_host,
     url_path,
 )
-from crawler_german_localpoliticans_spark.plans.crawl import build_robots_state
+from crawler_german_localpoliticans_spark.plans.crawl import parse_policies_df
 from crawler_german_localpoliticans_spark.sources.tables import read_robots
 
 URLS = [
@@ -64,14 +64,17 @@ def test_normalize_name_udf(spark):
         assert r["nn"] == normalize_name(r["n"])
 
 
-def test_build_robots_state_executor_parse(spark, smoke_dir, smoke_fixture):
+def test_parse_policies_executor_parse(spark, smoke_dir, smoke_fixture):
     """Policies parsed distributed over the robots table equal the pure
     parser's output for every host."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.functions.robots import parse_robots
 
     robots_df = read_robots(spark, f"{smoke_dir}/robots.parquet")
-    state = build_robots_state(spark, robots_df, DEFAULT_CONFIG)
+    state = {
+        r["host_key"]: (tuple(r["allow"]), tuple(r["disallow"]), r["crawl_delay_ms"])
+        for r in parse_policies_df(robots_df, DEFAULT_CONFIG).collect()
+    }
     assert set(state) == set(smoke_fixture.robots)
     for hk, txt in smoke_fixture.robots.items():
         p = parse_robots(txt, DEFAULT_CONFIG.user_agent)
