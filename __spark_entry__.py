@@ -180,34 +180,18 @@ def _q_url_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_found_links_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ALTERNATIVE JVM link engine (udfs.with_found_links — codegen
-    grammar-regex fast path with pandas fallback; see its docstring) over
-    the full derived corpus, exploded to (url, link) pairs, against the SQL
-    edge derivation. Gives the alternative engine its own oracle row: the
-    corpus pages are all provably-simple, so this hash-checks the JVM
-    branch itself, not the fallback (pinned by
-    tests/test_found_links_jvm.py's sabotaged-fallback test)."""
-    from crawler_german_localpoliticans_spark.functions.udfs import with_found_links
+    """The crawl's link pipeline (the udfs.found_links pandas UDF) over the
+    full derived corpus, exploded to (url, link) pairs, against the SQL edge
+    derivation. Exploding straight from the pandas generator is safe:
+    InferFiltersFromGenerate skips generators that contain a python UDF
+    (SPARK-36715), so the UDF is evaluated once."""
+    from crawler_german_localpoliticans_spark.functions.udfs import found_links
     from crawler_german_localpoliticans_spark.sources.webcorpus import (
         corpus_from_documents,
     )
 
-    # Optimization barrier (with_found_links docstring): exploding its
-    # output directly lets InferFiltersFromGenerate push an inferred
-    # size()>0 filter down BY SUBSTITUTION, duplicating the whole
-    # decode/regex expression tree plus a second python-UDF stage
-    # (measured 5x). Persist the pruned (url, fl) projection — html is
-    # dropped so the cache holds only the link arrays — and explode from
-    # the InMemoryRelation, which the rule cannot see through. The cache
-    # entry is SESSION-SCOPED (_session_memo): rebuilding the query in a
-    # long-lived session reuses the one persisted projection instead of
-    # leaking a fresh one per call.
-    def build():
-        pages, _, _ = corpus_from_documents(spark, sf_dir)
-        return with_found_links(pages, "url", "html", "fl").select("url", "fl").persist()
-
-    fl = _session_memo(spark, "found_links", (sf_dir,), build)
-    return fl.select("url", F.explode("fl").alias("link"))
+    pages, _, _ = corpus_from_documents(spark, sf_dir)
+    return pages.select("url", F.explode(found_links("url", "html")).alias("link"))
 
 
 def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1822,7 +1806,7 @@ def oracle_sql() -> dict[str, str]:
             ) f
             JOIN node n ON n.doc = f.doc
         """,
-        # The per-page link pipeline under the alternative JVM engine:
+        # The per-page link pipeline (found_links pandas UDF):
         # (url, link) pairs == the DISTINCT corpus edges (the engine's
         # sorted-unique dedup ≡ DISTINCT; sortedness is absorbed by the
         # order-insensitive row hash).

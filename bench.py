@@ -32,12 +32,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 BENCH_RUNS = max(1, int(os.environ.get("BENCH_RUNS", "2")))
 
 
-def build_spark(cpus: int):
+def build_spark(cpus: int, app_name: str = "crawler-spark-bench"):
+    """The benchmark session; bench_extra.py builds the same one."""
     from pyspark.sql import SparkSession
 
     return (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crawler-spark-bench")
+        .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 16)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_BENCH_DRIVER_MEM", "24g"))

@@ -21,23 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crawler-spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_BENCH_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .getOrCreate()
-    )
+from bench import build_spark  # noqa: E402
 
 
 def main() -> None:
@@ -50,7 +34,7 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_spark(cpus)
+    spark = build_spark(cpus, "crawler-spark-bench-extra")
 
     import __spark_entry__ as entrymod
 

@@ -84,194 +84,6 @@ def found_links(page_urls: pd.Series, htmls: pd.Series) -> pd.Series:
     )
 
 
-# ---------------------------------------------------------------------------
-# JVM-resident fast path for the link pipeline: on PROVABLY-simple pages the
-# whole extract->resolve->filter->canonicalize->sorted-unique chain runs as
-# Column expressions (whole-stage codegen, no Arrow transfer of the html
-# bytes), declining per ROW to the pandas UDF otherwise. At cluster scale
-# the UDF's dominant cost is shipping the html through Arrow, not the Python
-# compute - eligible rows never leave the JVM, and the Python worker
-# receives NULL html for them (nulls are ~free on the wire).
-#
-# Safety invariant (differential-tested, tests/test_found_links_jvm.py):
-# JVM-accept => byte-identical result to found_links. The guards mirror the
-# proofs of the Python fast paths (html.py _extract_links_fast /
-# _strip_rawtext_spans, urls.py is_canonical_fast / join_url_fast), but are
-# fused into ONE linear full-document grammar regex (_SIMPLE_DOC_RE) so
-# eligibility costs a single scan instead of one scan per guard. A document
-# matches iff every character is consumed by one of:
-#   text       [^<&\x00�]            no entities (decoding identity),
-#                                         no NUL (NUL-joined href trick
-#                                         below), no U+FFFD (replacement-
-#                                         decode identity)
-#   span       <script>C*</script> or <style>C*</style> where C is text or
-#              '<' + [^/aA-Z!?&\x00�]: bare rawtext spans whose content
-#              provably contains no '</' (html.parser's CDATA mode ends at
-#              the first '</name'; with none, the literal terminator IS the
-#              parser's), no '<a' (so extracting anchors WITHOUT stripping
-#              spans is exact), and no '<'+upper/!/? (the Python fast path
-#              declines those on the unstripped html)
-#   anchor     <a href="V">  with V free of  "<>&\x00�  - the one
-#              anchor form whose extraction equals the DOM's
-#   other tag  '<' not followed by upper/!/? (tag-case/declaration handling
-#              never fires), not 'script'/'style' (no non-span rawtext
-#              form survives), and not 'a'+[ws>/] (every anchor OPENER goes
-#              through the anchor alternative; the ws class spells out
-#              Python re's unicode \s - Java \s is ASCII-only and would
-#              miss '<a\xa0...' openers)
-# plus per-href canonicality (checked on the NUL-joined href list, one
-# small-string pass): each href is (a) an already-canonical absolute
-# http(s) URL (canonicalize == identity) or (b) a root-relative
-# (leading-'//'-free) path whose origin-concatenation is already canonical
-# (urljoin == concat per RFC 3986); '/.'-freedom keeps dot-segment removal
-# and the trailing-slash rules inert, and the charsets are exactly
-# quote()'s no-op set, so percent-encoding is inert too. Under these guards
-# extraction equals the simple-anchor scan and resolution is concat, so the
-# result is sort_array(array_distinct(...)) - sorted_unique.
-_PY_RE_WS = (
-    "\\x09-\\x0d\\x1c-\\x20\\x85\\xa0\\u1680\\u2000-\\u200a"
-    "\\u2028\\u2029\\u202f\\u205f\\u3000"
-)
-_FORBID = "&\\x00\\ufffd"
-# possessive quantifiers throughout: every alternative is first-character
-# deterministic, so possessiveness cannot change what matches - it only
-# removes the backtracking bookkeeping, keeping the scan linear
-_SPAN_CONTENT = f"(?:[^<{_FORBID}]++|<[^/aA-Z!?{_FORBID}])*+"
-_SIMPLE_DOC_RE = (
-    "\\A(?:"
-    f"[^<{_FORBID}]++"
-    f"|<script>{_SPAN_CONTENT}</script>"
-    f"|<style>{_SPAN_CONTENT}</style>"
-    f'|<a href="[^"<>{_FORBID}]*+">'
-    f"|<(?![A-Z!?])(?!script|style)(?!a[{_PY_RE_WS}>/])"
-    ")*+\\z"
-)
-_SIMPLE_ANCHOR_CAPTURE_RE = '<a href="([^"<>]*)">'
-# is_canonical_fast (urls.py): lowercase http(s), bare lowercase host,
-# non-empty path over quote()'s identity charset; '/.'-freedom checked
-# separately. The same path charset serves the root-relative form.
-# NOTE: no ';' — urljoin routes through urlparse, whose params split drops
-# a trailing ';' ('/a;' -> '/a'), so concat-resolution would diverge from
-# the golden join for such hrefs (they decline to the pandas path, whose
-# join_url_fast declines them to urllib for the same reason)
-_CANON_PATH_CHARS = "[A-Za-z0-9/%!$&'()*+,=:@~._-]*"
-_ORIGIN_CAPTURE_RE = "^(https?://[a-z0-9.-]+)/"
-
-
-def with_found_links(
-    df, url_col: str = "url", html_col: str = "html", dest: str = "found_links"
-):
-    """DataFrame-level found_links: JVM fast path with per-row pandas
-    fallback, byte-identical to `found_links(url, html)` on every input
-    (the guards above prove the JVM branch; differential- and
-    oracle-tested).
-
-    DataFrame-level ON PURPOSE, staged as a chain of withColumns where
-    every heavy intermediate (decoded string, href array, joined href
-    string, eligibility) is a column referenced MORE THAN ONCE downstream:
-
-    - Catalyst's subexpression elimination skips expressions inside
-      conditional branches (CASE WHEN / short-circuit boolean chains),
-      which is where all of this sits, so expressing the result as one
-      Column tree re-evaluates the decode/extract trees once per
-      reference - measured 4-5x slower than the pandas UDF it replaces;
-    - CollapseProject declines to inline a projected column referenced
-      more than once, so each stage's value is computed exactly once and
-      flows as a codegen local through the fused projections;
-    - as a single Column, python-UDF extraction would also duplicate the
-      eligibility tree into the ArrowEvalPython input projection (for the
-      UDF's null-html gate).
-
-    Ineligible rows take the pandas UDF, which receives NULL html on
-    eligible rows - their Arrow cost is a null bit.
-
-    STATUS: correct and tested, but NOT the default engine. Measured on the
-    synthetic corpus (1M pages, local[8]): ~10.5s for the frontier stage vs
-    ~3.3s for the pandas UDF. Two honest reasons: (a) this corpus's links
-    repeat across pages, so the pandas path's per-batch href memo makes its
-    Python compute nearly free (~3us/page) - real-crawl link diversity
-    would not be this kind; (b) the fallback's ArrowEvalPython stage still
-    row-queues the full input (html included) to rejoin UDF output, a fixed
-    cost the JVM savings don't cover here. Revisit as the default if the
-    corpus ever models realistic link diversity.
-
-    CLIFF (measured 5x): consumers that posexplode the result column
-    without an optimization barrier in between trigger
-    InferFiltersFromGenerate, whose inferred size()>0 filter is pushed
-    down BY SUBSTITUTION, duplicating this whole expression tree (decode
-    x20 in the optimized plan) plus a second python-UDF stage. Explode
-    only from a persisted/cached DataFrame, or exclude the rule:
-    spark.sql.optimizer.excludedRules=
-    org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate
-    (the pandas path is immune: SPARK-36715 skips inference when the
-    generator itself contains a python UDF, but the guard cannot see
-    through this hybrid's column indirection)."""
-    url, html = F.col(url_col), F.col(html_col)
-    # decode throws on malformed UTF-8 (Spark 4 MALFORMED_CHARACTER_CODING),
-    # so gate it: invalid bytes decline to the pandas path, whose
-    # errors='replace' decode defines the contract for them
-    s = F.when(html.isNotNull() & F.is_valid_utf8(html), F.decode(html, "UTF-8"))
-    staged = (
-        df.withColumn("_fl_s", s)
-        .withColumn("_fl_doc_ok", F.col("_fl_s").rlike(_SIMPLE_DOC_RE))
-        # span contents provably contain no '<a', so extraction without
-        # span stripping equals the Python pipeline's post-strip extraction
-        .withColumn(
-            "_fl_hrefs",
-            F.regexp_extract_all(F.col("_fl_s"), F.lit(_SIMPLE_ANCHOR_CAPTURE_RE), 1),
-        )
-        .withColumn("_fl_joined", F.array_join(F.col("_fl_hrefs"), "\x00"))
-        .withColumn("_fl_origin", F.regexp_extract(url, _ORIGIN_CAPTURE_RE, 1))
-    )
-    joined, origin = F.col("_fl_joined"), F.col("_fl_origin")
-    no_hrefs = F.size(F.col("_fl_hrefs")) == 0
-    # one pass over the small joined-href string validates every href: each
-    # NUL-separated segment must be a canonical absolute or a root-relative
-    # (leading-'//'-free) path; '/.'-freedom and the rel-needs-origin rule
-    # check separately (still on the small string)
-    seg = f"(?:https?://[a-z0-9.-]+/{_CANON_PATH_CHARS}|/(?!/){_CANON_PATH_CHARS})"
-    hrefs_ok = no_hrefs | (
-        joined.rlike(f"\\A{seg}(\\x00{seg})*\\z")
-        & ~joined.contains("/.")
-        & ((origin != "") | ~joined.rlike("(\\A|\\x00)/"))
-    )
-    # root-relative segments (at start or after a NUL) get the origin
-    # prepended; absolute segments pass through. origin's charset has no
-    # '$' or '\', so it is inert in the replacement string. sort_array,
-    # not array_sort: array_sort's comparator is a higher-order function
-    # and CodegenFallback, which would knock the whole projection out of
-    # whole-stage codegen.
-    resolved = F.split(
-        F.regexp_replace(
-            joined, "(\\A|\\x00)/", F.concat(F.lit("$1"), origin, F.lit("/"))
-        ),
-        "\x00",
-    )
-    staged = (
-        staged.withColumn(
-            "_fl_elig", F.coalesce(F.col("_fl_doc_ok") & hrefs_ok, F.lit(False))
-        )
-        .withColumn(
-            "_fl_jvm",
-            F.when(no_hrefs, F.array().cast("array<string>")).otherwise(
-                F.sort_array(F.array_distinct(resolved))
-            ),
-        )
-        .withColumn(
-            "_fl_py",
-            found_links(url, F.when(~F.col("_fl_elig"), html)),
-        )
-    )
-    return staged.withColumn(
-        dest,
-        F.when(F.col("_fl_elig"), F.col("_fl_jvm")).otherwise(F.col("_fl_py")),
-    ).drop(
-        "_fl_s", "_fl_doc_ok", "_fl_hrefs", "_fl_joined", "_fl_origin",
-        "_fl_elig", "_fl_jvm", "_fl_py",
-    )
-
-
-
 @pandas_udf(
     T.StructType(
         [

@@ -10,8 +10,13 @@ state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
       ─ found_links pandas UDF ─ keyword gate (Column expr)
       ─ clean/extract pandas UDFs ─ posexplode candidates
       ─ first-discovery-wins dedup (min (parent_seq, pos) struct)
-      ─ bloom prefilter ─ exact anti-join vs url_seen
-      ─ global seq assignment ─ commit round (checkpoint line)
+      ─ bloom prefilter (version r) ─ exact anti-join vs url_seen
+      ─ enqueue: global seq assignment ─ frontier round r+1 + bloom
+        version r+1 from one persisted frame ─ commit round (checkpoint line)
+
+Seeding is the same enqueue at round 0 (seq from the seed order, bloom
+version 0 on an empty filter), so bloom version k covers frontier rounds
+0..k by construction.
 
 Determinism / parity invariants (tests/test_crawl_spark.py asserts all of
 them against plans/oracle.py on shared fixtures):
@@ -22,7 +27,8 @@ them against plans/oracle.py on shared fixtures):
   parent's sorted found_links) — exactly the order the Lua
   check-and-add (src/main.rs:30-45) produces under one worker;
 - url_seen == distinct frontier urls (every popped URL is seen before any
-  filtering, src/main.rs:644-654; children are seen at enqueue);
+  filtering, src/main.rs:644-654; children are seen at enqueue, seeds only
+  once popped, seeder.rs:146);
 - `scraped_at` is the page's warc_ts (deterministic stand-in for the
   reference's wall-clock RFC3339 stamp, src/main.rs:919).
 
@@ -201,33 +207,44 @@ class CrawlDriver:
         n_policy_hosts = self.policies_df.count()
         self.broadcast_policies = n_policy_hosts <= config.broadcast_policies_max_hosts
 
-    # ------------------------------------------------------------------ seeds
-    def _seed_frontier(self, seeds_df: DataFrame) -> tuple[DataFrame, int]:
-        """raw seeds -> (depth-0 frontier, seed count); invalid URLs skipped
-        (seeder.rs:55-60); duplicates preserved (seeder does not dedup).
-        The count rides out of the seq assignment's bucket-count pass
-        (assign_global_seq_counted) so run() never pays a separate count()
-        job over the frontier."""
-        seeded = (
-            seeds_df.withColumn("url", udfs.seed_normalize(F.col("raw_url")))
-            .where(F.col("url").isNotNull())
+    # ---------------------------------------------------------------- enqueue
+    def _enqueue(
+        self,
+        r: int,
+        rows: DataFrame,
+        order_cols: list[str],
+        base: int,
+        known_bounds: tuple[int, int] | None = None,
+    ) -> int:
+        """The one enqueue path (seeds and children alike): sequence `rows`
+        by `order_cols` from `base`, write them as frontier round r and OR
+        them into bloom version r (on top of version r-1), so bloom version
+        k always covers frontier rounds 0..k. Returns the enqueued count,
+        which rides out of the seq assignment's bucket-count pass."""
+        cfg = self.config
+        rows, n = assign_global_seq_counted(
+            rows, order_cols, base=base, buckets=cfg.shuffle_partitions, known_bounds=known_bounds
         )
-        seeded, n_seeds = assign_global_seq_counted(
-            seeded, ["seed_order"], base=0, buckets=self.config.shuffle_partitions
-        )
-        return (
-            seeded.select(
+        frontier = with_hashes(
+            rows.select(
                 "seq",
                 "url",
-                F.lit(0).cast("int").alias("depth"),
+                F.lit(r).cast("int").alias("depth"),
                 udfs.url_host(F.col("url")).alias("host"),
                 udfs.host_key(F.col("url")).alias("host_key"),
             ),
-            n_seeds,
+            "url",
+            cfg.seen_partitions,
+        ).persist()
+        self.catalog.write_round(
+            "frontier", r, frontier.select(*[f.name for f in tbl.FRONTIER_SCHEMA])
         )
+        self.bloom.insert(frontier.select("part", "h1", "h2"), r - 1 if r > 0 else None, r)
+        frontier.unpersist()
+        return n
 
     # ------------------------------------------------------------------ wave
-    def _run_round(self, r: int, next_seq: int, bloom_version: int) -> dict:
+    def _run_round(self, r: int, next_seq: int) -> dict:
         cfg = self.config
         cat = self.catalog
         t0 = time.monotonic()
@@ -344,11 +361,10 @@ class CrawlDriver:
         #    enqueued, src/main.rs:939-941). NOTE (r6): suspending AQE for
         #    the expansion's three tiny actions (to cut its per-stage
         #    materialization round trips) was tried and measured SLOWER —
-        #    AQE is also what converts the seen/seed anti-joins to
-        #    broadcast at runtime; without it they fall back to shuffle
-        #    joins that cost more than the saved scheduling latency.
+        #    AQE is also what converts the url_seen anti-join to
+        #    broadcast at runtime; without it it falls back to a shuffle
+        #    join that costs more than the saved scheduling latency.
         enqueued = 0
-        new_bloom_version = bloom_version
         if r < cfg.max_depth:
             candidates = wave.where(F.col("ok")).select(
                 F.col("seq").alias("parent_seq"),
@@ -367,72 +383,41 @@ class CrawlDriver:
                 )
             )
             first = with_hashes(first, "url", cfg.seen_partitions)
-            pref = self.bloom.prefilter(first, bloom_version)
+            pref = self.bloom.prefilter(first, r)
             definite_new = pref.where(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = pref.where(F.col("maybe_seen")).drop("maybe_seen")
 
-            if r == 0:
-                # Reference quirk (seeder.rs:146; src/main.rs:644-654): seeds
-                # are enqueued WITHOUT a visited-set add — they become seen
-                # only when popped. Under the canonical single-worker order,
-                # a candidate equal to a seed is therefore new iff its
-                # first-discovering parent popped BEFORE that seed:
-                # keep iff parent_seq < min(seed_seq of the url).
-                seed_min = (
-                    cat.read_round("frontier", 0, tbl.FRONTIER_SCHEMA)
-                    .groupBy("url")
-                    .agg(F.min("seq").alias("seed_seq"))
-                )
-                survivors = (
-                    maybe.join(seed_min, on="url", how="left")
-                    .where(F.col("seed_seq").isNull() | (F.col("parent_seq") < F.col("seed_seq")))
-                    .drop("seed_seq")
-                )
-            else:
-                # rounds ≥ 1: every queued URL was visited-set-added at its
-                # enqueue (the Lua script, src/main.rs:30-45), so the exact
-                # anti-join against url_seen is the precise semantics.
-                # url_seen IS distinct(frontier.url) over rounds 0..r — no
-                # separate table to maintain; column pruning reads only the
-                # url column from the frontier round dirs
-                seen = cat.read_rounds("frontier", list(range(r + 1)), tbl.FRONTIER_SCHEMA)
-                survivors = maybe.join(seen.select("url"), on="url", how="left_anti")
-            # the dedup chain (prefilter + anti-join) feeds three consumers
-            # (seq bounds, bucket counts, frontier write) — persist it once
+            # URL-seen: every child is visited-set-added at its enqueue (the
+            # Lua script, src/main.rs:30-45), but seeds are enqueued WITHOUT
+            # one and become seen only when popped (seeder.rs:146;
+            # src/main.rs:644-654). Under the canonical single-worker order a
+            # seed row therefore hides a candidate only if it popped no later
+            # than the candidate's first-discovering parent. Every seed has
+            # seq < n_seeds <= parent_seq from round 1 on, so there this is
+            # the plain anti-join against url_seen = distinct(frontier.url)
+            # over rounds 0..r; column pruning reads only (url, seq, depth).
+            seen = cat.read_rounds("frontier", list(range(r + 1)), tbl.FRONTIER_SCHEMA)
+            survivors = maybe.alias("c").join(
+                seen.alias("s"),
+                (F.col("c.url") == F.col("s.url"))
+                & ((F.col("s.depth") > 0) | (F.col("s.seq") <= F.col("c.parent_seq"))),
+                how="left_anti",
+            )
+            # the dedup chain (prefilter + anti-join) feeds the bucket counts
+            # and the frontier write — persist it once
             pre_seq = definite_new.unionByName(survivors).persist()
             # parent_seq ∈ [0, next_seq) by construction (parents are
             # already-sequenced rows), so the bucket-range scan is free
-            new_urls, enqueued = assign_global_seq_counted(
-                pre_seq,
-                ["parent_seq", "pos"],
-                base=next_seq,
-                buckets=cfg.shuffle_partitions,
+            enqueued = self._enqueue(
+                r + 1, pre_seq, ["parent_seq", "pos"], next_seq,
                 known_bounds=(0, max(next_seq - 1, 0)),
             )
-            next_frontier = new_urls.select(
-                "seq",
-                "url",
-                F.lit(r + 1).cast("int").alias("depth"),
-                udfs.url_host(F.col("url")).alias("host"),
-                udfs.host_key(F.col("url")).alias("host_key"),
-                "h1",
-                "h2",
-                "part",
-            )
-            next_frontier.persist()
-            cat.write_round(
-                "frontier", r + 1, next_frontier.select(*[f.name for f in tbl.FRONTIER_SCHEMA])
-            )
-            new_bloom_version = bloom_version + 1
-            self.bloom.insert(
-                next_frontier.select("part", "h1", "h2"), bloom_version, new_bloom_version
-            )
-            next_frontier.unpersist()
             pre_seq.unpersist()
 
         metrics["enqueued"] = enqueued
         metrics["next_seq"] = next_seq + enqueued
-        metrics["bloom_version"] = new_bloom_version
+        # bloom version k covers frontier rounds 0..k (see _enqueue)
+        metrics["bloom_version"] = min(r + 1, cfg.max_depth)
         metrics["wall_s"] = round(time.monotonic() - t0, 3)
         metrics["lineage"] = {
             t: partition_lineage(cat.round_dir(t, r))
@@ -453,13 +438,11 @@ class CrawlDriver:
         last = self.checkpoints.last_committed_round()
         if resume and last is not None:
             # drop uncommitted partials, recompute deterministically
-            entry = self.checkpoints.last_entry()
-            next_seq = entry["next_seq"]
-            bloom_version = entry["bloom_version"]
+            next_seq = self.checkpoints.last_entry()["next_seq"]
             for t in ("fetched", "extracted"):
                 cat.drop_rounds_after(t, last)
             cat.drop_rounds_after("frontier", last + 1)
-            self.bloom.drop_versions_after(bloom_version)
+            self.bloom.drop_versions_after(last + 1)
             start_round = last + 1
         else:
             if seeds_df is None:
@@ -468,23 +451,18 @@ class CrawlDriver:
             for t in ("frontier", "fetched", "extracted"):
                 cat.drop_rounds_after(t, -1)
             self.bloom.drop_versions_after(-1)
-            frontier0, n_seeds = self._seed_frontier(seeds_df)
-            frontier0.persist()
-            cat.write_round("frontier", 0, frontier0)
-            seen0 = with_hashes(
-                frontier0.select("url").distinct(), "url", cfg.seen_partitions
-            )
-            self.bloom.insert(seen0.select("part", "h1", "h2"), None, 0)
-            frontier0.unpersist()
-            next_seq = n_seeds
-            bloom_version = 0
+            # invalid URLs are skipped (seeder.rs:55-60); duplicates are
+            # kept (the seeder does not dedup)
+            seeded = seeds_df.withColumn(
+                "url", udfs.seed_normalize(F.col("raw_url"))
+            ).where(F.col("url").isNotNull())
+            next_seq = self._enqueue(0, seeded, ["seed_order"], 0)
             start_round = 0
 
         all_metrics: list[dict] = []
         for r in range(start_round, cfg.max_depth + 1):
-            m = self._run_round(r, next_seq, bloom_version)
+            m = self._run_round(r, next_seq)
             next_seq = m["next_seq"]
-            bloom_version = m["bloom_version"]
             self.checkpoints.commit(m)
             all_metrics.append(m)
             if m["enqueued"] == 0 and r < cfg.max_depth:
@@ -495,8 +473,11 @@ class CrawlDriver:
     def result_tables(self, metrics: list[dict] | None = None) -> CrawlTables:
         committed = [e["round"] for e in self.checkpoints.entries()]
         rounds = sorted(set(committed))
+        # frontier round r+1 exists by construction for every committed
+        # round r that expanded (r < max_depth), even when it enqueued nothing
+        expanded = [r + 1 for r in rounds if r < self.config.max_depth]
         frontier = self.catalog.read_rounds(
-            "frontier", sorted({*rounds, *[r + 1 for r in rounds]}), tbl.FRONTIER_SCHEMA
+            "frontier", sorted({*rounds, *expanded}), tbl.FRONTIER_SCHEMA
         )
         # url_seen == distinct frontier urls (D2 invariant); materialized as a
         # view over the frontier rounds rather than a second table

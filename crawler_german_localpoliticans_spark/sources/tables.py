@@ -109,6 +109,10 @@ COUNCIL_MEMBERS_SCHEMA = T.StructType(
 )
 
 
+class MissingRoundError(FileNotFoundError):
+    """A round the checkpoint log commits has no directory on disk."""
+
+
 class Catalog:
     """Parquet table layout under a work dir, with atomic per-round commits.
 
@@ -156,12 +160,17 @@ class Catalog:
         return self.spark.read.schema(schema).parquet(self.round_dir(table, round_no))
 
     def read_rounds(self, table: str, rounds: list[int], schema: T.StructType) -> DataFrame:
+        """Union of the given round dirs. Every requested round must exist: a
+        lost frontier dir would silently shrink the URL-seen set and
+        re-enqueue duplicates, so it raises MissingRoundError instead."""
         if not rounds:
             return self.spark.createDataFrame([], schema)
-        paths = [self.round_dir(table, r) for r in rounds if self.has_round(table, r)]
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*paths)
+        missing = [r for r in rounds if not self.has_round(table, r)]
+        if missing:
+            raise MissingRoundError(
+                f"{table}: committed round(s) {missing} missing under {self._table_dir(table)}"
+            )
+        return self.spark.read.schema(schema).parquet(*[self.round_dir(table, r) for r in rounds])
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

@@ -2,7 +2,7 @@
 frontier-stage efficiency parse work or pure Arrow/memory-bandwidth
 transfer share?
 
-Runs the frontier stage's data movement at one parallelism level in THREE
+Runs the frontier stage's data movement at one parallelism level in two
 forms over the identical replicated corpus:
 
   transfer   the same (url, html) Arrow shipment into python workers, but
@@ -10,8 +10,6 @@ forms over the identical replicated corpus:
              is the irreducible transfer floor of any python-side frontier.
   frontier   the real found_links pipeline (parse + resolve + memo +
              posexplode + first-discovery groupBy), as _scaling_job.py.
-  jvmlinks   the alternative all-JVM engine (udfs.with_found_links) for
-             comparison — zero Arrow transfer on eligible pages.
 
 Printed JSON feeds scripts/bench_scaling.py-style min-of-N comparison by
 the caller (interleave levels yourself; see BENCH/BASELINE.md methodology).
@@ -69,17 +67,6 @@ def main(cores: int, replicas: int, sf_dir: str, mode: str) -> None:
         links = pages.select(
             F.col("url"), udfs.found_links(F.col("url"), F.col("html")).alias("found_links")
         )
-        cand = links.select(
-            F.xxhash64("url").alias("parent"),
-            F.posexplode("found_links").alias("pos", "child"),
-        )
-        first = cand.groupBy("child").agg(
-            F.min(F.struct("parent", "pos")).alias("first"), F.count(F.lit(1)).alias("n")
-        )
-        agg = first.agg(F.count(F.lit(1)), F.sum("n")).collect()[0][1]
-    elif mode == "jvmlinks":
-        links = udfs.with_found_links(pages, "url", "html", "found_links")
-        links = links.select("url", "found_links").persist()
         cand = links.select(
             F.xxhash64("url").alias("parent"),
             F.posexplode("found_links").alias("pos", "child"),

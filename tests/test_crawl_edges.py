@@ -66,3 +66,49 @@ def test_seeds_with_dead_urls_only(spark, tmp_path):
     )
     rows = tables.fetched.collect()
     assert all(r["fetch_failed"] for r in rows)
+
+
+def test_seeds_are_seen_only_once_popped(spark, tmp_path):
+    """Seeds are enqueued without a visited-set add (seeder.rs:146), so a
+    link to a seed re-enqueues it iff the linking page popped before every
+    row of that seed."""
+    a, b, c, x = "https://a.de/", "https://b.de/", "https://c.de/", "https://a.de/x"
+    pages = {
+        a: f'<a href="{a}">self</a><a href="{b}">b</a><a href="/x">x</a>',
+        b: f'<a href="{a}">a</a><a href="{c}">c</a>',
+        c: f'<a href="{b}">b</a>',
+        x: "",
+    }
+    # seq: a=0, b=1, a=2 (duplicated seed row), c=3
+    config = CrawlConfig(seen_partitions=4, shuffle_partitions=4)
+    tables = run_both(spark, tmp_path, [a, b, a, c], pages, {}, config)
+    rows = tables.fetched.select("depth", "url").orderBy("seq").collect()
+    assert [(r["depth"], r["url"]) for r in rows] == [
+        (0, a), (0, b), (0, a), (0, c),
+        # a (seq 0) links the later seed b: re-enqueued (after x, which
+        # sorts first in a's found_links); a's link to itself and b's link
+        # back to the earlier seed a are not
+        (1, x), (1, b),
+        # first discovered by b (seq 1), which popped before seed c (seq 3)
+        (1, c),
+    ]
+
+
+def test_missing_committed_round_fails_loud(spark, tmp_path):
+    import shutil
+
+    import pytest
+
+    from crawler_german_localpoliticans_spark.sources.tables import MissingRoundError
+
+    pages = {"https://a.de/": '<a href="/b">b</a>', "https://a.de/b": ""}
+    config = CrawlConfig(max_depth=1, seen_partitions=4, shuffle_partitions=4)
+    run_both(spark, tmp_path, ["https://a.de/"], pages, {}, config)
+    driver = CrawlDriver(
+        spark, str(tmp_path / "work"), f"{tmp_path}/fx/pages.parquet",
+        read_robots(spark, f"{tmp_path}/fx/robots.parquet"), config,
+    )
+    driver.result_tables()
+    shutil.rmtree(driver.catalog.round_dir("frontier", 1))
+    with pytest.raises(MissingRoundError, match="frontier"):
+        driver.result_tables()

@@ -227,3 +227,15 @@ def test_pack_emit_slices_before_shuffle(spark):
     assert "BatchEvalPython" not in plan
     assert "slice(" in plan  # the pre-shuffle JVM cut
     assert "CartesianProduct" not in plan
+
+
+def test_found_links_query_evaluates_link_udf_once(spark):
+    """The found_links_jvm query explodes straight from the pandas UDF: one
+    ArrowEvalPython node and no cache barrier. A second Python evaluation
+    (an inferred size() > 0 filter pushed below the generator by
+    substitution) would double the link pipeline's cost."""
+    import __spark_entry__ as entry
+
+    plan = plan_of(entry.queries()["found_links_jvm"](spark, SF_DIR))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan

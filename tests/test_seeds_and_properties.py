@@ -44,11 +44,10 @@ def test_seed_csv_to_frontier_order(spark, smoke_dir, smoke_fixture, tmp_path):
     from crawler_german_localpoliticans_spark.sources.tables import read_robots
 
     robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
-    d = CrawlDriver(
-        spark, str(tmp_path), f"{smoke_dir}/pages.parquet", robots, CrawlConfig(seen_partitions=8)
-    )
+    config = CrawlConfig(max_depth=0, seen_partitions=8)
+    d = CrawlDriver(spark, str(tmp_path), f"{smoke_dir}/pages.parquet", robots, config)
     csv_seeds = read_seeds_csv(spark, f"{smoke_dir}/seeds.csv", column_name="Websites")
-    f0 = d._seed_frontier(csv_seeds)[0].orderBy("seq").collect()
+    f0 = d.run(csv_seeds).frontier.orderBy("seq").collect()
     from crawler_german_localpoliticans_spark.functions.urls import canonicalize_url as canon
 
     expected = [canon(s) for s in smoke_fixture.seeds if canon(s) is not None]
