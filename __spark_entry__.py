@@ -815,7 +815,7 @@ def _q_url_normalize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises the flagship robots path: policies parsed on executors as a
-    DataFrame, picked up via the size-guarded host_key join (never a driver
+    DataFrame, picked up via Spark's size-based host_key join (never a driver
     dict), longest-prefix match in one Arrow batch."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.functions import udfs

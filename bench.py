@@ -66,7 +66,7 @@ def bench_crawl(spark, sf_dir: str) -> dict:
     base_dir = tempfile.mkdtemp(prefix="bench_crawl_")
     pages_path = f"{base_dir}/pages_input"
     pages.write.mode("overwrite").parquet(pages_path)
-    config = CrawlConfig(max_depth=2, shuffle_partitions=32, seen_partitions=32)
+    config = CrawlConfig(max_depth=2, seen_partitions=32)
 
     wall = None
     for run in range(BENCH_RUNS):

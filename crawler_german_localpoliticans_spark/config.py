@@ -4,11 +4,13 @@ reference: worker_config.toml (max_depth=2 :17, politeness_delay_ms=2000 :21,
 concurrent_tasks=4 :24, keywords :28-35), src/main.rs:47 (user agent),
 :615-617 (SAVE_ALL_HTML override).
 
-Scale knobs (bloom sizing, partition counts, per-wave slice budget, hot-host
-salting) are ours: they size the one crawl path from the sf fixtures up to the
-10^10-URL posture demanded by BASELINE.json. None of them selects a second
-code path: the bloom prefilter always runs and every wave is fetched and
-written as one batch.
+Scale knobs (bloom sizing, url_seen partition count, per-wave slice budget,
+hot-host salting) are ours: they size the one crawl path from the sf fixtures
+up to the 10^10-URL posture demanded by BASELINE.json. None of them selects a
+second code path: the bloom prefilter always runs and every wave is fetched and
+written as one batch. Sizes Spark can take from the cluster or the data are
+not knobs here: the seq bucket count is `defaultParallelism` and the robots
+join strategy is Spark's size-based join selection.
 """
 
 from __future__ import annotations
@@ -29,14 +31,9 @@ class CrawlConfig:
     save_all_html: bool = False
 
     # engine/scale knobs
-    shuffle_partitions: int = 32
     # partitions of the url_seen table / bloom sidecar; at 1e10 URLs raise to
     # O(10k) so each partition's filter (~1.2 GB total at 1% FPR) stays small
     seen_partitions: int = 32
-    # robots policies ship as a JOIN against the frontier: broadcast below
-    # this many distinct hosts, shuffle join (AQE-managed) above — the driver
-    # never holds the policy set either way
-    broadcast_policies_max_hosts: int = 1_000_000
     bloom_capacity_per_partition: int = 1 << 17
     bloom_fpp: float = 0.01
     # politeness wave-slicing: when >0, each BFS depth wave's schedule is cut

@@ -31,13 +31,8 @@ from .urls import (
 
 @pandas_udf(T.StringType())
 def canonicalize_url(urls: pd.Series) -> pd.Series:
-    """C1 — THE key function (src/main.rs:429-440 + url-crate parse)."""
-    return urls.map(lambda u: _canonicalize(u) if u is not None else None)
-
-
-@pandas_udf(T.StringType())
-def seed_normalize(urls: pd.Series) -> pd.Series:
-    """Seed path: parse-normalize + fragment strip (seeder.rs:55-58)."""
+    """C1 — THE key function (src/main.rs:429-440 + url-crate parse); also
+    the seed path's parse-normalize + fragment strip (seeder.rs:55-58)."""
     return urls.map(lambda u: _canonicalize(u) if u is not None else None)
 
 

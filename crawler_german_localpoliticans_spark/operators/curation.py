@@ -178,16 +178,17 @@ def _bench_gram_join_side(
     benchmark: DataFrame,
     bench_text_col: str,
     n: int,
-    broadcast_max_grams: int | None,
+    broadcast_max_grams: int,
 ) -> DataFrame:
-    """Self-defending join side (the robots-join pattern,
-    plans/crawl.py evaluate_robots): COUNT the distinct benchmark gram set
+    """Self-defending join side: COUNT the distinct benchmark gram set
     once, broadcast it only when it is provably small, otherwise hand
     Catalyst the un-hinted side so the gram join shuffles on gram_hash and
     per-task memory stays O(grams/P). The gram set is persisted so the
     count does not recompute the Arrow gram kernel inside the join.
-    broadcast_max_grams=None skips the guard (unconditional broadcast —
-    the pre-guard behavior, for callers that know their benchmark).
+    Spark's own size-based join selection (what the robots join relies on)
+    cannot make this call: the gram side's plan-time estimate is ~3e18 B
+    for a createDataFrame benchmark, so un-hinted it plans a SortMergeJoin
+    that shuffles every document gram.
 
     The count runs ONCE per (session, benchmark plan, n, threshold): the
     resulting broadcast-or-shuffle DECISION is memoized, so repeated calls
@@ -195,8 +196,6 @@ def _bench_gram_join_side(
     job. Like AQE statistics, a stale decision can only change the join
     strategy, never the result."""
     bench_grams = _bench_gram_hashes(benchmark, bench_text_col, n)
-    if broadcast_max_grams is None:
-        return F.broadcast(bench_grams)
     spark = benchmark.sparkSession
     key = (
         spark.sparkContext.applicationId,
@@ -215,8 +214,7 @@ def _bench_gram_join_side(
         # cache entry leaked for the session lifetime (review find, r4).
         # The memo keeps subsequent calls from ever re-counting. NOTE the
         # guard makes DataFrame CONSTRUCTION run one Spark job (the count)
-        # on the first call per (appId, benchmark plan, n, threshold) key;
-        # pass broadcast_max_grams=None for fully-lazy plan assembly.
+        # on the first call per (appId, benchmark plan, n, threshold) key.
         counted.unpersist()
     return F.broadcast(bench_grams) if decision else bench_grams
 
@@ -231,7 +229,7 @@ def contamination_check(
     text_col: str,
     bench_text_col: str = "text",
     n: int = 13,
-    broadcast_max_grams: int | None = BROADCAST_MAX_BENCH_GRAMS,
+    broadcast_max_grams: int = BROADCAST_MAX_BENCH_GRAMS,
 ) -> DataFrame:
     """Per-document contamination against an eval/benchmark corpus: a doc is
     contaminated iff it shares >= 1 word n-gram with ANY benchmark text.
@@ -267,7 +265,7 @@ def decontaminate(
     text_col: str,
     bench_text_col: str = "text",
     n: int = 13,
-    broadcast_max_grams: int | None = BROADCAST_MAX_BENCH_GRAMS,
+    broadcast_max_grams: int = BROADCAST_MAX_BENCH_GRAMS,
 ) -> DataFrame:
     """The filter form: documents with no shared n-gram (LEFT ANTI join on
     the size-guarded benchmark gram set — the exact plan a 10^10-doc

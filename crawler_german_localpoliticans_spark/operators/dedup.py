@@ -256,14 +256,14 @@ def lsh_candidate_pairs(
     sigs: DataFrame,
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
-    max_bucket_size: int | None = LSH_MAX_BUCKET,
+    max_bucket_size: int = LSH_MAX_BUCKET,
     observation=None,
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs colliding in >=1 LSH band. The band hash
     is xxhash64 over the band's signature slice; the pair search is an
     equi-join on (band, band_hash) — never a cross join.
 
-    Degenerate-bucket cap (max_bucket_size, None disables): a hash-agg
+    Degenerate-bucket cap (max_bucket_size): a hash-agg
     finds the oversized buckets (map-side combine -> one row per bucket;
     there are mathematically at most n_banded/max_bucket_size of them, so
     the list always broadcasts), and ONLY their rows pay a row_number
@@ -292,105 +292,92 @@ def lsh_candidate_pairs(
     what's elided are the redundant overflow-overflow/head-overflow pairs.
     Not silent: pass a pyspark.sql.Observation as `observation` and after
     the first action its metrics report `lsh_capped_members` (overflow rows
-    across all bands) and `lsh_max_bucket_size`; minhash_dedup_pairs also
-    exposes this.
+    across all bands) and `lsh_max_bucket_size`.
     """
     from pyspark.sql.window import Window
 
     # the banded table feeds the size probe, BOTH branches of the
     # flagged split, and BOTH sides of the pair self-join — without a
     # persist the explode+hash subtree (and its upstream signature read)
-    # re-executes once per consumer, up to 8x in the capped plan
+    # re-executes once per consumer, up to 8x
     # (measured: the candidate stage alone walled 14s at sf1.0 before,
     # ~2s after). Same session-cache convention as sigs.persist in
     # minhash_dedup_pairs: repeated same-input calls reuse the entry,
     # bench/oracle runs clearCache between runs.
     banded = banded_signatures(sigs, bands, rows).persist()
 
-    if max_bucket_size is None:
-        if observation is not None:
-            # the cap metrics only exist on the capped branch — attaching
-            # the Observation to nothing would make a caller's obs.get
-            # block forever, so fail loudly instead
-            raise ValueError(
-                "observation requires max_bucket_size (the cap metrics are "
-                "emitted by the capped branch); pass max_bucket_size or drop "
-                "the observation"
-            )
-        head, overflow_pairs = banded, None
-    else:
-        # Find the oversized buckets with one hash-agg, then rank ONLY
-        # their rows: a global row_number window would SORT the whole
-        # banded table (16 rows per doc) to police a cap that almost never
-        # triggers. The oversized-bucket list is mathematically tiny —
-        # each holds > max_bucket_size members, so there are at most
-        # n_banded / max_bucket_size of them — hence always broadcastable,
-        # and the plan needs no eager driver-side decision.
-        sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bsz"))
-        # persisted so the eager probe count below materializes it once and
-        # the flagging join reads the (near-empty) cache instead of
-        # re-running the full bucket-count aggregation a second time
-        oversized = (
-            sizes.where(F.col("_bsz") > max_bucket_size)
-            .select("band", "bh", F.lit(True).alias("_over"))
-            .persist()
+    # Find the oversized buckets with one hash-agg, then rank ONLY
+    # their rows: a global row_number window would SORT the whole
+    # banded table (16 rows per doc) to police a cap that almost never
+    # triggers. The oversized-bucket list is mathematically tiny —
+    # each holds > max_bucket_size members, so there are at most
+    # n_banded / max_bucket_size of them — hence always broadcastable,
+    # and the plan needs no eager driver-side decision.
+    sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bsz"))
+    # persisted so the eager probe count below materializes it once and
+    # the flagging join reads the (near-empty) cache instead of
+    # re-running the full bucket-count aggregation a second time
+    oversized = (
+        sizes.where(F.col("_bsz") > max_bucket_size)
+        .select("band", "bh", F.lit(True).alias("_over"))
+        .persist()
+    )
+    # Self-defending join side (the curation bench-grams pattern):
+    # the oversized list is bounded at n_banded/cap ROWS — near-always
+    # zero to a handful — but neither Catalyst nor AQE can see that
+    # (the > cap filter sits ABOVE the aggregation's exchange, so the
+    # runtime size estimate is the full 765k-bucket histogram and the
+    # join planned as a SortMergeJoin shuffling the whole banded table;
+    # stage receipt in BENCH/NOTES.md r6). Probe the actual count once
+    # (a map-side-combined agg over the cached banded table) and
+    # broadcast only when provably small; a mass-duplicated corpus
+    # whose oversized list is genuinely huge (~3e7 rows at 1e10 docs)
+    # keeps the shuffle join — per-task memory stays O(buckets/P).
+    #
+    # PERSIST the flagged table: it feeds FOUR branches (ok_part on
+    # both sides of the pair self-join, the ranked window, the
+    # overflow slice), and exchange reuse does not fire across them —
+    # measured at sf1.0 the un-materialized plan re-shuffled the full
+    # banded table ~10x and the self-join read 8M shuffled rows for
+    # 36k join hits (stage receipt in BENCH/NOTES.md r6). With the
+    # cache, each branch is a map-side filter over one materialized
+    # copy and the window shuffles only the (usually zero) oversized
+    # rows. One extra materialization pass, ~7x fewer shuffled bytes;
+    # storage is MEMORY_AND_DISK so a 1e10-doc banded table spills
+    # rather than OOMs — still far cheaper than ten shuffles of it.
+    # NOTE the probe makes plan CONSTRUCTION run one small Spark job
+    # (the oversized count) — the same documented trade as
+    # curation._bench_gram_join_side; it also materializes the banded
+    # cache, which every later branch was going to pay anyway.
+    if oversized.count() <= LSH_BROADCAST_MAX_OVERSIZED:
+        oversized = F.broadcast(oversized)
+    flagged = banded.join(oversized, ["band", "bh"], "left").persist()
+    ok_part = flagged.where(F.col("_over").isNull()).select("id", "band", "bh")
+    w = Window.partitionBy("band", "bh").orderBy("id")
+    ranked = flagged.where(F.col("_over").isNotNull()).select(
+        "id",
+        "band",
+        "bh",
+        F.row_number().over(w).alias("rk"),
+        F.first("id").over(w).alias("rep"),  # min id: window is id-ordered
+    )
+    if observation is not None:
+        # metrics are null when no bucket exceeded the cap (the
+        # observed branch saw zero rows)
+        ranked = ranked.observe(
+            observation,
+            F.sum((F.col("rk") > max_bucket_size).cast("long")).alias(
+                "lsh_capped_members"
+            ),
+            F.max("rk").alias("lsh_max_bucket_size"),
         )
-        # Self-defending join side (the robots-join / bench-grams pattern):
-        # the oversized list is bounded at n_banded/cap ROWS — near-always
-        # zero to a handful — but neither Catalyst nor AQE can see that
-        # (the > cap filter sits ABOVE the aggregation's exchange, so the
-        # runtime size estimate is the full 765k-bucket histogram and the
-        # join planned as a SortMergeJoin shuffling the whole banded table;
-        # stage receipt in BENCH/NOTES.md r6). Probe the actual count once
-        # (a map-side-combined agg over the cached banded table) and
-        # broadcast only when provably small; a mass-duplicated corpus
-        # whose oversized list is genuinely huge (~3e7 rows at 1e10 docs)
-        # keeps the shuffle join — per-task memory stays O(buckets/P).
-        #
-        # PERSIST the flagged table: it feeds FOUR branches (ok_part on
-        # both sides of the pair self-join, the ranked window, the
-        # overflow slice), and exchange reuse does not fire across them —
-        # measured at sf1.0 the un-materialized plan re-shuffled the full
-        # banded table ~10x and the self-join read 8M shuffled rows for
-        # 36k join hits (stage receipt in BENCH/NOTES.md r6). With the
-        # cache, each branch is a map-side filter over one materialized
-        # copy and the window shuffles only the (usually zero) oversized
-        # rows. One extra materialization pass, ~7x fewer shuffled bytes;
-        # storage is MEMORY_AND_DISK so a 1e10-doc banded table spills
-        # rather than OOMs — still far cheaper than ten shuffles of it.
-        # NOTE the probe makes plan CONSTRUCTION run one small Spark job
-        # (the oversized count) — the same documented trade as
-        # curation._bench_gram_join_side; it also materializes the banded
-        # cache, which every later branch was going to pay anyway.
-        if oversized.count() <= LSH_BROADCAST_MAX_OVERSIZED:
-            oversized = F.broadcast(oversized)
-        flagged = banded.join(oversized, ["band", "bh"], "left").persist()
-        ok_part = flagged.where(F.col("_over").isNull()).select("id", "band", "bh")
-        w = Window.partitionBy("band", "bh").orderBy("id")
-        ranked = flagged.where(F.col("_over").isNotNull()).select(
-            "id",
-            "band",
-            "bh",
-            F.row_number().over(w).alias("rk"),
-            F.first("id").over(w).alias("rep"),  # min id: window is id-ordered
-        )
-        if observation is not None:
-            # metrics are null when no bucket exceeded the cap (the
-            # observed branch saw zero rows)
-            ranked = ranked.observe(
-                observation,
-                F.sum((F.col("rk") > max_bucket_size).cast("long")).alias(
-                    "lsh_capped_members"
-                ),
-                F.max("rk").alias("lsh_max_bucket_size"),
-            )
-        head = ok_part.unionByName(
-            ranked.where(F.col("rk") <= max_bucket_size).select("id", "band", "bh")
-        )
-        overflow_pairs = (
-            ranked.where(F.col("rk") > max_bucket_size)
-            .select(F.col("rep").alias("id_a"), F.col("id").alias("id_b"))
-        )
+    head = ok_part.unionByName(
+        ranked.where(F.col("rk") <= max_bucket_size).select("id", "band", "bh")
+    )
+    overflow_pairs = (
+        ranked.where(F.col("rk") > max_bucket_size)
+        .select(F.col("rep").alias("id_a"), F.col("id").alias("id_b"))
+    )
 
     left = head.alias("l")
     right = head.alias("r")
@@ -403,9 +390,7 @@ def lsh_candidate_pairs(
         )
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
     )
-    if overflow_pairs is not None:
-        pairs = pairs.unionByName(overflow_pairs)
-    return pairs.distinct()
+    return pairs.unionByName(overflow_pairs).distinct()
 
 
 def minhash_dedup_pairs(
@@ -416,8 +401,6 @@ def minhash_dedup_pairs(
     num_perm: int = NUM_PERM,
     k: int = 3,
     hash_family: str = "crc32",
-    max_bucket_size: int | None = LSH_MAX_BUCKET,
-    observation=None,
 ) -> DataFrame:
     """Near-duplicate pairs with estimated Jaccard >= threshold:
     signatures -> LSH buckets -> candidate pairs -> signature-agreement
@@ -436,9 +419,7 @@ def minhash_dedup_pairs(
     # verification join — persist so the signature computation runs once,
     # not three times
     sigs = sig_fn(df, id_col, text_col, num_perm, k).persist()
-    cands = lsh_candidate_pairs(
-        sigs, max_bucket_size=max_bucket_size, observation=observation
-    )
+    cands = lsh_candidate_pairs(sigs)
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     joined = cands.join(a, "id_a").join(b, "id_b")

@@ -16,18 +16,19 @@ which is everything a writer needs to emit packed sequences in parallel
 n_packs_spanned; the gather is an equi-join on pack_id after a cheap
 interval explode).
 
-Scale shape: the global prefix sum is the same two-pass pattern as
-plans/ordering.py assign_global_seq_counted — a naive
-`SUM() OVER (ORDER BY id)` funnels the corpus through ONE partition; instead
-rows are range-bucketed by id, summed within buckets (partitionBy window),
-and the tiny per-bucket totals become broadcast offsets. Deterministic, shuffle-safe, never
+Scale shape: `start_offset` is the weighted form of the crawl's global
+seq — plans/ordering.py assign_global_seq_counted with the token count as
+the weight, so the corpus is never funnelled through the ONE partition a
+`SUM() OVER (ORDER BY id)` would use. Deterministic, shuffle-safe, never
 depends on partition iteration order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.ordering import assign_global_seq_counted
 
 
 def pack_sequences(
@@ -35,7 +36,6 @@ def pack_sequences(
     id_col: str,
     n_tokens_col: str,
     seq_len: int,
-    buckets: int = 32,
 ) -> DataFrame:
     """Add (start_offset, pack_id, pack_offset, n_packs_spanned) for the
     deterministic concatenation of documents in ascending `id_col` order
@@ -43,73 +43,18 @@ def pack_sequences(
     their stream position with n_packs_spanned = 0."""
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    lead = F.col(id_col)
-    # the operator runs two eager driver actions (bounds, per-bucket totals)
-    # before the final join — persist the input so a UDF-heavy upstream
-    # (e.g. with_token_counts) executes once for both probes instead of
-    # re-running per action; unpersisted after the result is assembled, so
-    # the caller's action recomputes upstream at most once more and nothing
-    # leaks into a long-lived session. The handle is kept separately:
-    # `df` is rebound below, and unpersisting the rebound derived frame
-    # would be a CacheManager no-op (plan mismatch), leaving the input
-    # pinned forever (round-5 review find).
-    cached_input = df = df.persist()
-    bounds = df.agg(
-        F.min(lead).alias("lo"), F.max(lead).alias("hi"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    if bounds["n"] == 0:
-        cached_input.unpersist()
-        return (
-            df.withColumn("start_offset", F.lit(0).cast("long"))
-            .withColumn("pack_id", F.lit(0).cast("long"))
-            .withColumn("pack_offset", F.lit(0).cast("long"))
-            .withColumn("n_packs_spanned", F.lit(0).cast("long"))
-        )
-    lo, hi = bounds["lo"], bounds["hi"]
-    span = (hi - lo) + 1
-    # monotone double form, never (id-lo)*buckets on longs: ids spanning
-    # >= 2^58 (e.g. xxhash64-derived ids) would overflow the product and
-    # wrap into NEGATIVE buckets, silently corrupting every offset.
-    # long->double conversion and division are monotone non-decreasing, so
-    # bucket order == id order at any span; ties just share a bucket.
-    bucket = (
-        F.least(
-            F.floor((lead.cast("double") - float(lo)) / F.lit(float(span)) * buckets),
-            F.lit(buckets - 1),
-        ).cast("int")
-        if span > 1
-        else F.lit(0)
-    )
-    df = df.withColumn("_bucket", bucket)
-    w = (
-        Window.partitionBy("_bucket")
-        .orderBy(lead.asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     n_tok = F.col(n_tokens_col).cast("long")
-    # inclusive within-bucket running total; exclusive = inclusive - own
-    df = df.withColumn("_incl", F.sum(n_tok).over(w))
-    totals = df.groupBy("_bucket").agg(F.sum(n_tok).alias("_t")).collect()
-    offsets: dict[int, int] = {}
-    acc = 0
-    for row in sorted(totals, key=lambda r: r["_bucket"]):
-        offsets[row["_bucket"]] = acc
-        acc += int(row["_t"] or 0)
-    spark = df.sparkSession
-    offsets_df = spark.createDataFrame(
-        [(b, o) for b, o in offsets.items()], "_bucket int, _offset long"
+    out, _ = assign_global_seq_counted(
+        df, [id_col], out_col="start_offset", weight=n_tok
     )
-    start = F.col("_offset") + F.col("_incl") - n_tok
     L = F.lit(seq_len).cast("long")
     # `div` (integer division), never `/`: Spark's / goes through double,
     # which silently corrupts offsets past 2^53 — a real regime at corpus
     # scale (a 100-TB corpus is ~2.5e13 tokens). The token count goes
     # through a fixed-name staging column so the expr never interpolates a
     # user column name (backticks/reserved words would break the parse).
-    out = (
-        df.join(F.broadcast(offsets_df), "_bucket")
-        .withColumn("start_offset", start.cast("long"))
-        .withColumn("_n_tok", n_tok)
+    return (
+        out.withColumn("_n_tok", n_tok)
         .withColumn("pack_id", F.expr(f"start_offset div {seq_len}"))
         .withColumn("pack_offset", F.col("start_offset") % L)
         .withColumn(
@@ -120,10 +65,8 @@ def pack_sequences(
                 + 1
             ),
         )
-        .drop("_bucket", "_incl", "_offset", "_n_tok")
+        .drop("_n_tok")
     )
-    cached_input.unpersist(blocking=False)
-    return out
 
 
 def pack_assignments(

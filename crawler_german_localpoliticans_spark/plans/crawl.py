@@ -4,7 +4,7 @@ Spark-native reimplementation of the reference's worker loop
 (src/main.rs:554-980) — NOT a port: the Redis queue/set become DataFrame
 state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
 
-    frontier(round r) ─ mark seen ─ robots filter (broadcast policies)
+    frontier(round r) ─ mark seen ─ robots filter (policies join)
       ─ politeness schedule (host partitioning, priority order, rate caps)
       ─ join pages on url (the offline "fetch", BASELINE input_hint)
       ─ found_links pandas UDF ─ keyword gate (Column expr)
@@ -34,16 +34,17 @@ them against plans/oracle.py on shared fixtures):
 
 Scale posture (local[32] here, 1000 executors at 10^10 URLs):
 - robots policies: parsed once per distinct host ON EXECUTORS and kept as a
-  DataFrame; the frontier picks them up via a size-guarded JOIN on host_key
-  (broadcast when small, AQE shuffle join at 10^7+ hosts) — the driver never
-  holds the policy set, only its row count;
+  DataFrame; the frontier picks them up via an un-hinted JOIN on host_key,
+  so Spark's size-based join selection broadcasts a small policy set and
+  shuffles a 10^7+-host one — no driver-side count or threshold decides;
 - the frontier→pages join is the big shuffle: both sides hash on `url`; at
   production scale `pages` is bucketed by url so the join is shuffle-free
   on the pages side; AQE handles candidate skew;
 - the anti-join is keyed on the canonical URL (uniform by construction);
   the bloom sidecar keeps definite-new rows out of it entirely;
-- no collect() on data paths — only tiny aggregates (counts, bucket
-  offsets, robots policies) reach the driver.
+- no collect() on data paths — only tiny aggregates (seq bounds and
+  per-bucket totals) and a policies side small enough for Spark to
+  broadcast reach the driver.
 """
 
 from __future__ import annotations
@@ -136,21 +137,18 @@ def _robots_blocked_udf(urls: pd.Series, allows: pd.Series, disallows: pd.Series
     return pd.Series(out)
 
 
-def evaluate_robots(
-    df: DataFrame, policies_df: DataFrame, broadcast: bool = True
-) -> DataFrame:
+def evaluate_robots(df: DataFrame, policies_df: DataFrame) -> DataFrame:
     """Join `df` (needs a host_key column) against the policies table and
     evaluate the longest-prefix match: adds robots_blocked + crawl_delay_ms.
 
-    The policy state ships as a JOIN, not a driver dict: below
-    `broadcast_policies_max_hosts` the policies side is broadcast (one copy
-    per executor, exactly the old semantics); above it Catalyst/AQE picks a
-    shuffle join keyed on host_key — per-task memory stays O(hosts/P) at any
-    host count. Only (allow, disallow) rule arrays cross into Python, one
-    Arrow batch per partition."""
-    pol = F.broadcast(policies_df) if broadcast else policies_df
+    The policy state ships as a JOIN, not a driver dict, with no hint: when
+    Spark's size estimate of the policies side is at most
+    `spark.sql.autoBroadcastJoinThreshold` it is broadcast (one copy per
+    executor); above it Catalyst/AQE picks a shuffle join keyed on host_key —
+    per-task memory stays O(hosts/P) at any host count. Only (allow,
+    disallow) rule arrays cross into Python, one Arrow batch per partition."""
     return (
-        df.join(pol, on="host_key", how="left")
+        df.join(policies_df, on="host_key", how="left")
         .withColumn(
             "robots_blocked",
             _robots_blocked_udf(F.col("url"), F.col("allow"), F.col("disallow")),
@@ -201,11 +199,9 @@ class CrawlDriver:
         # the right layout, as documented in the module header.
         self.pages = tbl.read_pages(spark, pages_path).persist()
         # robots policies stay a DataFrame (parsed once on executors, reused
-        # every round via persist); the only driver-side value is the row
-        # COUNT, which sizes the join strategy — never the policies themselves
+        # every round via persist); Spark picks the join strategy from its
+        # own size estimate, so no driver-side count is taken
         self.policies_df = parse_policies_df(robots_df, config).persist()
-        n_policy_hosts = self.policies_df.count()
-        self.broadcast_policies = n_policy_hosts <= config.broadcast_policies_max_hosts
 
     # ---------------------------------------------------------------- enqueue
     def _enqueue(
@@ -223,7 +219,7 @@ class CrawlDriver:
         which rides out of the seq assignment's bucket-count pass."""
         cfg = self.config
         rows, n = assign_global_seq_counted(
-            rows, order_cols, base=base, buckets=cfg.shuffle_partitions, known_bounds=known_bounds
+            rows, order_cols, base=base, known_bounds=known_bounds
         )
         frontier = with_hashes(
             rows.select(
@@ -254,14 +250,12 @@ class CrawlDriver:
         #    the round's frontier was enqueued (seeds at round 0, children at
         #    expansion) — invariant: url_seen == distinct(frontier.url).
 
-        # 2. robots filter (broadcast state; blocked rows stay in seen and in
+        # 2. robots filter (policies join; blocked rows stay in seen and in
         #    fetched with robots_blocked=true, src/main.rs:684-686), keyword
         #    gate (pure Column expr), politeness schedule (host partitions,
         #    priority order, per-host slots + slices)
         frontier = evaluate_robots(
-            cat.read_round("frontier", r, tbl.FRONTIER_SCHEMA),
-            self.policies_df,
-            broadcast=self.broadcast_policies,
+            cat.read_round("frontier", r, tbl.FRONTIER_SCHEMA), self.policies_df
         ).withColumn(
             "keyword_hit",
             udfs.keyword_hit_col(F.col("url"), cfg.keywords, cfg.save_all_html),
@@ -454,7 +448,7 @@ class CrawlDriver:
             # invalid URLs are skipped (seeder.rs:55-60); duplicates are
             # kept (the seeder does not dedup)
             seeded = seeds_df.withColumn(
-                "url", udfs.seed_normalize(F.col("raw_url"))
+                "url", udfs.canonicalize_url(F.col("raw_url"))
             ).where(F.col("url").isNotNull())
             next_seq = self._enqueue(0, seeded, ["seed_order"], 0)
             start_round = 0

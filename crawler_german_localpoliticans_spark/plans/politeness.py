@@ -54,43 +54,43 @@ def schedule_wave(allowed: DataFrame, config: CrawlConfig) -> DataFrame:
     df = allowed.withColumn(
         "effective_delay_ms", effective_delay_col(F.col("crawl_delay_ms"), config)
     )
-    if config.salt_buckets > 1:
-        # Hot-host skew handling (north rule: "salting + per-host rate
-        # caps"): a single window partition per host puts a 100x-in-link
-        # host's whole wave in ONE task. Salt the partition key with
-        # pmod(xxhash64(url), S) and interleave: slot = local_rank*S + salt.
-        # Slots stay injective per host, so slice caps still bound every
-        # host exactly; priority order is preserved within each salt bucket
-        # (keyword-first, then seq) and approximate across buckets — the
-        # schedule is a scheduling artifact, never an ordering key, so
-        # result parity is untouched (asserted in tests).
-        salt = F.pmod(F.xxhash64("url"), F.lit(config.salt_buckets)).cast("int")
-        df = df.withColumn("_salt", salt)
-        w = Window.partitionBy("host", "_salt").orderBy(*priority)
-        df = df.withColumn(
-            "host_slot",
-            ((F.row_number().over(w) - F.lit(1)) * F.lit(config.salt_buckets) + F.col("_salt")),
-        ).drop("_salt")
-    else:
-        w = Window.partitionBy("host").orderBy(*priority)
-        df = df.withColumn("host_slot", F.row_number().over(w) - F.lit(1))
-    df = df.withColumn("host_slot", F.when(~blocked_col, F.col("host_slot")))
+    # Hot-host skew handling (north rule: "salting + per-host rate caps"): a
+    # single window partition per host puts a 100x-in-link host's whole wave
+    # in ONE task. Salt the partition key with pmod(xxhash64(url), S) and
+    # interleave: slot = local_rank*S + salt. Slots stay injective per host,
+    # so slice caps still bound every host exactly; priority order is
+    # preserved within each salt bucket (keyword-first, then seq) and
+    # approximate across buckets — the schedule is a scheduling artifact,
+    # never an ordering key, so result parity is untouched (asserted in
+    # tests). S = 1 is the exact single-window schedule.
+    S = config.salt_buckets
+    salt = F.pmod(F.xxhash64("url"), F.lit(S)).cast("int") if S > 1 else F.lit(0)
+    w = Window.partitionBy("host", "_salt").orderBy(*priority)
+    df = df.withColumn("_salt", salt)
+    df = df.withColumn(
+        "host_slot",
+        F.when(
+            ~blocked_col,
+            (F.row_number().over(w) - F.lit(1)) * F.lit(S) + F.col("_salt"),
+        ),
+    ).drop("_salt")
     df = df.withColumn(
         "sched_offset_ms", F.col("host_slot") * F.col("effective_delay_ms")
     )
+    # per-host pages per slice: the tighter of the enabled caps
+    caps = []
     if config.slice_budget_ms > 0:
-        cap = F.greatest(
-            F.lit(1),
-            F.floor(F.lit(config.slice_budget_ms) / F.col("effective_delay_ms")),
+        caps.append(
+            F.greatest(
+                F.lit(1),
+                F.floor(F.lit(config.slice_budget_ms) / F.col("effective_delay_ms")),
+            )
         )
-        if config.max_pages_per_host_per_slice > 0:
-            cap = F.least(cap, F.lit(config.max_pages_per_host_per_slice))
+    if config.max_pages_per_host_per_slice > 0:
+        caps.append(F.lit(config.max_pages_per_host_per_slice))
+    if caps:
+        cap = F.least(*caps) if len(caps) > 1 else caps[0]
         df = df.withColumn("slice", (F.col("host_slot") / cap).cast("int"))
-    elif config.max_pages_per_host_per_slice > 0:
-        df = df.withColumn(
-            "slice",
-            (F.col("host_slot") / F.lit(config.max_pages_per_host_per_slice)).cast("int"),
-        )
     else:
         df = df.withColumn("slice", F.lit(0))
     return df

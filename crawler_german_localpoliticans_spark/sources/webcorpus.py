@@ -123,7 +123,7 @@ def run_flagship_crawl(
         work_dir = tempfile.mkdtemp(prefix="crawl_flagship_")
     pages_path = f"{work_dir}/pages_input"
     pages.write.mode("overwrite").parquet(pages_path)
-    config = CrawlConfig(max_depth=max_depth, shuffle_partitions=32, seen_partitions=32)
+    config = CrawlConfig(max_depth=max_depth, seen_partitions=32)
     driver = CrawlDriver(spark, f"{work_dir}/state", pages_path, robots, config)
     tables = driver.run(seeds)
     return tables, driver

@@ -41,17 +41,6 @@ def stream_fetched_counts(
     )
 
 
-def fetched_as_stream(spark: SparkSession, fetched_dir: str) -> DataFrame:
-    """Raw streaming DataFrame over committed fetched rounds (building block
-    for custom sinks)."""
-    return (
-        spark.readStream.schema(FETCHED_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(fetched_dir)
-    )
-
-
 # ---------------------------------------------------------------------------
 # S10: ETag-change reprocessing gate
 # ---------------------------------------------------------------------------

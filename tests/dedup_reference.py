@@ -1,9 +1,10 @@
-"""JVM-side reference forms of two dedup kernels, kept for parity tests only.
+"""JVM-side reference forms of three dedup kernels, kept for parity tests only.
 
-The engine runs the Arrow MinHash kernel (`dedup.minhash_signatures_arrow`)
-and the per-block BLAS cosine kernel (`dedup.embedding_neardup_pairs`). The
-forms below compute the same values with plain Spark expressions, so the
-tests can pin the fast kernels byte-for-byte against an independent plan.
+The engine runs the Arrow MinHash kernel (`dedup.minhash_signatures_arrow`),
+the per-block BLAS cosine kernel (`dedup.embedding_neardup_pairs`) and the
+bucket-capped LSH candidate search (`dedup.lsh_candidate_pairs`). The forms
+below compute the same values with plain Spark expressions, so the tests can
+pin the engine kernels against an independent plan.
 """
 
 from __future__ import annotations
@@ -12,9 +13,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.operators.dedup import (
+    LSH_BANDS,
+    LSH_ROWS,
     MINHASH_PRIME,
     NUM_PERM,
     _permutation_params,
+    banded_signatures,
     word_shingles,
 )
 
@@ -68,4 +72,24 @@ def embedding_neardup_pairs_join(
             F.round(dot / (F.col("l.norm") * F.col("r.norm")), 6).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
+    )
+
+
+def lsh_candidate_pairs_uncapped(
+    sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
+) -> DataFrame:
+    """Uncapped form of `dedup.lsh_candidate_pairs`: every (id_a < id_b)
+    pair sharing a (band, band_hash) bucket, as one band self-join. Equal to
+    the capped engine whenever no bucket exceeds the cap."""
+    banded = banded_signatures(sigs, bands, rows)
+    l, r = banded.alias("l"), banded.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bh") == F.col("r.bh"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .distinct()
     )

@@ -53,7 +53,7 @@ def test_traced_crawl_has_one_span_per_enqueue_layer(spark, smoke_dir, tmp_path)
     from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
     from crawler_german_localpoliticans_spark.sources.tables import read_robots
 
-    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
+    config = CrawlConfig(seen_partitions=8)
     robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
     seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
     tracer = Tracer(spark, "t")

@@ -37,7 +37,7 @@ def run_both(spark, tmp_path, seeds, pages, robots, config):
 def test_all_seeds_robots_blocked(spark, tmp_path):
     pages = {"https://a.de/x": '<a href="/y">y</a>', "https://a.de/y": ""}
     robots = {"https://a.de": "User-agent: *\nDisallow: /\n"}
-    config = CrawlConfig(seen_partitions=4, shuffle_partitions=4)
+    config = CrawlConfig(seen_partitions=4)
     tables = run_both(spark, tmp_path, ["https://a.de/x"], pages, robots, config)
     rows = tables.fetched.collect()
     assert len(rows) == 1 and rows[0]["robots_blocked"]
@@ -50,7 +50,7 @@ def test_max_depth_zero_fetches_seeds_only(spark, tmp_path):
         "https://a.de/": '<a href="/child">c</a>',
         "https://a.de/child": "",
     }
-    config = CrawlConfig(max_depth=0, seen_partitions=4, shuffle_partitions=4)
+    config = CrawlConfig(max_depth=0, seen_partitions=4)
     tables = run_both(spark, tmp_path, ["https://a.de/"], pages, {}, config)
     rows = tables.fetched.collect()
     assert [r["url"] for r in rows] == ["https://a.de/"]
@@ -60,7 +60,7 @@ def test_max_depth_zero_fetches_seeds_only(spark, tmp_path):
 
 def test_seeds_with_dead_urls_only(spark, tmp_path):
     pages = {"https://real.de/": ""}
-    config = CrawlConfig(seen_partitions=4, shuffle_partitions=4)
+    config = CrawlConfig(seen_partitions=4)
     tables = run_both(
         spark, tmp_path, ["https://tot.de/", "https://auch-tot.de/"], pages, {}, config
     )
@@ -80,7 +80,7 @@ def test_seeds_are_seen_only_once_popped(spark, tmp_path):
         x: "",
     }
     # seq: a=0, b=1, a=2 (duplicated seed row), c=3
-    config = CrawlConfig(seen_partitions=4, shuffle_partitions=4)
+    config = CrawlConfig(seen_partitions=4)
     tables = run_both(spark, tmp_path, [a, b, a, c], pages, {}, config)
     rows = tables.fetched.select("depth", "url").orderBy("seq").collect()
     assert [(r["depth"], r["url"]) for r in rows] == [
@@ -102,7 +102,7 @@ def test_missing_committed_round_fails_loud(spark, tmp_path):
     from crawler_german_localpoliticans_spark.sources.tables import MissingRoundError
 
     pages = {"https://a.de/": '<a href="/b">b</a>', "https://a.de/b": ""}
-    config = CrawlConfig(max_depth=1, seen_partitions=4, shuffle_partitions=4)
+    config = CrawlConfig(max_depth=1, seen_partitions=4)
     run_both(spark, tmp_path, ["https://a.de/"], pages, {}, config)
     driver = CrawlDriver(
         spark, str(tmp_path / "work"), f"{tmp_path}/fx/pages.parquet",

@@ -61,14 +61,14 @@ def assert_exact_match(tables, oracle_res):
 
 
 def test_smoke_exact_match(spark, smoke_fixture, smoke_dir, tmp_path):
-    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
+    config = CrawlConfig(seen_partitions=8)
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)
     tables, _ = run_engine(spark, smoke_dir, tmp_path, config)
     assert_exact_match(tables, oracle_res)
 
 
 def test_correctness_exact_match(spark, correctness_fixture, correctness_dir, tmp_path):
-    config = CrawlConfig(seen_partitions=16, shuffle_partitions=16)
+    config = CrawlConfig(seen_partitions=16)
     oracle_res = crawl_oracle(
         correctness_fixture.seeds, correctness_fixture.pages, correctness_fixture.robots, config
     )
@@ -86,7 +86,6 @@ def test_politeness_slicing_does_not_change_results(spark, smoke_fixture, smoke_
         slice_budget_ms=4000,  # cap = 4000/eff_delay pages per host per slice
         max_pages_per_host_per_slice=2,
         seen_partitions=8,
-        shuffle_partitions=8,
     )
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)
     tables, driver = run_engine(spark, smoke_dir, tmp_path, config)
@@ -97,7 +96,7 @@ def test_politeness_slicing_does_not_change_results(spark, smoke_fixture, smoke_
 
 def test_dedup_idempotent_rerun(spark, smoke_fixture, smoke_dir, tmp_path):
     """Property (SURVEY.md §5): re-running from checkpoints changes nothing."""
-    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
+    config = CrawlConfig(seen_partitions=8)
     tables, driver = run_engine(spark, smoke_dir, tmp_path, config)
     before = sorted(
         (r["depth"], r["seq"], r["url"]) for r in tables.fetched.collect()
@@ -108,7 +107,7 @@ def test_dedup_idempotent_rerun(spark, smoke_fixture, smoke_dir, tmp_path):
 
 
 def test_metrics_recorded(spark, smoke_dir, tmp_path):
-    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
+    config = CrawlConfig(seen_partitions=8)
     tables, driver = run_engine(spark, smoke_dir, tmp_path, config)
     assert len(tables.metrics) == config.max_depth + 1
     for m in tables.metrics:

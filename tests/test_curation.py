@@ -133,7 +133,7 @@ def test_contamination_ignores_boundary_whitespace(spark):
 
 
 def test_contamination_broadcast_size_guard(spark):
-    """The benchmark gram side is self-defending (the robots-join pattern):
+    """The benchmark gram side is self-defending (a measured gram count):
     below broadcast_max_grams the gram join broadcasts; an adversarially
     large benchmark declines to a shuffle join — executors never hold the
     whole gram set. Results are identical either way."""

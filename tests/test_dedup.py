@@ -8,7 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.operators import dedup
-from dedup_reference import embedding_neardup_pairs_join, minhash_signatures
+from dedup_reference import (
+    embedding_neardup_pairs_join,
+    lsh_candidate_pairs_uncapped,
+    minhash_signatures,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -315,7 +319,7 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
         F.concat(F.lit("text nummer "), F.col("id").cast("string")).alias("text"),
     )
     ssigs = dedup.minhash_signatures_arrow(small, "doc_id", "text")
-    a = sorted((r["id_a"], r["id_b"]) for r in dedup.lsh_candidate_pairs(ssigs, max_bucket_size=None).collect())
+    a = sorted((r["id_a"], r["id_b"]) for r in lsh_candidate_pairs_uncapped(ssigs).collect())
     b = sorted((r["id_a"], r["id_b"]) for r in dedup.lsh_candidate_pairs(ssigs).collect())
     assert a == b
 

@@ -310,7 +310,7 @@ def test_streaming_ingest_counts(spark, smoke_dir, tmp_path):
     from crawler_german_localpoliticans_spark.sources.tables import read_robots
     from crawler_german_localpoliticans_spark.streaming import stream_fetched_counts
 
-    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8, max_depth=1)
+    config = CrawlConfig(seen_partitions=8, max_depth=1)
     robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
     seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
     d = CrawlDriver(spark, str(tmp_path / "crawl"), f"{smoke_dir}/pages.parquet", robots, config)
@@ -498,11 +498,11 @@ def test_pack_sequences_matches_python_reference(spark):
     got = {
         r["doc_id"]: (r["start_offset"], r["pack_id"], r["pack_offset"],
                       r["n_packs_spanned"])
-        for r in pack_sequences(df, "doc_id", "n_tokens", L, buckets=8).collect()
+        for r in pack_sequences(df, "doc_id", "n_tokens", L).collect()
     }
     assert got == expect
 
-    packed = pack_sequences(df, "doc_id", "n_tokens", L, buckets=8)
+    packed = pack_sequences(df, "doc_id", "n_tokens", L)
     rows_out = pack_assignments(packed, "doc_id").collect()
     expect_rows = sorted(
         (did, p)
@@ -548,7 +548,7 @@ def test_pack_emit_matches_python_reference(spark):
 
     df = spark.createDataFrame(rows, "doc_id long, toks array<string>")
     counted = df.select("doc_id", F.size("toks").cast("long").alias("n_tokens"))
-    packed = pack_sequences(counted, "doc_id", "n_tokens", L, buckets=8)
+    packed = pack_sequences(counted, "doc_id", "n_tokens", L)
     got = {
         r["pack_id"]: (r["n_tokens"], list(r["tokens"]), list(r["doc_breaks"]))
         for r in pack_emit(packed, df, "doc_id", "toks", L).collect()
@@ -648,7 +648,7 @@ def test_pack_sequences_wide_hash_id_domain(spark):
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
     got = {
         r["doc_id"]: r["start_offset"]
-        for r in pack_sequences(df, "doc_id", "n_tokens", 16, buckets=4).collect()
+        for r in pack_sequences(df, "doc_id", "n_tokens", 16).collect()
     }
     start, expect = 0, {}
     for i, n in rows:

@@ -5,6 +5,8 @@ paths. A plan regression fails CI even while results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -121,8 +123,10 @@ def test_anti_join_on_url_hash_keys(spark, tmp_path):
 
 def test_robots_policies_join_scales_past_broadcast(spark):
     """Flagship robots path at 10^5 synthetic hosts: the policy set never
-    reaches the driver — evaluate_robots is a JOIN (broadcast below the size
-    guard, shuffle hash join above it), and results are exact either way."""
+    reaches the driver as a count or a dict — evaluate_robots is an
+    un-hinted JOIN, so Spark's size-based selection broadcasts the small
+    policies side and shuffles on host_key once broadcasts are off, and the
+    results are exact and identical either way."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.plans.crawl import (
         evaluate_robots,
@@ -142,18 +146,46 @@ def test_robots_policies_join_scales_past_broadcast(spark):
         F.concat(F.lit("https://h"), F.col("id"), F.lit(".de")).alias("host_key"),
         F.col("id"),
     )
-    for broadcast in (True, False):
-        out = evaluate_robots(frontier, policies, broadcast=broadcast)
-        plan = plan_of(out)
-        assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-        if broadcast:
-            assert "BroadcastHashJoin" in plan
-        rows = out.select("id", "robots_blocked", "crawl_delay_ms").collect()
-        assert len(rows) == len(range(0, n_hosts, 7))
-        for r in rows:
-            expect_blocked = r["id"] % 3 == 0
-            assert r["robots_blocked"] == expect_blocked, r
-            assert r["crawl_delay_ms"] == (2000 if expect_blocked else None), r
+    thresholds = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in thresholds}
+    results = []
+    try:
+        for broadcast_off in (False, True):
+            for k in thresholds:
+                if broadcast_off:
+                    spark.conf.set(k, "-1")
+                elif saved[k] is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, saved[k])
+            out = evaluate_robots(frontier, policies)
+            rows = sorted(
+                tuple(r) for r in out.select("id", "robots_blocked", "crawl_delay_ms").collect()
+            )
+            plan = plan_of(out)
+            assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+            if broadcast_off:
+                assert "BroadcastHashJoin" not in plan, plan
+                assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[host_key", plan), plan
+            else:
+                assert "BroadcastHashJoin" in plan, plan
+            results.append(rows)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert results[0] == results[1]
+    rows = results[0]
+    assert len(rows) == len(range(0, n_hosts, 7))
+    for id_, blocked, delay in rows:
+        expect_blocked = id_ % 3 == 0
+        assert blocked == expect_blocked, (id_, blocked)
+        assert delay == (2000 if expect_blocked else None), (id_, delay)
 
 
 def test_extraction_stage_prunes_payload_columns(spark, smoke_dir):

@@ -77,7 +77,7 @@ def test_salting_does_not_change_crawl_results(spark, smoke_fixture, smoke_dir, 
     from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
     from crawler_german_localpoliticans_spark.sources.tables import read_robots
 
-    cfg = CrawlConfig(salt_buckets=4, seen_partitions=8, shuffle_partitions=8)
+    cfg = CrawlConfig(salt_buckets=4, seen_partitions=8)
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, cfg)
     robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
     seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))

@@ -27,7 +27,7 @@ def collect_tables(tables):
 
 
 def test_kill_after_round0_resume_exact(spark, smoke_dir, tmp_path):
-    config = CrawlConfig(seen_partitions=8, shuffle_partitions=8)
+    config = CrawlConfig(seen_partitions=8)
     robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
     seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
 

@@ -39,7 +39,7 @@ def test_stress_profile_exact_match(spark, tmp_path):
     fx_dir.mkdir()
     write_fixture_parquet(fx, str(fx_dir))
 
-    config = CrawlConfig(seen_partitions=32, shuffle_partitions=32, salt_buckets=8)
+    config = CrawlConfig(seen_partitions=32, salt_buckets=8)
     oracle_res = crawl_oracle(fx.seeds, fx.pages, fx.robots, config)
     assert len(oracle_res.fetched) > 3000  # the profile actually fans out
 
