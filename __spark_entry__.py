@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crawler_german_localpoliticans_spark.sources.tables import spread
+
 SF0001 = "/root/testdata/sf0.001"
 
 # shared literals (Spark + DuckDB sides are generated from these)
@@ -30,57 +32,9 @@ GATE_WORDS = ("join", "filter", "window")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table, spread across the session's cores.
-
-    The testdata parquet is ONE file with ONE row group, so the scan — and
-    with it every per-document kernel Spark fuses into the scan stage
-    (regexp Columns, Arrow UDFs, explodes feeding a shuffle) — would run as
-    a SINGLE task regardless of core count (guide §2.2/§6: the row group is
-    the parallelism unit). One cheap round-robin exchange of the small text
-    table up front unlocks the whole session's parallelism for the heavy
-    per-doc work. Scale-adaptive: the target is defaultParallelism (== the
-    session's core count on local[N], cluster cores otherwise), never a
-    constant; on a production multi-file table whose scan already yields
-    >= that many splits this exchange is unnecessary — there the read is
-    split-parallel and callers would drop the repartition — but for the
-    driver-contract single-file inputs it is the difference between 1 and
-    N cores on the per-doc-kernel queries (measured at sf1.0, local[32],
-    min-of-2: pii_scrub 5.6s -> 1.1s, fingerprint 5.3s -> 0.9s,
-    contamination 22.8s -> 5.2s, bigram_lm 12.8s -> 4.8s).
-
-    `_docs_raw` keeps the raw single-task scan for queries whose whole
-    plan is one cheap column pass + an aggregation with map-side partial
-    agg (exact_dedup, source_mix, hash_split): there the exchange ships
-    the text for no parallel work worth having and is a pure regression
-    (measured exact_dedup 0.43s -> 1.5s with the spread)."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
-def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unspread documents scan — see _docs' spread rationale."""
+    """The documents table as scanned; `spread` it before heavy per-document
+    work."""
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _fit_scan_splits(spark: SparkSession, *paths: str) -> None:
-    """Size spark.sql.files.maxPartitionBytes so the LARGEST input among
-    `paths` splits into ~defaultParallelism scan tasks (guide §6): the
-    driver-contract tables are single files, and the default 128 MB split
-    leaves e.g. the sf1.0 lineitem scan (131 MB, 6M rows) on 2 tasks of a
-    32-core session. Scale-adaptive by construction — split = max(input
-    size / cores, 4 MB floor), so a production-sized table yields splits
-    at least as large as the default and the setting degenerates to a
-    no-op; parallelism is still capped by the file's row-group count
-    (the real fix at scale is writing more row groups). Runtime-settable
-    conf; cheap to re-set per query."""
-    import os as _os
-
-    biggest = max(_os.path.getsize(p) for p in paths)
-    per_core = biggest // max(spark.sparkContext.defaultParallelism, 1)
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        str(max(per_core, 4 * 1024 * 1024)),
-    )
 
 
 def _e6(col) -> F.Column:
@@ -197,13 +151,13 @@ def _q_found_links_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.dedup import exact_dedup
 
-    return exact_dedup(_docs_raw(spark, sf_dir), "doc_id", "text")
+    return exact_dedup(_docs(spark, sf_dir), "doc_id", "text")
 
 
 def _q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.dedup import minhash_dedup_pairs
 
-    pairs = minhash_dedup_pairs(_docs(spark, sf_dir), "doc_id", "text", threshold=0.2)
+    pairs = minhash_dedup_pairs(spread(_docs(spark, sf_dir)), "doc_id", "text", threshold=0.2)
     return pairs.select("id_a", "id_b", _e6(F.col("est_jaccard")).alias("est_jaccard_e6"))
 
 
@@ -221,7 +175,7 @@ def _q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_clusters,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = spread(_docs(spark, sf_dir))
     pairs = minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.2)
     return neardup_clusters(docs, "doc_id", pairs)
 
@@ -229,7 +183,7 @@ def _q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.dedup import with_simhash
 
-    return with_simhash(_docs(spark, sf_dir).select("doc_id", "text"), "text").select(
+    return with_simhash(spread(_docs(spark, sf_dir)).select("doc_id", "text"), "text").select(
         "doc_id", "simhash"
     )
 
@@ -254,7 +208,7 @@ def _planted_corpus(spark: SparkSession, sf_dir: str, salt: bool = False) -> Dat
     shingles while the intersection is <= min(|tok_a|,|tok_b|), so true
     Jaccard stays < 0.25 regardless of document length — the invariant holds
     unconditionally, even for byte-identical original pairs."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
     if salt:
         n_salt = F.greatest(
             F.lit(50), F.size(F.split(F.trim("text"), r"\s+")) * 2
@@ -336,7 +290,7 @@ def _q_fingerprint_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.dedup import ngram_jaccard_pairs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 150)
+    docs = spread(_docs(spark, sf_dir)).where(F.col("doc_id") < 150)
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k=3, threshold=0.15)
     return pairs.select("id_a", "id_b", _e6(F.col("jaccard")).alias("jaccard_e6"))
 
@@ -381,12 +335,9 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.similarity import cosine_topk_bruteforce
 
-    # same single-row-group story as _docs: the Arrow matvec would run in
-    # ONE scan task; spread the vectors first (the top-k itself is
-    # TakeOrderedAndProject — per-partition heaps, no global sort)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # the Arrow matvec is per-row work (see `spread`); the top-k itself is
+    # TakeOrderedAndProject — per-partition heaps, no global sort
+    emb = spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
     q = _query_vec(spark, sf_dir)
     topk = cosine_topk_bruteforce(emb, "vec_id", "embedding", q, k=10)
     return topk.select("id", _e6(F.col("score")).alias("score_e6"))
@@ -421,7 +372,7 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.textstats import with_lang_id
 
-    return with_lang_id(_docs(spark, sf_dir), "text").select(
+    return with_lang_id(spread(_docs(spark, sf_dir)), "text").select(
         "doc_id", "de_hits", "en_hits", "lang_pred"
     )
 
@@ -429,7 +380,7 @@ def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.textstats import with_quality_score
 
-    out = with_quality_score(_docs(spark, sf_dir), "text")
+    out = with_quality_score(spread(_docs(spark, sf_dir)), "text")
     return out.select(
         "doc_id",
         "n_tokens",
@@ -443,7 +394,7 @@ def _q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.textstats import with_token_counts
 
-    return with_token_counts(_docs(spark, sf_dir), "text").select(
+    return with_token_counts(spread(_docs(spark, sf_dir)), "text").select(
         "doc_id", "n_tokens", "n_bpe_tokens"
     )
 
@@ -457,7 +408,7 @@ def _q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         stratified_sample,
     )
 
-    docs = _docs_raw(spark, sf_dir)
+    docs = _docs(spark, sf_dir)
     fractions = {"src0": 1.0, "src3": 0.5, "src7": 0.25, "src12": 0.1}
     return stratified_sample(docs, "doc_id", "source", fractions, salt=5).select(
         "doc_id", "source"
@@ -469,7 +420,7 @@ def _q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     integral ppm share — the input to a training-mix decision."""
     from crawler_german_localpoliticans_spark.operators.sampling import source_mix
 
-    return source_mix(_docs_raw(spark, sf_dir), "source", "n_chars")
+    return source_mix(_docs(spark, sf_dir), "source", "n_chars")
 
 
 def _q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,7 +435,7 @@ def _q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         bigram_lm_scores,
     )
 
-    out = bigram_lm_scores(_docs(spark, sf_dir), "doc_id", "text")
+    out = bigram_lm_scores(spread(_docs(spark, sf_dir)), "doc_id", "text")
     return out.select("id", "n_bigrams", _e6(F.col("avg_logprob")).alias("avg_logprob_e6"))
 
 
@@ -502,7 +453,7 @@ def _q_quality_topk_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         bigram_lm_scores,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = spread(_docs(spark, sf_dir))
     scored = (
         bigram_lm_scores(docs, "doc_id", "text")
         .join(docs.select(F.col("doc_id").alias("id"), "source"), "id")
@@ -527,7 +478,7 @@ def _q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded as literals) to the same in-SQL CRC-32."""
     from crawler_german_localpoliticans_spark.operators.sampling import hash_split
 
-    docs = _docs_raw(spark, sf_dir)
+    docs = _docs(spark, sf_dir)
     return hash_split(
         docs, "doc_id", [("train", 0.8), ("val", 0.1), ("test", 0.1)], salt=7
     ).select("doc_id", "split")
@@ -552,7 +503,7 @@ def _q_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         stratified_sample,
     )
 
-    docs = _docs_raw(spark, sf_dir)
+    docs = _docs(spark, sf_dir)
     current = {
         r["stratum"]: float(r["weight"])
         for r in source_mix(docs, "source", "n_chars").collect()
@@ -574,7 +525,7 @@ def _q_substring_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         substring_overlap,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = spread(_docs(spark, sf_dir))
     cands = substring_dup_pairs(docs, "doc_id", "text", min_shared=2, max_fp_freq=1000)
     return substring_overlap(docs, cands, "doc_id", "text")
 
@@ -594,7 +545,7 @@ def _q_substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         substring_overlap,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
     cands = substring_dup_pairs(docs, "doc_id", "text", min_shared=2, max_fp_freq=1000)
     verified = substring_overlap(docs, cands, "doc_id", "text").where(
         F.col("shared_windows") >= 25
@@ -620,7 +571,7 @@ def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_token_counts,
     )
 
-    docs = with_token_counts(_docs(spark, sf_dir).select("doc_id", "text"), "text")
+    docs = with_token_counts(spread(_docs(spark, sf_dir)).select("doc_id", "text"), "text")
     return pack_sequences(docs, "doc_id", "n_tokens", 2048).select(
         "doc_id", "n_tokens", "start_offset", "pack_id", "pack_offset", "n_packs_spanned"
     )
@@ -639,7 +590,7 @@ def _q_pack_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_sequences,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
     toks = docs.select(
         "doc_id", F.regexp_extract_all("text", F.lit(TOKEN_PAT), 0).alias("toks")
     )
@@ -669,14 +620,14 @@ def _q_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return substring_dup_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", min_shared=2, max_fp_freq=1000
+        spread(_docs(spark, sf_dir)), "doc_id", "text", min_shared=2, max_fp_freq=1000
     )
 
 
 def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.textstats import with_fingerprint
 
-    return with_fingerprint(_docs(spark, sf_dir).select("doc_id", "text"), "text").select(
+    return with_fingerprint(spread(_docs(spark, sf_dir)).select("doc_id", "text"), "text").select(
         "doc_id", "doc_hash", "min_gram_hash"
     )
 
@@ -686,11 +637,11 @@ def _q_keyword_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cond = F.lit(False)
     for w in GATE_WORDS:
         cond = cond | hay.contains(F.lit(w))
-    return _docs_raw(spark, sf_dir).select("doc_id", cond.alias("keyword_hit"))
+    return _docs(spark, sf_dir).select("doc_id", cond.alias("keyword_hit"))
 
 
 def _q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 100)
+    docs = spread(_docs(spark, sf_dir)).where(F.col("doc_id") < 100)
     return docs.select(
         "doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "token")
     )
@@ -709,7 +660,7 @@ def _q_ledger_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_top_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.ledger import top_k_by_count
 
-    return top_k_by_count(_docs_raw(spark, sf_dir), "source", k=5).select("source", "n")
+    return top_k_by_count(_docs(spark, sf_dir), "source", k=5).select("source", "n")
 
 
 def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -726,7 +677,6 @@ def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _fit_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
@@ -743,7 +693,6 @@ def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_volume_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _fit_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -765,7 +714,7 @@ def _q_volume_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.functions import udfs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 200)
+    docs = spread(_docs(spark, sf_dir)).where(F.col("doc_id") < 200)
     messy = F.concat(
         F.lit("HTTPS://Host"),
         F.col("doc_id").cast("string"),
@@ -791,7 +740,7 @@ def _q_url_normalize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     port with no path."""
     from crawler_german_localpoliticans_spark.functions import udfs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 200)
+    docs = spread(_docs(spark, sf_dir)).where(F.col("doc_id") < 200)
     d = F.col("doc_id").cast("string")
     messy = F.when(
         F.col("doc_id") % 2 == 0,
@@ -845,7 +794,7 @@ def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    media = _docs(spark, sf_dir).select(
+    media = spread(_docs(spark, sf_dir)).select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("kind"),
         F.encode("text", "UTF-8").alias("payload"),
@@ -951,7 +900,7 @@ def _pii_augmented_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     txt = F.when(
         d % 7 == 3, F.concat(txt, F.lit(" IBAN DE89 3704 0044 0532 0130"))
     ).otherwise(txt)
-    return _docs(spark, sf_dir).select("doc_id", txt.alias("text"))
+    return spread(_docs(spark, sf_dir)).select("doc_id", txt.alias("text"))
 
 
 def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -979,7 +928,7 @@ def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same argument as the minhash band oracle."""
     from crawler_german_localpoliticans_spark.operators.curation import contamination_check
 
-    docs = _docs(spark, sf_dir)
+    docs = spread(_docs(spark, sf_dir))
     bench = docs.where(F.col("doc_id") % 97 == 0).select("text")
     out = contamination_check(docs, bench, "doc_id", "text", n=13)
     return out.select(
@@ -994,7 +943,7 @@ def _q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     definitions (H = ln n - Σ c·ln c / n)."""
     from crawler_german_localpoliticans_spark.operators.textstats import repetition_stats
 
-    out = repetition_stats(_docs(spark, sf_dir), "doc_id", "text")
+    out = repetition_stats(spread(_docs(spark, sf_dir)), "doc_id", "text")
     return out.select(
         F.col("id").alias("doc_id"),
         "n_tokens",
@@ -1008,10 +957,9 @@ def _q_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.operators.textstats import doc_frequency
 
     docs = _docs(spark, sf_dir)
-    # the n_docs probe counts the RAW scan — counting the spread frame
-    # would pay the repartition text shuffle for a row count
-    n = _docs_raw(spark, sf_dir).count()
-    out = doc_frequency(docs, "doc_id", "text", n_docs=n, min_df=2)
+    # count before the spread: the row count needs no text shuffle
+    n = docs.count()
+    out = doc_frequency(spread(docs), "doc_id", "text", n_docs=n, min_df=2)
     return out.select("token", "df_count", _e6(F.col("idf")).alias("idf_e6"))
 
 
@@ -1061,7 +1009,7 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_quality_score,
     )
 
-    scored = with_quality_score(with_lang_id(_docs(spark, sf_dir), "text"), "text")
+    scored = with_quality_score(with_lang_id(spread(_docs(spark, sf_dir)), "text"), "text")
     kept = scored.where((F.col("lang_pred") == "en") & (F.col("quality_score") >= 0.65))
     rep = kept.groupBy(F.md5("text").alias("h")).agg(F.min("doc_id").alias("doc_id"))
     return (
@@ -1075,7 +1023,6 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _fit_scan_splits(spark, f"{sf_dir}/lineitem.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.rollup("l_returnflag", "l_linestatus")

@@ -8,6 +8,11 @@ Column expressions — no Python in the loop, no randomness: URL, link graph,
 scripts and robots rules are all modular arithmetic over doc_id, so the same
 sf_dir always yields byte-identical pages on any executor count.
 
+The derivation is per-row work, so it goes through `tables.spread`: a
+documents input with fewer parquet row groups than the session's cores
+(the one-row-group testdata) is spread across them first, and a multi-file
+input is derived split-parallel with no exchange.
+
 Used by the flagship entry()/bench crawl; pytest uses the richer
 fixtures.py generator (edge-case links, malformed HTML).
 """
@@ -16,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from crawler_german_localpoliticans_spark.sources.tables import spread
 
 N_LINKS = 8
 BASE_TS = "2025-01-01 00:00:00"
@@ -39,13 +46,9 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str, max_docs: int | None
         docs = docs.where(F.col("doc_id") < max_docs)
     n = docs.count()
     # the html/url/anchor derivation below is a dozen concat/format
-    # expressions per row; the testdata parquet is one row group, so the
-    # whole derivation would run in ONE scan task (r6, same story as
-    # __spark_entry__._docs) — spread it first. Also gives the derived
-    # pages parquet a multi-file layout, so downstream consumers (the
-    # crawl's pages cache) scan in parallel. Row content is unchanged and
-    # every consumer orders explicitly.
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    # expressions per row (see `spread`); spreading also gives the derived
+    # pages parquet a multi-file layout. Every consumer orders explicitly.
+    docs = spread(docs)
     n_hosts = max(4, n // 50)
     did = F.col("doc_id")
 

@@ -271,3 +271,131 @@ def test_found_links_query_evaluates_link_udf_once(spark):
     plan = plan_of(entry.queries()["found_links_jvm"](spark, SF_DIR))
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+
+
+# --- the scan-layout rule (sources/tables.spread) ---------------------------
+
+
+def test_lineitem_queries_leave_session_conf_unchanged(spark):
+    """Registry queries read their inputs; they never retune the session. A
+    per-query split-size conf set would stay for every later query."""
+    import __spark_entry__ as entry
+
+    session = spark.newSession()
+    before = session.conf.getAll
+    split = session.conf.get("spark.sql.files.maxPartitionBytes")
+    for name in ("pricing_summary", "volume_by_nation", "rollup_pricing"):
+        entry.queries()[name](session, SF_DIR).collect()
+    assert session.conf.get("spark.sql.files.maxPartitionBytes") == split
+    assert session.conf.getAll == before
+
+
+def test_spread_follows_parquet_row_groups(spark, tmp_path):
+    """`spread` adds one round-robin exchange below the per-document kernel
+    exactly when the documents input has fewer row groups than the session's
+    cores: the one-row-group file, also when Spark cuts it into many byte
+    splits (all but one empty), but not a table of >= cores files."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    cores = spark.sparkContext.defaultParallelism
+    single = tmp_path / "single"
+    single.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", single / "documents.parquet")
+    multi = tmp_path / "multi" / "documents.parquet"
+    multi.mkdir(parents=True)
+    table = pq.read_table(f"{SF_DIR}/documents.parquet")
+    step = -(-table.num_rows // cores)
+    for i in range(cores):
+        pq.write_table(table.slice(i * step, step), multi / f"part-{i:05d}.parquet")
+    assert sum(pq.read_metadata(p).num_row_groups for p in multi.iterdir()) >= cores
+
+    # a session whose split size cuts the one row group into >= 2x cores
+    # byte splits; its own conf, so the shared session keeps its split size
+    cut = spark.newSession()
+    size = (single / "documents.parquet").stat().st_size
+    cut.conf.set("spark.sql.files.maxPartitionBytes", str(size // (2 * cores)))
+    assert cut.read.parquet(str(single / "documents.parquet")).rdd.getNumPartitions() >= cores
+
+    rows = {}
+    for label, session, sf_dir, spreads in (
+        ("single", spark, single, True),
+        ("multi", spark, multi.parent, False),
+        ("cut", cut, single, True),
+    ):
+        df = entry.queries()["fingerprint"](session, str(sf_dir))
+        plan = plan_of(df)
+        below = plan[plan.index("ArrowEvalPython") :]
+        if spreads:
+            assert below.count("Exchange") == 1, (label, below)
+            assert f"RoundRobinPartitioning({cores})" in below, (label, below)
+        else:
+            assert "Exchange" not in below, (label, below)
+        rows[label] = sorted(df.collect())
+    assert rows["single"] == rows["multi"] == rows["cut"]
+    assert len(rows["single"]) == table.num_rows
+
+
+@pytest.mark.parametrize(
+    "name", ["exact_dedup", "source_mix", "hash_split", "keyword_gate", "top_sources"]
+)
+def test_cheap_pass_queries_are_not_spread(spark, name):
+    """One cheap column pass plus a partial aggregation gains nothing from
+    the spread and pays a text shuffle (measured exact_dedup 0.43s -> 1.51s
+    with it, BENCH/NOTES.md round 6)."""
+    import __spark_entry__ as entry
+
+    plan = plan_of(entry.queries()[name](spark, SF_DIR))
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
+def test_one_scan_layout_rule():
+    """The only code that repartitions to defaultParallelism or sets a
+    spark.sql.files conf is `sources/tables.spread`."""
+    import ast
+    import pathlib
+
+    def own_nodes(scope):
+        # the scope's nodes, without those of the functions nested in it
+        stack = list(ast.iter_child_nodes(scope))
+        while stack:
+            node = stack.pop()
+            yield node
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                stack.extend(ast.iter_child_nodes(node))
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    package = root / "crawler_german_localpoliticans_spark"
+    files = [root / "__spark_entry__.py", *package.rglob("*.py")]
+    repartitions, conf_sets = set(), set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        scopes = [(tree, "<module>")] + [
+            (node, node.name)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for scope, name in scopes:
+            nodes = list(own_nodes(scope))
+            calls = [
+                n for n in nodes if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            ]
+            where = (str(path.relative_to(root)), name)
+            if any(c.func.attr == "repartition" for c in calls) and any(
+                isinstance(n, ast.Attribute) and n.attr == "defaultParallelism" for n in nodes
+            ):
+                repartitions.add(where)
+            if any(
+                c.func.attr == "set"
+                and c.args
+                and isinstance(c.args[0], ast.Constant)
+                and str(c.args[0].value).startswith("spark.sql.files")
+                for c in calls
+            ):
+                conf_sets.add(where)
+    rule = ("crawler_german_localpoliticans_spark/sources/tables.py", "spread")
+    assert repartitions == {rule}
+    assert conf_sets <= {rule}
