@@ -22,17 +22,29 @@ Design (scale posture first):
   double hashing). False positives go to the exact anti-join; false
   negatives are impossible as long as version K covers everything inserted
   before the test — the crawl driver guarantees bloom(v=r) ⊇ url_seen at
-  round r's expansion (seeds inserted during round 0, children of round r
-  inserted as v=r+1).
-- Partitions untouched by an insertion round are carried forward by
-  hard-linking the previous version's file (a manifest table would replace
-  this on object storage).
+  round r's expansion (seeds written as v=0, the deduped children of round
+  r as v=r+1).
+- Write on materialization: `insert` probes its candidates against the
+  previous version AND writes the next version in one grouped pass, so the
+  crawl's dedup pass is also its bloom write — no separate insert job. The
+  files land when the returned frame runs; each part goes to a unique temp
+  name and is renamed into place, so a retried task or a plan that runs the
+  pass twice (both branches of the definite-new/maybe-seen union) rewrites
+  identical bytes. The crawl inserts every deduped child, not only the
+  enqueued ones: the ones the anti-join drops are already in url_seen ⊆
+  the previous version, so the key set (and every bit) is the same.
+- Carry-forward: partitions no candidate touches are hard-linked from the
+  previous version before the pass runs; a touched part replaces its link
+  by rename, never writes through it (a manifest table would replace this
+  on object storage).
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -136,83 +148,70 @@ class BloomSidecar:
         return os.path.join(self._vdir(version), f"part-{part}.npy")
 
     def drop_versions_after(self, last: int) -> None:
-        import shutil
-
         if not os.path.isdir(self.dir):
             return
         for name in os.listdir(self.dir):
             if name.startswith("v=") and int(name[2:]) > last:
                 shutil.rmtree(os.path.join(self.dir, name))
 
-    # -- insertion ----------------------------------------------------------
-    def insert(self, df_with_hashes: DataFrame, prev_version: int | None, version: int) -> int:
-        """Write bloom version `version` = prev ∪ df. Returns rows inserted.
+    # -- one grouped pass: probe, and optionally write the next version ------
+    def _grouped(self, candidates: DataFrame, probe_version: int | None, write_version: int | None) -> DataFrame:
+        """`candidates` + `maybe_seen` (probed against `probe_version`; None
+        = the empty filter), as one applyInPandas over the part groups. With
+        `write_version`, each group also writes that version's part file =
+        the probed bitset OR its keys. Every file goes to a unique temp name
+        and is renamed into place, so a task retry (or a plan that evaluates
+        the pass twice) rewrites identical bytes without a torn file."""
+        m, k = self.m, self.k
+        probe_dir = self._vdir(probe_version) if probe_version is not None else None
+        out_dir = self._vdir(write_version) if write_version is not None else None
+        out_schema = T.StructType(
+            candidates.schema.fields + [T.StructField("maybe_seen", T.BooleanType(), False)]
+        )
 
-        Runs as applyInPandas over the part groups: each task loads only its
-        partition's previous bitset, ORs in the new keys, writes the new file.
+        def probe(pdf: pd.DataFrame) -> pd.DataFrame:
+            part = int(pdf["part"].iloc[0])
+            f = os.path.join(probe_dir, f"part-{part}.npy") if probe_dir else None
+            bits = np.load(f) if f and os.path.exists(f) else np.zeros(m // 64, dtype=np.uint64)
+            pos = _positions(pdf["h1"].to_numpy(), pdf["h2"].to_numpy(), m, k)
+            word, bit = pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64)
+            pdf["maybe_seen"] = ((bits[word] & bit) != 0).all(axis=1)
+            if out_dir is not None:
+                np.bitwise_or.at(bits, word.ravel(), bit.ravel())
+                tmp = os.path.join(out_dir, f".part-{part}.{uuid.uuid4().hex}.tmp.npy")
+                np.save(tmp, bits)
+                os.replace(tmp, os.path.join(out_dir, f"part-{part}.npy"))
+            return pdf
+
+        return candidates.groupBy("part").applyInPandas(probe, schema=out_schema)
+
+    # -- insertion ----------------------------------------------------------
+    def insert(self, candidates: DataFrame, prev_version: int | None, version: int) -> DataFrame:
+        """Bloom version `version` = version `prev_version` ∪ `candidates`
+        (an empty filter when None), written by the same grouped pass that
+        probes `candidates` against `prev_version`. Returns `candidates` +
+        `maybe_seen` (False = definitely not in `prev_version`); the files
+        are written when that frame is materialized, so the caller must run
+        it over every row before reading `version`.
+
+        Parts no candidate touches are hard-linked from `prev_version` up
+        front; a touched part replaces its link by rename, never in place.
         """
         vdir = self._vdir(version)
         os.makedirs(vdir, exist_ok=True)
-        m, k = self.m, self.k
         prev_dir = self._vdir(prev_version) if prev_version is not None else None
-        out_dir = vdir
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            part = int(pdf["part"].iloc[0])
-            prev_file = os.path.join(prev_dir, f"part-{part}.npy") if prev_dir else None
-            if prev_file and os.path.exists(prev_file):
-                bits = np.load(prev_file)
-            else:
-                bits = np.zeros(m // 64, dtype=np.uint64)
-            pos = _positions(pdf["h1"].to_numpy(), pdf["h2"].to_numpy(), m, k).ravel()
-            np.bitwise_or.at(bits, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64))
-            tmp = os.path.join(out_dir, f".part-{part}.tmp.npy")
-            np.save(tmp, bits)
-            os.replace(tmp, os.path.join(out_dir, f"part-{part}.npy"))
-            return pd.DataFrame({"part": [part], "n": [len(pdf)]})
-
-        stats = (
-            df_with_hashes.select("part", "h1", "h2")
-            .groupBy("part")
-            .applyInPandas(build, schema="part int, n long")
-            .agg(F.sum("n").alias("n"))
-            .collect()
-        )
-        inserted = int(stats[0]["n"]) if stats and stats[0]["n"] is not None else 0
-
-        # carry forward untouched partitions from the previous version
         if prev_dir and os.path.isdir(prev_dir):
             for name in os.listdir(prev_dir):
                 if name.startswith("part-") and not os.path.exists(os.path.join(vdir, name)):
                     try:
                         os.link(os.path.join(prev_dir, name), os.path.join(vdir, name))
                     except OSError:
-                        import shutil
-
                         shutil.copy2(os.path.join(prev_dir, name), os.path.join(vdir, name))
-        return inserted
+        return self._grouped(candidates, prev_version, version)
 
     # -- membership prefilter -------------------------------------------------
     def prefilter(self, candidates: DataFrame, version: int) -> DataFrame:
         """Add `maybe_seen`: False rows are *definitely* not in url_seen (no
-        false negatives) and may skip the exact anti-join."""
-        m, k = self.m, self.k
-        vdir = self._vdir(version)
-        out_schema = T.StructType(
-            candidates.schema.fields + [T.StructField("maybe_seen", T.BooleanType(), False)]
-        )
-        columns = candidates.columns
-
-        def test(pdf: pd.DataFrame) -> pd.DataFrame:
-            part = int(pdf["part"].iloc[0])
-            f = os.path.join(vdir, f"part-{part}.npy")
-            if not os.path.exists(f):
-                pdf["maybe_seen"] = False
-                return pdf
-            bits = np.load(f)
-            pos = _positions(pdf["h1"].to_numpy(), pdf["h2"].to_numpy(), m, k)
-            probe = (bits[pos // 64] >> (pos % 64).astype(np.uint64)) & np.uint64(1)
-            pdf["maybe_seen"] = probe.all(axis=1)
-            return pdf
-
-        return candidates.groupBy("part").applyInPandas(test, schema=out_schema)
+        false negatives) and may skip the exact anti-join. A missing part
+        file probes as the empty filter."""
+        return self._grouped(candidates, version, None)

@@ -7,16 +7,22 @@ state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
     frontier(round r) ─ mark seen ─ robots filter (policies join)
       ─ politeness schedule (host partitioning, priority order, rate caps)
       ─ join pages on url (the offline "fetch", BASELINE input_hint)
-      ─ found_links pandas UDF ─ keyword gate (Column expr)
-      ─ clean/extract pandas UDFs ─ posexplode candidates
-      ─ first-discovery-wins dedup (min (parent_seq, pos) struct)
-      ─ bloom prefilter (version r) ─ exact anti-join vs url_seen
-      ─ enqueue: global seq assignment ─ frontier round r+1 + bloom
-        version r+1 from one persisted frame ─ commit round (checkpoint line)
+      ─ keyword gate (Column expr) ─ ONE Arrow pass: found_links +
+        clean/extract pandas UDFs (html dropped, wave persisted)
+      ─ fetched write, extracted write (a cache read) ─ posexplode
+        candidates ─ first-discovery-wins dedup (min (parent_seq, pos) struct)
+      ─ ONE grouped bloom pass: probe version r, write version r+1
+      ─ exact anti-join vs url_seen ─ host columns ─ persist
+      ─ enqueue: global seq assignment ─ frontier round r+1 ─ commit round
+        (checkpoint line)
 
-Seeding is the same enqueue at round 0 (seq from the seed order, bloom
-version 0 on an empty filter), so bloom version k covers frontier rounds
-0..k by construction.
+Python runs in three stages per expanding round (robots; links +
+extraction; bloom pass + host columns): each such stage costs a fixed
+~0.2 s even over a few hundred rows, so stage count, not kernel time, sets
+the round's floor. Seeding is the same enqueue at round 0 (canonicalize,
+then one bloom pass writing version 0 on an empty filter, seq from the
+seed order), so bloom version k covers frontier rounds 0..k by
+construction.
 
 Determinism / parity invariants (tests/test_crawl_spark.py asserts all of
 them against plans/oracle.py on shared fixtures):
@@ -213,30 +219,28 @@ class CrawlDriver:
         known_bounds: tuple[int, int] | None = None,
     ) -> int:
         """The one enqueue path (seeds and children alike): sequence `rows`
-        by `order_cols` from `base`, write them as frontier round r and OR
-        them into bloom version r (on top of version r-1), so bloom version
-        k always covers frontier rounds 0..k. Returns the enqueued count,
+        by `order_cols` from `base` and write them as frontier round r.
+        `rows` is the output of the bloom pass that writes version r (see
+        `BloomSidecar.insert`), so bloom version k always covers frontier
+        rounds 0..k. The host columns join `rows` before its persist, in the
+        bloom pass's stage; the persist holds every Python pass upstream to
+        one run across the seq assignment's actions and the frontier write,
+        and is released before this returns. Returns the enqueued count,
         which rides out of the seq assignment's bucket-count pass."""
-        cfg = self.config
-        rows, n = assign_global_seq_counted(
+        rows = rows.select(
+            "*",
+            udfs.url_host(F.col("url")).alias("host"),
+            udfs.host_key(F.col("url")).alias("host_key"),
+        ).persist()
+        seqd, n = assign_global_seq_counted(
             rows, order_cols, base=base, known_bounds=known_bounds
         )
-        frontier = with_hashes(
-            rows.select(
-                "seq",
-                "url",
-                F.lit(r).cast("int").alias("depth"),
-                udfs.url_host(F.col("url")).alias("host"),
-                udfs.host_key(F.col("url")).alias("host_key"),
-            ),
-            "url",
-            cfg.seen_partitions,
-        ).persist()
         self.catalog.write_round(
-            "frontier", r, frontier.select(*[f.name for f in tbl.FRONTIER_SCHEMA])
+            "frontier",
+            r,
+            seqd.select("seq", "url", F.lit(r).cast("int").alias("depth"), "host", "host_key"),
         )
-        self.bloom.insert(frontier.select("part", "h1", "h2"), r - 1 if r > 0 else None, r)
-        frontier.unpersist()
+        rows.unpersist()
         return n
 
     # ------------------------------------------------------------------ wave
@@ -266,10 +270,13 @@ class CrawlDriver:
         wave = schedule_wave(frontier, cfg)
 
         # 3. offline fetch = join against the pages corpus on canonical url
-        #    (BASELINE input_hint), then the link pipeline as ONE Arrow pass;
-        #    blocked rows pass a null html into the UDF so their (discarded)
-        #    parse costs nothing
+        #    (BASELINE input_hint), then the link pipeline and the extraction
+        #    (keyword-gated fetched pages only, src/main.rs:824) as ONE Arrow
+        #    pass: rows a UDF does not apply to pass it a null input, so its
+        #    (discarded) work costs nothing, and the html payload is dropped
+        #    before the persist.
         ok_col = ~F.col("robots_blocked") & F.col("html").isNotNull()
+        extract_col = ok_col & F.col("keyword_hit")
         wave = (
             wave.join(self.pages.select("url", "warc_ts", "html"), on="url", how="left")
             .withColumn("fetch_failed", ~F.col("robots_blocked") & F.col("html").isNull())
@@ -280,7 +287,12 @@ class CrawlDriver:
                     udfs.found_links(F.col("url"), F.when(ok_col, F.col("html"))),
                 ).otherwise(F.array().cast("array<string>")),
             )
+            .withColumn("ce", udfs.clean_extract(F.when(extract_col, F.col("html"))))
+            .withColumn(
+                "custom_id", udfs.custom_id_from_url(F.when(extract_col, F.col("url")))
+            )
             .withColumn("ok", ok_col)
+            .drop("html")
         )
         wave.persist()
 
@@ -314,22 +326,17 @@ class CrawlDriver:
             ),
         )
 
-        # 5. extraction stage: keyword-gated fetched pages only
-        #    (src/main.rs:824); clean_html + text in one pandas UDF.
+        # 5. extracted rows: a read of the wave cache, no Python.
         #    NOTE (r6): overlapping this write with the expansion jobs on a
         #    driver thread (guide §2.6) was tried and measured SLOWER here
         #    (+0.7-1.3s/round): the round's jobs are latency-bound driver
         #    round trips, and the extraction job occupying every executor
         #    slot delays each of them — receipt in BENCH/NOTES.md r6.
-        extracted = (
-            wave.where(F.col("ok") & F.col("keyword_hit"))
-            .withColumn("ce", udfs.clean_extract(F.col("html")))
-            .select(
-                "url",
-                F.col("ce.clean_html").alias("clean_html"),
-                F.col("ce.text").alias("text"),
-                udfs.custom_id_from_url(F.col("url")).alias("custom_id"),
-            )
+        extracted = wave.where(F.col("ok") & F.col("keyword_hit")).select(
+            "url",
+            F.col("ce.clean_html").alias("clean_html"),
+            F.col("ce.text").alias("text"),
+            "custom_id",
         )
         cat.write_round("extracted", r, extracted)
 
@@ -376,8 +383,11 @@ class CrawlDriver:
                     F.col("first.pos").alias("pos"),
                 )
             )
-            first = with_hashes(first, "url", cfg.seen_partitions)
-            pref = self.bloom.prefilter(first, r)
+            # one grouped bloom pass probes version r and writes version
+            # r+1 = version r ∪ first. The anti-join below hides only
+            # candidates already in url_seen ⊆ bloom version r, so the key
+            # set (and every bit) equals version r ∪ the enqueued rows.
+            pref = self.bloom.insert(with_hashes(first, "url", cfg.seen_partitions), r, r + 1)
             definite_new = pref.where(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = pref.where(F.col("maybe_seen")).drop("maybe_seen")
 
@@ -397,16 +407,12 @@ class CrawlDriver:
                 & ((F.col("s.depth") > 0) | (F.col("s.seq") <= F.col("c.parent_seq"))),
                 how="left_anti",
             )
-            # the dedup chain (prefilter + anti-join) feeds the bucket counts
-            # and the frontier write — persist it once
-            pre_seq = definite_new.unionByName(survivors).persist()
             # parent_seq ∈ [0, next_seq) by construction (parents are
             # already-sequenced rows), so the bucket-range scan is free
             enqueued = self._enqueue(
-                r + 1, pre_seq, ["parent_seq", "pos"], next_seq,
+                r + 1, definite_new.unionByName(survivors), ["parent_seq", "pos"], next_seq,
                 known_bounds=(0, max(next_seq - 1, 0)),
             )
-            pre_seq.unpersist()
 
         metrics["enqueued"] = enqueued
         metrics["next_seq"] = next_seq + enqueued
@@ -446,10 +452,19 @@ class CrawlDriver:
                 cat.drop_rounds_after(t, -1)
             self.bloom.drop_versions_after(-1)
             # invalid URLs are skipped (seeder.rs:55-60); duplicates are
-            # kept (the seeder does not dedup)
+            # kept (the seeder does not dedup). The UDF copy is marked
+            # nondeterministic only so the optimizer keeps the null filter
+            # above it: pushed below, the filter re-runs the UDF per row.
+            canonicalize = udfs.canonicalize_url
+            canonicalize = F.pandas_udf(
+                canonicalize.func, canonicalize.returnType
+            ).asNondeterministic()
             seeded = seeds_df.withColumn(
-                "url", udfs.canonicalize_url(F.col("raw_url"))
+                "url", canonicalize(F.col("raw_url"))
             ).where(F.col("url").isNotNull())
+            seeded = self.bloom.insert(
+                with_hashes(seeded, "url", cfg.seen_partitions), None, 0
+            ).drop("maybe_seen")
             next_seq = self._enqueue(0, seeded, ["seed_order"], 0)
             start_round = 0
 

@@ -10,8 +10,9 @@ computes the same running total in two distributed passes:
 1. range-bucket rows by the leading order column (order-aligned buckets,
    one per `defaultParallelism` slot), running-sum the weights within each
    bucket (`partitionBy(bucket)` window);
-2. collect the tiny per-bucket totals to the driver, turn them into offsets,
-   broadcast-join them back: out = base + bucket_offset + running - weight.
+2. collect the tiny per-bucket totals to the driver, turn them into
+   offsets and apply them as one array literal:
+   out = base + offsets[bucket] + running - weight.
 
 Never depends on partition iteration order: every running total is taken
 over an explicit sort (SURVEY.md §7).
@@ -19,6 +20,7 @@ over an explicit sort (SURVEY.md §7).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,25 +49,29 @@ def assign_global_seq_counted(
     guarantee by construction.
 
     Without `known_bounds` the kernel runs two eager actions (bounds, bucket
-    totals), so it persists its input for them — a UDF-heavy upstream then
-    executes once for both probes — and unpersists that handle before it
-    returns, so nothing leaks into a long-lived session (under AQE the cache
-    build runs as one extra job of its own). The handle is kept
-    apart from `df`, which is rebound below: unpersisting a derived frame
-    would be a CacheManager no-op (plan mismatch) and leave the input
-    pinned."""
+    totals), so the input must be cached for them — a UDF-heavy upstream then
+    executes once for both probes. A caller that will also consume the
+    returned frame caches `df` itself and releases it after that last
+    action (the crawl's `_enqueue`); otherwise the kernel persists `df` and
+    unpersists it before it returns, so nothing leaks into a long-lived
+    session (under AQE the cache build runs as one extra job of its own).
+    The handle is kept apart from `df`, which is rebound below:
+    unpersisting a derived frame would be a CacheManager no-op (plan
+    mismatch) and leave the input pinned."""
     lead = order_cols[0]
     w_col = (F.lit(1) if weight is None else weight).cast("long")
     cached_input = None
     if known_bounds is not None:
         lo, hi = known_bounds
     else:
-        cached_input = df = df.persist()
+        if df.storageLevel == StorageLevel.NONE:
+            cached_input = df = df.persist()
         bounds = df.agg(
             F.min(lead).alias("lo"), F.max(lead).alias("hi"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
         if bounds["n"] == 0:
-            cached_input.unpersist()
+            if cached_input is not None:
+                cached_input.unpersist()
             return df.withColumn(out_col, F.lit(0).cast("long")), 0
         lo, hi = bounds["lo"], bounds["hi"]
     buckets = df.sparkSession.sparkContext.defaultParallelism
@@ -92,21 +98,19 @@ def assign_global_seq_counted(
     # inclusive within-bucket running total; exclusive = inclusive - own
     df = df.withColumn("_incl", F.sum("_w").over(w))
     totals = df.groupBy("_bucket").agg(F.sum("_w").alias("_t")).collect()
-    offsets: dict[int, int] = {}
+    # offsets[b] = total weight of buckets < b, as one array literal: a
+    # projection, never a createDataFrame + broadcast join (which runs a
+    # Python parallelize job on every call)
+    totals_by_bucket = {row["_bucket"]: int(row["_t"] or 0) for row in totals}
+    offsets: list[int] = []
     acc = 0
-    for row in sorted(totals, key=lambda r: r["_bucket"]):
-        offsets[row["_bucket"]] = acc
-        acc += int(row["_t"] or 0)
-    offsets_df = df.sparkSession.createDataFrame(
-        [(b, o) for b, o in offsets.items()], "_bucket int, _offset long"
-    )
-    out = (
-        df.join(F.broadcast(offsets_df), "_bucket")
-        .withColumn(
-            out_col, (F.lit(base) + F.col("_offset") + F.col("_incl") - F.col("_w")).cast("long")
-        )
-        .drop("_bucket", "_w", "_incl", "_offset")
-    )
+    for b in range(buckets):
+        offsets.append(acc)
+        acc += totals_by_bucket.get(b, 0)
+    offset = F.element_at(F.lit(offsets).cast("array<long>"), F.col("_bucket") + 1)
+    out = df.withColumn(
+        out_col, (F.lit(base) + offset + F.col("_incl") - F.col("_w")).cast("long")
+    ).drop("_bucket", "_w", "_incl")
     if cached_input is not None:
         cached_input.unpersist(blocking=False)
     return out, acc

@@ -22,7 +22,8 @@ def _urls(spark, lo: int, hi: int):
 def test_no_false_negatives_and_bounded_fpr(spark, tmp_path):
     bloom = BloomSidecar(str(tmp_path), PARTS, capacity=N // PARTS, fpp=0.01)
     seen = with_hashes(_urls(spark, 0, N), "url", PARTS).persist()
-    inserted = bloom.insert(seen.select("part", "h1", "h2"), None, 0)
+    # the insert's frame writes the version when it runs: one row per key
+    inserted = bloom.insert(seen.select("part", "h1", "h2"), None, 0).count()
     assert inserted == N
 
     # every inserted key must test maybe_seen — exact-set correctness relies
@@ -40,11 +41,55 @@ def test_no_false_negatives_and_bounded_fpr(spark, tmp_path):
 def test_version_carry_forward_is_cumulative(spark, tmp_path):
     bloom = BloomSidecar(str(tmp_path), PARTS, capacity=4096, fpp=0.01)
     a = with_hashes(_urls(spark, 0, 2000), "url", PARTS)
-    bloom.insert(a.select("part", "h1", "h2"), None, 0)
-    # second round touches only one partition; the rest carry forward
+    first = bloom.insert(a.select("part", "h1", "h2"), None, 0).collect()
+    # probed against the empty filter: nothing is maybe-seen
+    assert not any(row["maybe_seen"] for row in first)
+    # second round touches only one partition; the rest carry forward. Its
+    # keys of `a` probe version 0 in the same pass, so they come back seen.
     b = with_hashes(_urls(spark, 2000, 4000), "url", PARTS).where(F.col("part") == 3)
-    bloom.insert(b.select("part", "h1", "h2"), 0, 1)
+    again = a.where(F.col("part") == 3).select("part", "h1", "h2")
+    second = bloom.insert(b.select("part", "h1", "h2").unionByName(again), 0, 1).collect()
+    seen_keys = {(row["h1"], row["h2"]) for row in again.collect()}
+    assert seen_keys
+    assert all(row["maybe_seen"] for row in second if (row["h1"], row["h2"]) in seen_keys)
 
     both = a.unionByName(b)
     misses = bloom.prefilter(both, 1).where(~F.col("maybe_seen")).count()
     assert misses == 0
+
+
+def test_crawl_bloom_versions_equal_cumulative_frontier_inserts(spark, smoke_dir, tmp_path):
+    """The crawl writes bloom version r+1 from every deduped child of round
+    r, not only the enqueued ones. The children the URL-seen anti-join
+    drops are already in bloom version r, so each version must be
+    byte-identical to a fresh filter built from frontier rounds 0..k."""
+    import os
+
+    from crawler_german_localpoliticans_spark.config import CrawlConfig
+    from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
+    from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
+    from crawler_german_localpoliticans_spark.sources.tables import FRONTIER_SCHEMA, read_robots
+
+    config = CrawlConfig(seen_partitions=PARTS)
+    work = str(tmp_path / "work")
+    driver = CrawlDriver(
+        spark, work, f"{smoke_dir}/pages.parquet",
+        read_robots(spark, f"{smoke_dir}/robots.parquet"), config,
+    )
+    tables = driver.run(seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet")))
+    versions = sorted({m["bloom_version"] for m in tables.metrics} | {0})
+    assert len(versions) > 1  # the smoke crawl expands
+
+    fresh = BloomSidecar(
+        str(tmp_path / "fresh"), PARTS, config.bloom_capacity_per_partition, config.bloom_fpp
+    )
+    for k in versions:
+        rnd = driver.catalog.read_round("frontier", k, FRONTIER_SCHEMA)
+        fresh.insert(with_hashes(rnd, "url", PARTS), k - 1 if k else None, k).count()
+        crawl_dir, fresh_dir = driver.bloom._vdir(k), fresh._vdir(k)
+        names = sorted(n for n in os.listdir(crawl_dir) if n.startswith("part-"))
+        assert names == sorted(n for n in os.listdir(fresh_dir) if n.startswith("part-")), k
+        assert names, k
+        for name in names:
+            with open(os.path.join(crawl_dir, name), "rb") as a, open(os.path.join(fresh_dir, name), "rb") as b:
+                assert a.read() == b.read(), (k, name)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.fixtures import write_fixture_parquet
 from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
@@ -112,3 +114,44 @@ def test_missing_committed_round_fails_loud(spark, tmp_path):
     shutil.rmtree(driver.catalog.round_dir("frontier", 1))
     with pytest.raises(MissingRoundError, match="frontier"):
         driver.result_tables()
+
+
+def test_seeding_runs_its_python_pass_once(spark, smoke_dir, tmp_path, monkeypatch):
+    """Seeding canonicalizes every seed row exactly once: the bounds scan,
+    the bucket totals and the frontier write all read one cached pass. The
+    enqueue releases that cache before it returns."""
+    from pyspark.sql import functions as F
+
+    from crawler_german_localpoliticans_spark.functions import udfs
+    from crawler_german_localpoliticans_spark.functions.urls import canonicalize_url
+
+    calls = str(tmp_path / "canonicalize-rows")
+
+    @F.pandas_udf("string")
+    def counting_canonicalize(urls: pd.Series) -> pd.Series:
+        with open(calls, "a", encoding="utf-8") as f:
+            f.write(f"{len(urls)}\n")
+        return urls.map(lambda u: canonicalize_url(u) if u is not None else None)
+
+    monkeypatch.setattr(udfs, "canonicalize_url", counting_canonicalize)
+    seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
+    n_seeds = seeds.count()
+    driver = CrawlDriver(
+        spark, str(tmp_path / "work"), f"{smoke_dir}/pages.parquet",
+        read_robots(spark, f"{smoke_dir}/robots.parquet"), CrawlConfig(max_depth=0),
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    enqueue = driver._enqueue
+    cached_after = []
+
+    def spied_enqueue(*args, **kwargs):
+        before = persistent().size()
+        n = enqueue(*args, **kwargs)
+        cached_after.append(persistent().size() - before)
+        return n
+
+    driver._enqueue = spied_enqueue
+    driver.run(seeds)
+    with open(calls, encoding="utf-8") as f:
+        assert sum(int(line) for line in f) == n_seeds
+    assert cached_after == [0]

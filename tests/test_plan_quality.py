@@ -273,6 +273,72 @@ def test_found_links_query_evaluates_link_udf_once(spark):
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
 
 
+def plan_nodes(plan, into_cache: bool):
+    """Every physical node under `plan`, through AQE wrappers and reused
+    exchanges; into a cached relation's plan only when `into_cache`."""
+    name = plan.nodeName()
+    yield plan
+    if name == "AdaptiveSparkPlan":
+        kids = [plan.executedPlan()]
+    elif plan.getClass().getSimpleName().endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif name == "ReusedExchange":
+        kids = [plan.child()]
+    elif name == "InMemoryTableScan":
+        kids = [plan.relation().cachedPlan()] if into_cache else []
+    else:
+        children = plan.children()
+        kids = [children.apply(i) for i in range(children.size())]
+    for kid in kids:
+        yield from plan_nodes(kid, into_cache)
+
+
+def test_crawl_writes_run_python_once_per_wave(spark, smoke_dir, tmp_path, monkeypatch):
+    """Each wave evaluates the link UDF and both extraction UDFs in ONE
+    Arrow pass, which the fetched write builds. The extracted write only
+    reads that pass's cache, the frontier write only reads the dedup pass's
+    cache, and the seq kernel applies its bucket offsets as a literal (no
+    local relation, no broadcast)."""
+    from crawler_german_localpoliticans_spark.config import CrawlConfig
+    from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
+    from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
+    from crawler_german_localpoliticans_spark.sources.tables import Catalog, read_robots
+
+    plans: list[tuple[str, int, list, list]] = []
+    write_round = Catalog.write_round
+
+    def spy(self, table, round_no, df):
+        plan = df._jdf.queryExecution().executedPlan()
+        plans.append((
+            table,
+            round_no,
+            [(n.nodeName(), n.simpleString(100)) for n in plan_nodes(plan, False)],
+            [(n.nodeName(), n.simpleString(100)) for n in plan_nodes(plan, True)],
+        ))
+        return write_round(self, table, round_no, df)
+
+    monkeypatch.setattr(Catalog, "write_round", spy)
+    driver = CrawlDriver(
+        spark, str(tmp_path), f"{smoke_dir}/pages.parquet",
+        read_robots(spark, f"{smoke_dir}/robots.parquet"), CrawlConfig(seen_partitions=8),
+    )
+    driver.run(seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet")))
+
+    assert {t for t, *_ in plans} == {"fetched", "extracted", "frontier"}
+    assert len([t for t, *_ in plans if t == "frontier"]) > 1  # seeding + expansion
+    link_udfs = ("found_links(", "clean_extract(", "custom_id_from_url(")
+    for table, round_no, own, full in plans:
+        names = [n for n, _ in own]
+        if table in ("extracted", "frontier"):
+            assert not {"ArrowEvalPython", "FlatMapGroupsInPandas"} & set(names), (table, round_no, names)
+        if table == "frontier":
+            assert not {"LocalTableScan", "BroadcastExchange"} & set(names), (round_no, names)
+        if table == "fetched":
+            passes = [s for n, s in full if n == "ArrowEvalPython" and any(u in s for u in link_udfs)]
+            assert len(passes) == 1, (round_no, passes)
+            assert all(u in passes[0] for u in link_udfs), passes[0]
+
+
 # --- the scan-layout rule (sources/tables.spread) ---------------------------
 
 
