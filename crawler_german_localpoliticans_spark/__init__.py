@@ -10,14 +10,16 @@ training-data operators (dedup, similarity search, text analysis) that a
 
 Layout
 ------
-functions/   pure-Python row semantics (canonicalize, robots, html, names)
+functions/   pure-Python row semantics (canonicalize, robots, html, keywords,
+             name keys)
              shared verbatim by the Spark engine and the reference oracle
 operators/   DataFrame-level operators (dedup, similarity, textstats, ledger)
 sources/     table schemas, parquet-backed catalog, seed/pages sources
 plans/       the iterative crawl driver: waves, bloom sidecar, politeness,
              checkpoint/resume, and the single-threaded reference oracle
-streaming/   intentionally thin: the reference is a poll-loop batch system
-             (SURVEY.md §1.2) — incremental ingest maps to iterative batch
+
+The reference is a poll-loop batch system (SURVEY.md §1.2), so incremental
+ingest maps to the iterative batch crawl; there is no streaming layer.
 """
 
 __version__ = "0.1.0"

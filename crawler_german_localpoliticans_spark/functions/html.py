@@ -297,8 +297,6 @@ def clean_html(html: str | bytes | None) -> str:
         return html
 
 
-_WS = " \t\n\r\f\v"
-
 # elements whose boundaries separate words in the extracted text — without
 # this, adjacent blocks glue tokens together ("RatSitzung"), which poisons
 # downstream tokenization; part of the fixed golden contract

@@ -1,33 +1,15 @@
-"""Person-name keys and LLM-output payload handling.
+"""Person-name keys of the council-member records.
 
-reference: python_container/db_writer.py:526-615 (extract_json_from_text,
-ensure_iterable, normalize_name, iter_member_payloads, translate_german_fields,
-prepare_member_record, unique_key at :625) and validation/validation.py:153-158
-(slugify).
+reference: python_container/db_writer.py:556-565 (normalize_name),
+:625 (unique_key) and validation/validation.py:153-158 (slugify).
 """
 
 from __future__ import annotations
 
-import json
 import re
-from collections.abc import Iterable
-from typing import Any
-
-LLM_COLLECTION_KEY = "ratsmitglieder"  # db_writer.py:122
-
-GERMAN_FIELD_MAP = {  # db_writer.py:213-221
-    "gemeinde": "municipality",
-    "partei": "party",
-    "rollen": "roles",
-    "kontaktinformationen": "contact_info",
-    "kontaktinfos": "contact_info",
-    "notizen": "notes",
-    "quelle": "source_file",
-}
 
 _TITLE_RE = re.compile(r"^(Dr\.|Prof\.)\s*", re.IGNORECASE)
 _NAME_KEEP_RE = re.compile(r"[^a-z-]")
-_FENCE_RE = re.compile(r"^```(?:json)?\s*(.*?)\s*```$", re.DOTALL)
 _SLUG_RE = re.compile(r"[^a-z0-9]+")
 
 _UMLAUTS = (("ä", "ae"), ("ö", "oe"), ("ü", "ue"), ("ß", "ss"), (" ", "-"))
@@ -56,77 +38,3 @@ def slugify(value: str) -> str:
     for old, new in _UMLAUTS[:4]:
         value = value.replace(old, new)
     return _SLUG_RE.sub("-", value).strip("-")
-
-
-def ensure_iterable(value: Any) -> list[str]:
-    """db_writer.py:548-553."""
-    if value is None:
-        return []
-    if isinstance(value, list):
-        return value
-    return [str(value)]
-
-
-def extract_json_from_text(text: str) -> Any:
-    """db_writer.py:526-546: strip code fences, return the first balanced
-    {...} or [...] span that parses; raises ValueError otherwise."""
-    stripped = text.strip()
-    if not stripped:
-        raise ValueError("LLM response was empty")
-    match = _FENCE_RE.match(stripped)
-    if match:
-        stripped = match.group(1).strip()
-    for start, end in (("{", "}"), ("[", "]")):
-        s_idx = stripped.find(start)
-        e_idx = stripped.rfind(end)
-        if s_idx != -1 and e_idx != -1 and e_idx > s_idx:
-            candidate = stripped[s_idx : e_idx + 1]
-            try:
-                return json.loads(candidate)
-            except json.JSONDecodeError:
-                continue
-    raise ValueError("No valid JSON object found in LLM response")
-
-
-def iter_member_payloads(payload: Any) -> Iterable[dict[str, Any]]:
-    """db_writer.py:568-585: dict with a 'ratsmitglieder' list -> each entry
-    merged over the top-level context; bare dict -> itself; list -> each dict."""
-    if payload is None:
-        return
-    if isinstance(payload, dict):
-        coll = payload.get(LLM_COLLECTION_KEY)
-        if isinstance(coll, list):
-            base_context = {k: v for k, v in payload.items() if k != LLM_COLLECTION_KEY}
-            for entry in coll:
-                if isinstance(entry, dict):
-                    yield {**base_context, **entry}
-        else:
-            yield payload
-    elif isinstance(payload, list):
-        for entry in payload:
-            if isinstance(entry, dict):
-                yield entry
-
-
-def translate_german_fields(data: dict[str, Any]) -> dict[str, Any]:
-    """db_writer.py:588-593."""
-    return {GERMAN_FIELD_MAP.get(k, k): v for k, v in data.items()}
-
-
-def prepare_member_record(
-    member: dict[str, Any], *, municipality_hint: str | None = None, source_file: str | None = None
-) -> dict[str, Any] | None:
-    """db_writer.py:596-615: translate fields, fall back to metadata
-    municipality, drop records lacking name or municipality, normalize roles."""
-    raw_municipality = member.get("municipality") or member.get("gemeinde")
-    member = translate_german_fields(member)
-    full_name = member.get("name")
-    municipality = member.get("municipality") or raw_municipality or municipality_hint
-    if not full_name or not municipality:
-        return None
-    record = dict(member)
-    record.setdefault("municipality", municipality)
-    if source_file is not None:
-        record.setdefault("source_file", source_file)
-    record["roles"] = ensure_iterable(record.get("roles"))
-    return record

@@ -52,9 +52,6 @@ class RobotsPolicy:
         return (tuple(self.allow), tuple(self.disallow), self.crawl_delay_ms)
 
 
-EMPTY_POLICY = RobotsPolicy()
-
-
 @dataclass
 class _Group:
     uas: list[str] = field(default_factory=list)

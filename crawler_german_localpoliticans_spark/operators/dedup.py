@@ -226,9 +226,8 @@ def banded_signatures(
     ~40-char string per (row, band) — bands x n_docs string allocations —
     just to feed the hash; hashing the longs natively removes that
     allocation from the hottest projection in the LSH path (guide §2.3,
-    narrower/cheaper bytes). Shared by the batch pair join
-    (lsh_candidate_pairs) and the streaming candidate operator
-    (streaming/neardup.py). Null signatures (docs with no shingles) are
+    narrower/cheaper bytes). Feeds the batch pair join
+    (lsh_candidate_pairs). Null signatures (docs with no shingles) are
     dropped: their null band hashes can never equal anything."""
     return (
         sigs.where(F.col("sig").isNotNull())
@@ -432,20 +431,6 @@ def minhash_dedup_pairs(
     )
 
 
-# -- pure-Python oracle (pytest verification only) ---------------------------
-
-
-def minhash_signature_py(text: str, num_perm: int = NUM_PERM, k: int = 3) -> list[int]:
-    toks = tokens_py(text)
-    shingles = {" ".join(toks[i : i + k]) for i in range(max(1, len(toks) - k + 1))}
-    shingles = {s for s in shingles if s}
-    params = _permutation_params(num_perm)
-    out = []
-    for a, b in params:
-        out.append(min((a * zlib.crc32(s.encode()) + b) % MINHASH_PRIME for s in shingles))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
@@ -602,18 +587,6 @@ def _vec_length_groups(pdf: pd.DataFrame, vec_col: str = "vec"):
     lengths = pdf[vec_col].map(lambda v: -1 if v is None else len(v))
     for length in sorted(lengths[lengths >= 0].unique()):
         yield pdf[lengths == length]
-
-
-def cosine_col(vec_a, vec_b):
-    """JVM-side cosine over array<float/double> columns (zip_with +
-    aggregate, computed in double, left-to-right — matches DuckDB's
-    sequential list_cosine_similarity on DOUBLE[])."""
-    da = F.transform(vec_a, lambda x: x.cast("double"))
-    db = F.transform(vec_b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(da, lambda x: x * x), F.lit(0.0), lambda a, v: a + v))
-    nb = F.sqrt(F.aggregate(F.transform(db, lambda x: x * x), F.lit(0.0), lambda a, v: a + v))
-    return dot / (na * nb)
 
 
 def embedding_neardup_pairs(
@@ -881,17 +854,3 @@ def neardup_clusters(
             (F.coalesce("cluster_id", "id") == F.col("id")).alias("is_representative"),
         )
     )
-
-
-def dedup_keep_representatives(
-    docs: DataFrame, id_col: str, pairs: DataFrame, src: str = "id_a", dst: str = "id_b"
-) -> DataFrame:
-    """The filter form: drop every document whose near-dup cluster contains
-    a smaller id (one representative survives per cluster — the C4/RefinedWeb
-    near-dedup step). Docs never paired pass through untouched."""
-    dupes = (
-        connected_components(pairs, src, dst)
-        .where(F.col("id") != F.col("cluster_id"))
-        .select(F.col("id").alias(id_col))
-    )
-    return docs.join(dupes, id_col, "left_anti")

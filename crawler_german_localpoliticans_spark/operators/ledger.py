@@ -1,35 +1,18 @@
-"""Relational crawl-ledger analytics + the council-members pipeline.
+"""Relational crawl-ledger analytics.
 
 Spark-native rebuild of the reference's ingestion/upsert surface
-(python_container/crawler_ingest.py, python_container/db_writer.py):
+(python_container/crawler_ingest.py):
 
 - D6 URL-ledger aggregation (crawler_ingest.py:189-241): per normalized URL,
   last_seen_at = max(seen), last_depth = min(depth), fetch count;
-- D7 positional link explode (crawler_ingest.py:352-391): posexplode of
-  found_links with `was_new` resolved against the frontier;
 - D5 found_links_count (crawler_ingest.py:477);
-- D8 sample analytics (README.md:432-433) + O6 top-k failures
-  (validation/validation.py:463);
-- X6/F7/C6/C7 member pipeline (db_writer.py:526-652): LLM-output payloads ->
-  exploded member rows -> German-field translation -> validity filter ->
-  unique_key -> MERGE upsert (Iceberg MERGE INTO in production, implemented
-  here as a deterministic latest-wins merge).
+- D8/O6 top-k by count (validation/validation.py:463).
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..functions.names import (
-    extract_json_from_text,
-    iter_member_payloads,
-    prepare_member_record,
-)
 
 
 def url_ledger(fetched: DataFrame) -> DataFrame:
@@ -59,22 +42,6 @@ def url_ledger(fetched: DataFrame) -> DataFrame:
     )
 
 
-def discovered_links(fetched: DataFrame) -> DataFrame:
-    """D7: (source url, position, target url) + was_new (whether this fetch
-    first enqueued the target — resolved by matching the frontier's
-    first-discovery attribution is equivalent to: target first seen at
-    greater seq than any earlier discovery; here: left check vs ledger)."""
-    links = fetched.select(
-        F.col("seq").alias("fetch_seq"),
-        F.col("url").alias("source_url"),
-        F.posexplode("found_links").alias("position", "target_url"),
-    )
-    first_discovery = links.groupBy("target_url").agg(F.min("fetch_seq").alias("first_seq"))
-    return links.join(first_discovery, "target_url").withColumn(
-        "was_new", F.col("fetch_seq") == F.col("first_seq")
-    ).select("source_url", "position", "target_url", "was_new")
-
-
 def found_links_count(fetched: DataFrame) -> DataFrame:
     """D5."""
     return fetched.select("seq", "url", F.size("found_links").alias("found_links_count"))
@@ -88,143 +55,4 @@ def top_k_by_count(df: DataFrame, group_col: str, k: int = 5) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col(group_col).asc())
         .limit(k)
-    )
-
-
-# ---------------------------------------------------------------------------
-# council members pipeline
-# ---------------------------------------------------------------------------
-
-MEMBER_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("unique_key", T.StringType()),
-        T.StructField("full_name", T.StringType()),
-        T.StructField("party", T.StringType()),
-        T.StructField("municipality", T.StringType()),
-        T.StructField("roles", T.ArrayType(T.StringType())),
-        T.StructField("source_file", T.StringType()),
-        T.StructField("raw_json", T.StringType()),
-    ]
-)
-
-
-def members_from_payloads(payloads: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """LLM-output text -> validated member rows (X6 + F7 + C6/C7).
-
-    One Arrow-batched pandas UDF parses/explodes (the payload is free-form
-    JSON with German field aliases — db_writer.py:568-615); the unique_key
-    lineage (db_writer.py:625) runs inside the same batch. Expected columns:
-    payload_col, municipality_hint (nullable), source_file (nullable).
-    """
-    from ..functions.names import normalize_name
-
-    @F.pandas_udf(T.ArrayType(MEMBER_ROW_SCHEMA))
-    def explode_members(
-        payloads_s: pd.Series, hints: pd.Series, sources: pd.Series
-    ) -> pd.Series:
-        out = []
-        for text, hint, src in zip(payloads_s, hints, sources):
-            rows = []
-            try:
-                payload = extract_json_from_text(text or "")
-            except ValueError:
-                out.append(rows)
-                continue
-            for member in iter_member_payloads(payload):
-                rec = prepare_member_record(
-                    member,
-                    municipality_hint=hint if hint is not None else None,
-                    source_file=src if src is not None else None,
-                )
-                if rec is None:
-                    continue  # F7: name/municipality required
-                rows.append(
-                    {
-                        "unique_key": f"{rec['municipality'].lower()}-{normalize_name(rec['name'])}",
-                        "full_name": rec["name"],
-                        "party": rec.get("party"),
-                        "municipality": rec["municipality"],
-                        "roles": [str(x) for x in rec["roles"]],
-                        "source_file": rec.get("source_file"),
-                        "raw_json": json.dumps(rec, sort_keys=True, ensure_ascii=False),
-                    }
-                )
-            out.append(rows)
-        return pd.Series(out)
-
-    cols = payloads.columns
-    hint = F.col("municipality_hint") if "municipality_hint" in cols else F.lit(None).cast("string")
-    src = F.col("source_file") if "source_file" in cols else F.lit(None).cast("string")
-    return payloads.select(
-        F.explode(explode_members(F.col(payload_col), hint, src)).alias("m")
-    ).select("m.*")
-
-
-def join_outputs_with_request_metadata(
-    outputs: DataFrame,
-    requests: DataFrame,
-    as_of,
-    ttl_seconds: int = 7 * 24 * 3600,
-) -> DataFrame:
-    """J4: LLM batch outputs ⟕ stored request metadata on custom_id
-    (db_writer.py:226-245 `store_request_metadata` SETEX with 7-day TTL,
-    :843-845 `load_request_metadata` at output processing).
-
-    - `requests` needs (custom_id, stored_at, metadata...); repeated stores
-      for one custom_id behave like Redis SET: the latest stored_at wins;
-    - metadata older than `ttl_seconds` at `as_of` is EXPIRED and treated as
-      absent (the Redis key is gone). The comparison is STRICT
-      (stored_at > as_of - ttl): a SETEX key is already expired at exactly
-      +ttl seconds, so a row stored precisely ttl seconds before as_of does
-      NOT join (Redis expiry-at-boundary semantics);
-    - output rows are never dropped: missing/expired metadata joins as nulls
-      (the reference proceeds with an empty metadata dict).
-    `as_of` is explicit (no wall clock inside the engine — determinism).
-    At scale this is a hash join on custom_id (uniform by construction:
-    request_<sanitized filename>); the request side prunes to one row per
-    custom_id before the join."""
-    live = requests.where(
-        F.col("stored_at") > F.lit(as_of) - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-    )
-    # stored_at ties (same-second batch stores) need a deterministic winner:
-    # break on the remaining column VALUES so repeated runs always join the
-    # same metadata row — the engine's reproducibility contract
-    tiebreak = [
-        F.col(c).asc_nulls_last()
-        for c in requests.columns
-        if c not in ("custom_id", "stored_at")
-    ]
-    w = Window.partitionBy("custom_id").orderBy(F.col("stored_at").desc(), *tiebreak)
-    latest = (
-        live.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    return outputs.join(latest, on="custom_id", how="left")
-
-
-def merge_council_members(current: DataFrame, updates: DataFrame) -> DataFrame:
-    """INSERT ... ON CONFLICT (unique_key) DO UPDATE (db_writer.py:636-649):
-    latest update wins per unique_key; unmatched current rows survive.
-    In production this is an Iceberg `MERGE INTO ... WHEN MATCHED THEN
-    UPDATE`; here: union + row_number over (unique_key, recency)."""
-    tagged_cur = current.withColumn("_src", F.lit(0))
-    tagged_new = updates.withColumn("_src", F.lit(1))
-    all_rows = tagged_cur.unionByName(tagged_new, allowMissingColumns=True)
-    w = Window.partitionBy("unique_key").orderBy(
-        F.col("_src").desc(), F.col("updated_at").desc_nulls_last()
-    )
-    return (
-        all_rows.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_src", "_rn")
-    )
-
-
-def municipality_counts(members: DataFrame) -> DataFrame:
-    """The reference's documented sample query (README.md:432-433)."""
-    return (
-        members.groupBy("municipality")
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .orderBy(F.col("n_members").desc(), F.col("municipality").asc())
     )

@@ -1,15 +1,14 @@
-"""Multimodal columns: opaque binary payloads + typed metadata.
+"""Multimodal columns: opaque binary payloads.
 
-Images/audio/video ride through the engine as `binary` columns with a typed
-metadata struct; decode / feature-extraction / resize / frame-sampling run as
-`mapInPandas` stages so each Arrow batch is processed vectorized and the
-(heavy) payload column is pruned everywhere it isn't needed.
+Images/audio/video ride through the engine as `binary` columns; feature
+extraction runs as a `mapInPandas` stage so each Arrow batch is processed
+vectorized and the (heavy) payload column is pruned everywhere it isn't
+needed.
 
-The decode kernels are STUBS in this environment (no PIL/ffmpeg in the
-container): `decode_backend="real"` raises NotImplementedError at the first
-batch; the default deterministic fake backend derives features from payload
-bytes so the Spark-side plumbing — schema, partitioning, UDF signature,
-Arrow batch shape — is real and tested end-to-end.
+The decoder is a deterministic fake that derives features from payload bytes
+(no image/audio decoder is a dependency), so the Spark-side plumbing —
+schema, partitioning, UDF signature, Arrow batch shape — is real and tested
+end-to-end.
 """
 
 from __future__ import annotations
@@ -19,27 +18,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("format", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURES_SCHEMA = T.StructType(
     [
@@ -47,15 +26,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("kind", T.StringType()),
         T.StructField("n_bytes", T.IntegerType()),
         T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_ts_ms", T.IntegerType()),
-        T.StructField("frame_hash", T.LongType()),
     ]
 )
 
@@ -70,24 +40,15 @@ def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
     return (arr / norm if norm > 0 else arr).astype(np.float32).tolist()
 
 
-def extract_features(
-    media: DataFrame, decode_backend: str = "fake", batch_hint: int | None = None
-) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """media table -> (media_id, kind, n_bytes, features) via mapInPandas.
 
     Column pruning matters here: only (media_id, kind, payload) is read, and
     the payload never leaves the stage.
     """
-    if decode_backend not in ("fake", "real"):
-        raise ValueError(decode_backend)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode_backend == "real":
-                raise NotImplementedError(
-                    "real decode needs PIL/ffmpeg, absent in this container; "
-                    "plug the decoder in here — the batch shape is final"
-                )
             feats = [_fake_features(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
@@ -99,48 +60,3 @@ def extract_features(
             )
 
     return media.select("media_id", "kind", "payload").mapInPandas(run, FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """video rows -> one row per sampled frame (deterministic fake frame
-    hashes; a real backend would decode at frame_ts_ms)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_ts_ms": [], "frame_hash": []}
-            for mid, dur, payload in zip(
-                pdf["media_id"], pdf["duration_ms"], pdf["payload"]
-            ):
-                n = max(1, int(dur or 0) // every_ms)
-                for i in range(n):
-                    ts = i * every_ms
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(i)
-                    rows["frame_ts_ms"].append(ts)
-                    rows["frame_hash"].append(
-                        np.int64(hash((int(mid), ts)) & 0x7FFFFFFFFFFFFFFF)
-                    )
-            yield pd.DataFrame(rows)
-
-    vids = media.where(F.col("kind") == "video").select(
-        "media_id", F.col("meta.duration_ms").alias("duration_ms"), "payload"
-    )
-    return vids.mapInPandas(run, FRAMES_SCHEMA)
-
-
-def make_fake_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic synthetic media table for plumbing tests."""
-    import random
-
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n):
-        kind = ("image", "audio", "video")[i % 3]
-        payload = bytes(rng.randrange(256) for _ in range(64 + (i % 5) * 16))
-        meta = (
-            (64, 48, None, "png")
-            if kind == "image"
-            else (None, None, 3000 + 500 * (i % 4), "wav" if kind == "audio" else "mp4")
-        )
-        rows.append((i, kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

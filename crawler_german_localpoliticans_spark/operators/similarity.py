@@ -17,8 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _vec_length_groups, cosine_col
-
 
 def cosine_scores_udf(query: list[float]):
     """Arrow-batched cosine scorer against a fixed query vector: one numpy
@@ -240,86 +238,3 @@ def ivf_probe(
     cells = ivf_probe_cells(centroids, query, nprobe)
     cand = assigned.where(F.col("cell").isin(cells))
     return cosine_topk_bruteforce(cand, id_col, vec_col, query, k)
-
-
-def ivf_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query: list[float],
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Convenience one-shot: build + probe. For repeated queries call
-    ivf_build once and ivf_probe per query."""
-    assigned, centroids = ivf_build(df, id_col, vec_col, n_cells, seed)
-    return ivf_probe(assigned, centroids, id_col, vec_col, query, k, nprobe)
-
-
-def pairwise_topk_blocked(
-    df: DataFrame, id_col: str, vec_col: str, block_col: str, k: int = 5
-) -> DataFrame:
-    """Per-vector top-k neighbors within a block — the all-pairs variant of
-    ANN search used for corpus-level near-dup mining.
-
-    One applyInPandas kernel per block: the block's vectors stack into a
-    matrix once and the full similarity matrix is a single BLAS gramian
-    (G@G.T / outer(norms)) — no pair rows, no per-element lambda
-    interpretation, no extra window shuffle (the groupBy shuffle IS the
-    partitioning the window needed). Blocks are bounded by construction
-    (label / LSH bucket / IVF cell), which is what makes the in-memory
-    gramian safe; at 10^10 rows the block key is the table's partition key."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("neighbor", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-
-    def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # neighbors pair within same-length groups of the block (mixed-length
-        # cosines are undefined; mirrors the dedup kernels' grouping)
-        outs = []
-        for grp in _vec_length_groups(pdf):
-            n = len(grp)
-            if n < 2:
-                continue
-            ids = grp["id"].to_numpy(dtype=np.int64)
-            mat = np.vstack([np.asarray(v, dtype=np.float64) for v in grp["vec"]])
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            sims = np.round((mat @ mat.T) / np.outer(norms, norms), 6)
-            kk = min(k, n - 1)
-            # per-row vectorized selection: lexsort on (-score, neighbor id)
-            # is C-speed; no per-element Python comparisons
-            sel = np.empty((n, kk), dtype=np.int64)
-            for i in range(n):
-                order = np.lexsort((ids, -sims[i]))
-                sel[i] = order[order != i][:kk]
-            rows = np.repeat(np.arange(n), kk)
-            cols = sel.ravel()
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "id": ids[rows],
-                        "neighbor": ids[cols],
-                        "score": sims[rows, cols],
-                        "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), n),
-                    }
-                )
-            )
-        if not outs:
-            return pd.DataFrame({c.name: [] for c in out_schema})
-        return pd.concat(outs, ignore_index=True)
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.col(block_col).alias("blk"),
-    )
-    return base.groupBy("blk").applyInPandas(block_topk, out_schema)

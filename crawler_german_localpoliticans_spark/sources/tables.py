@@ -20,8 +20,7 @@ empty, no pyiceberg module: the container's pyspark distribution ships no
 Iceberg/Delta/Hudi jars and there is no network to
 fetch one, so the documented emulation stands rather than a faked
 `MERGE INTO`. On a real cluster, swap `Catalog` appends for
-`writeTo(...).append()` and `merge_council_members` /
-the ETag merge for `MERGE INTO` behind the same interfaces.)
+`writeTo(...).append()` behind the same interface.)
 """
 
 from __future__ import annotations
@@ -44,8 +43,6 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-SEEDS_SCHEMA = T.StructType([T.StructField("Websites", T.StringType())])
-
 ROBOTS_SCHEMA = T.StructType(
     [
         T.StructField("host_key", T.StringType()),
@@ -61,15 +58,6 @@ FRONTIER_SCHEMA = T.StructType(
         T.StructField("depth", T.IntegerType(), False),
         T.StructField("host", T.StringType()),
         T.StructField("host_key", T.StringType()),
-    ]
-)
-
-URL_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("h1", T.LongType(), False),  # xxhash64(url)
-        T.StructField("h2", T.LongType(), False),  # independent second hash
-        T.StructField("part", T.IntegerType(), False),  # pmod(h1, seen_partitions)
     ]
 )
 
@@ -92,19 +80,6 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("clean_html", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("custom_id", T.StringType()),
-    ]
-)
-
-COUNCIL_MEMBERS_SCHEMA = T.StructType(
-    [
-        T.StructField("unique_key", T.StringType(), False),
-        T.StructField("full_name", T.StringType(), False),
-        T.StructField("party", T.StringType()),
-        T.StructField("municipality", T.StringType(), False),
-        T.StructField("roles", T.ArrayType(T.StringType())),
-        T.StructField("source_file", T.StringType()),
-        T.StructField("raw_json", T.StringType()),
-        T.StructField("updated_at", T.TimestampType()),
     ]
 )
 

@@ -1,13 +1,16 @@
-"""JVM-side reference forms of three dedup kernels, kept for parity tests only.
+"""Reference forms of three dedup kernels, kept for parity tests only.
 
 The engine runs the Arrow MinHash kernel (`dedup.minhash_signatures_arrow`),
 the per-block BLAS cosine kernel (`dedup.embedding_neardup_pairs`) and the
-bucket-capped LSH candidate search (`dedup.lsh_candidate_pairs`). The forms
-below compute the same values with plain Spark expressions, so the tests can
-pin the engine kernels against an independent plan.
+bucket-capped LSH candidate search (`dedup.lsh_candidate_pairs`). The Spark
+forms below compute the same values with plain Spark expressions, so the tests
+can pin the engine kernels against an independent plan; `minhash_signature_py`
+is the pure-Python MinHash oracle for one text.
 """
 
 from __future__ import annotations
+
+import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -19,8 +22,20 @@ from crawler_german_localpoliticans_spark.operators.dedup import (
     NUM_PERM,
     _permutation_params,
     banded_signatures,
+    tokens_py,
     word_shingles,
 )
+
+
+def minhash_signature_py(text: str, num_perm: int = NUM_PERM, k: int = 3) -> list[int]:
+    toks = tokens_py(text)
+    shingles = {" ".join(toks[i : i + k]) for i in range(max(1, len(toks) - k + 1))}
+    shingles = {s for s in shingles if s}
+    params = _permutation_params(num_perm)
+    out = []
+    for a, b in params:
+        out.append(min((a * zlib.crc32(s.encode()) + b) % MINHASH_PRIME for s in shingles))
+    return out
 
 
 def minhash_signatures(

@@ -11,6 +11,7 @@ from crawler_german_localpoliticans_spark.operators import dedup
 from dedup_reference import (
     embedding_neardup_pairs_join,
     lsh_candidate_pairs_uncapped,
+    minhash_signature_py,
     minhash_signatures,
 )
 
@@ -50,7 +51,7 @@ def test_minhash_signature_matches_python_oracle(spark, docs):
         for r in minhash_signatures(docs.limit(8), "doc_id", "text").collect()
     }
     for r in rows:
-        assert sigs[r["doc_id"]] == dedup.minhash_signature_py(r["text"]), r["doc_id"]
+        assert sigs[r["doc_id"]] == minhash_signature_py(r["text"]), r["doc_id"]
 
 
 def test_minhash_arrow_kernel_matches_jvm_signatures(spark, docs):
@@ -231,14 +232,6 @@ def test_embedding_kernel_pairs_minority_lengths(spark):
     assert {(r["id_a"], r["id_b"]) for r in blas.collect()} == expected
     assert {(r["id_a"], r["id_b"]) for r in join.collect()} == expected
 
-    # pairwise top-k: minority group gets neighbors within its own length
-    from crawler_german_localpoliticans_spark.operators import similarity
-
-    nb = similarity.pairwise_topk_blocked(df, "vec_id", "embedding", "label", k=2)
-    got = {(r["id"], r["neighbor"]) for r in nb.collect()}
-    assert (10, 11) in got and (11, 10) in got
-    assert all({a, b} <= {1, 2, 3} or {a, b} <= {10, 11} for a, b in got)
-
 
 def test_crc32_parity_with_zlib(spark):
     df = spark.createDataFrame([("hello wörld",), ("",), ("a b",)], "s string")
@@ -271,7 +264,7 @@ def test_tokenizer_parity_on_nasty_whitespace(spark):
     }
     assert arrow == jvm
     for i, t in nasty:
-        assert arrow[i] == dedup.minhash_signature_py(t), i
+        assert arrow[i] == minhash_signature_py(t), i
 
     # the shared tokenizer itself, against the live JVM split
     from pyspark.sql import functions as F
@@ -424,8 +417,3 @@ def test_neardup_clusters_and_representatives(spark):
         6: (6, True), 7: (6, False),
         4: (4, True),
     }
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup.dedup_keep_representatives(docs, "doc_id", pairs).collect()
-    )
-    assert kept == [0, 1, 4, 6]

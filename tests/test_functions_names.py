@@ -1,5 +1,5 @@
-"""Parity tests for name keys, keyword gate, member-payload handling
-(reference: python_container/db_writer.py:526-652, src/main.rs:446-462,
+"""Parity tests for name keys and the keyword gate
+(reference: python_container/db_writer.py:556-625, src/main.rs:446-462,
 validation/validation.py:153-158)."""
 
 from __future__ import annotations
@@ -11,11 +11,7 @@ from crawler_german_localpoliticans_spark.functions.keywords import (
     matches_keywords,
 )
 from crawler_german_localpoliticans_spark.functions.names import (
-    ensure_iterable,
-    extract_json_from_text,
-    iter_member_payloads,
     normalize_name,
-    prepare_member_record,
     slugify,
     unique_key,
 )
@@ -59,52 +55,3 @@ def test_keyword_gate():
     # whitespace-only keywords ignored (src/main.rs:452-460)
     assert not matches_keywords("https://x.de/a", ["  ", ""])
 
-
-def test_extract_json_fenced():
-    assert extract_json_from_text('```json\n{"a": 1}\n```') == {"a": 1}
-    assert extract_json_from_text('prefix {"a": [1, 2]} suffix') == {"a": [1, 2]}
-    assert extract_json_from_text("[1, 2]") == [1, 2]
-    with pytest.raises(ValueError):
-        extract_json_from_text("no json here")
-    with pytest.raises(ValueError):
-        extract_json_from_text("   ")
-
-
-def test_iter_member_payloads_collection():
-    payload = {
-        "gemeinde": "Musterstadt",
-        "ratsmitglieder": [{"name": "A"}, {"name": "B"}, "not-a-dict"],
-    }
-    members = list(iter_member_payloads(payload))
-    assert members == [
-        {"gemeinde": "Musterstadt", "name": "A"},
-        {"gemeinde": "Musterstadt", "name": "B"},
-    ]
-
-
-def test_iter_member_payloads_bare_and_list():
-    assert list(iter_member_payloads({"name": "X"})) == [{"name": "X"}]
-    assert list(iter_member_payloads([{"name": "X"}, 3])) == [{"name": "X"}]
-    assert list(iter_member_payloads(None)) == []
-
-
-def test_prepare_member_record_translation_and_fallback():
-    rec = prepare_member_record(
-        {"name": "Hans", "gemeinde": "Stadt A", "partei": "CDU", "rollen": "Rat"}
-    )
-    assert rec["municipality"] == "Stadt A"
-    assert rec["party"] == "CDU"
-    assert rec["roles"] == ["Rat"]
-    # municipality falls back to the metadata hint (db_writer.py:599-601)
-    rec = prepare_member_record({"name": "Hans"}, municipality_hint="Hintstadt")
-    assert rec["municipality"] == "Hintstadt"
-    # missing name -> dropped (db_writer.py:603-609)
-    assert prepare_member_record({"gemeinde": "X"}) is None
-    assert prepare_member_record({"name": "H"}) is None
-
-
-def test_ensure_iterable():
-    assert ensure_iterable(None) == []
-    assert ensure_iterable("a") == ["a"]
-    assert ensure_iterable(["a", "b"]) == ["a", "b"]
-    assert ensure_iterable(3) == ["3"]

@@ -1,5 +1,4 @@
-"""Similarity search, text stats, ledger analytics, members pipeline,
-multimodal plumbing, streaming ingest."""
+"""Similarity search, text stats, ledger analytics, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -56,7 +55,8 @@ def test_ann_lsh_is_subset_and_query_found(spark, emb):
 def test_ivf_topk_recall(spark, emb):
     rows = emb.limit(1).collect()
     q = list(rows[0]["embedding"])
-    out = similarity.ivf_topk(emb, "vec_id", "embedding", q, k=5, n_cells=4, nprobe=2).collect()
+    assigned, centroids = similarity.ivf_build(emb, "vec_id", "embedding", n_cells=4, seed=42)
+    out = similarity.ivf_probe(assigned, centroids, "vec_id", "embedding", q, k=5, nprobe=2).collect()
     assert len(out) >= 1
     # the query vector's own cell is always probed -> itself is recalled
     assert out[0]["id"] == rows[0]["vec_id"]
@@ -114,13 +114,6 @@ def test_ivf_seeded_build_matches_numpy_reference(spark, emb):
     ).collect()
     brute = similarity.cosine_topk_bruteforce(emb, "vec_id", "embedding", q, k=7).collect()
     assert [(r["id"], r["score"]) for r in full] == [(r["id"], r["score"]) for r in brute]
-
-
-def test_pairwise_topk_blocked(spark, emb):
-    out = similarity.pairwise_topk_blocked(emb.limit(60), "vec_id", "embedding", "label", k=2)
-    pdf = out.toPandas()
-    assert (pdf.groupby("id")["rank"].max() <= 2).all()
-    assert (pdf["id"] != pdf["neighbor"]).all()
 
 
 # --------------------------------------------------------------- textstats
@@ -183,151 +176,31 @@ def test_url_ledger_min_max(spark):
     assert out["https://b.de/"]["first_seen_at"] == out["https://b.de/"]["last_seen_at"]
 
 
-def test_discovered_links_positions(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "https://a.de/", 0, None, ["https://c.de/", "https://b.de/"], False, False, False),
-            (1, "https://b.de/", 1, None, ["https://c.de/"], False, False, False),
-        ],
-        "seq long, url string, depth int, scraped_at timestamp, found_links array<string>, keyword_hit boolean, robots_blocked boolean, fetch_failed boolean",
-    )
-    rows = {(r["source_url"], r["target_url"]): r for r in ledger.discovered_links(df).collect()}
-    assert rows[("https://a.de/", "https://c.de/")]["position"] == 0
-    assert rows[("https://a.de/", "https://b.de/")]["position"] == 1
-    assert rows[("https://a.de/", "https://c.de/")]["was_new"] is True
-    assert rows[("https://b.de/", "https://c.de/")]["was_new"] is False
-
-
-def test_members_pipeline_and_merge(spark):
-    payloads = spark.createDataFrame(
-        [
-            (
-                '```json\n{"gemeinde": "Musterstadt", "ratsmitglieder": ['
-                '{"name": "Dr. Hans Müller", "partei": "CDU", "rollen": "Bürgermeister"},'
-                '{"name": "Käthe Groß", "partei": "SPD", "rollen": ["Rätin", "Kämmerin"]},'
-                '{"partei": "FDP"}]}\n```',
-                None,
-                "crawl-html/musterstadt_rathaus.html",
-            ),
-            ('{"name": "Jörg Bäcker"}', "Hintstadt", "f2.html"),
-            ("no json at all", "X", "f3.html"),
-        ],
-        "payload string, municipality_hint string, source_file string",
-    )
-    members = ledger.members_from_payloads(payloads)
-    rows = {r["unique_key"]: r for r in members.collect()}
-    assert set(rows) == {
-        "musterstadt-hans-mueller",
-        "musterstadt-kaethe-gross",
-        "hintstadt-joerg-baecker",
-    }
-    assert rows["musterstadt-hans-mueller"]["roles"] == ["Bürgermeister"]
-    assert rows["musterstadt-kaethe-gross"]["roles"] == ["Rätin", "Kämmerin"]
-    assert rows["musterstadt-hans-mueller"]["source_file"] == "crawl-html/musterstadt_rathaus.html"
-
-    # merge semantics: update wins on conflict, unmatched rows survive
-    current = members.withColumn("updated_at", F.lit("2025-01-01").cast("timestamp"))
-    updates = spark.createDataFrame(
-        [
-            (
-                "musterstadt-hans-mueller",
-                "Dr. Hans Müller",
-                "GRÜNE",
-                "Musterstadt",
-                ["Bürgermeister"],
-                "f9.html",
-                "{}",
-            )
-        ],
-        "unique_key string, full_name string, party string, municipality string, roles array<string>, source_file string, raw_json string",
-    ).withColumn("updated_at", F.lit("2025-02-01").cast("timestamp"))
-    merged = {r["unique_key"]: r for r in ledger.merge_council_members(current, updates).collect()}
-    assert len(merged) == 3
-    assert merged["musterstadt-hans-mueller"]["party"] == "GRÜNE"
-    assert merged["musterstadt-kaethe-gross"]["party"] == "SPD"
-
-    counts = ledger.municipality_counts(members).collect()
-    assert counts[0]["municipality"] == "Musterstadt" and counts[0]["n_members"] == 2
-
-
 # --------------------------------------------------------------- multimodal
+def _fake_media(spark, n: int, seed: int = 42):
+    """Deterministic synthetic media table: the columns extract_features reads."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        payload = bytes(rng.randrange(256) for _ in range(64 + (i % 5) * 16))
+        rows.append((i, ("image", "audio", "video")[i % 3], payload))
+    return spark.createDataFrame(rows, "media_id long, kind string, payload binary")
+
+
 def test_multimodal_features_and_frames(spark):
-    media = multimodal.make_fake_media(spark, n=30)
+    media = _fake_media(spark, n=30)
     feats = multimodal.extract_features(media).collect()
     assert len(feats) == 30
     for r in feats:
         assert len(r["features"]) == multimodal.FEATURE_DIM
         assert r["n_bytes"] > 0
     # deterministic across runs
-    feats2 = multimodal.extract_features(multimodal.make_fake_media(spark, n=30)).collect()
+    feats2 = multimodal.extract_features(_fake_media(spark, n=30)).collect()
     assert sorted((r["media_id"], tuple(r["features"])) for r in feats) == sorted(
         (r["media_id"], tuple(r["features"])) for r in feats2
     )
-    frames = multimodal.sample_frames(media).collect()
-    assert len(frames) > 0
-    assert all(f["frame_ts_ms"] % 1000 == 0 for f in frames)
-    with pytest.raises(Exception, match="NotImplementedError|real decode"):
-        multimodal.extract_features(media, decode_backend="real").collect()
-
-
-# --------------------------------------------------------------- streaming
-def test_streaming_windowed_counts_match_batch(spark, tmp_path):
-    """Watermarked tumbling-window aggregation over a file stream equals the
-    batch plan on the same data (availableNow drains everything, so no rows
-    are dropped as late)."""
-    import shutil
-
-    from crawler_german_localpoliticans_spark.streaming.windows import (
-        stream_windowed_event_counts,
-        windowed_event_counts,
-    )
-
-    events_dir = str(tmp_path / "events")
-    (tmp_path / "events").mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", events_dir)
-
-    batch = windowed_event_counts(spark.read.parquet(events_dir))
-    expected = {
-        (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in batch.collect()
-    }
-    q = stream_windowed_event_counts(
-        spark, events_dir, str(tmp_path / "ckpt"), query_name="t_event_windows"
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in spark.sql("select * from t_event_windows").collect()
-    }
-    assert got == expected
-    assert len(got) > 10
-
-
-def test_streaming_ingest_counts(spark, smoke_dir, tmp_path):
-    from crawler_german_localpoliticans_spark.config import CrawlConfig
-    from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
-    from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
-    from crawler_german_localpoliticans_spark.sources.tables import read_robots
-    from crawler_german_localpoliticans_spark.streaming import stream_fetched_counts
-
-    config = CrawlConfig(seen_partitions=8, max_depth=1)
-    robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
-    seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
-    d = CrawlDriver(spark, str(tmp_path / "crawl"), f"{smoke_dir}/pages.parquet", robots, config)
-    tables = d.run(seeds)
-    expected = {
-        r["depth"]: r["n"]
-        for r in tables.fetched.groupBy("depth").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    q = stream_fetched_counts(
-        spark,
-        str(tmp_path / "crawl" / "fetched"),
-        str(tmp_path / "stream_ckpt"),
-        query_name="t_fetched_counts",
-    )
-    q.awaitTermination(120)
-    got = {r["depth"]: r["pages"] for r in spark.sql("select * from t_fetched_counts").collect()}
-    assert got == expected
 
 
 def test_winnow_batch_parity_and_guarantee():
