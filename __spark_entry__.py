@@ -18,16 +18,19 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the text regexes: the Spark operators and the DuckDB oracle SQL below
+# both use these strings
+from crawler_german_localpoliticans_spark.operators.textstats import (
+    BPE_PAT,
+    DE_PAT,
+    EN_PAT,
+    PUNCT_PAT,
+    TOKEN_PAT,
+)
 from crawler_german_localpoliticans_spark.sources.tables import spread
 
 SF0001 = "/root/testdata/sf0.001"
 
-# shared literals (Spark + DuckDB sides are generated from these)
-DE_PAT = r"\b(der|die|das|und|ist|nicht|mit|ein|zu|den)\b"
-EN_PAT = r"\b(the|and|is|of|to|in|that|it|for|on)\b"
-TOKEN_PAT = r"\S+"
-BPE_PAT = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-PUNCT_PAT = r"[.,;:!?]"
 GATE_WORDS = ("join", "filter", "window")
 
 
@@ -735,7 +738,7 @@ def _q_url_normalize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 — the ingest-path normalizer (crawler_ingest.py:143-172), distinct
     from the crawl-path canonicalizer: userinfo dropped, default ports
     stripped, path-segment params and fragments dropped, query kept, plus
-    the relational parts columns the url_ledger stores. Even doc_ids probe
+    the relational parts columns the reference's URL ledger stores. Even doc_ids probe
     userinfo + default port + params + fragment; odd ones a non-default
     port with no path."""
     from crawler_german_localpoliticans_spark.functions import udfs
@@ -1351,7 +1354,7 @@ def _neardup_clusters_oracle_sql() -> str:
 def _simhash_oracle_sql() -> str:
     """Raw 64-bit simhash values re-derived in SQL: per-token hash =
     crc32(tok) | crc32(tok + chr(1)) << 32 (the portable primitive of
-    operators/dedup.py simhash64_py / with_simhash), 64 per-bit ±1 vote
+    operators/dedup.py with_simhash), 64 per-bit ±1 vote
     sums as aggregates, sign bits reassembled in HUGEINT and converted to
     Spark's signed-64 two's complement. Tokenless docs hash to 0."""
     crc_a = _CRC32_EXPR.format(col="tk", extra="")
@@ -1586,8 +1589,6 @@ _PLANTED_SALTED_PAIRS_SQL = r"""
 
 
 def oracle_sql() -> dict[str, str]:
-    de_re = DE_PAT.replace("\\", "\\")
-    en_re = EN_PAT.replace("\\", "\\")
     gate_cond = " OR ".join(f"lower(text) LIKE '%{w}%'" for w in GATE_WORDS)
     return {
         # BFS crawl ORDER over the derived corpus, fully re-derived in SQL —
@@ -2022,14 +2023,14 @@ def oracle_sql() -> dict[str, str]:
         """,
         "lang_id": rf"""
             SELECT doc_id,
-                   len(regexp_extract_all(lower(text), '{de_re}')) AS de_hits,
-                   len(regexp_extract_all(lower(text), '{en_re}')) AS en_hits,
+                   len(regexp_extract_all(lower(text), '{DE_PAT}')) AS de_hits,
+                   len(regexp_extract_all(lower(text), '{EN_PAT}')) AS en_hits,
                    CASE
-                     WHEN len(regexp_extract_all(lower(text), '{de_re}')) = 0
-                      AND len(regexp_extract_all(lower(text), '{en_re}')) = 0
+                     WHEN len(regexp_extract_all(lower(text), '{DE_PAT}')) = 0
+                      AND len(regexp_extract_all(lower(text), '{EN_PAT}')) = 0
                        THEN 'unknown'
-                     WHEN len(regexp_extract_all(lower(text), '{de_re}'))
-                       >= len(regexp_extract_all(lower(text), '{en_re}'))
+                     WHEN len(regexp_extract_all(lower(text), '{DE_PAT}'))
+                       >= len(regexp_extract_all(lower(text), '{EN_PAT}'))
                        THEN 'de'
                      ELSE 'en'
                    END AS lang_pred
@@ -2041,8 +2042,8 @@ def oracle_sql() -> dict[str, str]:
                        length(text) AS n_chars,
                        len(regexp_extract_all(text, '{TOKEN_PAT}')) AS n_tokens,
                        len(regexp_extract_all(text, '{PUNCT_PAT}')) AS n_punct,
-                       len(regexp_extract_all(lower(text), '{en_re}'))
-                         + len(regexp_extract_all(lower(text), '{de_re}')) AS n_stop,
+                       len(regexp_extract_all(lower(text), '{EN_PAT}'))
+                         + len(regexp_extract_all(lower(text), '{DE_PAT}')) AS n_stop,
                        len(regexp_extract_all(text, '\s')) AS n_ws
                 FROM documents
             ),
@@ -2116,11 +2117,11 @@ def oracle_sql() -> dict[str, str]:
                        length(text) AS n_chars,
                        len(regexp_extract_all(text, '{TOKEN_PAT}')) AS n_tokens,
                        len(regexp_extract_all(text, '{PUNCT_PAT}')) AS n_punct,
-                       len(regexp_extract_all(lower(text), '{en_re}'))
-                         + len(regexp_extract_all(lower(text), '{de_re}')) AS n_stop,
+                       len(regexp_extract_all(lower(text), '{EN_PAT}'))
+                         + len(regexp_extract_all(lower(text), '{DE_PAT}')) AS n_stop,
                        len(regexp_extract_all(text, '\s')) AS n_ws,
-                       len(regexp_extract_all(lower(text), '{de_re}')) AS de_hits,
-                       len(regexp_extract_all(lower(text), '{en_re}')) AS en_hits
+                       len(regexp_extract_all(lower(text), '{DE_PAT}')) AS de_hits,
+                       len(regexp_extract_all(lower(text), '{EN_PAT}')) AS en_hits
                 FROM documents
             ),
             ratios AS (

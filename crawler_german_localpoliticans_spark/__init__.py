@@ -10,8 +10,7 @@ training-data operators (dedup, similarity search, text analysis) that a
 
 Layout
 ------
-functions/   pure-Python row semantics (canonicalize, robots, html, keywords,
-             name keys)
+functions/   pure-Python row semantics (canonicalize, robots, html, keywords)
              shared verbatim by the Spark engine and the reference oracle
 operators/   DataFrame-level operators (dedup, similarity, textstats, ledger)
 sources/     table schemas, parquet-backed catalog, seed/pages sources

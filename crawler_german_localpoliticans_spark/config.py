@@ -36,14 +36,13 @@ class CrawlConfig:
     seen_partitions: int = 32
     bloom_capacity_per_partition: int = 1 << 17
     bloom_fpp: float = 0.01
-    # politeness wave-slicing: when >0, each BFS depth wave's schedule is cut
-    # into slices capped at ceil(slice_budget_ms / effective_delay_ms) pages
-    # per host per slice (reported as politeness.slices); the wave is still
-    # fetched as one batch and expansion is committed only once the whole
-    # wave is fetched, so (depth, seq) parity with the reference is preserved
+    # politeness wave-slicing, the per-host rate cap: when >0, each BFS depth
+    # wave's schedule is cut into slices of max(1, floor(slice_budget_ms /
+    # effective_delay_ms)) pages per host (reported as politeness.slices); the
+    # wave is still fetched as one batch and expansion is committed only once
+    # the whole wave is fetched, so (depth, seq) parity with the reference is
+    # preserved
     slice_budget_ms: int = 0
-    # per-host hard cap per slice as a skew guard (0 = unlimited)
-    max_pages_per_host_per_slice: int = 0
     # hot-host skew salting for the politeness window (plans/politeness.py):
     # 1 = exact single-window schedule (reference-faithful slot order);
     # >1 = salted two-phase slots for hosts with massive waves — crawl

@@ -7,16 +7,18 @@ invariant (BASELINE.json input_hint: "byte-identical extracted text per url"):
   of broken HTML — semantics of the reference's lol_html streaming pass
   (reference: src/main.rs:859-895). Content of <script>/<style> is rawtext and
   never yields elements, matching lol_html.
-- `clean_html`: parse -> drop every <script> subtree -> re-serialize the
-  normalized DOM; on parse error return the input verbatim (reference:
-  julia_container/clean_html_docker.jl:415-443). Gumbo's exact serialization
-  bytes are runtime-specific, so per SURVEY.md §7 this function *is* the
-  fixed golden contract for the rebuilt engine: deterministic, pure, and the
-  pytest suite enforces byte-identity against it.
+- `clean_and_extract`: parse -> drop every <script> subtree -> re-serialize
+  the normalized DOM (the `clean_html` column); on parse error return the
+  input verbatim (reference: julia_container/clean_html_docker.jl:415-443).
+  Gumbo's exact serialization bytes are runtime-specific, so per SURVEY.md §7
+  this serialization *is* the fixed golden contract for the rebuilt engine:
+  deterministic, pure, and the pytest suite enforces byte-identity against
+  its one-function form, `clean_html` in tests/html_reference.py. The second
+  value is `extract_text` of the cleaned DOM.
 - `extract_text`: visible text of the cleaned DOM (script/style excluded),
   whitespace-collapsed. This is the `text` column of the `pages` shape.
 
-All three are wrapped as Arrow-batched pandas UDFs in functions/udfs.py —
+They are wrapped as Arrow-batched pandas UDFs in functions/udfs.py —
 never per-row Python on the Spark side.
 """
 
@@ -158,7 +160,7 @@ def extract_links(html: str | bytes | None) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# DOM build / clean / serialize — golden contract for clean_html
+# DOM build / clean / serialize — golden contract for the clean_html column
 # ---------------------------------------------------------------------------
 
 
@@ -278,23 +280,6 @@ def _drop_tag(node: _Node, tag: str) -> int:
         kept.append(child)
     node.children = kept
     return removed
-
-
-def clean_html(html: str | bytes | None) -> str:
-    """Drop all <script> subtrees, re-serialize; parse error -> input verbatim
-    (reference: julia_container/clean_html_docker.jl:415-443)."""
-    if html is None:
-        return ""
-    if isinstance(html, (bytes, bytearray)):
-        html = html.decode("utf-8", errors="replace")
-    try:
-        root = _parse(html)
-        _drop_tag(root, "script")
-        out: list[str] = []
-        _serialize(root, out)
-        return "".join(out)
-    except Exception:
-        return html
 
 
 # elements whose boundaries separate words in the extracted text — without

@@ -17,7 +17,6 @@ from pyspark.sql.functions import pandas_udf
 
 from .html import clean_and_extract
 from .keywords import effective_keywords
-from .names import normalize_name as _normalize_name
 from .urls import (
     canonicalize_url as _canonicalize,
     derive_custom_id as _custom_id,
@@ -129,12 +128,6 @@ def normalize_ingest(urls: pd.Series) -> pd.DataFrame:
             cols[k].append(parts[k])
         cols["port"].append(parts["port"])
     return pd.DataFrame(cols)
-
-
-@pandas_udf(T.StringType())
-def normalize_name(names: pd.Series) -> pd.Series:
-    """C6 (db_writer.py:556-565)."""
-    return names.map(lambda n: _normalize_name(n))
 
 
 def keyword_hit_col(url_col: Column, keywords: list[str] | tuple[str, ...], save_all: bool = False) -> Column:

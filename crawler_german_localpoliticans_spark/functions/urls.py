@@ -365,7 +365,7 @@ def normalize_url_ingest(raw_url: str) -> tuple[str, dict]:
       DROPPED; query is kept verbatim (unlike C1, which strips nothing from
       the query but re-encodes components);
     - returns (normalized, parts) where parts carries scheme/host/port/
-      path/query — the url_ledger's relational columns
+      path/query — the reference URL ledger's relational columns
       (crawler_ingest.py:189-241);
     - QUIRK (reference-faithful, crawler_ingest.py:159-161 `if port:`): an
       explicit `:0` port is truthy-falsy, so it is dropped from the

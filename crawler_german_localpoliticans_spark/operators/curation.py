@@ -1,14 +1,14 @@
 """Corpus-curation operators a 100-TB training-data pipeline needs beyond
-scoring/dedup: PII detection + redaction and benchmark decontamination.
+scoring/dedup: PII detection + redaction and a benchmark contamination check.
 
 Both are Spark-first:
 
 - PII is pure Column regexp work (whole-stage codegen, zero Python) with
   regexes shared verbatim with the DuckDB oracle (__spark_entry__.py);
-- decontamination is a hashed n-gram semi-join — the industry-standard
-  "drop any document sharing an n-gram with the eval set" rule (as used for
-  C4/GPT-3-style decontamination) expressed as an Arrow gram-hash kernel ->
-  explode -> broadcast-able LEFT SEMI/ANTI join, never a substring scan per
+- the contamination check is a hashed n-gram join — the industry-standard
+  "a document sharing an n-gram with the eval set is contaminated" rule (as
+  used for C4/GPT-3-style decontamination) expressed as an Arrow gram-hash
+  kernel -> explode -> broadcast-able join, never a substring scan per
   pair.
   At 10^10 docs the benchmark n-gram table is tiny (a few million grams) and
   broadcasts; the document side stays a single map pass + one semi-join.
@@ -151,10 +151,18 @@ def ngram_hashes(
 
 
 def _bench_gram_hashes(benchmark: DataFrame, bench_text_col: str, n: int) -> DataFrame:
-    """The benchmark side's distinct gram_hash set — ONE definition shared
-    by contamination_check and decontaminate so the check form can never
-    silently desynchronize from the filter form."""
-    return (
+    """The benchmark side's distinct gram_hash set, persisted and counted.
+
+    Un-materialized, the gram side's plan-time estimate is ~3e18 B for a
+    createDataFrame benchmark, so the join would plan as a SortMergeJoin
+    that shuffles every document gram. Counted, the cache reports its true
+    size and spark.sql.autoBroadcastJoinThreshold picks broadcast (a real
+    eval suite: 1e5-1e6 grams) or a shuffle join on gram_hash (a corpus-sized
+    "benchmark", per-task memory O(grams/P)). The query is planned at its
+    action, so the cache is not released here: the entry lives until
+    clearCache(), and CacheManager reuses it for repeated calls on the same
+    benchmark in one session."""
+    grams = (
         ngram_hashes(
             benchmark.select(F.lit(0).alias("bid"), F.col(bench_text_col)),
             "bid",
@@ -163,63 +171,10 @@ def _bench_gram_hashes(benchmark: DataFrame, bench_text_col: str, n: int) -> Dat
         )
         .select("gram_hash")
         .distinct()
+        .persist()
     )
-
-
-# Above this many distinct benchmark grams the broadcast is declined and
-# Catalyst/AQE picks a shuffle join instead. 10M longs ≈ 80 MB on the wire —
-# comfortably broadcastable; real eval suites are a few MBs of text (1e5-1e6
-# grams), so the shuffle branch only triggers when someone feeds a corpus-
-# sized "benchmark".
-BROADCAST_MAX_BENCH_GRAMS = 10_000_000
-
-
-def _bench_gram_join_side(
-    benchmark: DataFrame,
-    bench_text_col: str,
-    n: int,
-    broadcast_max_grams: int,
-) -> DataFrame:
-    """Self-defending join side: COUNT the distinct benchmark gram set
-    once, broadcast it only when it is provably small, otherwise hand
-    Catalyst the un-hinted side so the gram join shuffles on gram_hash and
-    per-task memory stays O(grams/P). The gram set is persisted so the
-    count does not recompute the Arrow gram kernel inside the join.
-    Spark's own size-based join selection (what the robots join relies on)
-    cannot make this call: the gram side's plan-time estimate is ~3e18 B
-    for a createDataFrame benchmark, so un-hinted it plans a SortMergeJoin
-    that shuffles every document gram.
-
-    The count runs ONCE per (session, benchmark plan, n, threshold): the
-    resulting broadcast-or-shuffle DECISION is memoized, so repeated calls
-    (the check form then the filter form, or a bench loop) pay no extra
-    job. Like AQE statistics, a stale decision can only change the join
-    strategy, never the result."""
-    bench_grams = _bench_gram_hashes(benchmark, bench_text_col, n)
-    spark = benchmark.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        benchmark.semanticHash(),
-        bench_text_col,
-        n,
-        broadcast_max_grams,
-    )
-    decision = _BENCH_GRAM_DECISIONS.get(key)
-    if decision is None:
-        counted = bench_grams.persist()
-        decision = counted.count() <= broadcast_max_grams
-        _BENCH_GRAM_DECISIONS[key] = decision
-        # release the probe cache immediately: the benchmark side is tiny,
-        # so recomputing its gram kernel inside the join costs less than a
-        # cache entry leaked for the session lifetime (review find, r4).
-        # The memo keeps subsequent calls from ever re-counting. NOTE the
-        # guard makes DataFrame CONSTRUCTION run one Spark job (the count)
-        # on the first call per (appId, benchmark plan, n, threshold) key.
-        counted.unpersist()
-    return F.broadcast(bench_grams) if decision else bench_grams
-
-
-_BENCH_GRAM_DECISIONS: dict[tuple, bool] = {}
+    grams.count()
+    return grams
 
 
 def contamination_check(
@@ -229,7 +184,6 @@ def contamination_check(
     text_col: str,
     bench_text_col: str = "text",
     n: int = 13,
-    broadcast_max_grams: int = BROADCAST_MAX_BENCH_GRAMS,
 ) -> DataFrame:
     """Per-document contamination against an eval/benchmark corpus: a doc is
     contaminated iff it shares >= 1 word n-gram with ANY benchmark text.
@@ -238,12 +192,12 @@ def contamination_check(
     Plan shape for 100 TB: the benchmark side collapses to a distinct
     gram_hash set (tiny — benchmarks are MBs, corpora are TBs) that Spark
     broadcasts; the document side is one explode + one broadcast semi-ish
-    join + one groupBy. No substring matching, no cross join. The broadcast
-    is size-guarded (_bench_gram_join_side): an adversarially large
-    benchmark declines to a shuffle join instead of OOMing every
-    executor."""
+    join + one groupBy. No substring matching, no cross join. The gram set
+    is materialized before planning (_bench_gram_hashes), so Spark sizes
+    the join: an adversarially large benchmark plans a shuffle join
+    instead of OOMing every executor."""
     doc_grams = ngram_hashes(docs, id_col, text_col, n)
-    bench_grams = _bench_gram_join_side(benchmark, bench_text_col, n, broadcast_max_grams)
+    bench_grams = _bench_gram_hashes(benchmark, bench_text_col, n)
     hits = doc_grams.join(bench_grams, "gram_hash").groupBy("id").agg(
         F.count(F.lit(1)).alias("contaminated_grams")
     )
@@ -256,21 +210,3 @@ def contamination_check(
             (F.coalesce("contaminated_grams", F.lit(0)) > 0).alias("contaminated"),
         )
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
-    bench_text_col: str = "text",
-    n: int = 13,
-    broadcast_max_grams: int = BROADCAST_MAX_BENCH_GRAMS,
-) -> DataFrame:
-    """The filter form: documents with no shared n-gram (LEFT ANTI join on
-    the size-guarded benchmark gram set — the exact plan a 10^10-doc
-    decontamination pass wants)."""
-    doc_grams = ngram_hashes(docs, id_col, text_col, n)
-    bench_grams = _bench_gram_join_side(benchmark, bench_text_col, n, broadcast_max_grams)
-    dirty = doc_grams.join(bench_grams, "gram_hash").select("id").distinct()
-    return docs.join(dirty.withColumnRenamed("id", id_col), id_col, "left_anti")

@@ -208,12 +208,6 @@ def minhash_signatures_xx(
 # sees the same components — only the redundant tail-tail pairs are elided.
 LSH_MAX_BUCKET = 5000
 
-# Broadcast the oversized-bucket list into the flagging join only below this
-# many rows (~25 MB framed at 3 longs + flag/row). Above it — a genuinely
-# mass-duplicated corpus — the join falls back to shuffle, per-task memory
-# O(buckets/P), exactly the pre-probe degenerate-case behavior.
-LSH_BROADCAST_MAX_OVERSIZED = 1_000_000
-
 
 def banded_signatures(
     sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
@@ -264,8 +258,10 @@ def lsh_candidate_pairs(
 
     Degenerate-bucket cap (max_bucket_size): a hash-agg
     finds the oversized buckets (map-side combine -> one row per bucket;
-    there are mathematically at most n_banded/max_bucket_size of them, so
-    the list always broadcasts), and ONLY their rows pay a row_number
+    there are mathematically at most n_banded/max_bucket_size of them; the
+    list is persisted and counted, so the planner sees its true size and
+    spark.sql.autoBroadcastJoinThreshold chooses broadcast or shuffle for
+    the flagging join), and ONLY their rows pay a row_number
     window; the first max_bucket_size members of each do the normal
     all-pairs equi-join, and every overflow member contributes exactly one
     pair (bucket-representative = min id, overflow id). NOTE the
@@ -310,46 +306,27 @@ def lsh_candidate_pairs(
     # banded table (16 rows per doc) to police a cap that almost never
     # triggers. The oversized-bucket list is mathematically tiny —
     # each holds > max_bucket_size members, so there are at most
-    # n_banded / max_bucket_size of them — hence always broadcastable,
-    # and the plan needs no eager driver-side decision.
+    # n_banded / max_bucket_size of them.
     sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bsz"))
-    # persisted so the eager probe count below materializes it once and
-    # the flagging join reads the (near-empty) cache instead of
-    # re-running the full bucket-count aggregation a second time
     oversized = (
         sizes.where(F.col("_bsz") > max_bucket_size)
         .select("band", "bh", F.lit(True).alias("_over"))
         .persist()
     )
-    # Self-defending join side (the curation bench-grams pattern):
-    # the oversized list is bounded at n_banded/cap ROWS — near-always
-    # zero to a handful — but neither Catalyst nor AQE can see that
-    # (the > cap filter sits ABOVE the aggregation's exchange, so the
-    # runtime size estimate is the full 765k-bucket histogram and the
-    # join planned as a SortMergeJoin shuffling the whole banded table;
-    # stage receipt in BENCH/NOTES.md r6). Probe the actual count once
-    # (a map-side-combined agg over the cached banded table) and
-    # broadcast only when provably small; a mass-duplicated corpus
-    # whose oversized list is genuinely huge (~3e7 rows at 1e10 docs)
-    # keeps the shuffle join — per-task memory stays O(buckets/P).
+    # Materialize the oversized list before the join is planned: the
+    # > cap filter sits ABOVE the aggregation's exchange, so un-materialized
+    # its size estimate is the full bucket histogram and the join plans as
+    # a SortMergeJoin shuffling the whole banded table (stage receipt in
+    # BENCH/NOTES.md r6). Counted, the cache reports its true (near-zero)
+    # size and spark.sql.autoBroadcastJoinThreshold picks broadcast or
+    # shuffle; the count also fills the banded cache every branch reads.
     #
     # PERSIST the flagged table: it feeds FOUR branches (ok_part on
     # both sides of the pair self-join, the ranked window, the
     # overflow slice), and exchange reuse does not fire across them —
     # measured at sf1.0 the un-materialized plan re-shuffled the full
-    # banded table ~10x and the self-join read 8M shuffled rows for
-    # 36k join hits (stage receipt in BENCH/NOTES.md r6). With the
-    # cache, each branch is a map-side filter over one materialized
-    # copy and the window shuffles only the (usually zero) oversized
-    # rows. One extra materialization pass, ~7x fewer shuffled bytes;
-    # storage is MEMORY_AND_DISK so a 1e10-doc banded table spills
-    # rather than OOMs — still far cheaper than ten shuffles of it.
-    # NOTE the probe makes plan CONSTRUCTION run one small Spark job
-    # (the oversized count) — the same documented trade as
-    # curation._bench_gram_join_side; it also materializes the banded
-    # cache, which every later branch was going to pay anyway.
-    if oversized.count() <= LSH_BROADCAST_MAX_OVERSIZED:
-        oversized = F.broadcast(oversized)
+    # banded table ~10x (stage receipt in BENCH/NOTES.md r6).
+    oversized.count()
     flagged = banded.join(oversized, ["band", "bh"], "left").persist()
     ok_part = flagged.where(F.col("_over").isNull()).select("id", "band", "bh")
     w = Window.partitionBy("band", "bh").orderBy("id")
@@ -436,30 +413,14 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash64_py(text: str) -> int:
-    """64-bit simhash over whitespace tokens, portable primitives only:
-    token hash = crc32(token) | crc32(token + 0x01 byte) << 32. Returns a
-    SIGNED 64-bit int (Spark LongType two's complement)."""
-    votes = [0] * 64
-    for tok in (t for t in tokens_py(text) if t):
-        bt = tok.encode()
-        h = zlib.crc32(bt) | (zlib.crc32(bt + b"\x01") << 32)
-        for bit in range(64):
-            votes[bit] += 1 if (h >> bit) & 1 else -1
-    out = 0
-    for bit in range(64):
-        if votes[bit] > 0:
-            out |= 1 << bit
-    return out - (1 << 64) if out >= (1 << 63) else out
-
-
 def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
     """Vectorized pandas UDF (the bit-vote accumulation is genuinely
     non-columnar). Inside the Arrow batch the per-token/per-bit work is
     numpy: token hashes unpack to an (n_tokens, 64) bit matrix whose column
     sums are the votes — no interpreted per-bit loop (round-1 verdict's
-    simhash scale flag; simhash64_py stays the pytest parity oracle). A
-    per-batch token-hash memo exploits Zipfian token repetition."""
+    simhash scale flag; the pure-Python parity oracle is simhash64_py in
+    tests/dedup_reference.py). A per-batch token-hash memo exploits Zipfian
+    token repetition."""
     from pyspark.sql import types as T
 
     @F.pandas_udf(T.LongType())
@@ -663,7 +624,7 @@ def embedding_neardup_pairs(
 # localCheckpoint + a checksum collect) dominates for small graphs —
 # measured ~15s of driver-paced latency for a 2.5k-edge graph at sf1.0.
 # Near-dup graphs at 1e10-doc scale exceed the threshold and keep the
-# distributed O(log n) loop; pass None to force it (tests do).
+# distributed O(log n) loop. Read at call time.
 CC_DRIVER_FASTPATH_MAX_EDGES = 1_000_000
 
 
@@ -702,7 +663,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    driver_fastpath_max_edges: int | None = CC_DRIVER_FASTPATH_MAX_EDGES,
 ) -> DataFrame:
     """(id, cluster_id) for every id appearing in `pairs`, where cluster_id
     is the MINIMUM id reachable through the pair graph — the missing step
@@ -736,19 +696,14 @@ def connected_components(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     ).distinct()
 
-    if driver_fastpath_max_edges is not None:
-        # the loop below needs the distinct edge set materialized anyway
-        # (its first localCheckpoint); checkpoint first, then one cheap
-        # count over the checkpointed blocks decides the path
-        edges = edges.localCheckpoint(eager=True)
-        n_edges = edges.count()
-        if n_edges <= driver_fastpath_max_edges:
-            spark = pairs.sparkSession
-            labels = _components_py(
-                [(r["u"], r["v"]) for r in edges.collect()]
-            )
-            edges.unpersist()
-            return spark.createDataFrame(labels, "id long, cluster_id long")
+    # the loop below needs the distinct edge set materialized anyway
+    # (its first localCheckpoint); checkpoint first, then one cheap
+    # count over the checkpointed blocks decides the path
+    edges = edges.localCheckpoint(eager=True)
+    if edges.count() <= CC_DRIVER_FASTPATH_MAX_EDGES:
+        labels = _components_py([(r["u"], r["v"]) for r in edges.collect()])
+        edges.unpersist()
+        return pairs.sparkSession.createDataFrame(labels, "id long, cluster_id long")
 
     # all ids ever seen (kept stable across rounds; at the fixed point the
     # component minima appear only on the small side of edges)
@@ -803,10 +758,8 @@ def connected_components(
     # the data is big — localCheckpoint materializes the round and truncates
     # lineage (the standard iterative-Spark pattern; trade-off: blocks are
     # not recomputable on executor loss, use checkpoint() with a checkpoint
-    # dir for fault-tolerant runs). Already checkpointed above when the
-    # fast-path probe ran.
-    if driver_fastpath_max_edges is None:
-        edges = edges.localCheckpoint(eager=True)
+    # dir for fault-tolerant runs). The first round's input was
+    # checkpointed above.
     sig = checksum(edges)
     for _ in range(max_iter):
         nxt = small_star(large_star(edges)).localCheckpoint(eager=True)

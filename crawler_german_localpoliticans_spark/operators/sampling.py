@@ -25,23 +25,6 @@ from pyspark.sql import functions as F
 _HASH_SPACE = 1 << 32
 
 
-def _keep_col(key_col, salt: int, fraction: float):
-    if not (0.0 <= fraction <= 1.0):
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    threshold = int(fraction * _HASH_SPACE)
-    h = F.crc32(F.encode(F.concat(key_col.cast("string"), F.lit(f":{salt}")), "UTF-8"))
-    return h < F.lit(threshold)
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: int = 0
-) -> DataFrame:
-    """Keyed Bernoulli sample: keeps each row iff its key hashes below the
-    fraction threshold. Pure Column filter — pushes down to the scan where
-    the key is a stored column."""
-    return df.where(_keep_col(F.col(key_col), salt, fraction))
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,
@@ -91,8 +74,9 @@ def source_mix(df: DataFrame, strata_col: str, weight_col: str | None = None) ->
     # no session-lifetime cache entry is pinned per distinct input (the
     # r5 ADVICE persist-leak note — an unpaired .persist() here
     # accumulated one entry per corpus in a long-lived session).
-    # Construction is eager (one Spark job), the documented trade of the
-    # repo's other self-defending probes. The share expression keeps the
+    # Construction is eager (one Spark job), like the materializing
+    # counts in dedup.lsh_candidate_pairs and curation.contamination_check.
+    # The share expression keeps the
     # exact association `weight * 1e6 / total` the DuckDB oracle uses —
     # total is an exact integer sum either way, so the float op sequence
     # is unchanged.
@@ -125,11 +109,11 @@ def hash_split(
     fraction thresholds (first split = hashes below trunc(f1 * 2^32), next
     below trunc((f1+f2) * 2^32), ...; the LAST split absorbs the rounding
     residue so the partition is total). Same guarantees as
-    deterministic_sample: reproducible across runs/retries/engines, stable
+    stratified_sample: reproducible across runs/retries/engines, stable
     under repartitioning, and consistent across derived tables keyed the
     same way — a document and its embeddings always land in the same
     split. Fractions must sum to 1 (the split is a partition, not a
-    sample; combine with deterministic_sample to subsample first).
+    sample; combine with stratified_sample to subsample first).
     Pure codegen CASE chain, no shuffle."""
     if len(splits) < 2:
         raise ValueError("need at least two splits")

@@ -99,33 +99,13 @@ def query_bucket(
     query: list[float], n_planes: int = 8, seed: int = 42, dim: int | None = None
 ) -> int:
     """The sign-LSH bucket of a query vector — THE single definition of the
-    bit packing shared by with_lsh_bucket's per-row UDF, ann_topk_lsh, and
-    the driver queries (a second inline copy of this derivation is how the
+    bit packing shared by with_lsh_bucket's per-row UDF and the driver
+    queries (a second inline copy of this derivation is how the
     seed/bit-order silently drifts)."""
     dim = dim or len(query)
     planes = hyperplanes(dim, n_planes, seed)
     signs = (planes @ np.asarray(query, dtype=np.float64)) > 0
     return int(sum(1 << i for i in range(n_planes) if signs[i]))
-
-
-def ann_topk_lsh(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query: list[float],
-    k: int = 10,
-    dim: int | None = None,
-    n_planes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: score only the query's LSH bucket. At production
-    scale the bucket is a partition key, so this is a partition-pruned scan
-    instead of a full one."""
-    dim = dim or len(query)
-    bucketed = with_lsh_bucket(df, vec_col, dim, n_planes, seed)
-    qb = query_bucket(query, n_planes, seed, dim)
-    cand = bucketed.where(F.col("bucket") == qb)
-    return cosine_topk_bruteforce(cand, id_col, vec_col, query, k)
 
 
 def ivf_assign(

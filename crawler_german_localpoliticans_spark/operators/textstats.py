@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 DE_STOPWORDS = ("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "den")
 EN_STOPWORDS = ("the", "and", "is", "of", "to", "in", "that", "it", "for", "on")
 
-_DE_PAT = r"\b(" + "|".join(DE_STOPWORDS) + r")\b"
-_EN_PAT = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
+DE_PAT = r"\b(" + "|".join(DE_STOPWORDS) + r")\b"
+EN_PAT = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
 # fused alternation == de_hits + en_hits (the word sets are disjoint) in a
 # single regex pass — quality_score uses this instead of two counts
 _STOP_PAT = r"\b(" + "|".join(DE_STOPWORDS + EN_STOPWORDS) + r")\b"
@@ -45,8 +45,8 @@ def with_lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> Da
     """Stopword-count language heuristic: argmax of German vs English
     stopword hits; no hits -> 'unknown'; ties -> 'de' (deterministic)."""
     lowered = F.lower(F.col(text_col))
-    de = F.regexp_count(lowered, F.lit(_DE_PAT))
-    en = F.regexp_count(lowered, F.lit(_EN_PAT))
+    de = F.regexp_count(lowered, F.lit(DE_PAT))
+    en = F.regexp_count(lowered, F.lit(EN_PAT))
     return (
         df.withColumn("de_hits", de)
         .withColumn("en_hits", en)

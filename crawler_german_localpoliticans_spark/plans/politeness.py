@@ -12,7 +12,7 @@ which per-host slot. The scheduler:
   rule ("priority queue ordered by depth/domain-whitelist scoring");
 - assigns per-host fetch slots (slot n ⇒ simulated fetch at n·delay ms) and,
   when a slice budget is configured, slices the wave so no host exceeds
-  `ceil(budget / delay)` fetches per slice (per-host rate cap / skew guard);
+  `max(1, floor(budget / delay))` fetches per slice (the per-host rate cap);
 - result ordering is untouched: the order key is (depth, seq), never fetch
   time, so slicing cannot change crawl-order parity (expansion is committed
   only after the whole wave, see plans/crawl.py).
@@ -77,19 +77,10 @@ def schedule_wave(allowed: DataFrame, config: CrawlConfig) -> DataFrame:
     df = df.withColumn(
         "sched_offset_ms", F.col("host_slot") * F.col("effective_delay_ms")
     )
-    # per-host pages per slice: the tighter of the enabled caps
-    caps = []
     if config.slice_budget_ms > 0:
-        caps.append(
-            F.greatest(
-                F.lit(1),
-                F.floor(F.lit(config.slice_budget_ms) / F.col("effective_delay_ms")),
-            )
+        cap = F.greatest(
+            F.lit(1), F.floor(F.lit(config.slice_budget_ms) / F.col("effective_delay_ms"))
         )
-    if config.max_pages_per_host_per_slice > 0:
-        caps.append(F.lit(config.max_pages_per_host_per_slice))
-    if caps:
-        cap = F.least(*caps) if len(caps) > 1 else caps[0]
         df = df.withColumn("slice", (F.col("host_slot") / cap).cast("int"))
     else:
         df = df.withColumn("slice", F.lit(0))

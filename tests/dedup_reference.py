@@ -1,11 +1,12 @@
-"""Reference forms of three dedup kernels, kept for parity tests only.
+"""Reference forms of four dedup kernels, kept for parity tests only.
 
 The engine runs the Arrow MinHash kernel (`dedup.minhash_signatures_arrow`),
 the per-block BLAS cosine kernel (`dedup.embedding_neardup_pairs`) and the
 bucket-capped LSH candidate search (`dedup.lsh_candidate_pairs`). The Spark
 forms below compute the same values with plain Spark expressions, so the tests
 can pin the engine kernels against an independent plan; `minhash_signature_py`
-is the pure-Python MinHash oracle for one text.
+is the pure-Python MinHash oracle for one text and `simhash64_py` the
+pure-Python oracle of `dedup.with_simhash`.
 """
 
 from __future__ import annotations
@@ -36,6 +37,23 @@ def minhash_signature_py(text: str, num_perm: int = NUM_PERM, k: int = 3) -> lis
     for a, b in params:
         out.append(min((a * zlib.crc32(s.encode()) + b) % MINHASH_PRIME for s in shingles))
     return out
+
+
+def simhash64_py(text: str) -> int:
+    """64-bit simhash over whitespace tokens, portable primitives only:
+    token hash = crc32(token) | crc32(token + 0x01 byte) << 32. Returns a
+    SIGNED 64-bit int (Spark LongType two's complement)."""
+    votes = [0] * 64
+    for tok in (t for t in tokens_py(text) if t):
+        bt = tok.encode()
+        h = zlib.crc32(bt) | (zlib.crc32(bt + b"\x01") << 32)
+        for bit in range(64):
+            votes[bit] += 1 if (h >> bit) & 1 else -1
+    out = 0
+    for bit in range(64):
+        if votes[bit] > 0:
+            out |= 1 << bit
+    return out - (1 << 64) if out >= (1 << 63) else out
 
 
 def minhash_signatures(

@@ -84,7 +84,6 @@ def test_politeness_slicing_does_not_change_results(spark, smoke_fixture, smoke_
     into slices, with results unchanged."""
     config = CrawlConfig(
         slice_budget_ms=4000,  # cap = 4000/eff_delay pages per host per slice
-        max_pages_per_host_per_slice=2,
         seen_partitions=8,
     )
     oracle_res = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots, config)

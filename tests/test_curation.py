@@ -1,4 +1,4 @@
-"""PII detection/redaction + benchmark decontamination
+"""PII detection/redaction + the benchmark contamination check
 (crawler_german_localpoliticans_spark/operators/curation.py)."""
 
 from __future__ import annotations
@@ -54,9 +54,6 @@ def test_contamination_check_and_decontaminate(spark):
     assert out[1][1] and out[1][0] >= 1
     assert out[2][1]
     assert out[3] == (0, False)
-
-    clean = curation.decontaminate(docs, bench, "doc_id", "text", n=5)
-    assert [r["doc_id"] for r in clean.collect()] == [3]
 
 
 def test_short_docs_still_checked(spark):
@@ -133,10 +130,12 @@ def test_contamination_ignores_boundary_whitespace(spark):
 
 
 def test_contamination_broadcast_size_guard(spark):
-    """The benchmark gram side is self-defending (a measured gram count):
-    below broadcast_max_grams the gram join broadcasts; an adversarially
-    large benchmark declines to a shuffle join — executors never hold the
-    whole gram set. Results are identical either way."""
+    """The benchmark gram side is materialized before planning, so Spark
+    sizes the gram join with no hint: at the default thresholds it
+    broadcasts; with the auto-broadcast thresholds off (as they effectively
+    are for an adversarially large benchmark) it plans a shuffle join, and
+    executors never hold the whole gram set. Results are identical either
+    way."""
     import re
 
     def gram_join_modes(df):
@@ -148,32 +147,27 @@ def test_contamination_broadcast_size_guard(spark):
         [(1, "x " + bench_text + " y"), (2, "unrelated spark text here entirely")],
         "doc_id long, text string",
     )
-    # adversarial benchmark: many distinct grams (> threshold below)
     big_bench = spark.createDataFrame(
         [(f"tok{i} tok{i+1} tok{i+2} tok{i+3} tok{i+4} {bench_text}",) for i in range(0, 120, 5)],
         "text string",
     )
+    key = lambda rs: sorted((r["id"], r["contaminated_grams"], r["contaminated"]) for r in rs)
 
     small = curation.contamination_check(docs, big_bench, "doc_id", "text", n=5)
     modes = gram_join_modes(small)
     assert modes and all("Broadcast" in m for m in modes), modes
+    broadcast_rows = key(small.collect())
 
-    # the guarded form must not FORCE a broadcast; with the auto-broadcast
-    # estimator off (as it effectively is for a >threshold gram set at real
-    # scale) the gram join becomes a shuffle join
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in ("spark.sql.autoBroadcastJoinThreshold",
+    thresholds = ("spark.sql.autoBroadcastJoinThreshold",
                   "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    }
+    saved = {k: spark.conf.get(k, None) for k in thresholds}
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        guarded = curation.contamination_check(
-            docs, big_bench, "doc_id", "text", n=5, broadcast_max_grams=3
-        )
-        modes = gram_join_modes(guarded)
+        for k in thresholds:
+            spark.conf.set(k, "-1")
+        shuffled = curation.contamination_check(docs, big_bench, "doc_id", "text", n=5)
+        modes = gram_join_modes(shuffled)
         assert modes and all("Broadcast" not in m for m in modes), modes
+        shuffle_rows = key(shuffled.collect())
     finally:
         for k, v in saved.items():
             if v is None:
@@ -181,13 +175,5 @@ def test_contamination_broadcast_size_guard(spark):
             else:
                 spark.conf.set(k, v)
 
-    # identical results in both modes, for check and filter forms alike
-    key = lambda rs: sorted((r["id"], r["contaminated_grams"], r["contaminated"]) for r in rs)
-    assert key(small.collect()) == key(guarded.collect())
-    clean_bc = curation.decontaminate(docs, big_bench, "doc_id", "text", n=5)
-    clean_sh = curation.decontaminate(
-        docs, big_bench, "doc_id", "text", n=5, broadcast_max_grams=3
-    )
-    assert sorted(r["doc_id"] for r in clean_bc.collect()) == sorted(
-        r["doc_id"] for r in clean_sh.collect()
-    ) == [2]
+    assert broadcast_rows == shuffle_rows
+    assert [r[0] for r in broadcast_rows if r[2]] == [1]

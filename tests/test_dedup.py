@@ -13,6 +13,7 @@ from dedup_reference import (
     lsh_candidate_pairs_uncapped,
     minhash_signature_py,
     minhash_signatures,
+    simhash64_py,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -128,7 +129,7 @@ def test_simhash_matches_python_and_detects_neardups(spark):
     )
     sh = {r["doc_id"]: r["simhash"] for r in dedup.with_simhash(df, "text").collect()}
     for did, text in [(1, base), (2, near), (3, far), (4, exact)]:
-        assert sh[did] == dedup.simhash64_py(text)
+        assert sh[did] == simhash64_py(text)
 
     def hamming(a, b):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
@@ -370,7 +371,7 @@ def test_connected_components_vs_union_find(spark):
         assert got == {i: expect[i] for i in covered}, (n, len(edges))
 
 
-def test_connected_components_distributed_path_matches_fastpath(spark):
+def test_connected_components_distributed_path_matches_fastpath(spark, monkeypatch):
     """r6: small edge sets take a driver-side union-find fast path
     (CC_DRIVER_FASTPATH_MAX_EDGES); the distributed star loop must stay
     covered and produce IDENTICAL labels. Runs the same stress shapes as
@@ -391,12 +392,12 @@ def test_connected_components_distributed_path_matches_fastpath(spark):
             r["id"]: r["cluster_id"]
             for r in dedup.connected_components(pairs).collect()
         }
-        dist = {
-            r["id"]: r["cluster_id"]
-            for r in dedup.connected_components(
-                pairs, driver_fastpath_max_edges=None
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "CC_DRIVER_FASTPATH_MAX_EDGES", -1)
+            dist = {
+                r["id"]: r["cluster_id"]
+                for r in dedup.connected_components(pairs).collect()
+            }
         assert fast == dist and fast, len(edges)
 
 

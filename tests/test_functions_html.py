@@ -10,10 +10,10 @@ import hypothesis.strategies as st
 
 from crawler_german_localpoliticans_spark.functions.html import (
     clean_and_extract,
-    clean_html,
     extract_links,
     extract_text,
 )
+from html_reference import clean_html
 
 
 def test_links_document_order():
@@ -272,7 +272,6 @@ def test_clean_extract_fast_path_differential_fixed():
     from crawler_german_localpoliticans_spark.functions.html import (
         _clean_extract_fast,
         clean_and_extract,
-        clean_html,
         extract_text,
     )
 
@@ -322,7 +321,6 @@ def test_clean_extract_fast_path_differential_hypothesis():
 
     from crawler_german_localpoliticans_spark.functions.html import (
         clean_and_extract,
-        clean_html,
         extract_text,
     )
 

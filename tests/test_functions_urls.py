@@ -1,11 +1,15 @@
-"""Table-driven parity tests for URL canonicalization & derived keys
-(reference semantics: src/main.rs:429-498, src/bin/seeder.rs:55-58,
+"""Table-driven parity tests for URL canonicalization, derived keys and the
+keyword gate (reference semantics: src/main.rs:429-498, src/bin/seeder.rs:55-58,
 julia_container/clean_html_docker.jl:488-495)."""
 
 from __future__ import annotations
 
 import pytest
 
+from crawler_german_localpoliticans_spark.functions.keywords import (
+    DEFAULT_KEYWORDS,
+    matches_keywords,
+)
 from crawler_german_localpoliticans_spark.functions.urls import (
     canonicalize_url,
     derive_custom_id,
@@ -362,3 +366,16 @@ def test_canonicalize_rejects_authorityless_double_slash_paths():
     # single-slash authority-less paths still canonicalize (and stay fixed)
     c = canonicalize_url("ftp:///A")
     assert c == "ftp:///A" and canonicalize_url(c) == c
+
+
+def test_keyword_gate():
+    assert matches_keywords("https://x.de/rathaus/kontakt", list(DEFAULT_KEYWORDS))
+    assert matches_keywords("https://x.de/STADTRAT", list(DEFAULT_KEYWORDS))
+    assert not matches_keywords("https://x.de/impressum", list(DEFAULT_KEYWORDS))
+    assert not matches_keywords("https://x.de/rathaus", [])  # empty list gates off
+    assert matches_keywords("https://x.de/impressum", [], save_all=True)
+    # ascii-only lowering: uppercase Ü in page does not match lowercase ü needle
+    assert not matches_keywords("https://x.de/BÜRGERMEISTER", list(DEFAULT_KEYWORDS))
+    assert matches_keywords("https://x.de/bürgermeister", list(DEFAULT_KEYWORDS))
+    # whitespace-only keywords ignored (src/main.rs:452-460)
+    assert not matches_keywords("https://x.de/a", ["  ", ""])

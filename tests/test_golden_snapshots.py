@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import pytest
 
-from crawler_german_localpoliticans_spark.functions.html import clean_html, extract_text
+from crawler_german_localpoliticans_spark.functions.html import extract_text
+from html_reference import clean_html
 
 GOLDEN = [
     (

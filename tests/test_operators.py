@@ -1,4 +1,4 @@
-"""Similarity search, text stats, ledger analytics, multimodal plumbing."""
+"""Similarity search, text stats, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.operators import (
-    ledger,
     multimodal,
     similarity,
     textstats,
@@ -44,8 +43,12 @@ def test_cosine_topk_matches_numpy(spark, emb):
 def test_ann_lsh_is_subset_and_query_found(spark, emb):
     rows = emb.limit(1).collect()
     q = list(rows[0]["embedding"])
-    ann = similarity.ann_topk_lsh(emb, "vec_id", "embedding", q, k=5, n_planes=6)
-    got = ann.collect()
+    # the ANN probe as the ann_lsh query composes it: score only the
+    # query's own sign-LSH bucket
+    dim = len(q)
+    bucketed = similarity.with_lsh_bucket(emb, "embedding", dim, n_planes=6)
+    cand = bucketed.where(F.col("bucket") == similarity.query_bucket(q, n_planes=6, dim=dim))
+    got = similarity.cosine_topk_bruteforce(cand, "vec_id", "embedding", q, k=5).collect()
     assert len(got) >= 1
     # the query vector itself lives in its own bucket -> always recalled
     assert got[0]["id"] == rows[0]["vec_id"]
@@ -151,29 +154,6 @@ def test_fingerprint_matches_python(spark, docs):
     out = {r["doc_id"]: (r["doc_hash"], r["min_gram_hash"]) for r in textstats.with_fingerprint(docs.limit(10), "text").collect()}
     for r in rows:
         assert out[r["doc_id"]] == textstats.fingerprint_py(r["text"])
-
-
-# --------------------------------------------------------------- ledger
-def test_url_ledger_min_max(spark):
-    import datetime
-
-    ts = datetime.datetime
-    df = spark.createDataFrame(
-        [
-            (0, "https://a.de/", 0, ts(2025, 1, 1), ["x"], True, False, False),
-            (5, "https://a.de/", 1, ts(2025, 1, 2), ["x"], True, False, False),
-            (1, "https://b.de/", 0, ts(2025, 1, 1), [], False, False, False),
-        ],
-        "seq long, url string, depth int, scraped_at timestamp, found_links array<string>, keyword_hit boolean, robots_blocked boolean, fetch_failed boolean",
-    )
-    out = {r["url"]: r for r in ledger.url_ledger(df).collect()}
-    assert out["https://a.de/"]["last_depth"] == 0
-    assert out["https://a.de/"]["last_seen_at"] == ts(2025, 1, 2)
-    # first_seen_at = the FIRST-processed fetch's stamp (seq order), the
-    # reference's ON CONFLICT DO NOTHING insert semantics
-    assert out["https://a.de/"]["first_seen_at"] == ts(2025, 1, 1)
-    assert out["https://a.de/"]["n_fetches"] == 2
-    assert out["https://b.de/"]["first_seen_at"] == out["https://b.de/"]["last_seen_at"]
 
 
 # --------------------------------------------------------------- multimodal

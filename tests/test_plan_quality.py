@@ -188,6 +188,53 @@ def test_robots_policies_join_scales_past_broadcast(spark):
         assert delay == (2000 if expect_blocked else None), (id_, delay)
 
 
+def test_lsh_flagging_join_is_sized_by_spark(spark):
+    """lsh_candidate_pairs materializes its oversized-bucket list before the
+    (band, bh) flagging join is planned, and gives no hint: at the default
+    thresholds the join broadcasts the near-empty list; with auto-broadcast
+    off it plans a shuffle join. Same pairs either way."""
+    from crawler_german_localpoliticans_spark.operators import dedup
+
+    docs = spark.range(60).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("rathaus sitzung nummer "), (F.col("id") % 20).cast("string"),
+                 F.lit(" der stadt")).alias("text"),
+    )
+    flag_join = re.compile(r"(\w*Join\w*) \[band#\d+, bh#\d+L\], \[band#\d+, bh#\d+L\], LeftOuter")
+    thresholds = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in thresholds}
+    results = []
+    try:
+        for broadcast_off in (False, True):
+            spark.catalog.clearCache()  # the flagged table caches its plan
+            for k in thresholds:
+                if broadcast_off:
+                    spark.conf.set(k, "-1")
+                elif saved[k] is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, saved[k])
+            sigs = dedup.minhash_signatures_arrow(docs, "doc_id", "text")
+            pairs = dedup.lsh_candidate_pairs(sigs)
+            joins = flag_join.findall(plan_of(pairs))
+            assert joins, plan_of(pairs)
+            if broadcast_off:
+                assert all(j in ("SortMergeJoin", "ShuffledHashJoin") for j in joins), joins
+            else:
+                assert all(j == "BroadcastHashJoin" for j in joins), joins
+            results.append(sorted((r["id_a"], r["id_b"]) for r in pairs.collect()))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert results[0] == results[1] and results[0]
+
+
 def test_extraction_stage_prunes_payload_columns(spark, smoke_dir):
     """Reading fetched output for analytics must not deserialize found_links
     when only counts are selected."""

@@ -50,13 +50,6 @@ def test_per_host_rate_cap_honored(spark):
     assert a_slices == 4
 
 
-def test_hard_cap_overrides(spark):
-    cfg = CrawlConfig(slice_budget_ms=100000, max_pages_per_host_per_slice=1)
-    out = schedule_wave(wave_df(spark), cfg)
-    sizes = out.groupBy("host", "slice").count().collect()
-    assert all(r["count"] == 1 for r in sizes)
-
-
 def test_salted_schedule_slots_injective_and_caps_hold(spark):
     """FIXTURES.md scenario 2 (hot host): salted window partitioning keeps
     per-host slots unique, so slice caps still bound every host."""

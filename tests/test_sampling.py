@@ -15,26 +15,31 @@ def _docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
+def _sample(docs, frac, salt=0):
+    # an empty strata map applies default_fraction to every row: the plain
+    # keyed Bernoulli sample
+    return sampling.stratified_sample(
+        docs, "doc_id", "source", fractions={}, default_fraction=frac, salt=salt
+    )
+
+
 def test_deterministic_sample_matches_python_rule_and_is_stable(spark):
     docs = _docs(spark)
     frac, salt = 0.3, 7
-    got = sorted(r["doc_id"] for r in
-                 sampling.deterministic_sample(docs, "doc_id", frac, salt).collect())
+    got = sorted(r["doc_id"] for r in _sample(docs, frac, salt).collect())
     all_ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
     thr = int(frac * 2**32)
     expect = sorted(i for i in all_ids if zlib.crc32(f"{i}:{salt}".encode()) < thr)
     assert got == expect and 0 < len(got) < len(all_ids)
     # repartitioning does not change the sample (keyed, not RNG)
-    got2 = sorted(r["doc_id"] for r in
-                  sampling.deterministic_sample(docs.repartition(17), "doc_id", frac, salt).collect())
+    got2 = sorted(r["doc_id"] for r in _sample(docs.repartition(17), frac, salt).collect())
     assert got2 == got
     # a different salt draws a different (but same-rule) sample
-    got3 = sorted(r["doc_id"] for r in
-                  sampling.deterministic_sample(docs, "doc_id", frac, salt + 1).collect())
+    got3 = sorted(r["doc_id"] for r in _sample(docs, frac, salt + 1).collect())
     assert got3 != got
     # fraction edges
-    assert sampling.deterministic_sample(docs, "doc_id", 1.0).count() == len(all_ids)
-    assert sampling.deterministic_sample(docs, "doc_id", 0.0).count() == 0
+    assert _sample(docs, 1.0).count() == len(all_ids)
+    assert _sample(docs, 0.0).count() == 0
 
 
 def test_stratified_sample_per_stratum_rule(spark):

@@ -8,9 +8,10 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crawler_german_localpoliticans_spark.functions.html import clean_html, extract_links, extract_text
+from crawler_german_localpoliticans_spark.functions.html import extract_links, extract_text
 from crawler_german_localpoliticans_spark.functions.robots import parse_robots
 from crawler_german_localpoliticans_spark.functions.urls import canonicalize_url, join_url
+from html_reference import clean_html
 
 
 # ------------------------------------------------------------------ S1 CSV

@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.functions import udfs
-from crawler_german_localpoliticans_spark.functions.names import normalize_name
 from crawler_german_localpoliticans_spark.functions.urls import (
     canonicalize_url,
     derive_custom_id,
@@ -54,14 +53,6 @@ def test_custom_id_udf_lineage(spark):
     df = spark.createDataFrame([("https://a.de/x/y?z=1",)], "url string")
     got = df.select(udfs.custom_id_from_url(F.col("url")).alias("cid")).collect()[0]["cid"]
     assert got == derive_custom_id(safe_filename_from_url("https://a.de/x/y?z=1") + ".html")
-
-
-def test_normalize_name_udf(spark):
-    names = ["Dr. Hans Müller", "Prof. Käthe Groß", "Anna-Lena", ""]
-    df = spark.createDataFrame([(n,) for n in names], "n string")
-    out = df.select("n", udfs.normalize_name(F.col("n")).alias("nn")).collect()
-    for r in out:
-        assert r["nn"] == normalize_name(r["n"])
 
 
 def test_parse_policies_executor_parse(spark, smoke_dir, smoke_fixture):
