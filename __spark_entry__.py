@@ -729,7 +729,7 @@ def _q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         messy.alias("raw_url"),
         udfs.canonicalize_url(messy).alias("canonical_url"),
-        udfs.host_key(udfs.canonicalize_url(messy)).alias("host_key"),
+        udfs.host_key_col(udfs.canonicalize_url(messy)).alias("host_key"),
         udfs.safe_filename(udfs.canonicalize_url(messy)).alias("safe_filename"),
     )
 
@@ -768,7 +768,7 @@ def _q_url_normalize_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises the flagship robots path: policies parsed on executors as a
     DataFrame, picked up via Spark's size-based host_key join (never a driver
-    dict), longest-prefix match in one Arrow batch."""
+    dict), longest-prefix match as Column expressions."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.functions import udfs
     from crawler_german_localpoliticans_spark.plans.crawl import (
@@ -780,7 +780,7 @@ def _q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages, _, robots = corpus_from_documents(spark, sf_dir)
     policies = parse_policies_df(robots, DEFAULT_CONFIG)
     out = evaluate_robots(
-        pages.select("url", udfs.host_key(F.col("url")).alias("host_key")),
+        pages.select("url", udfs.host_key_col(F.col("url")).alias("host_key")),
         policies,
     )
     return out.select(
@@ -985,8 +985,8 @@ def _q_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages, _, robots = corpus_from_documents(spark, sf_dir)
     wave = pages.select(
         "url",
-        udfs.url_host(F.col("url")).alias("host"),
-        udfs.host_key(F.col("url")).alias("host_key"),
+        udfs.url_host_col(F.col("url")).alias("host"),
+        udfs.host_key_col(F.col("url")).alias("host_key"),
         F.regexp_extract("url", r"/seite/(\d+)", 1).cast("long").alias("seq"),
         udfs.keyword_hit_col(F.col("url"), cfg.keywords).alias("keyword_hit"),
     )

@@ -47,10 +47,6 @@ class RobotsPolicy:
         d = max((len(p) for p in self.disallow if path.startswith(p)), default=0)
         return not (d > a and d > 0)
 
-    def to_tuple(self) -> tuple[tuple[str, ...], tuple[str, ...], int | None]:
-        """Hashable/broadcastable form."""
-        return (tuple(self.allow), tuple(self.disallow), self.crawl_delay_ms)
-
 
 @dataclass
 class _Group:

@@ -3,8 +3,9 @@
 Per BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row
 Python) throughout" — every Python-side transform crosses the JVM boundary as
 Arrow batches; nothing registers a row-at-a-time `F.udf`. Simple predicates
-(keyword gate, scheme filter, depth cutoff) stay as Column expressions and
-never reach Python at all (see `keyword_hit_col`).
+(keyword gate, scheme filter, depth cutoff) and the parts of a canonical URL
+stay as Column expressions and never reach Python at all (see
+`keyword_hit_col`, `host_key_col`): a Python stage costs ~0.2 s even when tiny.
 """
 
 from __future__ import annotations
@@ -20,11 +21,8 @@ from .keywords import effective_keywords
 from .urls import (
     canonicalize_url as _canonicalize,
     derive_custom_id as _custom_id,
-    host_key as _host_key,
     normalize_url_ingest as _normalize_url_ingest,
     safe_filename_from_url as _safe_filename,
-    url_host as _url_host,
-    url_path as _url_path,
 )
 
 
@@ -33,21 +31,6 @@ def canonicalize_url(urls: pd.Series) -> pd.Series:
     """C1 — THE key function (src/main.rs:429-440 + url-crate parse); also
     the seed path's parse-normalize + fragment strip (seeder.rs:55-58)."""
     return urls.map(lambda u: _canonicalize(u) if u is not None else None)
-
-
-@pandas_udf(T.StringType())
-def url_host(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: _url_host(u) if u is not None else None)
-
-
-@pandas_udf(T.StringType())
-def url_path(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: _url_path(u) if u is not None else None)
-
-
-@pandas_udf(T.StringType())
-def host_key(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: _host_key(u) if u is not None else None)
 
 
 @pandas_udf(T.StringType())
@@ -147,3 +130,28 @@ def keyword_hit_col(url_col: Column, keywords: list[str] | tuple[str, ...], save
     for n in needles:
         cond = cond | hay.contains(F.lit(n))
     return cond
+
+
+# scheme (1), authority (3) and path (4) of a URL, split where urlsplit splits
+# it; a group that takes no part extracts as ''
+_URL_PARTS = r"^([A-Za-z][A-Za-z0-9+.-]*):(//([^/?#]*))?([^?#]*)"
+
+
+def host_key_col(url_col: Column) -> Column:
+    """`urls.host_key`: `scheme://host[:port]`. Valid only on `canonicalize_url`
+    output (lowercased, no userinfo or default port, IPv6 in brackets)."""
+    scheme, authority = (F.regexp_extract(url_col, _URL_PARTS, i) for i in (1, 3))
+    return F.concat(scheme, F.lit("://"), authority)
+
+
+def url_host_col(url_col: Column) -> Column:
+    """The host: the authority without its port. Valid only on
+    `canonicalize_url` output."""
+    return F.regexp_replace(F.regexp_extract(url_col, _URL_PARTS, 3), ":[0-9]*$", "")
+
+
+def url_path_col(url_col: Column) -> Column:
+    """`urls.url_path`: the path, '/' when empty. Valid only on
+    `canonicalize_url` output."""
+    path = F.regexp_extract(url_col, _URL_PARTS, 4)
+    return F.when(path == "", F.lit("/")).otherwise(path)

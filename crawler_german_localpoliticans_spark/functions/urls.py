@@ -15,6 +15,7 @@ engine, the oracle, and every dedup/ordering hash derive from it.
 
 from __future__ import annotations
 
+import re as _re
 from urllib.parse import quote, urljoin, urlsplit, urlunsplit
 
 # Characters the `url` crate leaves un-encoded in path / query components.
@@ -23,6 +24,8 @@ _PATH_SAFE = "/%!$&'()*+,;=:@~.-_"
 _QUERY_SAFE = "/%!$&'()*+,;=:@~.-_?"
 
 _DEFAULT_PORTS = {"http": 80, "https": 443, "ws": 80, "wss": 443, "ftp": 21}
+# a bracketed host with an optional port: the only authority brackets may take
+_IP_LITERAL_RE = _re.compile(r"\[[^\]]*\](:[0-9]*)?")
 
 
 def _remove_dot_segments(path: str) -> str:
@@ -105,7 +108,14 @@ def canonicalize_url(raw: str, *, keep_fragment: bool = False) -> str | None:
         # tests/test_functions_urls.py).
         if any(c.isspace() or ord(c) < 0x21 or ord(c) == 0x7F for c in host):
             return None
-        netloc = host.lower()
+        # Brackets count only around a whole IPv6 literal: urlsplit reads
+        # past text beside one ('x[::1]y') and past a '[' in the dropped
+        # userinfo, so those outputs would parse to another host or not at
+        # all (fuzz finds, P3).
+        hostinfo = parts.netloc.rpartition("@")[2]
+        if ("[" in hostinfo or "]" in hostinfo) and not _IP_LITERAL_RE.fullmatch(hostinfo):
+            return None
+        netloc = _host_of(parts)
         if port is not None and port != _DEFAULT_PORTS.get(scheme):
             netloc = f"{netloc}:{port}"
     path = _remove_dot_segments(parts.path)
@@ -172,8 +182,6 @@ def join_url(base: str, href: str) -> str | None:
 # the GOLDEN definitions; these only skip the round trip when a conservative
 # recognizer proves the result verbatim.
 # ---------------------------------------------------------------------------
-
-import re as _re
 
 # already-canonical recognizer: lowercase http(s), lowercase host (no port,
 # no userinfo), non-empty path whose chars quote() provably keeps (ALPHA /
@@ -274,12 +282,13 @@ def is_http_scheme(url: str) -> bool:
     return url.startswith("http://") or url.startswith("https://")
 
 
-def url_host(url: str) -> str:
-    """Lowercased hostname of a canonical URL ('' when absent)."""
-    try:
-        return (urlsplit(url).hostname or "").lower()
-    except ValueError:
-        return ""
+def _host_of(parts) -> str:
+    """Lowercased hostname; an IPv6 literal keeps its brackets, as the `url`
+    crate serializes it ('http://::1:8080/' would parse to no host)."""
+    host = (parts.hostname or "").lower()
+    if parts.netloc.rpartition("@")[2].startswith("["):
+        host = f"[{host}]"
+    return host
 
 
 def url_path(url: str) -> str:
@@ -299,7 +308,7 @@ def host_key(url: str) -> str:
     """
     try:
         parts = urlsplit(url)
-        host = (parts.hostname or "").lower()
+        host = _host_of(parts)
         port = parts.port
     except ValueError:
         return ""

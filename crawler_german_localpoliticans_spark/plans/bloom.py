@@ -144,9 +144,6 @@ class BloomSidecar:
     def _vdir(self, version: int) -> str:
         return os.path.join(self.dir, f"v={version:06d}")
 
-    def _part_file(self, version: int, part: int) -> str:
-        return os.path.join(self._vdir(version), f"part-{part}.npy")
-
     def drop_versions_after(self, last: int) -> None:
         if not os.path.isdir(self.dir):
             return

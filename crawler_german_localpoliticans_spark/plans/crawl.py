@@ -12,17 +12,17 @@ state (SURVEY.md §3.1 "Spark rebuild lifecycle"):
       ─ fetched write, extracted write (a cache read) ─ posexplode
         candidates ─ first-discovery-wins dedup (min (parent_seq, pos) struct)
       ─ ONE grouped bloom pass: probe version r, write version r+1
-      ─ exact anti-join vs url_seen ─ host columns ─ persist
+      ─ exact anti-join vs url_seen ─ host columns (Column exprs) ─ persist
       ─ enqueue: global seq assignment ─ frontier round r+1 ─ commit round
         (checkpoint line)
 
-Python runs in three stages per expanding round (robots; links +
-extraction; bloom pass + host columns): each such stage costs a fixed
-~0.2 s even over a few hundred rows, so stage count, not kernel time, sets
-the round's floor. Seeding is the same enqueue at round 0 (canonicalize,
-then one bloom pass writing version 0 on an empty filter, seq from the
-seed order), so bloom version k covers frontier rounds 0..k by
-construction.
+Python runs in two stages per expanding round (links + extraction; the
+bloom pass): each such stage costs a fixed ~0.2 s even over a few hundred
+rows, so stage count, not kernel time, sets the round's floor; the robots
+match and the host columns are Column expressions for that reason. Seeding
+is the same enqueue at round 0 (canonicalize, then one bloom pass writing
+version 0 on an empty filter, seq from the seed order), so bloom version k
+covers frontier rounds 0..k by construction.
 
 Determinism / parity invariants (tests/test_crawl_spark.py asserts all of
 them against plans/oracle.py on shared fixtures):
@@ -125,41 +125,31 @@ def parse_policies_df(robots_df: DataFrame, config: CrawlConfig) -> DataFrame:
     )
 
 
-@F.pandas_udf(T.BooleanType())
-def _robots_blocked_udf(urls: pd.Series, allows: pd.Series, disallows: pd.Series) -> pd.Series:
-    """Longest-prefix robots match (src/main.rs:97-108), vectorized over the
-    Arrow batch. Null rule arrays (host without a robots row) => allowed."""
-    from ..functions.urls import url_path as _url_path
-
-    out = []
-    for url, allow, disallow in zip(urls, allows, disallows):
-        if allow is None and disallow is None:
-            out.append(False)
-            continue
-        path = _url_path(url)
-        a = max((len(p) for p in (allow if allow is not None else []) if path.startswith(p)), default=0)
-        d = max((len(p) for p in (disallow if disallow is not None else []) if path.startswith(p)), default=0)
-        out.append(bool(d > a and d > 0))
-    return pd.Series(out)
-
-
 def evaluate_robots(df: DataFrame, policies_df: DataFrame) -> DataFrame:
-    """Join `df` (needs a host_key column) against the policies table and
-    evaluate the longest-prefix match: adds robots_blocked + crawl_delay_ms.
+    """Join `df` (needs a canonical url and its host_key) against the policies
+    table and evaluate the longest-prefix match: adds robots_blocked +
+    crawl_delay_ms.
 
     The policy state ships as a JOIN, not a driver dict, with no hint: when
     Spark's size estimate of the policies side is at most
     `spark.sql.autoBroadcastJoinThreshold` it is broadcast (one copy per
     executor); above it Catalyst/AQE picks a shuffle join keyed on host_key —
-    per-task memory stays O(hosts/P) at any host count. Only (allow,
-    disallow) rule arrays cross into Python, one Arrow batch per partition."""
+    per-task memory stays O(hosts/P) at any host count. The match is
+    `RobotsPolicy.is_allowed` (src/main.rs:97-108) in Column functions, no
+    Python: blocked when the longest matching disallow prefix is strictly
+    longer than the longest allow one (0 when none matches, so also > 0).
+    Null rule arrays (no robots row) read 0: allowed (src/main.rs:138-141)."""
+
+    def longest(rules: str):
+        present = F.coalesce(F.col(rules), F.array().cast("array<string>"))
+        hits = F.filter(present, lambda p: F.col("_path").startswith(p))
+        return F.aggregate(hits, F.lit(0), lambda acc, p: F.greatest(acc, F.length(p)))
+
     return (
         df.join(policies_df, on="host_key", how="left")
-        .withColumn(
-            "robots_blocked",
-            _robots_blocked_udf(F.col("url"), F.col("allow"), F.col("disallow")),
-        )
-        .drop("allow", "disallow")
+        .withColumn("_path", udfs.url_path_col(F.col("url")))
+        .withColumn("robots_blocked", longest("disallow") > longest("allow"))
+        .drop("allow", "disallow", "_path")
     )
 
 
@@ -180,12 +170,7 @@ class CrawlDriver:
         # without this, persisting the wave freezes a non-AQE plan (no
         # broadcast conversion, no partition coalescing) — 5-20x slower
         # rounds; measured in BENCH notes
-        try:
-            spark.conf.set(
-                "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-            )
-        except Exception:
-            pass
+        spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         os.makedirs(work_dir, exist_ok=True)
         self.catalog = tbl.Catalog(spark, work_dir)
         self.checkpoints = CheckpointLog(work_dir)
@@ -222,15 +207,15 @@ class CrawlDriver:
         by `order_cols` from `base` and write them as frontier round r.
         `rows` is the output of the bloom pass that writes version r (see
         `BloomSidecar.insert`), so bloom version k always covers frontier
-        rounds 0..k. The host columns join `rows` before its persist, in the
-        bloom pass's stage; the persist holds every Python pass upstream to
+        rounds 0..k. The host columns (Column expressions) join `rows` before
+        its persist; the persist holds every Python pass upstream to
         one run across the seq assignment's actions and the frontier write,
         and is released before this returns. Returns the enqueued count,
         which rides out of the seq assignment's bucket-count pass."""
         rows = rows.select(
             "*",
-            udfs.url_host(F.col("url")).alias("host"),
-            udfs.host_key(F.col("url")).alias("host_key"),
+            udfs.url_host_col(F.col("url")).alias("host"),
+            udfs.host_key_col(F.col("url")).alias("host_key"),
         ).persist()
         seqd, n = assign_global_seq_counted(
             rows, order_cols, base=base, known_bounds=known_bounds
@@ -266,7 +251,7 @@ class CrawlDriver:
         )
         # blocked rows ride the same scan/window (they sort last per host and
         # get null schedule columns) — a split+union here would scan the
-        # frontier and run the robots UDF twice (verified via explain)
+        # frontier and evaluate the robots match twice (verified via explain)
         wave = schedule_wave(frontier, cfg)
 
         # 3. offline fetch = join against the pages corpus on canonical url

@@ -13,7 +13,8 @@ strategies for the known-dangerous character classes:
 - percent sequences (valid, truncated, non-hex — quote() must preserve
   existing escapes byte-for-byte);
 - unicode hosts / umlauts (IDNA-adjacent inputs, NBSP, full-width chars);
-- the ';' params split and '/.' dot-segment edges already pinned.
+- the ';' params split and '/.' dot-segment edges already pinned;
+- '[' / ']' (IPv6-literal hosts must keep their brackets, P3).
 
 Properties checked:
   P1  join_url_fast(base, h, origin) == join_url(base, h)   (byte identity)
@@ -55,6 +56,7 @@ ALPHABET = (
     "abzAZ09./:?#%&=_-~!$'()*+,;@ "
     "\t\n\r\x00\x01\x0b\x0c\x7f"      # C0 controls + DEL
     "\\"                               # WHATWG slash-alias
+    "[]"                               # IPv6-literal brackets
     "\xe4\xdf\xa0　ａ"         # umlaut, eszett, NBSP, ideo. space, full-width a
 )
 
@@ -83,7 +85,10 @@ url_st = st.one_of(
     st.builds(
         lambda scheme, host, path: scheme + host + path,
         st.sampled_from(["http://", "https://", "HTTPS://", "ftp://", ""]),
-        st.text(alphabet="ab0.-:@\xe4\xa0", max_size=12),
+        st.one_of(
+            st.text(alphabet="ab0.-:@\xe4\xa0[]", max_size=12),
+            st.builds(lambda h: f"[{h}]", st.text(alphabet="0a:.", max_size=8)),  # IPv6-ish
+        ),
         st.text(alphabet=ALPHABET, max_size=24),
     ),
     st.text(alphabet=ALPHABET, max_size=40),

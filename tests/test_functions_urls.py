@@ -19,6 +19,7 @@ from crawler_german_localpoliticans_spark.functions.urls import (
     safe_filename_from_url,
     url_path,
 )
+from url_reference import url_host
 
 
 @pytest.mark.parametrize(
@@ -341,6 +342,9 @@ def test_canonicalize_rejects_whitespace_control_hosts_and_is_idempotent():
         "ftp://\xa0.b",         # NBSP in host
         "http://a b.de/x",      # interior space, http
         "https://h\x7f.de/x",   # DEL in host
+        "HTTP://[::%&@9\xdf]?",  # '[' in the dropped userinfo: host '9\xdf]'
+        "http://:]-[::]-[:",      # text beside an IPv6 literal
+        "http://[::1]x/",
     ]:
         assert canonicalize_url(raw) is None, raw
 
@@ -366,6 +370,27 @@ def test_canonicalize_rejects_authorityless_double_slash_paths():
     # single-slash authority-less paths still canonicalize (and stay fixed)
     c = canonicalize_url("ftp:///A")
     assert c == "ftp:///A" and canonicalize_url(c) == c
+
+
+@pytest.mark.parametrize(
+    "raw,canonical,key,host",
+    [
+        ("http://[::1]:8080/a", "http://[::1]:8080/a", "http://[::1]:8080", "[::1]"),
+        ("HTTP://[::1]/", "http://[::1]/", "http://[::1]", "[::1]"),
+        ("https://[2001:DB8::7]:443", "https://[2001:db8::7]/", "https://[2001:db8::7]", "[2001:db8::7]"),
+        ("http://u:p@[::ffff:1.2.3.4]:80/x?q", "http://[::ffff:1.2.3.4]/x?q", "http://[::ffff:1.2.3.4]", "[::ffff:1.2.3.4]"),
+        ("ftp://[fe80::1]:2121/f", "ftp://[fe80::1]:2121/f", "ftp://[fe80::1]:2121", "[fe80::1]"),
+    ],
+)
+def test_canonicalize_keeps_ipv6_brackets(raw, canonical, key, host):
+    """An IPv6 literal keeps its brackets, as the url crate serializes it.
+    Without them the output ('http://::1:8080/a') is no fixed point, and
+    host_key / url_host of it read '', so every IPv6 host would share one
+    robots policy and one politeness window."""
+    assert canonicalize_url(raw) == canonical
+    assert canonicalize_url(canonical) == canonical
+    assert host_key(canonical) == key
+    assert url_host(canonical) == host
 
 
 def test_keyword_gate():

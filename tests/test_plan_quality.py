@@ -25,6 +25,20 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def operators(df) -> list[str]:
+    """Node names of df's physical plan (the adaptive plan's current one); a
+    cached relation is one InMemoryTableScan leaf, its own plan not walked."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
 def formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
@@ -126,7 +140,9 @@ def test_robots_policies_join_scales_past_broadcast(spark):
     reaches the driver as a count or a dict — evaluate_robots is an
     un-hinted JOIN, so Spark's size-based selection broadcasts the small
     policies side and shuffles on host_key once broadcasts are off, and the
-    results are exact and identical either way."""
+    results are exact and identical either way. Past the (cached) policy
+    parse, no row crosses into Python in either mode: the longest-prefix
+    match is Column expressions."""
     from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.plans.crawl import (
         evaluate_robots,
@@ -140,7 +156,8 @@ def test_robots_policies_join_scales_past_broadcast(spark):
             F.col("id") % 3 == 0, F.lit("User-agent: *\nDisallow: /priv\nCrawl-delay: 2\n")
         ).otherwise(F.lit("")).alias("robots_txt"),
     )
-    policies = parse_policies_df(robots, DEFAULT_CONFIG)
+    policies = parse_policies_df(robots, DEFAULT_CONFIG).persist()
+    assert policies.count() == n_hosts
     frontier = spark.range(0, n_hosts, 7).select(
         F.concat(F.lit("https://h"), F.col("id"), F.lit(".de/priv/x")).alias("url"),
         F.concat(F.lit("https://h"), F.col("id"), F.lit(".de")).alias("host_key"),
@@ -167,6 +184,9 @@ def test_robots_policies_join_scales_past_broadcast(spark):
             )
             plan = plan_of(out)
             assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+            nodes = operators(out)
+            assert "InMemoryTableScan" in nodes, nodes
+            assert not {"ArrowEvalPython", "BatchEvalPython"} & set(nodes), nodes
             if broadcast_off:
                 assert "BroadcastHashJoin" not in plan, plan
                 assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[host_key", plan), plan
@@ -174,6 +194,7 @@ def test_robots_policies_join_scales_past_broadcast(spark):
                 assert "BroadcastHashJoin" in plan, plan
             results.append(rows)
     finally:
+        policies.unpersist()
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
