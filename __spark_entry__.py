@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 # the text regexes: the Spark operators and the DuckDB oracle SQL below
 # both use these strings
+from crawler_german_localpoliticans_spark.operators.dedup import WS_CLASS, tokens_col
 from crawler_german_localpoliticans_spark.operators.textstats import (
     BPE_PAT,
     DE_PAT,
@@ -214,7 +215,7 @@ def _planted_corpus(spark: SparkSession, sf_dir: str, salt: bool = False) -> Dat
     docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
     if salt:
         n_salt = F.greatest(
-            F.lit(50), F.size(F.split(F.trim("text"), r"\s+")) * 2
+            F.lit(50), F.size(tokens_col(F.col("text"))) * 2
         )
         suffix = F.concat_ws(
             " ",
@@ -646,7 +647,7 @@ def _q_keyword_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(_docs(spark, sf_dir)).where(F.col("doc_id") < 100)
     return docs.select(
-        "doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "token")
+        "doc_id", F.posexplode(tokens_col(F.col("text"))).alias("pos", "token")
     )
 
 
@@ -1153,7 +1154,7 @@ _CORPUS_PARAMS_CTE = """params AS (
 # one row per document: url, host index h, robots-blocked flag, keyword
 # gate, extracted text and custom_id (consumers project what they need —
 # DuckDB prunes unused CTE columns)
-_CORPUS_NODE_CTE = r"""node AS (
+_CORPUS_NODE_CTE = rf"""node AS (
                 SELECT d.doc_id AS doc,
                        'https://host' || lpad(CAST(d.doc_id % p.nh AS VARCHAR), 4, '0')
                          || '.beispiel.de/seite/' || CAST(d.doc_id AS VARCHAR)
@@ -1165,7 +1166,7 @@ _CORPUS_NODE_CTE = r"""node AS (
                         AND CAST(d.doc_id AS VARCHAR) LIKE '1%') AS blocked,
                        d.doc_id % 4 = 0 AS keyword_hit,
                        'Seite ' || CAST(d.doc_id AS VARCHAR) || ' Dokument '
-                         || regexp_replace(trim(d.text), '\s+', ' ', 'g')
+                         || regexp_replace(trim(d.text), '{WS_CLASS}+', ' ', 'g')
                          || ' l0l1l2l3l4l5l6l7hot' AS text,
                        'request_host' || lpad(CAST(d.doc_id % p.nh AS VARCHAR), 4, '0')
                          || '.beispiel.de_seite_' || CAST(d.doc_id AS VARCHAR)
@@ -1287,7 +1288,7 @@ def _minhash_neardup_oracle_sql() -> str:
     return rf"""
         WITH t AS (SELECT {_crc32_table_sql()}::UBIGINT[] AS tab),
         toks AS (
-            SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
+            SELECT doc_id, regexp_split_to_array(trim(text), '{WS_CLASS}+') AS tk
             FROM documents
         ),
         sh AS (
@@ -1370,7 +1371,7 @@ def _simhash_oracle_sql() -> str:
     return rf"""
         WITH t AS (SELECT {_crc32_table_sql()}::UBIGINT[] AS tab),
         tok AS (
-            SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS tk
+            SELECT doc_id, unnest(regexp_split_to_array(trim(text), '{WS_CLASS}+')) AS tk
             FROM documents
         ),
         tok_ne AS (SELECT doc_id, tk FROM tok WHERE length(tk) > 0),
@@ -1459,10 +1460,10 @@ def _pii_oracle_sql() -> str:
     """
 
 
-_CONTAMINATION_ORACLE_SQL = r"""
+_CONTAMINATION_ORACLE_SQL = rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(regexp_split_to_array(trim(text), '\s+'),
+               list_filter(regexp_split_to_array(trim(text), '{WS_CLASS}+'),
                            t -> length(t) > 0) AS tk
         FROM documents
     ),
@@ -1566,13 +1567,13 @@ def _multimodal_oracle_sql() -> str:
 # doc-unique suffix tokens separate genuine near-dups in the base corpus from
 # the planted byte-identical copies — the count scales with the document so
 # the isolation holds for arbitrarily long texts
-_PLANTED_SALTED_PAIRS_SQL = r"""
+_PLANTED_SALTED_PAIRS_SQL = rf"""
     WITH salted AS (
         SELECT doc_id,
                text || ' ' || array_to_string(
                    list_transform(
                        generate_series(0, greatest(
-                           50, 2 * len(regexp_split_to_array(trim(text), '\s+'))) - 1),
+                           50, 2 * len(regexp_split_to_array(trim(text), '{WS_CLASS}+'))) - 1),
                        j -> 'u' || CAST(doc_id AS VARCHAR) || 'x' || CAST(j AS VARCHAR)
                    ), ' ') AS text
         FROM documents
@@ -1808,9 +1809,9 @@ def oracle_sql() -> dict[str, str]:
         "contamination": _CONTAMINATION_ORACLE_SQL,
         # Gopher-style repetition/diversity: same definitions, same 6-dec
         # rounding; entropy via the one-pass identity H = ln n - Σ c·ln c / n
-        "repetition_stats": r"""
+        "repetition_stats": rf"""
             WITH toks AS (
-                SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
+                SELECT doc_id, regexp_split_to_array(trim(text), '{WS_CLASS}+') AS tk
                 FROM documents
             ),
             ratios AS (
@@ -1942,9 +1943,9 @@ def oracle_sql() -> dict[str, str]:
                      a.vec_id ASC
             LIMIT 5
         """,
-        "ngram_jaccard": r"""
+        "ngram_jaccard": rf"""
             WITH toks AS (
-                SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+                SELECT doc_id, regexp_split_to_array(trim(text), '{WS_CLASS}+') AS t
                 FROM documents WHERE doc_id < 150
             ),
             sh AS (
@@ -2044,7 +2045,7 @@ def oracle_sql() -> dict[str, str]:
                        len(regexp_extract_all(text, '{PUNCT_PAT}')) AS n_punct,
                        len(regexp_extract_all(lower(text), '{EN_PAT}'))
                          + len(regexp_extract_all(lower(text), '{DE_PAT}')) AS n_stop,
-                       len(regexp_extract_all(text, '\s')) AS n_ws
+                       len(regexp_extract_all(text, '{WS_CLASS}')) AS n_ws
                 FROM documents
             ),
             ratios AS (
@@ -2067,10 +2068,10 @@ def oracle_sql() -> dict[str, str]:
                        * 1000000) AS BIGINT) AS quality_score_e6
             FROM ratios
         """,
-        "doc_frequency": r"""
+        "doc_frequency": rf"""
             WITH toks AS (
                 SELECT DISTINCT doc_id,
-                       unnest(regexp_split_to_array(trim(text), '\s+')) AS token
+                       unnest(regexp_split_to_array(trim(text), '{WS_CLASS}+')) AS token
                 FROM documents
             ),
             n AS (SELECT count(*) AS n_docs FROM documents)
@@ -2119,7 +2120,7 @@ def oracle_sql() -> dict[str, str]:
                        len(regexp_extract_all(text, '{PUNCT_PAT}')) AS n_punct,
                        len(regexp_extract_all(lower(text), '{EN_PAT}'))
                          + len(regexp_extract_all(lower(text), '{DE_PAT}')) AS n_stop,
-                       len(regexp_extract_all(text, '\s')) AS n_ws,
+                       len(regexp_extract_all(text, '{WS_CLASS}')) AS n_ws,
                        len(regexp_extract_all(lower(text), '{DE_PAT}')) AS de_hits,
                        len(regexp_extract_all(lower(text), '{EN_PAT}')) AS en_hits
                 FROM documents
@@ -2240,10 +2241,10 @@ def oracle_sql() -> dict[str, str]:
         # the same two-step rounding (round(avg, 6) then *1e6) as the Spark
         # side. Self-reference model => every scored bigram exists in the
         # counts, so inner joins suffice.
-        "bigram_lm": r"""
+        "bigram_lm": rf"""
             WITH toks AS (
                 SELECT doc_id,
-                       list_filter(regexp_split_to_array(trim(text), '\s+'),
+                       list_filter(regexp_split_to_array(trim(text), '{WS_CLASS}+'),
                                    t -> length(t) > 0) AS t
                 FROM documents
             ),
@@ -2277,10 +2278,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         # ranked selection over the e6-rounded LM scores (the hash-matched
         # integers — raw-double ordering could flip ranks on ulp drift)
-        "quality_topk_per_source": r"""
+        "quality_topk_per_source": rf"""
             WITH toks AS (
                 SELECT doc_id, source,
-                       list_filter(regexp_split_to_array(trim(text), '\s+'),
+                       list_filter(regexp_split_to_array(trim(text), '{WS_CLASS}+'),
                                    t -> length(t) > 0) AS t
                 FROM documents
             ),
@@ -2650,9 +2651,9 @@ def oracle_sql() -> dict[str, str]:
         "keyword_gate": f"""
             SELECT doc_id, ({gate_cond}) AS keyword_hit FROM documents
         """,
-        "posexplode_tokens": r"""
+        "posexplode_tokens": rf"""
             WITH toks AS (
-                SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+                SELECT doc_id, regexp_split_to_array(trim(text), '{WS_CLASS}+') AS t
                 FROM documents WHERE doc_id < 100
             )
             SELECT doc_id,

@@ -6,10 +6,11 @@ external data, no network (BASELINE input_hint: synthesize the input table
 shape `pages(url, warc_ts, html, text, lang)` deterministically).
 
 Profiles mirror FIXTURES.md: smoke (5 hosts × 8 pages), correctness
-(50 × 40), bench (500 × 2000 — scale down via pages_per_host for sandbox
-runs). Link targets deliberately exercise canonicalization edge cases:
-explicit :80/:443 ports, fragments, relative hrefs, uppercase hosts,
-mailto:/javascript: schemes, duplicate links, dead links, dot segments.
+(50 × 40), bench (500 × 2000 — for smaller runs pass a FixtureProfile
+with fewer pages_per_host). Link targets deliberately exercise
+canonicalization edge cases: explicit :80/:443 ports, fragments, relative
+hrefs, uppercase hosts, mailto:/javascript: schemes, duplicate links, dead
+links, dot segments.
 """
 
 from __future__ import annotations
@@ -86,13 +87,9 @@ def _page_url(i: int, path: str) -> str:
     return f"https://{_host(i)}{path}"
 
 
-def generate(profile: FixtureProfile | str = SMOKE, pages_per_host: int | None = None) -> WebFixture:
+def generate(profile: FixtureProfile | str = SMOKE) -> WebFixture:
     if isinstance(profile, str):
         profile = PROFILES[profile]
-    if pages_per_host is not None and pages_per_host != profile.pages_per_host:
-        profile = FixtureProfile(
-            **{**profile.__dict__, "pages_per_host": pages_per_host, "name": f"{profile.name}-pph{pages_per_host}"}
-        )
     rng = random.Random(f"{profile.name}-{profile.seed}")
 
     # --- page URL universe -------------------------------------------------

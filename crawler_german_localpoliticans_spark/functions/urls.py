@@ -15,6 +15,7 @@ engine, the oracle, and every dedup/ordering hash derive from it.
 
 from __future__ import annotations
 
+import ipaddress
 import re as _re
 from urllib.parse import quote, urljoin, urlsplit, urlunsplit
 
@@ -24,8 +25,9 @@ _PATH_SAFE = "/%!$&'()*+,;=:@~.-_"
 _QUERY_SAFE = "/%!$&'()*+,;=:@~.-_?"
 
 _DEFAULT_PORTS = {"http": 80, "https": 443, "ws": 80, "wss": 443, "ftp": 21}
-# a bracketed host with an optional port: the only authority brackets may take
-_IP_LITERAL_RE = _re.compile(r"\[[^\]]*\](:[0-9]*)?")
+# a bracketed IPv6 literal with an optional port: the only authority brackets
+# may take (the url crate rejects IPvFuture '[v1.x]' and zone ids '%eth0')
+_IP_LITERAL_RE = _re.compile(r"\[[0-9A-Fa-f:.]*\](:[0-9]*)?")
 
 
 def _remove_dot_segments(path: str) -> str:
@@ -58,17 +60,17 @@ def _remove_dot_segments(path: str) -> str:
     return result
 
 
-def canonicalize_url(raw: str, *, keep_fragment: bool = False) -> str | None:
+def canonicalize_url(raw: str) -> str | None:
     """Parse + normalize a URL to its canonical string form.
 
     Returns None for unparsable/relative inputs (the reference silently skips
     those, src/main.rs:639-642, :899-906). Semantics:
 
-    - scheme and host lowercased
+    - scheme and host lowercased; an IPv6 literal compressed, in brackets
     - default port removed (http:80 / https:443)
-    - fragment removed (unless keep_fragment, used by the seed path which
-      per src/bin/seeder.rs:57 strips *only* the fragment — the remaining
-      normalization is the parse-time normalization, identical to this)
+    - fragment removed (the seed path too: src/bin/seeder.rs:57 strips
+      *only* the fragment, and the remaining normalization is the
+      parse-time normalization, identical to this)
     - empty path -> "/" for http(s)
     - dot segments removed
     - percent-encoding of path/query characters outside the safe set,
@@ -115,7 +117,10 @@ def canonicalize_url(raw: str, *, keep_fragment: bool = False) -> str | None:
         hostinfo = parts.netloc.rpartition("@")[2]
         if ("[" in hostinfo or "]" in hostinfo) and not _IP_LITERAL_RE.fullmatch(hostinfo):
             return None
-        netloc = _host_of(parts)
+        try:
+            netloc = _host_of(parts)
+        except ValueError:  # not an IPv6 address inside the brackets
+            return None
         if port is not None and port != _DEFAULT_PORTS.get(scheme):
             netloc = f"{netloc}:{port}"
     path = _remove_dot_segments(parts.path)
@@ -130,8 +135,7 @@ def canonicalize_url(raw: str, *, keep_fragment: bool = False) -> str | None:
     if not netloc and path.startswith("//"):
         return None
     query = quote(parts.query, safe=_QUERY_SAFE)
-    fragment = quote(parts.fragment, safe=_QUERY_SAFE) if keep_fragment and parts.fragment else ""
-    return urlunsplit((scheme, netloc, path, query, fragment))
+    return urlunsplit((scheme, netloc, path, query, ""))
 
 
 def join_url(base: str, href: str) -> str | None:
@@ -283,11 +287,14 @@ def is_http_scheme(url: str) -> bool:
 
 
 def _host_of(parts) -> str:
-    """Lowercased hostname; an IPv6 literal keeps its brackets, as the `url`
-    crate serializes it ('http://::1:8080/' would parse to no host)."""
+    """Lowercased hostname. An IPv6 literal is serialized as the `url` crate
+    does it: compressed and in brackets ('[0:0::1]' -> '[::1]',
+    '[::ffff:1.2.3.4]' -> '[::ffff:102:304]'; without brackets
+    'http://::1:8080/' would parse to no host). Raises ValueError when the
+    brackets hold no IPv6 address."""
     host = (parts.hostname or "").lower()
     if parts.netloc.rpartition("@")[2].startswith("["):
-        host = f"[{host}]"
+        host = f"[{ipaddress.IPv6Address(host).compressed}]"
     return host
 
 

@@ -11,7 +11,8 @@ Both are Spark-first:
   kernel -> explode -> broadcast-able join, never a substring scan per
   pair.
   At 10^10 docs the benchmark n-gram table is tiny (a few million grams) and
-  broadcasts; the document side stays a single map pass + one semi-join.
+  broadcasts; the document side stays a single map pass + one left join +
+  one count per document.
 """
 
 from __future__ import annotations
@@ -75,15 +76,16 @@ def with_pii_counts(df: DataFrame, text_col: str) -> DataFrame:
     return out.withColumn("n_pii", total).withColumn("has_pii", total > 0)
 
 
-def redact_pii(df: DataFrame, text_col: str, out_col: str = "redacted") -> DataFrame:
-    """Replace every PII match with a typed redaction token, applying the
-    patterns in the fixed PII_PATTERNS order (IBAN before phone: an IBAN's
-    spaced digit groups would otherwise partially redact as a phone) — a
-    chain of regexp_replace Columns, still zero Python."""
+def redact_pii(df: DataFrame, text_col: str) -> DataFrame:
+    """Column `redacted`: the text with every PII match replaced by a typed
+    redaction token, applying the patterns in the fixed PII_PATTERNS order
+    (IBAN before phone: an IBAN's spaced digit groups would otherwise
+    partially redact as a phone) — a chain of regexp_replace Columns, still
+    zero Python."""
     col = F.col(text_col)
     for kind, pat in PII_PATTERNS.items():
         col = F.regexp_replace(col, pat, REDACTION_TOKEN.format(kind=kind))
-    return df.withColumn(out_col, col)
+    return df.withColumn("redacted", col)
 
 
 # ---------------------------------------------------------------------------
@@ -100,7 +102,9 @@ def ngram_hashes(
     MinHash signatures eliminated, operators/dedup.py). Tokens follow the
     corpus-wide whitespace contract; documents shorter than n tokens
     contribute their single full-text gram, so no document is invisible to
-    the check.
+    the check. A document with no gram at all (NULL or whitespace-only
+    text) keeps one row with a NULL gram_hash (explode_outer), so every
+    document reaches a per-id count.
 
     The hash is the first 8 bytes of MD5 (C-speed via hashlib, constructed
     with usedforsecurity=False so FIPS-enforcing builds allow this
@@ -136,21 +140,12 @@ def ngram_hashes(
             )
         return pd.Series(out)
 
-    # asNondeterministic: same ArrowEvalPython-duplication fix as
-    # minhash_signatures_arrow (guide §4.4) — the isNotNull filter on the
-    # UDF output would otherwise be pushed below an upstream exchange by
-    # substitution and re-run the gram kernel serially before it.
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            grams.asNondeterministic()(F.col(text_col)).alias("gs"),
-        )
-        .where(F.col("gs").isNotNull())
-        .select("id", F.explode("gs").alias("gram_hash"))
+    return df.select(
+        F.col(id_col).alias("id"), F.explode_outer(grams(F.col(text_col))).alias("gram_hash")
     )
 
 
-def _bench_gram_hashes(benchmark: DataFrame, bench_text_col: str, n: int) -> DataFrame:
+def _bench_gram_hashes(benchmark: DataFrame, n: int) -> DataFrame:
     """The benchmark side's distinct gram_hash set, persisted and counted.
 
     Un-materialized, the gram side's plan-time estimate is ~3e18 B for a
@@ -163,12 +158,8 @@ def _bench_gram_hashes(benchmark: DataFrame, bench_text_col: str, n: int) -> Dat
     clearCache(), and CacheManager reuses it for repeated calls on the same
     benchmark in one session."""
     grams = (
-        ngram_hashes(
-            benchmark.select(F.lit(0).alias("bid"), F.col(bench_text_col)),
-            "bid",
-            bench_text_col,
-            n,
-        )
+        ngram_hashes(benchmark.select(F.lit(0).alias("bid"), "text"), "bid", "text", n)
+        .where(F.col("gram_hash").isNotNull())
         .select("gram_hash")
         .distinct()
         .persist()
@@ -182,31 +173,30 @@ def contamination_check(
     benchmark: DataFrame,
     id_col: str,
     text_col: str,
-    bench_text_col: str = "text",
     n: int = 13,
 ) -> DataFrame:
-    """Per-document contamination against an eval/benchmark corpus: a doc is
-    contaminated iff it shares >= 1 word n-gram with ANY benchmark text.
-    Returns (id, contaminated_grams, contaminated).
+    """Per-document contamination against an eval/benchmark corpus (its
+    `text` column): a doc is contaminated iff it shares >= 1 word n-gram
+    with ANY benchmark text. Returns (id, contaminated_grams, contaminated).
 
     Plan shape for 100 TB: the benchmark side collapses to a distinct
     gram_hash set (tiny — benchmarks are MBs, corpora are TBs) that Spark
-    broadcasts; the document side is one explode + one broadcast semi-ish
-    join + one groupBy. No substring matching, no cross join. The gram set
-    is materialized before planning (_bench_gram_hashes), so Spark sizes
-    the join: an adversarially large benchmark plans a shuffle join
-    instead of OOMing every executor."""
-    doc_grams = ngram_hashes(docs, id_col, text_col, n)
-    bench_grams = _bench_gram_hashes(benchmark, bench_text_col, n)
-    hits = doc_grams.join(bench_grams, "gram_hash").groupBy("id").agg(
-        F.count(F.lit(1)).alias("contaminated_grams")
+    broadcasts; the document side is one explode_outer (a doc with no gram
+    keeps one NULL row) + one broadcast left join + ONE groupBy that counts
+    the matched side per id — no second join back to the documents. No
+    substring matching, no cross join. The gram set is materialized before
+    planning (_bench_gram_hashes), so Spark sizes the join: an
+    adversarially large benchmark plans a shuffle join instead of OOMing
+    every executor."""
+    bench_grams = _bench_gram_hashes(benchmark, n).select(
+        F.col("gram_hash").alias("_bench_gram")
     )
-    base = docs.select(F.col(id_col).alias("id"))
     return (
-        base.join(hits, "id", "left")
+        ngram_hashes(docs, id_col, text_col, n)
+        .join(bench_grams, F.col("gram_hash") == F.col("_bench_gram"), "left")
+        .groupBy("id")
+        .agg(F.count("_bench_gram").alias("contaminated_grams"))
         .select(
-            "id",
-            F.coalesce("contaminated_grams", F.lit(0)).alias("contaminated_grams"),
-            (F.coalesce("contaminated_grams", F.lit(0)) > 0).alias("contaminated"),
+            "id", "contaminated_grams", (F.col("contaminated_grams") > 0).alias("contaminated")
         )
     )

@@ -51,26 +51,34 @@ MINHASH_PRIME = 2147483647  # 2^31 - 1
 NUM_PERM = 64
 LSH_BANDS = 16  # 16 bands x 4 rows
 LSH_ROWS = 4
+SHINGLE_K = 3  # MinHash shingles are word 3-grams
+_PERM_SEED = 42
 
 
-def _permutation_params(num_perm: int = NUM_PERM, seed: int = 42) -> list[tuple[int, int]]:
+def _permutation_params(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod p."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(_PERM_SEED)
     return [(rng.randrange(1, MINHASH_PRIME), rng.randrange(0, MINHASH_PRIME)) for _ in range(num_perm)]
+
+
+# Java regex \s, spelled out: the one whitespace class of the Spark plans,
+# the Python kernels and the DuckDB oracle SQL (RE2's \s lacks \x0b).
+WS_CHARS = r" \t\n\x0b\f\r"
+WS_CLASS = f"[{WS_CHARS}]"
 
 
 def tokens_col(text_col):
     """Whitespace tokenization — the shared contract with textstats + oracle."""
-    return F.split(F.trim(text_col), r"\s+")
+    return F.split(F.trim(text_col), WS_CLASS + "+")
 
 
-_JVM_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+_JVM_WS_RE = re.compile(WS_CLASS + "+")
 
 
 def tokens_py(text: str) -> list[str]:
-    """EXACT Python mirror of tokens_col (`F.split(F.trim(text), '\\s+')`):
+    """EXACT Python mirror of tokens_col (split on WS_CLASS runs after trim):
     Spark's trim strips 0x20 ONLY, and Java-regex \\s is the ASCII class
     [ \\t\\n\\x0B\\f\\r]. Python's bare str.strip()/str.split() are
     Unicode-aware (full strip, NBSP/em-space split), which silently diverges
@@ -119,17 +127,15 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures_arrow(
-    df: DataFrame, id_col: str, text_col: str, num_perm: int = NUM_PERM, k: int = 3
-) -> DataFrame:
+def minhash_signatures_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sig array<long>) in ONE Arrow-batched map pass — byte-identical
     to the JVM explode -> crc32 -> min-aggregates form (same crc32 +
     (a*x+b) mod p params, pinned by tests/test_dedup.py against
     tests/dedup_reference.py) but with NO shingle explode and NO groupBy
     shuffle:
     per doc, the shingle set is built in Python (zlib.crc32 is C), and all
-    num_perm permutation minima fall out of a single numpy
-    (num_perm, n_shingles) broadcast-min. Measured ~20x faster than the JVM
+    NUM_PERM permutation minima fall out of a single numpy
+    (NUM_PERM, n_shingles) broadcast-min. Measured ~20x faster than the JVM
     form at sf0.1 (0.18s vs 3.7s, local[32]): Spark evaluates the JVM
     path's higher-order slice/concat shingle lambdas interpreted
     per-element, and it shuffles ~52 shingle rows per doc where this kernel
@@ -137,7 +143,7 @@ def minhash_signatures_arrow(
     signatures become map-side work; only the banded LSH join shuffles."""
     from pyspark.sql import types as T
 
-    params = _permutation_params(num_perm)
+    params = _permutation_params(NUM_PERM)
     a_col = np.array([a for a, _ in params], dtype=np.uint64)[:, None]
     b_col = np.array([b for _, b in params], dtype=np.uint64)[:, None]
     prime = np.uint64(MINHASH_PRIME)
@@ -147,7 +153,10 @@ def minhash_signatures_arrow(
         out = []
         for t in texts:
             toks = tokens_py(t)
-            shingles = {" ".join(toks[i : i + k]) for i in range(max(1, len(toks) - k + 1))}
+            shingles = {
+                " ".join(toks[i : i + SHINGLE_K])
+                for i in range(max(1, len(toks) - SHINGLE_K + 1))
+            }
             shingles.discard("")
             if not shingles:
                 out.append(None)  # same as the JVM form: no shingles, no row
@@ -176,26 +185,24 @@ def minhash_signatures_arrow(
     )
 
 
-def minhash_signatures_xx(
-    df: DataFrame, id_col: str, text_col: str, num_perm: int = NUM_PERM, k: int = 3
-) -> DataFrame:
+def minhash_signatures_xx(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sig array<long>) with a 64-BIT hash family for corpora beyond
     crc32's ~1e9-distinct-shingle ceiling: hash function i is
     xxhash64(shingle, i) — Spark hashes the shingle together with the
-    literal index, giving num_perm independent 64-bit functions directly
+    literal index, giving NUM_PERM independent 64-bit functions directly
     (no (a*x+b) mod p permutation arithmetic, hence no modulus-width
-    overflow concerns). All JVM-side: explode -> one groupBy with num_perm
+    overflow concerns). All JVM-side: explode -> one groupBy with NUM_PERM
     min() aggregates.
     XXH64 isn't recomputable in DuckDB/stdlib Python, so this family is
     verified by the planted-corpus invariant (identical text => identical
     signatures => detected == planted), not signature parity."""
-    sh = word_shingles(df, id_col, text_col, k)
+    sh = word_shingles(df, id_col, text_col, SHINGLE_K)
     aggs = [
         F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"s{i}")
-        for i in range(num_perm)
+        for i in range(NUM_PERM)
     ]
     sigs = sh.groupBy("id").agg(*aggs)
-    return sigs.select("id", F.array(*[f"s{i}" for i in range(num_perm)]).alias("sig"))
+    return sigs.select("id", F.array(*[f"s{i}" for i in range(NUM_PERM)]).alias("sig"))
 
 
 # Per-(band, band_hash) bucket cap: above this many members a bucket stops
@@ -206,12 +213,11 @@ def minhash_signatures_xx(
 # any honest near-dup cluster; overflow members remain connected to their
 # cluster through the representative, so union-find/grouping downstream
 # sees the same components — only the redundant tail-tail pairs are elided.
+# Read at call time.
 LSH_MAX_BUCKET = 5000
 
 
-def banded_signatures(
-    sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
-) -> DataFrame:
+def banded_signatures(sigs: DataFrame) -> DataFrame:
     """(id, band, bh) — one row per LSH band per signature; bh = xxhash64
     over the band's signature slice elements (band-hash equality <=> band
     slice equality, modulo the usual 2^-64 collision argument — the same
@@ -233,10 +239,13 @@ def banded_signatures(
                         F.struct(
                             F.lit(b).alias("band"),
                             F.xxhash64(
-                                *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
+                                *[
+                                    F.element_at("sig", b * LSH_ROWS + r + 1)
+                                    for r in range(LSH_ROWS)
+                                ]
                             ).alias("bh"),
                         )
-                        for b in range(bands)
+                        for b in range(LSH_BANDS)
                     ]
                 )
             ).alias("bb"),
@@ -245,24 +254,18 @@ def banded_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    max_bucket_size: int = LSH_MAX_BUCKET,
-    observation=None,
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Distinct (id_a < id_b) pairs colliding in >=1 LSH band. The band hash
     is xxhash64 over the band's signature slice; the pair search is an
     equi-join on (band, band_hash) — never a cross join.
 
-    Degenerate-bucket cap (max_bucket_size): a hash-agg
+    Degenerate-bucket cap (LSH_MAX_BUCKET): a hash-agg
     finds the oversized buckets (map-side combine -> one row per bucket;
-    there are mathematically at most n_banded/max_bucket_size of them; the
+    there are mathematically at most n_banded/LSH_MAX_BUCKET of them; the
     list is persisted and counted, so the planner sees its true size and
     spark.sql.autoBroadcastJoinThreshold chooses broadcast or shuffle for
     the flagging join), and ONLY their rows pay a row_number
-    window; the first max_bucket_size members of each do the normal
+    window; the first LSH_MAX_BUCKET members of each do the normal
     all-pairs equi-join, and every overflow member contributes exactly one
     pair (bucket-representative = min id, overflow id). NOTE the
     connectivity guarantee is a property of the CANDIDATE graph: after a
@@ -274,7 +277,7 @@ def lsh_candidate_pairs(
     (one boilerplate text repeated), the representative IS the duplicate
     (est_jaccard 1.0), so the kept link is the right one; mixed
     adversarial buckets trade that tail recall for boundedness — raise
-    max_bucket_size if that tail matters. Measured trade-off
+    LSH_MAX_BUCKET if that tail matters. Measured trade-off
     (sf0.1, interleaved min-of-5): this split costs ~1.0s over uncapped at
     toy scale (three extra stages of fixed overhead; a rank-everything
     window costs ~0.45s) — but the window variant SORTS the entire banded
@@ -285,9 +288,6 @@ def lsh_candidate_pairs(
     bounded at O(cap^2 + n) instead of O(n^2) and NO member is dropped —
     each stays connected to its duplicate cluster via the representative;
     what's elided are the redundant overflow-overflow/head-overflow pairs.
-    Not silent: pass a pyspark.sql.Observation as `observation` and after
-    the first action its metrics report `lsh_capped_members` (overflow rows
-    across all bands) and `lsh_max_bucket_size`.
     """
     from pyspark.sql.window import Window
 
@@ -299,17 +299,17 @@ def lsh_candidate_pairs(
     # ~2s after). Same session-cache convention as sigs.persist in
     # minhash_dedup_pairs: repeated same-input calls reuse the entry,
     # bench/oracle runs clearCache between runs.
-    banded = banded_signatures(sigs, bands, rows).persist()
+    banded = banded_signatures(sigs).persist()
 
     # Find the oversized buckets with one hash-agg, then rank ONLY
     # their rows: a global row_number window would SORT the whole
     # banded table (16 rows per doc) to police a cap that almost never
     # triggers. The oversized-bucket list is mathematically tiny —
-    # each holds > max_bucket_size members, so there are at most
-    # n_banded / max_bucket_size of them.
+    # each holds > LSH_MAX_BUCKET members, so there are at most
+    # n_banded / LSH_MAX_BUCKET of them.
     sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bsz"))
     oversized = (
-        sizes.where(F.col("_bsz") > max_bucket_size)
+        sizes.where(F.col("_bsz") > LSH_MAX_BUCKET)
         .select("band", "bh", F.lit(True).alias("_over"))
         .persist()
     )
@@ -337,21 +337,11 @@ def lsh_candidate_pairs(
         F.row_number().over(w).alias("rk"),
         F.first("id").over(w).alias("rep"),  # min id: window is id-ordered
     )
-    if observation is not None:
-        # metrics are null when no bucket exceeded the cap (the
-        # observed branch saw zero rows)
-        ranked = ranked.observe(
-            observation,
-            F.sum((F.col("rk") > max_bucket_size).cast("long")).alias(
-                "lsh_capped_members"
-            ),
-            F.max("rk").alias("lsh_max_bucket_size"),
-        )
     head = ok_part.unionByName(
-        ranked.where(F.col("rk") <= max_bucket_size).select("id", "band", "bh")
+        ranked.where(F.col("rk") <= LSH_MAX_BUCKET).select("id", "band", "bh")
     )
     overflow_pairs = (
-        ranked.where(F.col("rk") > max_bucket_size)
+        ranked.where(F.col("rk") > LSH_MAX_BUCKET)
         .select(F.col("rep").alias("id_a"), F.col("id").alias("id_b"))
     )
 
@@ -374,8 +364,6 @@ def minhash_dedup_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.7,
-    num_perm: int = NUM_PERM,
-    k: int = 3,
     hash_family: str = "crc32",
 ) -> DataFrame:
     """Near-duplicate pairs with estimated Jaccard >= threshold:
@@ -394,13 +382,13 @@ def minhash_dedup_pairs(
     # the signature table feeds the band join AND both sides of the
     # verification join — persist so the signature computation runs once,
     # not three times
-    sigs = sig_fn(df, id_col, text_col, num_perm, k).persist()
+    sigs = sig_fn(df, id_col, text_col).persist()
     cands = lsh_candidate_pairs(sigs)
     a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     joined = cands.join(a, "id_a").join(b, "id_b")
     agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-    est = agree / F.lit(num_perm)
+    est = agree / F.lit(NUM_PERM)
     return (
         joined.withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= threshold)
@@ -413,9 +401,9 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    """Vectorized pandas UDF (the bit-vote accumulation is genuinely
-    non-columnar). Inside the Arrow batch the per-token/per-bit work is
+def with_simhash(df: DataFrame, text_col: str) -> DataFrame:
+    """Adds a `simhash` column. Vectorized pandas UDF (the bit-vote
+    accumulation is genuinely non-columnar). Inside the Arrow batch the per-token/per-bit work is
     numpy: token hashes unpack to an (n_tokens, 64) bit matrix whose column
     sums are the votes — no interpreted per-bit loop (round-1 verdict's
     simhash scale flag; the pure-Python parity oracle is simhash64_py in
@@ -452,7 +440,7 @@ def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> Data
             out[i] = sig - (1 << 64) if sig >= (1 << 63) else sig
         return pd.Series(out)
 
-    return df.withColumn(out_col, simhash(F.col(text_col)))
+    return df.withColumn("simhash", simhash(F.col(text_col)))
 
 
 def simhash_dedup_pairs(
@@ -537,7 +525,7 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _vec_length_groups(pdf: pd.DataFrame, vec_col: str = "vec"):
+def _vec_length_groups(pdf: pd.DataFrame):
     """Yield the block's rows grouped by vector length (nulls dropped),
     ascending length for determinism. Pairing WITHIN each length group makes
     a block kernel exactly equivalent to the blocked self-join form
@@ -545,7 +533,7 @@ def _vec_length_groups(pdf: pd.DataFrame, vec_col: str = "vec"):
     there (filtered out), while two same-length vectors always pair — even
     when their length is a minority in the block (the round-2 dominant-length
     filter silently dropped those)."""
-    lengths = pdf[vec_col].map(lambda v: -1 if v is None else len(v))
+    lengths = pdf["vec"].map(lambda v: -1 if v is None else len(v))
     for length in sorted(lengths[lengths >= 0].unique()):
         yield pdf[lengths == length]
 
@@ -626,6 +614,7 @@ def embedding_neardup_pairs(
 # Near-dup graphs at 1e10-doc scale exceed the threshold and keep the
 # distributed O(log n) loop. Read at call time.
 CC_DRIVER_FASTPATH_MAX_EDGES = 1_000_000
+CC_MAX_ITER = 50
 
 
 def _components_py(edge_list: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -658,14 +647,9 @@ def _components_py(edge_list: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return [(x, mins[find(x)]) for x in parent]
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(id, cluster_id) for every id appearing in `pairs`, where cluster_id
-    is the MINIMUM id reachable through the pair graph — the missing step
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(id, cluster_id) for every id in the (id_a, id_b) `pairs`, where
+    cluster_id is the MINIMUM id reachable through the pair graph — the missing step
     between near-dup PAIRS (minhash/simhash/embedding *_pairs operators)
     and an actually deduplicated corpus (keep one representative per
     cluster).
@@ -684,11 +668,11 @@ def connected_components(
     minimum. Each round triggers one comparison action (count + order-
     independent edge checksum) to detect the fixed point — iterative
     convergence is inherently driver-paced; the per-round data path is
-    pure shuffle-by-key. Raises RuntimeError after max_iter rounds (a
+    pure shuffle-by-key. Raises RuntimeError after CC_MAX_ITER rounds (a
     correctness backstop: the algorithm provably converges, so hitting it
     means the input violates assumptions, e.g. non-deterministic ids)."""
     e = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
     )
     # canonical undirected representation: (u, v) oriented u > v
@@ -761,7 +745,7 @@ def connected_components(
     # dir for fault-tolerant runs). The first round's input was
     # checkpointed above.
     sig = checksum(edges)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nxt = small_star(large_star(edges)).localCheckpoint(eager=True)
         nsig = checksum(nxt)
         edges.unpersist()
@@ -770,7 +754,7 @@ def connected_components(
             break
         sig = nsig
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} rounds")
 
     # at the fixed point every non-minimum node has exactly the edge
     # (node, component_min); component minima label themselves
@@ -790,14 +774,12 @@ def connected_components(
     return result
 
 
-def neardup_clusters(
-    docs: DataFrame, id_col: str, pairs: DataFrame, src: str = "id_a", dst: str = "id_b"
-) -> DataFrame:
-    """(id, cluster_id, is_representative) for EVERY document: paired docs
-    get their component minimum as cluster_id, singletons label themselves.
-    `is_representative` marks the one kept doc per cluster (the minimum id
+def neardup_clusters(docs: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """(id, cluster_id, is_representative) for EVERY document: docs in the
+    (id_a, id_b) `pairs` get their component minimum as cluster_id,
+    singletons label themselves. `is_representative` marks the one kept doc per cluster (the minimum id
     — deterministic, matching exact_dedup's min-id representative rule)."""
-    comps = connected_components(pairs, src, dst)
+    comps = connected_components(pairs)
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(comps, "id", "left")

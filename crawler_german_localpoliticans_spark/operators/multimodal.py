@@ -32,10 +32,11 @@ FEATURES_SCHEMA = T.StructType(
 FEATURE_DIM = 8
 
 
-def _fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
+def _fake_features(payload: bytes) -> list[float]:
     """Deterministic fake 'decoder': bytes -> normalized float features.
     Stands in for a real image/audio model embedding."""
-    arr = np.frombuffer(payload[: dim * 4].ljust(dim * 4, b"\0"), dtype=np.uint32).astype(np.float64)
+    n_bytes = FEATURE_DIM * 4
+    arr = np.frombuffer(payload[:n_bytes].ljust(n_bytes, b"\0"), dtype=np.uint32).astype(np.float64)
     norm = np.linalg.norm(arr)
     return (arr / norm if norm > 0 else arr).astype(np.float32).tolist()
 

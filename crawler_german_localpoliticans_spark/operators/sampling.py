@@ -30,21 +30,18 @@ def stratified_sample(
     key_col: str,
     strata_col: str,
     fractions: dict[str, float],
-    default_fraction: float = 0.0,
     salt: int = 0,
 ) -> DataFrame:
     """Per-stratum keyed sampling (the training-mix shaping step: e.g.
     keep 100% of books, 10% of common-crawl). Strata absent from
-    `fractions` get `default_fraction` (0.0 = drop, the safe default for
-    an explicit mix). The per-stratum threshold is a literal CASE chain —
+    `fractions` are dropped (the safe rule for an explicit mix). The
+    per-stratum threshold is a literal CASE chain —
     strata counts are small by definition (sources, languages), so this
     stays one codegen stage with no join."""
     for stratum, fraction in fractions.items():
         if not (0.0 <= fraction <= 1.0):
             raise ValueError(f"fraction for {stratum!r} must be in [0, 1], got {fraction}")
-    if not (0.0 <= default_fraction <= 1.0):
-        raise ValueError(f"default_fraction must be in [0, 1], got {default_fraction}")
-    threshold = F.lit(int(default_fraction * _HASH_SPACE))
+    threshold = F.lit(0)
     for stratum, fraction in sorted(fractions.items()):
         threshold = F.when(
             F.col(strata_col) == F.lit(stratum), F.lit(int(fraction * _HASH_SPACE))
@@ -102,11 +99,10 @@ def hash_split(
     key_col: str,
     splits: list[tuple[str, float]],
     salt: int = 0,
-    out_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment: every row lands in exactly
-    one named split by comparing its keyed CRC-32 against cumulative
-    fraction thresholds (first split = hashes below trunc(f1 * 2^32), next
+    one named split (column `split`) by comparing its keyed CRC-32 against
+    cumulative fraction thresholds (first split = hashes below trunc(f1 * 2^32), next
     below trunc((f1+f2) * 2^32), ...; the LAST split absorbs the rounding
     residue so the partition is total). Same guarantees as
     stratified_sample: reproducible across runs/retries/engines, stable
@@ -133,7 +129,7 @@ def hash_split(
         cond = h < F.lit(thr)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     expr = expr.otherwise(F.lit(splits[-1][0]))
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def rebalance_fractions(

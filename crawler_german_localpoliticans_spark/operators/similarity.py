@@ -74,14 +74,12 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.randn(n_planes, dim).astype(np.float64)
 
 
-def with_lsh_bucket(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int = 12, seed: int = 42, out_col: str = "bucket"
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector (vectorized pandas UDF —
-    a matrix multiply per Arrow batch)."""
+def with_lsh_bucket(df: DataFrame, vec_col: str, dim: int, n_planes: int = 12) -> DataFrame:
+    """Sign-random-projection bucket id per vector in `bucket` (vectorized
+    pandas UDF — a matrix multiply per Arrow batch)."""
     from pyspark.sql import types as T
 
-    planes = hyperplanes(dim, n_planes, seed)
+    planes = hyperplanes(dim, n_planes)
 
     @F.pandas_udf(T.IntegerType())
     def bucket(vecs: pd.Series) -> pd.Series:
@@ -92,26 +90,27 @@ def with_lsh_bucket(
             out |= signs[:, i].astype(np.int32) << i
         return pd.Series(out)
 
-    return df.withColumn(out_col, bucket(F.col(vec_col)))
+    return df.withColumn("bucket", bucket(F.col(vec_col)))
 
 
-def query_bucket(
-    query: list[float], n_planes: int = 8, seed: int = 42, dim: int | None = None
-) -> int:
+def query_bucket(query: list[float], n_planes: int = 8, dim: int | None = None) -> int:
     """The sign-LSH bucket of a query vector — THE single definition of the
     bit packing shared by with_lsh_bucket's per-row UDF and the driver
     queries (a second inline copy of this derivation is how the
     seed/bit-order silently drifts)."""
     dim = dim or len(query)
-    planes = hyperplanes(dim, n_planes, seed)
+    planes = hyperplanes(dim, n_planes)
     signs = (planes @ np.asarray(query, dtype=np.float64)) > 0
     return int(sum(1 << i for i in range(n_planes) if signs[i]))
 
 
+IVF_SEED = 42
+
+
 def ivf_assign(
-    df: DataFrame, id_col: str, vec_col: str, n_cells: int = 16, seed: int = 42
+    df: DataFrame, id_col: str, vec_col: str, n_cells: int = 16
 ) -> tuple[DataFrame, "object"]:
-    """IVF coarse quantizer: KMeans cells (deterministic seed) assigned to
+    """IVF coarse quantizer: KMeans cells (seed IVF_SEED) assigned to
     every vector. Returns (df + `cell` column, fitted model). At production
     scale the cell is the partition key of the vector table, so a probe
     reads only nprobe/n_cells of the data."""
@@ -119,12 +118,12 @@ def ivf_assign(
     from pyspark.ml.functions import array_to_vector
 
     feat = df.withColumn("_features", array_to_vector(F.col(vec_col).cast("array<double>")))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_features", predictionCol="cell").fit(feat)
+    model = KMeans(k=n_cells, seed=IVF_SEED, featuresCol="_features", predictionCol="cell").fit(feat)
     return model.transform(feat).drop("_features"), model
 
 
 def ivf_build(
-    df: DataFrame, id_col: str, vec_col: str, n_cells: int = 16, seed: int = 42
+    df: DataFrame, id_col: str, vec_col: str, n_cells: int = 16
 ) -> tuple[DataFrame, list[list[float]]]:
     """INDEX BUILD — run once, persist the result (round-1 verdict: the
     KMeans fit must never sit inside the probe path). Returns the assigned
@@ -132,7 +131,7 @@ def ivf_build(
     driver-resident by design, like any ANN index metadata). In production
     the assigned table is written `partitionBy("cell")` so a probe is a
     partition-pruned scan of nprobe/n_cells of the data."""
-    assigned, model = ivf_assign(df, id_col, vec_col, n_cells, seed)
+    assigned, model = ivf_assign(df, id_col, vec_col, n_cells)
     centroids = [[float(x) for x in np.asarray(c)] for c in model.clusterCenters()]
     return assigned, centroids
 

@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import WS_CHARS, WS_CLASS, tokens_col
+
 DE_STOPWORDS = ("der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "den")
 EN_STOPWORDS = ("the", "and", "is", "of", "to", "in", "that", "it", "for", "on")
 
@@ -21,9 +23,9 @@ EN_PAT = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
 # fused alternation == de_hits + en_hits (the word sets are disjoint) in a
 # single regex pass — quality_score uses this instead of two counts
 _STOP_PAT = r"\b(" + "|".join(DE_STOPWORDS + EN_STOPWORDS) + r")\b"
-TOKEN_PAT = r"\S+"
+TOKEN_PAT = f"[^{WS_CHARS}]+"
 # BPE-ish pre-tokenization: letter runs | digit runs | single non-space symbol
-BPE_PAT = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+BPE_PAT = f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS_CHARS}]"
 PUNCT_PAT = r"[.,;:!?]"
 
 
@@ -41,9 +43,10 @@ def with_token_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def with_lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
-    """Stopword-count language heuristic: argmax of German vs English
-    stopword hits; no hits -> 'unknown'; ties -> 'de' (deterministic)."""
+def with_lang_id(df: DataFrame, text_col: str) -> DataFrame:
+    """Stopword-count language heuristic in `lang_pred`: argmax of German vs
+    English stopword hits; no hits -> 'unknown'; ties -> 'de'
+    (deterministic)."""
     lowered = F.lower(F.col(text_col))
     de = F.regexp_count(lowered, F.lit(DE_PAT))
     en = F.regexp_count(lowered, F.lit(EN_PAT))
@@ -51,7 +54,7 @@ def with_lang_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> Da
         df.withColumn("de_hits", de)
         .withColumn("en_hits", en)
         .withColumn(
-            out_col,
+            "lang_pred",
             F.when((F.col("de_hits") == 0) & (F.col("en_hits") == 0), F.lit("unknown"))
             .when(F.col("de_hits") >= F.col("en_hits"), F.lit("de"))
             .otherwise(F.lit("en")),
@@ -67,7 +70,7 @@ def with_quality_score(df: DataFrame, text_col: str) -> DataFrame:
     n_tokens = token_count_col(t)
     n_punct = F.regexp_count(t, F.lit(PUNCT_PAT))
     n_stop = F.regexp_count(F.lower(t), F.lit(_STOP_PAT))
-    n_ws = F.regexp_count(t, F.lit(r"\s"))
+    n_ws = F.regexp_count(t, F.lit(WS_CLASS))
     df = (
         df.withColumn("n_chars_calc", n_chars)
         .withColumn("n_tokens", n_tokens)
@@ -98,8 +101,6 @@ def doc_frequency(
     One explode of per-doc DISTINCT whitespace tokens + one hash groupBy
     (map-side partial agg); `n_docs` is passed in (the caller usually knows
     it — never a second scan hidden inside the operator)."""
-    from .dedup import tokens_col
-
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(tokens_col(F.col(text_col)))).alias("token"),
@@ -112,44 +113,26 @@ def doc_frequency(
     )
 
 
-def bigram_lm_scores(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    ref: DataFrame | None = None,
-    ref_text_col: str | None = None,
-) -> DataFrame:
+def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """CCNet-style n-gram language-model quality scoring: per-document
     average log-probability under an add-one-smoothed bigram model —
     the perplexity filter large pipelines use to rank/drop low-quality
     text (CCNet scores Common Crawl against a Wikipedia-trained KenLM; the
     estimator here is the same MLE+smoothing algebra at bigram order, all
     engine-portable arithmetic so the whole path is SQL-oracle checkable).
+    The model is the scored corpus itself (self-perplexity).
 
         p(b | a) = (c(ab) + 1) / (ctx(a) + V)
         score(doc) = avg over its bigrams of ln p(b | a)
 
-    where c(ab) counts bigram occurrences in the REFERENCE corpus (`ref`,
-    default: the scored corpus itself — self-perplexity), ctx(a) counts
-    bigrams starting with a, and V = |distinct reference tokens| (so an
-    unseen bigram still gets positive mass). Documents with < 2 tokens
-    score NULL with n_bigrams = 0 — no probability is defined, and 0.0
-    would sort as "better than average real text".
+    where c(ab) counts bigram occurrences in the corpus, ctx(a) counts
+    bigrams starting with a, and V = |distinct corpus tokens|. Documents
+    with < 2 tokens score NULL with n_bigrams = 0 — no probability is
+    defined, and 0.0 would sort as "better than average real text".
 
     Plan shape: tokens/bigrams are JVM Column transforms (no Python); the
-    model is two hash groupBys over the exploded reference bigrams; the
-    scoring join is bigram-equi (broadcastable for small reference models,
-    shuffle join otherwise) + one per-doc avg. At 100 TB the reference
-    model is the small side by design (a curated reference corpus), so
-    scoring is one broadcast-join scan of the corpus."""
-    from .dedup import tokens_col
-
-    self_model = ref is None
-    if ref is None:
-        ref = df
-        ref_text_col = text_col
-    elif ref_text_col is None:
-        ref_text_col = text_col
+    model is two hash groupBys over the exploded bigrams; the scoring join
+    is bigram-equi + one per-doc avg."""
 
     def bigrams(text_col_obj):
         # arrays_zip over two slices, NOT transform + element_at: a lambda
@@ -170,37 +153,23 @@ def bigram_lm_scores(
     doc_bi = df.select(
         F.col(id_col).alias("id"), F.explode(bigrams(F.col(text_col))).alias("bi")
     ).select("id", "bi.a", "bi.b")
-    if self_model:
-        # self-perplexity: the reference bigrams ARE the scored corpus's
-        # bigrams — persist the exploded table once and derive BOTH the
-        # model counts and the scoring side from it, instead of running the
-        # tokenize+zip+explode scan twice over the corpus (one full pass
-        # saved; measured ~1.3s of a 3.3s wall at sf1.0). The cache entry
-        # is corpus-scale like the old `counts` pin (see the module ADVICE
-        # note): same lifetime contract — same-input calls reuse it via
-        # CacheManager plan-matching, distinct-corpus sessions clearCache.
-        doc_bi = doc_bi.persist()
-        ref_bi = doc_bi.select("a", "b")
-    else:
-        ref_bi = ref.select(F.explode(bigrams(F.col(ref_text_col))).alias("bi")).select(
-            "bi.a", "bi.b"
-        )
+    # the model bigrams ARE the scored corpus's bigrams — persist the
+    # exploded table once and derive BOTH the model counts and the scoring
+    # side from it, instead of running the tokenize+zip+explode scan twice
+    # over the corpus (one full pass saved; measured ~1.3s of a 3.3s wall at
+    # sf1.0). Same-input calls reuse the entry via CacheManager
+    # plan-matching; distinct-corpus sessions clearCache.
+    doc_bi = doc_bi.persist()
     # context counts roll up FROM the bigram counts (sum over b of c_ab ==
-    # count of bigrams starting with a): one pass over the exploded
-    # reference instead of two, and the second agg runs on the already
+    # count of bigrams starting with a): the second agg runs on the already
     # aggregated model rows. `counts` feeds both ctx and the scoring join —
-    # persist so the reference explode+agg runs once (model-sized, the
-    # broadcast side at scale with an external curated reference; in
-    # self-model mode it is distinct-bigram-scale — see the ADVICE note —
-    # but recomputes from the persisted doc_bi in one agg either way).
-    counts = ref_bi.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")).persist()
+    # persist so the agg runs once.
+    counts = doc_bi.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")).persist()
     ctx = counts.groupBy("a").agg(F.sum("c_ab").alias("c_a"))
-    ref_toks = ref.select(
-        F.explode(
-            F.filter(tokens_col(F.col(ref_text_col)), lambda t: F.length(t) > 0)
-        ).alias("t")
+    corpus_toks = df.select(
+        F.explode(F.filter(tokens_col(F.col(text_col)), lambda t: F.length(t) > 0)).alias("t")
     )
-    v = ref_toks.agg(F.countDistinct("t").alias("v"))
+    v = corpus_toks.agg(F.countDistinct("t").alias("v"))
     scored = (
         doc_bi.join(counts, ["a", "b"], "left")
         .join(ctx, "a", "left")
@@ -243,8 +212,6 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     hash groupBy each (map-side partial agg), re-joined on the id — no
     Python anywhere, and every output is 6-dec rounded so the DuckDB oracle
     hash-matches."""
-    from .dedup import tokens_col
-
     base = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     # empty tokens (the [''] a whitespace-only text splits to) are dropped
     # BEFORE counting: an empty doc must report 0 tokens / 0.0 diversity,
@@ -320,10 +287,11 @@ FP_MOD = (1 << 61) - 1
 FP_WINDOW = 16
 
 
-def fingerprint_py(text: str, window: int = FP_WINDOW) -> tuple[int, int]:
+def fingerprint_py(text: str) -> tuple[int, int]:
     """(doc_hash, min_gram_hash): polynomial rolling hash of the whole text
-    and the minimum hash over all char `window`-grams (winnowing-style
+    and the minimum hash over all char FP_WINDOW-grams (winnowing-style
     robust fingerprint). Pure integer arithmetic, portable."""
+    window = FP_WINDOW
     h = 0
     for ch in text:
         h = (h * FP_BASE + ord(ch)) % FP_MOD
@@ -441,12 +409,9 @@ def _seg_value(cs_hi: np.ndarray, cs_lo: np.ndarray, a, b) -> np.ndarray:
     return _fold61(_shift32_mod(d_hi) + _fold61(d_lo))
 
 
-def fingerprint_batch(
-    texts: list[str], window: int = FP_WINDOW
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized (doc_hash, min_gram_hash) for a batch of texts — the numpy
-    form of fingerprint_py (the per-character Python loop kept as the pytest
-    parity oracle, tests/test_udf_parity.py).
+def _rolling_hashes(texts: list) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The prefix-hash machinery every batch kernel reads: (lens, offsets,
+    doc_hash, window_hash) for a batch of texts (non-str texts hash as "").
 
     Prefix-hash formulation over ONE concatenated codepoint array: with
     W[i] = c[i] * B^(-rel(i)) — rel(i) = i's offset WITHIN its document —
@@ -462,9 +427,12 @@ def fingerprint_batch(
     no per-window re-scan. Document-RELATIVE exponents keep the cached
     power tables sized by the longest document, not the batch's total
     characters (a fresh worker's first batch builds tables in microseconds).
-    Windows crossing document boundaries compute garbage from mixed
-    exponents and are masked to a +inf sentinel before the per-document
-    minimum.reduceat."""
+
+    window_hash has one entry per character of the concatenated batch: the
+    hash of the FP_WINDOW chars starting there, or P (above every reduced
+    hash) where that window crosses its document's end. doc_hash is 0 for
+    an empty document."""
+    window = FP_WINDOW
     texts = [t if isinstance(t, str) else "" for t in texts]
     n_docs = len(texts)
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n_docs)
@@ -472,9 +440,9 @@ def fingerprint_batch(
     np.cumsum(lens, out=offsets[1:])
     total = int(offsets[-1])
     doc_hash = np.zeros(n_docs, dtype=np.uint64)
-    min_hash = np.zeros(n_docs, dtype=np.uint64)
+    wh = np.full(total, _P64, dtype=np.uint64)
     if total == 0:
-        return doc_hash.astype(np.int64), min_hash.astype(np.int64)
+        return lens, offsets, doc_hash, wh
 
     # one uint32 per code point (utf-32-le == Python's ord());
     # surrogatepass keeps lone surrogates hashable exactly like ord()
@@ -485,8 +453,8 @@ def fingerprint_batch(
     pows = _pow_table(max_len + window)  # B^rel exponents stay < len + w
     inv_pows = _pow_table(max_len, _FP_BASE_INV)  # B^-rel
 
-    starts_rep = np.repeat(offsets[:-1], lens)
-    rel = np.arange(total, dtype=np.int64) - starts_rep  # offset within doc
+    lens_rep = np.repeat(lens, lens)
+    rel = np.arange(total, dtype=np.int64) - np.repeat(offsets[:-1], lens)
     w_arr = np.empty(total, dtype=np.uint64)
     for s in range(0, total, _FP_CHUNK):
         e = min(s + _FP_CHUNK, total)
@@ -497,32 +465,34 @@ def fingerprint_batch(
     np.cumsum(w_arr & _MASK32, out=cs_lo[1:])
 
     nonempty = lens > 0
-    starts_ne = offsets[:-1][nonempty]
-    ends_ne = offsets[1:][nonempty]
     doc_hash[nonempty] = _mulmod61(
-        pows[lens[nonempty] - 1], _seg_value(cs_hi, cs_lo, starts_ne, ends_ne)
+        pows[lens[nonempty] - 1],
+        _seg_value(cs_hi, cs_lo, offsets[:-1][nonempty], offsets[1:][nonempty]),
     )
-
-    # min over all in-document window hashes (docs shorter than the window
-    # fall back to doc_hash, as in fingerprint_py)
+    # the window at global position i spans S[i..i+w] (contiguous prefix-sum
+    # slices) and is valid iff it fits inside i's document
     n_win = total - window + 1
-    if n_win > 0:
-        # window at global position i spans S[i..i+w] (contiguous prefix-sum
-        # slices) and is valid iff it fits inside i's document
-        lens_rep = np.repeat(lens, lens)
-        wh = np.full(total, _P64, dtype=np.uint64)  # P > every reduced hash
-        for s in range(0, n_win, _FP_CHUNK):
-            e = min(s + _FP_CHUNK, n_win)
-            d_hi = cs_hi[s + window : e + window] - cs_hi[s:e]
-            d_lo = cs_lo[s + window : e + window] - cs_lo[s:e]
-            val = _fold61(_shift32_mod(d_hi) + _fold61(d_lo))
-            acc = _mulmod61(pows[rel[s:e] + (window - 1)], val)
-            valid = (lens_rep[s:e] - rel[s:e]) >= window
-            wh[s:e] = np.where(valid, acc, _P64)
-        min_hash[nonempty] = np.minimum.reduceat(wh, starts_ne)
-    else:
-        min_hash[nonempty] = _P64
-    short = lens < window
+    for s in range(0, n_win, _FP_CHUNK):
+        e = min(s + _FP_CHUNK, n_win)
+        val = _seg_value(cs_hi, cs_lo, slice(s, e), slice(s + window, e + window))
+        acc = _mulmod61(pows[rel[s:e] + (window - 1)], val)
+        wh[s:e] = np.where(lens_rep[s:e] - rel[s:e] >= window, acc, _P64)
+    return lens, offsets, doc_hash, wh
+
+
+def fingerprint_batch(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized (doc_hash, min_gram_hash) for a batch of texts — the numpy
+    form of fingerprint_py (the per-character Python loop kept as the pytest
+    parity oracle, tests/test_udf_parity.py): one minimum.reduceat per
+    document over _rolling_hashes' window hashes (out-of-document windows
+    are P, above every real hash). Docs shorter than the window fall back
+    to doc_hash, as in fingerprint_py."""
+    lens, offsets, doc_hash, wh = _rolling_hashes(texts)
+    min_hash = np.zeros(len(lens), dtype=np.uint64)
+    nonempty = lens > 0
+    if nonempty.any():
+        min_hash[nonempty] = np.minimum.reduceat(wh, offsets[:-1][nonempty])
+    short = lens < FP_WINDOW
     min_hash[short] = doc_hash[short]
     return doc_hash.astype(np.int64), min_hash.astype(np.int64)
 
@@ -560,19 +530,20 @@ def with_fingerprint(df: DataFrame, text_col: str) -> DataFrame:
 FP_GUARD = 4  # winnowing guard: one fingerprint selected per guard windows
 
 
-def winnow_py(text: str, window: int = FP_WINDOW, guard: int = FP_GUARD) -> list[int]:
+def winnow_py(text: str) -> list[int]:
     """Pure-Python parity oracle for the winnowed fingerprint SET of a text:
-    all `window`-char rolling hashes, then the DISTINCT sliding minimum over
-    every `guard` consecutive window hashes (Schleimer/Wilkerson/Aiken
+    all FP_WINDOW-char rolling hashes, then the DISTINCT sliding minimum over
+    every FP_GUARD consecutive window hashes (Schleimer/Wilkerson/Aiken
     winnowing, MOSS). For a fingerprint SET the positional tie-breaks of the
     original algorithm are irrelevant — ties share the same VALUE — so the
     selected set is exactly {min(wh[j:j+guard])}. Guarantee kept: any shared
     substring of length >= window + guard - 1 yields >= 1 shared selected
-    fingerprint. Docs with fewer than `guard` windows winnow what they have;
-    docs shorter than `window` fall back to {doc_hash} (fingerprint_py's
-    short-doc rule)."""
+    fingerprint. Docs with fewer than FP_GUARD windows winnow what they
+    have; docs shorter than FP_WINDOW fall back to {doc_hash}
+    (fingerprint_py's short-doc rule)."""
+    window, guard = FP_WINDOW, FP_GUARD
     n = len(text)
-    doc_hash, _ = fingerprint_py(text, window)
+    doc_hash, _ = fingerprint_py(text)
     if n < window:
         return [doc_hash]
     pw = pow(FP_BASE, window - 1, FP_MOD)
@@ -590,70 +561,29 @@ def winnow_py(text: str, window: int = FP_WINDOW, guard: int = FP_GUARD) -> list
     return sorted(sel)
 
 
-def _batch_window_hash_arrays(texts: list[str], window: int):
-    """Shared machinery for winnow_batch / window_hashes_batch: per-doc
-    numpy arrays of all `window`-char rolling hashes (None for empty docs,
-    the doc_hash int for docs shorter than the window)."""
-    texts = [t if isinstance(t, str) else "" for t in texts]
-    n_docs = len(texts)
-    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n_docs)
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    total = int(offsets[-1])
-    if total == 0:
-        return [None] * n_docs
-
-    codes = np.frombuffer(
-        "".join(texts).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-    ).astype(np.uint64)
-    max_len = int(lens.max())
-    pows = _pow_table(max_len + window)
-    inv_pows = _pow_table(max_len, _FP_BASE_INV)
-
-    starts_rep = np.repeat(offsets[:-1], lens)
-    rel = np.arange(total, dtype=np.int64) - starts_rep
-    w_arr = np.empty(total, dtype=np.uint64)
-    for s in range(0, total, _FP_CHUNK):
-        e = min(s + _FP_CHUNK, total)
-        w_arr[s:e] = _mulmod61_small(inv_pows[rel[s:e]], codes[s:e])
-    cs_hi = np.zeros(total + 1, dtype=np.uint64)
-    cs_lo = np.zeros(total + 1, dtype=np.uint64)
-    np.cumsum(w_arr >> np.uint64(32), out=cs_hi[1:])
-    np.cumsum(w_arr & _MASK32, out=cs_lo[1:])
-
-    n_win_total = total - window + 1
-    wh = np.empty(max(n_win_total, 0), dtype=np.uint64)
-    for s in range(0, max(n_win_total, 0), _FP_CHUNK):
-        e = min(s + _FP_CHUNK, n_win_total)
-        d_hi = cs_hi[s + window : e + window] - cs_hi[s:e]
-        d_lo = cs_lo[s + window : e + window] - cs_lo[s:e]
-        val = _fold61(_shift32_mod(d_hi) + _fold61(d_lo))
-        wh[s:e] = _mulmod61(pows[rel[s:e] + (window - 1)], val)
-
+def _doc_window_hashes(texts: list) -> list:
+    """Per-doc numpy arrays of all FP_WINDOW-char rolling hashes, read from
+    _rolling_hashes (None for empty docs, the doc_hash int for docs shorter
+    than the window)."""
+    lens, offsets, doc_hash, wh = _rolling_hashes(texts)
     out = []
-    for d in range(n_docs):
-        n = int(lens[d])
+    for d, n in enumerate(lens.tolist()):
         if n == 0:
             out.append(None)
-            continue
-        start, end = int(offsets[d]), int(offsets[d + 1])
-        if n < window:
-            dh = _mulmod61(pows[n - 1], _seg_value(cs_hi, cs_lo,
-                                                   np.int64(start), np.int64(end)))
-            out.append(int(np.int64(dh)))
-            continue
-        out.append(wh[start : start + (n - window + 1)])
+        elif n < FP_WINDOW:
+            out.append(int(np.int64(doc_hash[d])))
+        else:
+            start = int(offsets[d])
+            out.append(wh[start : start + (n - FP_WINDOW + 1)])
     return out
 
 
-def window_hashes_batch(
-    texts: list[str], window: int = FP_WINDOW
-) -> list[list[int]]:
+def window_hashes_batch(texts: list[str]) -> list[list[int]]:
     """Per-doc DISTINCT rolling window-hash sets (sorted) — the exact
     (un-winnowed) form used for substring-overlap verification. Empty docs
     -> [0], short docs -> [doc_hash], matching the winnow conventions."""
     out: list[list[int]] = []
-    for arr in _batch_window_hash_arrays(texts, window):
+    for arr in _doc_window_hashes(texts):
         if arr is None:
             out.append([0])
         elif isinstance(arr, int):
@@ -663,18 +593,15 @@ def window_hashes_batch(
     return out
 
 
-def winnow_batch(
-    texts: list[str], window: int = FP_WINDOW, guard: int = FP_GUARD
-) -> list[list[int]]:
+def winnow_batch(texts: list[str]) -> list[list[int]]:
     """Vectorized winnowed fingerprint sets for a batch — window hashes
-    from the shared prefix-hash machinery (_batch_window_hash_arrays; the
-    same formulation as fingerprint_batch, which stays frozen as the
-    min-gram parity surface), then a per-document stride-view sliding
-    minimum (guard is small, so the O(n_windows * guard) min is a handful
-    of vectorized compares) and a unique. Parity with winnow_py is pinned
-    by tests."""
+    from the shared prefix-hash machinery (_doc_window_hashes), then a
+    per-document stride-view sliding minimum (FP_GUARD is small, so the
+    O(n_windows * guard) min is a handful of vectorized compares) and a
+    unique. Parity with winnow_py is pinned by tests."""
+    guard = FP_GUARD
     out: list[list[int]] = []
-    for arr in _batch_window_hash_arrays(texts, window):
+    for arr in _doc_window_hashes(texts):
         if arr is None:
             out.append([0])
         elif isinstance(arr, int):
@@ -687,24 +614,18 @@ def winnow_batch(
     return out
 
 
-def winnowed_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = FP_WINDOW,
-    guard: int = FP_GUARD,
-) -> DataFrame:
+def winnowed_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fp) — one row per DISTINCT winnowed fingerprint per document.
     Map-side Arrow kernel + explode: the only shuffle in any downstream use
     is the equi-join/groupBy on fp. Any substring shared between two
-    documents of length >= window + guard - 1 characters guarantees a
+    documents of length >= FP_WINDOW + FP_GUARD - 1 characters guarantees a
     shared fp row (the winnowing guarantee), which makes this the
     substring-level complement to whole-document MinHash."""
     from pyspark.sql import types as T
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def fps(texts: pd.Series) -> pd.Series:
-        return pd.Series(winnow_batch(list(texts), window, guard))
+        return pd.Series(winnow_batch(list(texts)))
 
     return (
         df.select(F.col(id_col).alias("id"), fps(F.col(text_col)).alias("fps"))
@@ -717,8 +638,6 @@ def substring_dup_pairs(
     id_col: str,
     text_col: str,
     min_shared: int = 2,
-    window: int = FP_WINDOW,
-    guard: int = FP_GUARD,
     max_fp_freq: int | None = 1000,
 ) -> DataFrame:
     """(id_a < id_b, shared_fps) — document pairs sharing >= min_shared
@@ -737,7 +656,7 @@ def substring_dup_pairs(
     with one groupBy on the exploded fp table; the same rule is trivially
     reproducible in the SQL oracle, so the cap is part of the verified
     contract, not a silent heuristic."""
-    fps = winnowed_fingerprints(df, id_col, text_col, window, guard)
+    fps = winnowed_fingerprints(df, id_col, text_col)
     if max_fp_freq is not None:
         freq_ok = (
             fps.groupBy("fp")
@@ -756,18 +675,15 @@ def substring_dup_pairs(
     )
 
 
-def strip_covered_batch(
-    texts: list, partner_fp_lists: list, window: int = FP_WINDOW
-) -> list[str]:
+def strip_covered_batch(texts: list, partner_fp_lists: list) -> list[str]:
     """The substring_dedup removal kernel as a pure batch function (the
     pandas UDF is a thin wrapper; kept separate so the semantics are
     property-testable without a SparkSession): for each (text, partner
-    fingerprint list), every `window`-char window whose rolling hash is in
-    the partner set marks chars [i, i+window) covered, and covered chars
+    fingerprint list), every FP_WINDOW-char window whose rolling hash is in
+    the partner set marks chars [i, i+FP_WINDOW) covered, and covered chars
     are removed. Empty / shorter-than-window texts pass through."""
-    arrs = _batch_window_hash_arrays([t if isinstance(t, str) else "" for t in texts], window)
     out: list[str] = []
-    for t, arr, pf in zip(texts, arrs, partner_fp_lists):
+    for t, arr, pf in zip(texts, _doc_window_hashes(texts), partner_fp_lists):
         t = t if isinstance(t, str) else ""
         if arr is None or isinstance(arr, int):
             out.append(t)  # empty or shorter than the window: unchanged
@@ -778,11 +694,11 @@ def strip_covered_batch(
             out.append(t)
             continue
         n = len(t)
-        # interval-union of [i, i+window) via a delta array + cumsum
+        # interval-union of [i, i+FP_WINDOW) via a delta array + cumsum
         delta = np.zeros(n + 1, dtype=np.int64)
         idx = np.nonzero(hit)[0]
         delta[idx] += 1
-        delta[idx + window] -= 1
+        delta[idx + FP_WINDOW] -= 1
         covered = np.cumsum(delta[:n]) > 0
         chars = np.frombuffer(
             t.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
@@ -794,20 +710,14 @@ def strip_covered_batch(
 
 
 def substring_dedup(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = FP_WINDOW,
-    src: str = "id_a",
-    dst: str = "id_b",
+    docs: DataFrame, pairs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """ACTION side of the substring-dedup loop (closing what
     substring_dup_pairs -> substring_overlap only scores): for every pair
-    (src, dst) the LATER document (dst — ids are ordered id_a < id_b
+    (id_a, id_b) the LATER document (id_b — ids are ordered id_a < id_b
     upstream, the Lee et al. \"Deduplicating Training Data\" keep-first
-    policy) loses its duplicated spans. A `window`-char window of dst
-    whose rolling hash appears in ANY of its src partners' window-hash
+    policy) loses its duplicated spans. An FP_WINDOW-char window of id_b
+    whose rolling hash appears in ANY of its id_a partners' window-hash
     sets is marked, and every character covered by a marked window is
     removed; what remains concatenates in order. Returns the FULL corpus:
     (id_col, text_col deduped, n_chars_before, n_chars_after).
@@ -818,15 +728,15 @@ def substring_dedup(
       re-derived from already-deduped output (iterating to a fixed point
       is a recipe choice, and order-dependent; one pass is deterministic
       and what the reference policy does),
-    - a dst shorter than `window` passes through unchanged (window
+    - an id_b doc shorter than FP_WINDOW passes through unchanged (window
       semantics don't apply; its whole-doc hash is never a window match),
     - docs in no pair never enter Python at all.
 
     Scale shape: everything expensive is proportional to the CANDIDATE
-    set, not the corpus — src window sets explode only over src docs
-    (semi-join), the (dst, fp) partner table is one distinct equi-join,
-    and the strip kernel runs only over dst docs. The collect_set per dst
-    is bounded by (partner count x windows per doc); a hub dst with
+    set, not the corpus — keeper window sets explode only over id_a docs
+    (semi-join), the (id_b, fp) partner table is one distinct equi-join,
+    and the strip kernel runs only over id_b docs. The collect_set per id_b
+    is bounded by (partner count x windows per doc); a hub id_b with
     thousands of partners concentrates its unioned set on one row — the
     upstream df-cap (max_fp_freq) is what keeps hubs rare, same note as
     substring_overlap."""
@@ -836,7 +746,7 @@ def substring_dedup(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def whs(texts: pd.Series) -> pd.Series:
-        return pd.Series(window_hashes_batch(list(texts), window))
+        return pd.Series(window_hashes_batch(list(texts)))
 
     # three consumers read the pair table (keep_ids, the partner join, the
     # dst anti-join) and its upstream is typically the verified-overlap
@@ -853,17 +763,17 @@ def substring_dedup(
     # row for the inner join) and silently vanish from the returned corpus
     # (round-5 review find) instead of passing through unchanged.
     pairs = pairs.join(
-        base.select(F.col("id").alias(src)), src, "left_semi"
+        base.select(F.col("id").alias("id_a")), "id_a", "left_semi"
     ).persist()
     # distinct window-hash sets of the keep-side docs, exploded -> joined
     # through the pair table -> one DISTINCT (dst, fp) partner table
-    keep_ids = pairs.select(F.col(src).alias("id")).distinct()
+    keep_ids = pairs.select(F.col("id_a").alias("id")).distinct()
     keep_fps = (
         base.join(keep_ids, "id")
         .select("id", F.explode(whs(F.col("text"))).alias("fp"))
     )
     partner_fps = (
-        pairs.select(F.col(src).alias("id"), F.col(dst).alias("_target"))
+        pairs.select(F.col("id_a").alias("id"), F.col("id_b").alias("_target"))
         .join(keep_fps, "id")
         .select("_target", "fp")
         .distinct()
@@ -877,7 +787,7 @@ def substring_dedup(
     # keep-side window-hash subtree (incl. its Python stage) into the
     # corpus-sized branch (plan-gated by
     # tests/test_plan_quality.py::test_substring_dedup_python_only_touches_pair_docs)
-    dst_ids = pairs.select(F.col(dst).alias("id")).distinct()
+    dst_ids = pairs.select(F.col("id_b").alias("id")).distinct()
     untouched = (
         base.join(dst_ids, "id", "left_anti")
         .select(
@@ -893,7 +803,7 @@ def substring_dedup(
 
     @F.pandas_udf(T.StringType())
     def strip(texts: pd.Series, pfps: pd.Series) -> pd.Series:
-        return pd.Series(strip_covered_batch(list(texts), list(pfps), window))
+        return pd.Series(strip_covered_batch(list(texts), list(pfps)))
 
     stripped = (
         joined
@@ -921,19 +831,13 @@ def substring_dedup(
 
 
 def substring_overlap(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = FP_WINDOW,
-    src: str = "id_a",
-    dst: str = "id_b",
+    docs: DataFrame, pairs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Exact verification score for substring-dup CANDIDATE pairs:
     shared_windows = |W(a) ∩ W(b)| where W is the DISTINCT set of all
-    `window`-char rolling hashes (un-winnowed — candidates came from the
+    FP_WINDOW-char rolling hashes (un-winnowed — candidates came from the
     winnowed subsample, verification uses the full set). A contiguous
-    shared span of L >= window chars contributes L - window + 1 shared
+    shared span of L >= FP_WINDOW chars contributes L - FP_WINDOW + 1 shared
     windows, so shared_windows >= L - 15 lower-bounds the total shared
     content; collisions are the usual 2^-61 rolling-hash argument.
 
@@ -943,7 +847,7 @@ def substring_overlap(
     intersection is the INVERTED-INDEX form (r5 verdict item #1): the
     distinct (id, fp) table self-joins on fp — each document's window set
     enters the join ONCE, regardless of how many candidate pairs it
-    appears in — producing (src, dst, fp) co-occurrence hits that are
+    appears in — producing (id_a, id_b, fp) co-occurrence hits that are
     LEFT SEMI-joined against the candidate pair set before the count.
     The old `pairs ⋈ a` form replicated a doc's full window set once per
     pair; a hub document in 10^4 pairs shipped its set 10^4 times through
@@ -965,8 +869,8 @@ def substring_overlap(
     # should clearCache between them.
     pairs = pairs.persist()
     cand_ids = (
-        pairs.select(F.col(src).alias("id"))
-        .unionByName(pairs.select(F.col(dst).alias("id")))
+        pairs.select(F.col("id_a").alias("id"))
+        .unionByName(pairs.select(F.col("id_b").alias("id")))
         .distinct()
     )
     cand_docs = docs.select(
@@ -975,28 +879,28 @@ def substring_overlap(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def whs(texts: pd.Series) -> pd.Series:
-        return pd.Series(window_hashes_batch(list(texts), window))
+        return pd.Series(window_hashes_batch(list(texts)))
 
     # both sides of the intersection join read this — persist so the
     # window-hash Python kernel runs once, not twice
     fps = cand_docs.select("id", F.explode(whs(F.col("text"))).alias("fp")).persist()
-    a = fps.select(F.col("id").alias(src), F.col("fp").alias("fp"))
-    b = fps.select(F.col("id").alias(dst), F.col("fp").alias("fp"))
+    a = fps.select(F.col("id").alias("id_a"), F.col("fp").alias("fp"))
+    b = fps.select(F.col("id").alias("id_b"), F.col("fp").alias("fp"))
     # inverted-index intersection: fp-equi-join (each window set shipped
     # once), candidate restriction as a SEMI join on the pair key, then
     # one count per surviving (src, dst). id_a < id_b by the candidate
     # contract, so the inequality alone removes self/duplicate hits.
     counts = (
         a.join(b, "fp")
-        .where(F.col(src) < F.col(dst))
-        .join(pairs.select(src, dst), [src, dst], "left_semi")
-        .groupBy(src, dst)
+        .where(F.col("id_a") < F.col("id_b"))
+        .join(pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_windows"))
     )
     # candidates with ZERO shared windows are a verification verdict, not
     # an absence — keep them as explicit 0 rows
     return (
-        pairs.select(src, dst)
-        .join(counts, [src, dst], "left")
-        .select(src, dst, F.coalesce("shared_windows", F.lit(0)).alias("shared_windows"))
+        pairs.select("id_a", "id_b")
+        .join(counts, ["id_a", "id_b"], "left")
+        .select("id_a", "id_b", F.coalesce("shared_windows", F.lit(0)).alias("shared_windows"))
     )

@@ -113,14 +113,21 @@ class BloomSidecar:
         self.partitions = partitions
         self.m, self.k = bloom_params(capacity, fpp)
         os.makedirs(self.dir, exist_ok=True)
-        meta = {"m": self.m, "k": self.k, "algo": PROBE_ALGO}
+        # keys live in part pmod(h1, partitions): another partition count
+        # probes them in the wrong part files, as false negatives
+        meta = {"m": self.m, "k": self.k, "algo": PROBE_ALGO, "partitions": partitions}
         meta_path = os.path.join(self.dir, "meta.json")
         if os.path.exists(meta_path):
             with open(meta_path, encoding="utf-8") as f:
                 existing = json.load(f)
             if existing != meta:
+                changed = ", ".join(
+                    f"{key}: {existing.get(key)} -> {meta.get(key)}"
+                    for key in sorted(existing.keys() | meta.keys())
+                    if existing.get(key) != meta.get(key)
+                )
                 raise ValueError(
-                    f"bloom sidecar params changed ({existing} -> {meta}); "
+                    f"bloom sidecar params changed ({changed}); "
                     "existing bitsets would give false negatives — start a "
                     "fresh work_dir instead of resuming"
                 )

@@ -1,7 +1,8 @@
 """Seed sources: CSV scan (S1) and seed -> depth-0 frontier (S2).
 
-reference: src/bin/seeder.rs:20-69 (column select by index or case-insensitive
-header name, blank/invalid rows skipped, fragment-only normalization),
+reference: src/bin/seeder.rs:20-69 (column select by case-insensitive header
+name, blank/invalid rows skipped, fragment-only normalization; the
+reference's select-by-index is not offered),
 :119-146 (depth-0 tasks pushed in CSV order — order is load-bearing for seq).
 """
 
@@ -11,23 +12,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_seeds_csv(
-    spark: SparkSession,
-    path: str,
-    column_index: int | None = None,
-    column_name: str | None = None,
-) -> DataFrame:
+def read_seeds_csv(spark: SparkSession, path: str, column_name: str | None = None) -> DataFrame:
     """CSV seed scan preserving file order as `seed_order`.
 
-    Column resolution mirrors seeder.rs:23-45: explicit index, else
+    Column resolution mirrors seeder.rs:23-45 without its index select:
     case-insensitive header-name match falling back to the first column.
     """
     df = spark.read.option("header", True).csv(path)
     cols = df.columns
     idx = 0
-    if column_index is not None:
-        idx = column_index
-    elif column_name is not None:
+    if column_name is not None:
         target = column_name.strip().lower()
         for pos, c in enumerate(cols):
             if c.strip().lower() == target:
@@ -43,11 +37,12 @@ def read_seeds_csv(
     )
 
 
-def seeds_from_table(df: DataFrame, column: str = "Websites") -> DataFrame:
-    """Seeds from a parquet table (fixture path), preserving row order."""
+def seeds_from_table(df: DataFrame) -> DataFrame:
+    """Seeds from the `Websites` column of a parquet table (fixture path),
+    preserving row order."""
     return (
         df.coalesce(1)
         .withColumn("seed_order", F.monotonically_increasing_id())
-        .select(F.trim(F.col(column)).alias("raw_url"), "seed_order")
+        .select(F.trim(F.col("Websites")).alias("raw_url"), "seed_order")
         .where(F.col("raw_url").isNotNull() & (F.col("raw_url") != ""))
     )

@@ -34,7 +34,7 @@ def _url_expr(doc_id, n_hosts: int):
     return F.concat(F.lit("https://"), host, F.lit("/seite/"), doc_id.cast("string"), slug)
 
 
-def corpus_from_documents(spark: SparkSession, sf_dir: str, max_docs: int | None = None):
+def corpus_from_documents(spark: SparkSession, sf_dir: str):
     """(pages_df, seeds_df, robots_df) derived from `<sf_dir>/documents.parquet`.
 
     Link graph: doc i links to (i*7 + j*13 + 1) mod n for j in 0..7 — an
@@ -42,8 +42,6 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str, max_docs: int | None
     every page, the FIXTURES.md skew scenario).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text", "lang")
-    if max_docs is not None:
-        docs = docs.where(F.col("doc_id") < max_docs)
     n = docs.count()
     # the html/url/anchor derivation below is a dozen concat/format
     # expressions per row (see `spread`); spreading also gives the derived
@@ -107,23 +105,16 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str, max_docs: int | None
     return pages, seeds, hosts
 
 
-def run_flagship_crawl(
-    spark: SparkSession,
-    sf_dir: str,
-    work_dir: str | None = None,
-    max_docs: int | None = None,
-    max_depth: int = 2,
-):
-    """End-to-end flagship: derive the corpus, run the iterative crawl,
-    return (tables, driver)."""
+def run_flagship_crawl(spark: SparkSession, sf_dir: str, max_depth: int = 2):
+    """End-to-end flagship: derive the corpus, run the iterative crawl in a
+    fresh temp directory, return (tables, driver)."""
     import tempfile
 
     from ..config import CrawlConfig
     from ..plans.crawl import CrawlDriver
 
-    pages, seeds, robots = corpus_from_documents(spark, sf_dir, max_docs)
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="crawl_flagship_")
+    pages, seeds, robots = corpus_from_documents(spark, sf_dir)
+    work_dir = tempfile.mkdtemp(prefix="crawl_flagship_")
     pages_path = f"{work_dir}/pages_input"
     pages.write.mode("overwrite").parquet(pages_path)
     config = CrawlConfig(max_depth=max_depth, seen_partitions=32)

@@ -14,10 +14,10 @@ Targets and their references:
       same formula the DuckDB HUGEINT oracles use)
   P3  batching is invisible: winnow_batch(texts) == [winnow_batch([t])[0]
       for t in texts] on mixed-length batches (offsets/chunking in
-      _batch_window_hash_arrays must not leak across documents; stresses
+      _rolling_hashes must not leak across documents; stresses
       the _FP_CHUNK chunked passes with size skew)
   P4  (--jvm) tokens_py == the LIVE JVM tokenizer tokens_col
-      (F.split(F.trim(x), '\\s+')) over one bulk DataFrame pass — the
+      (F.split(F.trim(x), WS_CLASS + '+')) over one bulk DataFrame pass — the
       tokenizer contract every Python kernel and oracle depends on
       (ASCII-\\s, 0x20-only trim; see tokens_py docstring).
 

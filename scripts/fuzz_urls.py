@@ -22,6 +22,8 @@ Properties checked:
   P3  canonicalize_url is idempotent: c(c(x)) == c(x) whenever c(x) is not
       None (the canonical form must be a fixed point — dedup keys depend
       on it).
+  P4  a bracketed canonical host is its IPv6 address's compressed form, as
+      the url crate serializes it (one host, one canonical URL).
 
 Any counterexample is printed in repr() form, ready to be promoted into the
 table-driven cases in tests/test_functions_urls.py. Exit code 1 on any find.
@@ -36,7 +38,9 @@ urllib round trips take a few minutes.
 from __future__ import annotations
 
 import argparse
+import ipaddress
 import sys
+from urllib.parse import urlsplit
 
 from hypothesis import HealthCheck, given, seed as hyp_seed, settings
 from hypothesis import strategies as st
@@ -156,10 +160,29 @@ def run(examples: int, seed_val: int) -> int:
         if c2 != c:
             _record("P3 not idempotent", u, c, c2)
 
+    @common
+    @hyp_seed(seed_val + 3)
+    @given(u=url_st)
+    def p4_ipv6_compressed(u):
+        try:
+            c = canonicalize_url(u)
+        except Exception:
+            return  # P3 records it
+        host = urlsplit(c).netloc.rpartition("@")[2] if c else ""
+        if host.startswith("["):
+            literal = host[1 : host.index("]")]
+            try:
+                compressed = ipaddress.IPv6Address(literal).compressed
+            except ValueError:
+                compressed = None
+            if compressed != literal:
+                _record("P4 IPv6 host not compressed", u, c, compressed)
+
     for name, prop in [
         ("P1 join identity", p1_join_identity),
         ("P2 is_canonical_fast conservative", p2_canonical_never_lies),
         ("P3 canonicalize idempotent", p3_canonical_idempotent),
+        ("P4 IPv6 host compressed", p4_ipv6_compressed),
     ]:
         print(f"running {name} @ {examples} examples ...", flush=True)
         prop()
@@ -167,7 +190,7 @@ def run(examples: int, seed_val: int) -> int:
     if FAILURES:
         print(f"\n{len(FAILURES)} divergence(s) found — promote to table-driven cases")
         return 1
-    print(f"\nOK: 3 properties x {examples} examples, zero divergences")
+    print(f"\nOK: 4 properties x {examples} examples, zero divergences")
     return 0
 
 

@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.operators.dedup import (
-    LSH_BANDS,
-    LSH_ROWS,
     MINHASH_PRIME,
     NUM_PERM,
     _permutation_params,
@@ -108,13 +106,11 @@ def embedding_neardup_pairs_join(
     )
 
 
-def lsh_candidate_pairs_uncapped(
-    sigs: DataFrame, bands: int = LSH_BANDS, rows: int = LSH_ROWS
-) -> DataFrame:
+def lsh_candidate_pairs_uncapped(sigs: DataFrame) -> DataFrame:
     """Uncapped form of `dedup.lsh_candidate_pairs`: every (id_a < id_b)
     pair sharing a (band, band_hash) bucket, as one band self-join. Equal to
     the capped engine whenever no bucket exceeds the cap."""
-    banded = banded_signatures(sigs, bands, rows)
+    banded = banded_signatures(sigs)
     l, r = banded.alias("l"), banded.alias("r")
     return (
         l.join(

@@ -5,6 +5,7 @@ version carry-forward across insertion rounds."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.plans.bloom import BloomSidecar, with_hashes
@@ -36,6 +37,16 @@ def test_no_false_negatives_and_bounded_fpr(spark, tmp_path):
     fp = bloom.prefilter(unseen, 0).where(F.col("maybe_seen")).count()
     assert fp / N < 0.03, fp
     seen.unpersist()
+
+
+def test_reopen_with_another_partition_count_is_refused(tmp_path):
+    """Keys live in part pmod(h1, partitions), so a state written at 32
+    partitions and probed at 64 would look keys up in the wrong part files:
+    false negatives, and seen URLs enqueued again. Reopening refuses it."""
+    BloomSidecar(str(tmp_path), 32, capacity=1024, fpp=0.01)
+    BloomSidecar(str(tmp_path), 32, capacity=1024, fpp=0.01)  # same config reopens
+    with pytest.raises(ValueError, match="partitions: 32 -> 64"):
+        BloomSidecar(str(tmp_path), 64, capacity=1024, fpp=0.01)
 
 
 def test_version_carry_forward_is_cumulative(spark, tmp_path):

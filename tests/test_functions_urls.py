@@ -59,11 +59,7 @@ def test_canonicalize_invalid(raw):
 
 def test_canonicalize_keep_fragment_seed_path():
     # seeder strips only the fragment (seeder.rs:57); parse normalization
-    # still applies, so keep_fragment=True + defrag == canonical
-    assert (
-        canonicalize_url("https://Example.DE:443/a#x", keep_fragment=True)
-        == "https://example.de/a#x"
-    )
+    # still applies, so the seed path is the canonical form
     assert canonicalize_url("https://Example.DE:443/a#x") == "https://example.de/a"
 
 
@@ -345,6 +341,8 @@ def test_canonicalize_rejects_whitespace_control_hosts_and_is_idempotent():
         "HTTP://[::%&@9\xdf]?",  # '[' in the dropped userinfo: host '9\xdf]'
         "http://:]-[::]-[:",      # text beside an IPv6 literal
         "http://[::1]x/",
+        "http://[v1.x]/",            # IPvFuture: the url crate rejects it
+        "http://[fe80::1%25eth0]/",  # zone id: likewise
     ]:
         assert canonicalize_url(raw) is None, raw
 
@@ -378,15 +376,20 @@ def test_canonicalize_rejects_authorityless_double_slash_paths():
         ("http://[::1]:8080/a", "http://[::1]:8080/a", "http://[::1]:8080", "[::1]"),
         ("HTTP://[::1]/", "http://[::1]/", "http://[::1]", "[::1]"),
         ("https://[2001:DB8::7]:443", "https://[2001:db8::7]/", "https://[2001:db8::7]", "[2001:db8::7]"),
-        ("http://u:p@[::ffff:1.2.3.4]:80/x?q", "http://[::ffff:1.2.3.4]/x?q", "http://[::ffff:1.2.3.4]", "[::ffff:1.2.3.4]"),
+        ("http://u:p@[::ffff:1.2.3.4]:80/x?q", "http://[::ffff:102:304]/x?q", "http://[::ffff:102:304]", "[::ffff:102:304]"),
         ("ftp://[fe80::1]:2121/f", "ftp://[fe80::1]:2121/f", "ftp://[fe80::1]:2121", "[fe80::1]"),
+        ("http://[0:0::1]/", "http://[::1]/", "http://[::1]", "[::1]"),
+        ("http://[00::1]/", "http://[::1]/", "http://[::1]", "[::1]"),
+        ("https://[2001:0DB8:0000::0007]:8443", "https://[2001:db8::7]:8443/", "https://[2001:db8::7]:8443", "[2001:db8::7]"),
     ],
 )
 def test_canonicalize_keeps_ipv6_brackets(raw, canonical, key, host):
-    """An IPv6 literal keeps its brackets, as the url crate serializes it.
-    Without them the output ('http://::1:8080/a') is no fixed point, and
-    host_key / url_host of it read '', so every IPv6 host would share one
-    robots policy and one politeness window."""
+    """An IPv6 literal keeps its brackets and is compressed, as the url
+    crate serializes it, so '[0:0::1]', '[00::1]' and '[::1]' share one
+    host key and one dedup key. Without the brackets the output
+    ('http://::1:8080/a') is no fixed point, and host_key / url_host of it
+    read '', so every IPv6 host would share one robots policy and one
+    politeness window."""
     assert canonicalize_url(raw) == canonical
     assert canonicalize_url(canonical) == canonical
     assert host_key(canonical) == key

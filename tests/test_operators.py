@@ -58,7 +58,7 @@ def test_ann_lsh_is_subset_and_query_found(spark, emb):
 def test_ivf_topk_recall(spark, emb):
     rows = emb.limit(1).collect()
     q = list(rows[0]["embedding"])
-    assigned, centroids = similarity.ivf_build(emb, "vec_id", "embedding", n_cells=4, seed=42)
+    assigned, centroids = similarity.ivf_build(emb, "vec_id", "embedding", n_cells=4)
     out = similarity.ivf_probe(assigned, centroids, "vec_id", "embedding", q, k=5, nprobe=2).collect()
     assert len(out) >= 1
     # the query vector's own cell is always probed -> itself is recalled
@@ -216,9 +216,7 @@ def test_winnow_batch_parity_and_guarantee():
 
 def test_bigram_lm_scores_matches_python_reference(spark):
     """bigram_lm_scores == the closed-form add-one bigram estimator in
-    Python: self-model scores, the unseen-bigram/unseen-context smoothing
-    path against an external reference model, and the <2-token NULL
-    contract."""
+    Python: self-model scores and the <2-token NULL contract."""
     from collections import Counter
     from math import log
 
@@ -266,21 +264,6 @@ def test_bigram_lm_scores_matches_python_reference(spark):
         else:
             assert abs(got[did][1] - expect[did][1]) < 1e-9
     assert got[3] == (0, None) and got[4] == (0, None)
-
-    # external reference: doc 2's bigram ('b','a') exists in ref doc 1?
-    # ref = only "c d c" -> every scored bigram unseen, some contexts unseen
-    ref = spark.createDataFrame([(9, "c d c")], "doc_id long, text string")
-    expect2 = ref_scores(texts, ref_model(["c d c"]))
-    got2 = {
-        r["id"]: (r["n_bigrams"], r["avg_logprob"])
-        for r in bigram_lm_scores(docs, "doc_id", "text", ref=ref).collect()
-    }
-    for did in texts:
-        assert got2[did][0] == expect2[did][0]
-        if expect2[did][1] is None:
-            assert got2[did][1] is None
-        else:
-            assert abs(got2[did][1] - expect2[did][1]) < 1e-9
 
 
 def test_substring_dup_pairs_and_stop_fp_cap(spark):

@@ -341,6 +341,19 @@ def test_found_links_query_evaluates_link_udf_once(spark):
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
 
 
+def test_contamination_query_has_no_sort_merge_join(spark):
+    """The contamination query counts each document's benchmark-gram hits
+    in ONE aggregation over a left join to the broadcast gram set. A join
+    of the documents back to a per-id hit count planned as a SortMergeJoin
+    at the default thresholds: Spark estimates an aggregate over a join as
+    the product of its sides."""
+    import __spark_entry__ as entry
+
+    plan = plan_of(entry.queries()["contamination"](spark, SF_DIR))
+    assert "SortMergeJoin" not in plan, plan
+    assert "BroadcastHashJoin" in plan, plan
+
+
 def plan_nodes(plan, into_cache: bool):
     """Every physical node under `plan`, through AQE wrappers and reused
     exchanges; into a cached relation's plan only when `into_cache`."""

@@ -16,10 +16,10 @@ def _docs(spark):
 
 
 def _sample(docs, frac, salt=0):
-    # an empty strata map applies default_fraction to every row: the plain
-    # keyed Bernoulli sample
+    # the same fraction for every source: the plain keyed Bernoulli sample
+    sources = [r["source"] for r in docs.select("source").distinct().collect()]
     return sampling.stratified_sample(
-        docs, "doc_id", "source", fractions={}, default_fraction=frac, salt=salt
+        docs, "doc_id", "source", fractions={s: frac for s in sources}, salt=salt
     )
 
 
@@ -53,7 +53,7 @@ def test_stratified_sample_per_stratum_rule(spark):
         if zlib.crc32(f'{r["doc_id"]}:3'.encode()) < thr.get(r["source"], 0)
     )
     assert sorted(r["doc_id"] for r in out) == expect
-    # default_fraction=0 drops unlisted strata entirely
+    # unlisted strata are dropped entirely
     assert all(r["source"] in fr for r in out)
 
 

@@ -29,9 +29,6 @@ def test_read_seeds_csv_column_selection(spark, tmp_path):
     # case-insensitive header-name match (seeder.rs:27-39)
     out = read_seeds_csv(spark, str(p), column_name="websites").orderBy("seed_order").collect()
     assert [r["raw_url"] for r in out] == ["https://a.de/", "https://b.de/", "https://c.de/#frag"]
-    # explicit index
-    out2 = read_seeds_csv(spark, str(p), column_index=1).collect()
-    assert len(out2) == 3
     # unknown name falls back to first column
     out3 = read_seeds_csv(spark, str(p), column_name="nope").orderBy("seed_order").collect()
     assert [r["raw_url"] for r in out3] == ["1", "2", "3", "4"]

@@ -82,3 +82,30 @@ def test_reachability_sql_is_projection_of_bfs_sql(corpus):
     assert sorted((u, d, k, b, f) for _, u, d, k, b, f in bfs) == sorted(
         tuple(r) for r in reach
     )
+
+
+def test_vertical_tab_splits_tokens_in_spark_and_duckdb(spark, tmp_path):
+    """Java regex \\s includes \\x0b and RE2's \\s does not, so the oracle
+    SQL spells the class out (dedup.WS_CLASS): texts with vertical tabs
+    give the same token_count, repetition_stats and quality_score rows in
+    Spark and in DuckDB."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = ["a\x0bb c", "eins\x0bzwei\x0bdrei vier", "x \x0b y", "der text\x0b ist da."]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+        tmp_path / "documents.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    for name in ("token_count", "repetition_stats", "quality_score"):
+        sdf = entrymod.queries()[name](spark, str(tmp_path))
+        cols = sorted(sdf.columns)
+        got = sorted(tuple(r[c] for c in cols) for r in sdf.collect())
+        rel = con.sql(entrymod.oracle_sql()[name])
+        idx = [rel.columns.index(c) for c in cols]
+        expected = sorted(tuple(r[i] for i in idx) for r in rel.fetchall())
+        assert got == expected, name
