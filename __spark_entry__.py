@@ -446,11 +446,12 @@ def _q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_quality_topk_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranked curation: the top-3 documents per source by bigram-LM score
     (higher avg ln-prob = more reference-like text) — the 'keep the best N
-    per stratum' selection step of a curation recipe. Ranking runs on the
-    E6-ROUNDED score with doc_id tie-break: the rounded integers are the
-    hash-matched contract, so cross-engine ulp drift in the raw doubles
-    can never flip a rank. One window over a per-source partition — no
-    global sort."""
+    per stratum' selection step of a curation recipe. Only scored documents
+    rank: one with no bigram has no score and never fills a source's slots.
+    Ranking runs on the E6-ROUNDED score with doc_id tie-break: the rounded
+    integers are the hash-matched contract, so cross-engine ulp drift in
+    the raw doubles can never flip a rank. One window over a per-source
+    partition — no global sort."""
     from pyspark.sql import Window
 
     from crawler_german_localpoliticans_spark.operators.textstats import (
@@ -462,9 +463,10 @@ def _q_quality_topk_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         bigram_lm_scores(docs, "doc_id", "text")
         .join(docs.select(F.col("doc_id").alias("id"), "source"), "id")
         .select("id", "source", _e6(F.col("avg_logprob")).alias("avg_logprob_e6"))
+        .where(F.col("avg_logprob_e6").isNotNull())
     )
     w = Window.partitionBy("source").orderBy(
-        F.col("avg_logprob_e6").desc_nulls_last(), F.col("id").asc()
+        F.col("avg_logprob_e6").desc(), F.col("id").asc()
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -2312,10 +2314,10 @@ def oracle_sql() -> dict[str, str]:
                 SELECT t.source, t.doc_id, sc.avg_logprob_e6,
                        row_number() OVER (
                            PARTITION BY t.source
-                           ORDER BY sc.avg_logprob_e6 DESC NULLS LAST,
-                                    t.doc_id ASC
+                           ORDER BY sc.avg_logprob_e6 DESC, t.doc_id ASC
                        ) AS rk
                 FROM toks t LEFT JOIN sc USING (doc_id)
+                WHERE sc.avg_logprob_e6 IS NOT NULL
             )
             SELECT source, doc_id, CAST(rk AS INT) AS rk, avg_logprob_e6
             FROM ranked WHERE rk <= 3

@@ -50,10 +50,5 @@ class CrawlConfig:
     # only the wave's task balance changes; raise at 10^10 scale
     salt_buckets: int = 1
 
-    def effective_keywords(self) -> list[str]:
-        from .functions.keywords import effective_keywords
-
-        return effective_keywords(list(self.keywords))
-
 
 DEFAULT_CONFIG = CrawlConfig()

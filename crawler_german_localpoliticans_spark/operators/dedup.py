@@ -259,87 +259,40 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     is xxhash64 over the band's signature slice; the pair search is an
     equi-join on (band, band_hash) — never a cross join.
 
-    Degenerate-bucket cap (LSH_MAX_BUCKET): a hash-agg
-    finds the oversized buckets (map-side combine -> one row per bucket;
-    there are mathematically at most n_banded/LSH_MAX_BUCKET of them; the
-    list is persisted and counted, so the planner sees its true size and
-    spark.sql.autoBroadcastJoinThreshold chooses broadcast or shuffle for
-    the flagging join), and ONLY their rows pay a row_number
-    window; the first LSH_MAX_BUCKET members of each do the normal
-    all-pairs equi-join, and every overflow member contributes exactly one
-    pair (bucket-representative = min id, overflow id). NOTE the
-    connectivity guarantee is a property of the CANDIDATE graph: after a
-    similarity-thresholded verification (minhash_dedup_pairs), an
-    overflow member whose only true near-dups sit among the elided
-    head/overflow pairs keeps just its representative link, and if the
-    representative itself is below threshold the member survives
-    verification unpaired. In the mass-duplicate regime the cap targets
-    (one boilerplate text repeated), the representative IS the duplicate
-    (est_jaccard 1.0), so the kept link is the right one; mixed
-    adversarial buckets trade that tail recall for boundedness — raise
-    LSH_MAX_BUCKET if that tail matters. Measured trade-off
-    (sf0.1, interleaved min-of-5): this split costs ~1.0s over uncapped at
-    toy scale (three extra stages of fixed overhead; a rank-everything
-    window costs ~0.45s) — but the window variant SORTS the entire banded
-    table (16 rows/doc, ~1.6e11 rows at 1e10 docs) to police a cap that
-    almost never triggers, while the agg probe is map-side-combined and
-    the second pass is map-only; at cluster scale the sort is the
-    bottleneck, the fixed stages amortize to nothing. Work per bucket is
-    bounded at O(cap^2 + n) instead of O(n^2) and NO member is dropped —
-    each stays connected to its duplicate cluster via the representative;
-    what's elided are the redundant overflow-overflow/head-overflow pairs.
+    Degenerate-bucket cap (LSH_MAX_BUCKET): one window over (band, bh),
+    ordered by id, ranks every banded row. The first LSH_MAX_BUCKET members
+    of a bucket do the all-pairs self-join; every overflow member
+    contributes exactly one pair (bucket representative = min id, overflow
+    id). Work per bucket is O(cap^2 + n) instead of O(n^2) and NO member is
+    dropped. The window sorts the same (band, bh) partitioning the pair
+    join needs anyway: with the ranked table persisted, a SortMergeJoin
+    reads it with no exchange or sort of its own whenever the cache reports
+    its partitioning (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    false); with that flag true both join sides re-shuffle it. The persist
+    also keeps the banded table shuffled ONCE: it comes from a Generate, so
+    Spark does not reuse its exchange across the join's two sides and the
+    overflow branch (three shuffles without it).
+
+    The connectivity guarantee is a property of the CANDIDATE graph: after
+    a similarity-thresholded verification (minhash_dedup_pairs), an
+    overflow member whose only true near-dups sit among the elided pairs
+    keeps just its representative link, and if that is below threshold
+    the member survives unpaired. In the mass-duplicate regime the cap
+    targets (one boilerplate text repeated) the representative IS the
+    duplicate (est_jaccard 1.0); mixed adversarial buckets trade that tail
+    recall for boundedness — raise LSH_MAX_BUCKET if it matters.
     """
     from pyspark.sql.window import Window
 
-    # the banded table feeds the size probe, BOTH branches of the
-    # flagged split, and BOTH sides of the pair self-join — without a
-    # persist the explode+hash subtree (and its upstream signature read)
-    # re-executes once per consumer, up to 8x
-    # (measured: the candidate stage alone walled 14s at sf1.0 before,
-    # ~2s after). Same session-cache convention as sigs.persist in
-    # minhash_dedup_pairs: repeated same-input calls reuse the entry,
-    # bench/oracle runs clearCache between runs.
-    banded = banded_signatures(sigs).persist()
-
-    # Find the oversized buckets with one hash-agg, then rank ONLY
-    # their rows: a global row_number window would SORT the whole
-    # banded table (16 rows per doc) to police a cap that almost never
-    # triggers. The oversized-bucket list is mathematically tiny —
-    # each holds > LSH_MAX_BUCKET members, so there are at most
-    # n_banded / LSH_MAX_BUCKET of them.
-    sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("_bsz"))
-    oversized = (
-        sizes.where(F.col("_bsz") > LSH_MAX_BUCKET)
-        .select("band", "bh", F.lit(True).alias("_over"))
-        .persist()
-    )
-    # Materialize the oversized list before the join is planned: the
-    # > cap filter sits ABOVE the aggregation's exchange, so un-materialized
-    # its size estimate is the full bucket histogram and the join plans as
-    # a SortMergeJoin shuffling the whole banded table (stage receipt in
-    # BENCH/NOTES.md r6). Counted, the cache reports its true (near-zero)
-    # size and spark.sql.autoBroadcastJoinThreshold picks broadcast or
-    # shuffle; the count also fills the banded cache every branch reads.
-    #
-    # PERSIST the flagged table: it feeds FOUR branches (ok_part on
-    # both sides of the pair self-join, the ranked window, the
-    # overflow slice), and exchange reuse does not fire across them —
-    # measured at sf1.0 the un-materialized plan re-shuffled the full
-    # banded table ~10x (stage receipt in BENCH/NOTES.md r6).
-    oversized.count()
-    flagged = banded.join(oversized, ["band", "bh"], "left").persist()
-    ok_part = flagged.where(F.col("_over").isNull()).select("id", "band", "bh")
     w = Window.partitionBy("band", "bh").orderBy("id")
-    ranked = flagged.where(F.col("_over").isNotNull()).select(
+    ranked = banded_signatures(sigs).select(
         "id",
         "band",
         "bh",
         F.row_number().over(w).alias("rk"),
         F.first("id").over(w).alias("rep"),  # min id: window is id-ordered
-    )
-    head = ok_part.unionByName(
-        ranked.where(F.col("rk") <= LSH_MAX_BUCKET).select("id", "band", "bh")
-    )
+    ).persist()
+    head = ranked.where(F.col("rk") <= LSH_MAX_BUCKET)
     overflow_pairs = (
         ranked.where(F.col("rk") > LSH_MAX_BUCKET)
         .select(F.col("rep").alias("id_a"), F.col("id").alias("id_b"))

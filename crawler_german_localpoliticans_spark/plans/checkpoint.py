@@ -58,7 +58,9 @@ class CheckpointLog:
 
 
 def partition_lineage(table_round_dir: str) -> list[dict]:
-    """Per-file lineage from parquet footers (no Spark job needed)."""
+    """Per-file lineage from parquet footers (no Spark job needed). The
+    round has just written these files, so an unreadable footer is torn
+    state and raises."""
     import pyarrow.parquet as pq
 
     if not os.path.isdir(table_round_dir):
@@ -67,10 +69,6 @@ def partition_lineage(table_round_dir: str) -> list[dict]:
     for name in sorted(os.listdir(table_round_dir)):
         if not name.endswith(".parquet"):
             continue
-        f = os.path.join(table_round_dir, name)
-        try:
-            md = pq.ParquetFile(f).metadata
-            out.append({"file": name, "rows": md.num_rows})
-        except Exception:
-            out.append({"file": name, "rows": None})
+        md = pq.ParquetFile(os.path.join(table_round_dir, name)).metadata
+        out.append({"file": name, "rows": md.num_rows})
     return out

@@ -58,10 +58,6 @@ class OracleResult:
     url_seen: set[str] = field(default_factory=set)
     extracted: list[dict] = field(default_factory=list)
 
-    @property
-    def crawl_order(self) -> list[tuple[int, int, str]]:
-        return [(r.depth, r.seq, r.url) for r in self.fetched]
-
 
 def sorted_unique(links: list[str]) -> list[str]:
     """`sort(); dedup()` of src/main.rs:908-909 — lexicographic sorted-unique."""

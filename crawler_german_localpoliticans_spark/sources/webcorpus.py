@@ -107,14 +107,18 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str):
 
 def run_flagship_crawl(spark: SparkSession, sf_dir: str, max_depth: int = 2):
     """End-to-end flagship: derive the corpus, run the iterative crawl in a
-    fresh temp directory, return (tables, driver)."""
+    fresh temp directory, return (tables, driver). The directory lies under
+    the SparkContext's own root, which `stop()` deletes, so no run leaves
+    its state behind; the tables are only ever read within the session."""
     import tempfile
+
+    from pyspark import SparkFiles
 
     from ..config import CrawlConfig
     from ..plans.crawl import CrawlDriver
 
     pages, seeds, robots = corpus_from_documents(spark, sf_dir)
-    work_dir = tempfile.mkdtemp(prefix="crawl_flagship_")
+    work_dir = tempfile.mkdtemp(prefix="crawl_flagship_", dir=SparkFiles.getRootDirectory())
     pages_path = f"{work_dir}/pages_input"
     pages.write.mode("overwrite").parquet(pages_path)
     config = CrawlConfig(max_depth=max_depth, seen_partitions=32)

@@ -10,6 +10,7 @@ from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle
 from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
 from crawler_german_localpoliticans_spark.sources.tables import read_robots
+from oracle_reference import crawl_order
 
 
 def run_both(spark, tmp_path, seeds, pages, robots, config):
@@ -31,7 +32,7 @@ def run_both(spark, tmp_path, seeds, pages, robots, config):
         (r["depth"], r["seq"], r["url"])
         for r in tables.fetched.select("depth", "seq", "url").orderBy("seq").collect()
     ]
-    assert engine_order == oracle_res.crawl_order
+    assert engine_order == crawl_order(oracle_res)
     assert {r["url"] for r in tables.url_seen.select("url").collect()} == oracle_res.url_seen
     return tables
 

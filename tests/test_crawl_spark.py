@@ -9,6 +9,7 @@ from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle
 from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
+from oracle_reference import crawl_order
 
 
 def run_engine(spark, fixture_dir, tmp_path, config):
@@ -28,7 +29,7 @@ def assert_exact_match(tables, oracle_res):
         (r["depth"], r["seq"], r["url"])
         for r in tables.fetched.select("depth", "seq", "url").orderBy("seq").collect()
     ]
-    assert engine_order == oracle_res.crawl_order
+    assert engine_order == crawl_order(oracle_res)
 
     # per-page payloads exact: found_links, flags
     engine_rows = {
@@ -113,3 +114,22 @@ def test_metrics_recorded(spark, smoke_dir, tmp_path):
         assert m["scheduled"] > 0
         assert "lineage" in m and "politeness" in m
         assert m["wall_s"] >= 0
+
+
+def test_flagship_crawl_state_lives_under_the_spark_root(spark):
+    """The flagship crawl's work dir lies under SparkFiles' root directory,
+    which SparkContext.stop() deletes: a session leaves no crawl state in
+    the system temp dir."""
+    import os
+
+    from pyspark import SparkFiles
+
+    from crawler_german_localpoliticans_spark.sources.webcorpus import run_flagship_crawl
+
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    tables, _ = run_flagship_crawl(spark, "/root/testdata/sf0.001", max_depth=1)
+    files = [f for t in (tables.fetched, tables.extracted, tables.frontier) for f in t.inputFiles()]
+    assert files
+    for f in files:
+        path = os.path.realpath(f.removeprefix("file:"))
+        assert os.path.commonpath([root, path]) == root, (root, f)

@@ -2,8 +2,11 @@
 
 Reachability: a top-level `def`, `class` or assignment in the package is
 reached when its name is used as an identifier (a name, an attribute or an
-imported name) in an entry point or in another reached definition. A mention
-in a docstring, a comment or a string does not count.
+imported name) in an entry point or in another reached definition. A method
+of a package class whose bases are all package classes is reached when its
+name is used as an attribute there (a subclass of an outside class keeps
+its methods, which the outside code may call). A mention in a docstring, a
+comment or a string does not count.
 
 Options: every defaulted parameter of a package function or method is passed
 by some call in an entry point or in the package. A parameter that no caller
@@ -46,20 +49,46 @@ def _defined_names(stmt: ast.stmt) -> list[str]:
     return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
 
 
+def _attributes(nodes: list[ast.AST]) -> set[str]:
+    return {n.attr for node in nodes for n in ast.walk(node) if isinstance(n, ast.Attribute)}
+
+
+def _dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
 def test_every_package_definition_is_reachable_from_an_entry_point():
-    reached = {w for path in ENTRY_POINTS for w in _identifiers(ast.parse(path.read_text()))}
-    pending: dict[tuple[str, str], set[str]] = {}
-    for path in sorted(PACKAGE.rglob("*.py")):
-        for stmt in ast.parse(path.read_text()).body:
-            used = _identifiers(stmt)
-            names = [n for n in _defined_names(stmt) if not (n.startswith("__") and n.endswith("__"))]
+    entry_trees = [ast.parse(path.read_text()) for path in ENTRY_POINTS]
+    reached = {w for tree in entry_trees for w in _identifiers(tree)}
+    reached_attrs = _attributes(entry_trees)
+    modules = {str(path.relative_to(PACKAGE)): ast.parse(path.read_text())
+               for path in sorted(PACKAGE.rglob("*.py"))}
+    classes = {s.name for tree in modules.values() for s in tree.body if isinstance(s, ast.ClassDef)}
+    # (module, definition) -> (name, reached by an attribute use only, the nodes it uses)
+    pending: dict[tuple[str, str], tuple[str, bool, list[ast.AST]]] = {}
+    for mod, tree in modules.items():
+        for stmt in tree.body:
+            body: list[ast.AST] = [stmt]
+            if isinstance(stmt, ast.ClassDef) and all(
+                isinstance(b, ast.Name) and b.id in classes for b in stmt.bases
+            ):
+                methods = [m for m in stmt.body if isinstance(m, _FUNCS) and not _dunder(m.name)]
+                for m in methods:
+                    pending[(mod, f"{stmt.name}.{m.name}")] = (m.name, True, [m])
+                body = [*stmt.bases, *stmt.keywords, *stmt.decorator_list,
+                        *(s for s in stmt.body if s not in methods)]
+            names = [n for n in _defined_names(stmt) if not _dunder(n)]
             for name in names:
-                pending[(str(path.relative_to(PACKAGE)), name)] = used - {name}
+                pending[(mod, name)] = (name, False, body)
             if not names and not isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                reached |= used  # module-level code runs on import
-    while hit := [key for key in pending if key[1] in reached]:
+                reached |= _identifiers(stmt)  # module-level code runs on import
+                reached_attrs |= _attributes([stmt])
+    while hit := [key for key, (name, by_attr, _) in pending.items()
+                  if name in (reached_attrs if by_attr else reached)]:
         for key in hit:
-            reached |= pending.pop(key)
+            body = pending.pop(key)[2]
+            reached |= {w for node in body for w in _identifiers(node)}
+            reached_attrs |= _attributes(body)
     unreached = [f"{mod}: {name}" for mod, name in sorted(pending)]
     assert not unreached, "package definitions no entry point reaches:\n  " + "\n  ".join(unreached)
 

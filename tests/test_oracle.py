@@ -7,6 +7,7 @@ import pytest
 
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle, page_found_links
+from oracle_reference import crawl_order
 
 
 def cfg(**kw):
@@ -26,7 +27,7 @@ def test_bfs_order_fifo_within_depth():
         "https://b.de/z": "",
     }
     res = crawl_oracle(["https://a.de/", "https://b.de/"], pages, {}, cfg(max_depth=1))
-    assert res.crawl_order == [
+    assert crawl_order(res) == [
         (0, 0, "https://a.de/"),
         (0, 1, "https://b.de/"),
         (1, 2, "https://a.de/x"),
@@ -147,6 +148,6 @@ def test_smoke_fixture_runs(smoke_fixture):
 def test_oracle_deterministic(smoke_fixture):
     r1 = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots)
     r2 = crawl_oracle(smoke_fixture.seeds, smoke_fixture.pages, smoke_fixture.robots)
-    assert r1.crawl_order == r2.crawl_order
+    assert crawl_order(r1) == crawl_order(r2)
     assert r1.url_seen == r2.url_seen
     assert r1.extracted == r2.extracted

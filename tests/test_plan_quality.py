@@ -209,11 +209,12 @@ def test_robots_policies_join_scales_past_broadcast(spark):
         assert delay == (2000 if expect_blocked else None), (id_, delay)
 
 
-def test_lsh_flagging_join_is_sized_by_spark(spark):
-    """lsh_candidate_pairs materializes its oversized-bucket list before the
-    (band, bh) flagging join is planned, and gives no hint: at the default
-    thresholds the join broadcasts the near-empty list; with auto-broadcast
-    off it plans a shuffle join. Same pairs either way."""
+def test_lsh_pair_join_reads_the_cached_window_unshuffled(spark):
+    """lsh_candidate_pairs shuffles the banded table ONCE, into the persisted
+    (band, bh) window, and the pair SortMergeJoin reads that cache with no
+    exchange of its own while the cache reports its partitioning
+    (canChangeCachedPlanOutputPartitioning false, the session default).
+    Same pairs as at the default broadcast thresholds."""
     from crawler_german_localpoliticans_spark.operators import dedup
 
     docs = spark.range(60).select(
@@ -221,17 +222,20 @@ def test_lsh_flagging_join_is_sized_by_spark(spark):
         F.concat(F.lit("rathaus sitzung nummer "), (F.col("id") % 20).cast("string"),
                  F.lit(" der stadt")).alias("text"),
     )
-    flag_join = re.compile(r"(\w*Join\w*) \[band#\d+, bh#\d+L\], \[band#\d+, bh#\d+L\], LeftOuter")
-    thresholds = (
+    band_exchange = re.compile(r"^Exchange hashpartitioning\(band#\d+, bh#\d+L, ")
+    keys = (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
     )
-    saved = {k: spark.conf.get(k, None) for k in thresholds}
+    saved = {k: spark.conf.get(k, None) for k in keys}
     results = []
     try:
+        # the crawl driver sets the flag true on the shared session
+        spark.conf.set(keys[2], "false")
         for broadcast_off in (False, True):
-            spark.catalog.clearCache()  # the flagged table caches its plan
-            for k in thresholds:
+            spark.catalog.clearCache()
+            for k in keys[:2]:
                 if broadcast_off:
                     spark.conf.set(k, "-1")
                 elif saved[k] is None:
@@ -240,13 +244,17 @@ def test_lsh_flagging_join_is_sized_by_spark(spark):
                     spark.conf.set(k, saved[k])
             sigs = dedup.minhash_signatures_arrow(docs, "doc_id", "text")
             pairs = dedup.lsh_candidate_pairs(sigs)
-            joins = flag_join.findall(plan_of(pairs))
-            assert joins, plan_of(pairs)
-            if broadcast_off:
-                assert all(j in ("SortMergeJoin", "ShuffledHashJoin") for j in joins), joins
-            else:
-                assert all(j == "BroadcastHashJoin" for j in joins), joins
             results.append(sorted((r["id_a"], r["id_b"]) for r in pairs.collect()))
+        plan = pairs._jdf.queryExecution().executedPlan()
+        # the three cache scans walk one cached plan: count its exchange once
+        nodes = {n.simpleString(100) for n in plan_nodes(plan, True)}
+        band = {n for n in nodes if band_exchange.match(n)}
+        assert len(band) == 1, band
+        joins = [n for n in plan_nodes(plan, False) if n.nodeName() == "SortMergeJoin"]
+        assert len(joins) == 1, plan_of(pairs)
+        below = [n.nodeName() for n in plan_nodes(joins[0], False)]
+        assert "InMemoryTableScan" in below, below
+        assert not {"Exchange", "Sort"} & set(below), below
     finally:
         for k, v in saved.items():
             if v is None:

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.politeness import schedule_wave
+from oracle_reference import crawl_order
 
 
 def wave_df(spark, n_a=10, n_b=3):
@@ -80,7 +81,7 @@ def test_salting_does_not_change_crawl_results(spark, smoke_fixture, smoke_dir, 
         (r["depth"], r["seq"], r["url"])
         for r in tables.fetched.select("depth", "seq", "url").orderBy("seq").collect()
     ]
-    assert engine_order == oracle_res.crawl_order
+    assert engine_order == crawl_order(oracle_res)
     assert {r["url"] for r in tables.url_seen.select("url").collect()} == oracle_res.url_seen
 
 

@@ -8,6 +8,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from crawler_german_localpoliticans_spark.config import CrawlConfig
 from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
 from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
@@ -68,3 +70,24 @@ def test_kill_after_round0_resume_exact(spark, smoke_dir, tmp_path):
         entries = [json.loads(line) for line in f]
     assert [e["round"] for e in entries] == list(range(config.max_depth + 1))
     assert all("lineage" in e for e in entries)
+
+
+def test_lineage_of_a_torn_round_file_raises(tmp_path):
+    """A round dir whose part file has a torn footer is corrupt state: the
+    lineage read raises instead of recording rows None. A missing dir (the
+    last round's frontier_next) is no lineage, not an error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crawler_german_localpoliticans_spark.plans.checkpoint import partition_lineage
+
+    round_dir = tmp_path / "round=0"
+    round_dir.mkdir()
+    part = round_dir / "part-0.parquet"
+    pq.write_table(pa.table({"url": ["https://a.example/"]}), part)
+    assert partition_lineage(str(round_dir)) == [{"file": "part-0.parquet", "rows": 1}]
+
+    part.write_bytes(part.read_bytes()[:-12])
+    with pytest.raises(pa.ArrowInvalid):
+        partition_lineage(str(round_dir))
+    assert partition_lineage(str(tmp_path / "round=1")) == []

@@ -16,6 +16,7 @@ from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle
 from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
 from crawler_german_localpoliticans_spark.sources.tables import read_robots
+from oracle_reference import crawl_order
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("SPARK_SLOW_TESTS") != "1",
@@ -52,7 +53,7 @@ def test_stress_profile_exact_match(spark, tmp_path):
         (r["depth"], r["seq"], r["url"])
         for r in tables.fetched.select("depth", "seq", "url").orderBy("seq").collect()
     ]
-    assert engine_order == oracle_res.crawl_order
+    assert engine_order == crawl_order(oracle_res)
     engine_seen = {r["url"] for r in tables.url_seen.select("url").collect()}
     assert engine_seen == oracle_res.url_seen
     # hot host actually got the skewed traffic

@@ -109,3 +109,43 @@ def test_vertical_tab_splits_tokens_in_spark_and_duckdb(spark, tmp_path):
         idx = [rel.columns.index(c) for c in cols]
         expected = sorted(tuple(r[i] for i in idx) for r in rel.fetchall())
         assert got == expected, name
+
+
+def test_quality_topk_ranks_only_scored_documents(spark, tmp_path):
+    """A source with fewer than 3 scored documents keeps only those: a
+    1-token document has no bigram, hence no score, and never takes a
+    top-3 slot. Spark and DuckDB give the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = [
+        (0, "a", "der rat tagt heute im rathaus"),
+        (1, "a", "der rat tagt morgen"),
+        (2, "a", "rathaus"),
+        (3, "b", "die stadt hat einen rat"),
+        (4, "b", "der rat der stadt tagt"),
+        (5, "b", "heute tagt die stadt"),
+        (6, "b", "im rathaus tagt der rat"),
+    ]
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([d for d, _, _ in docs], pa.int64()),
+            "source": [s for _, s, _ in docs],
+            "text": [t for _, _, t in docs],
+        }),
+        tmp_path / "documents.parquet",
+    )
+    sdf = entrymod.queries()["quality_topk_per_source"](spark, str(tmp_path))
+    cols = ["source", "doc_id", "rk", "avg_logprob_e6"]
+    got = sorted(tuple(r[c] for c in cols) for r in sdf.collect())
+    assert sorted(d for s, d, _, _ in got if s == "a") == [0, 1], got
+    assert sorted(rk for s, _, rk, _ in got if s == "b") == [1, 2, 3], got
+    assert all(score is not None for *_, score in got), got
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    rel = con.sql(entrymod.oracle_sql()["quality_topk_per_source"])
+    idx = [rel.columns.index(c) for c in cols]
+    assert got == sorted(tuple(r[i] for i in idx) for r in rel.fetchall())
