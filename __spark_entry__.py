@@ -78,10 +78,14 @@ def _session_memo(spark: SparkSession, name: str, key: tuple, build):
     and repeated runs in one session. The session part of the key is the
     Spark applicationId — unique per SparkContext lifetime, unlike id(spark),
     which a GC'd session's successor can in principle reuse (round-2 verdict
-    nit) — so a cached DataFrame never outlives the session that created
-    it."""
-    memo_key = (name, spark.sparkContext.applicationId, *key)
+    nit). An insert drops every other session's entries, so the memo holds
+    cached DataFrames of one session at most: a stopped session's tables
+    go at the next session's first build."""
+    app = spark.sparkContext.applicationId
+    memo_key = (name, app, *key)
     if memo_key not in _SESSION_MEMO:
+        for stale in [k for k in _SESSION_MEMO if k[1] != app]:
+            del _SESSION_MEMO[stale]
         _SESSION_MEMO[memo_key] = build()
     return _SESSION_MEMO[memo_key]
 
@@ -772,7 +776,6 @@ def _q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exercises the flagship robots path: policies parsed on executors as a
     DataFrame, picked up via Spark's size-based host_key join (never a driver
     dict), longest-prefix match as Column expressions."""
-    from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.functions import udfs
     from crawler_german_localpoliticans_spark.plans.crawl import (
         evaluate_robots,
@@ -781,7 +784,7 @@ def _q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crawler_german_localpoliticans_spark.sources.webcorpus import corpus_from_documents
 
     pages, _, robots = corpus_from_documents(spark, sf_dir)
-    policies = parse_policies_df(robots, DEFAULT_CONFIG)
+    policies = parse_policies_df(robots)
     out = evaluate_robots(
         pages.select("url", udfs.host_key_col(F.col("url")).alias("host_key")),
         policies,
@@ -977,6 +980,7 @@ def _q_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle from the same modular arithmetic."""
     from crawler_german_localpoliticans_spark.config import CrawlConfig
     from crawler_german_localpoliticans_spark.functions import udfs
+    from crawler_german_localpoliticans_spark.functions.keywords import DEFAULT_KEYWORDS
     from crawler_german_localpoliticans_spark.plans.crawl import (
         evaluate_robots,
         parse_policies_df,
@@ -991,9 +995,9 @@ def _q_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         udfs.url_host_col(F.col("url")).alias("host"),
         udfs.host_key_col(F.col("url")).alias("host_key"),
         F.regexp_extract("url", r"/seite/(\d+)", 1).cast("long").alias("seq"),
-        udfs.keyword_hit_col(F.col("url"), cfg.keywords).alias("keyword_hit"),
+        udfs.keyword_hit_col(F.col("url"), DEFAULT_KEYWORDS).alias("keyword_hit"),
     )
-    wave = evaluate_robots(wave, parse_policies_df(robots, cfg))
+    wave = evaluate_robots(wave, parse_policies_df(robots))
     out = schedule_wave(wave, cfg)
     return out.select(
         "url",

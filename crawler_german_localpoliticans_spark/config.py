@@ -1,11 +1,13 @@
 """Crawl configuration, mirroring the reference's worker_config.toml.
 
 reference: worker_config.toml (max_depth=2 :17, politeness_delay_ms=2000 :21,
-concurrent_tasks=4 :24, keywords :28-35), src/main.rs:47 (user agent),
-:615-617 (SAVE_ALL_HTML override).
+concurrent_tasks=4 :24). The keyword list (:28-35) and the user agent
+(src/main.rs:47) are no options here: no entry point sets them, so the
+crawl reads `DEFAULT_KEYWORDS` / `DEFAULT_USER_AGENT`, and the reference's
+SAVE_ALL_HTML override (src/main.rs:615-617) is not modeled.
 
-Scale knobs (bloom sizing, url_seen partition count, per-wave slice budget,
-hot-host salting) are ours: they size the one crawl path from the sf fixtures
+Scale knobs (url_seen partition count, per-wave slice budget, hot-host
+salting) are ours: they size the one crawl path from the sf fixtures
 up to the 10^10-URL posture demanded by BASELINE.json. None of them selects a
 second code path: the bloom prefilter always runs and every wave is fetched and
 written as one batch. Sizes Spark can take from the cluster or the data are
@@ -16,9 +18,7 @@ join strategy is Spark's size-based join selection.
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from .functions.keywords import DEFAULT_KEYWORDS
-from .functions.robots import DEFAULT_USER_AGENT
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
@@ -26,16 +26,16 @@ class CrawlConfig:
     # reference semantics
     max_depth: int = 2
     politeness_delay_ms: int = 2000
-    keywords: tuple[str, ...] = DEFAULT_KEYWORDS
-    user_agent: str = DEFAULT_USER_AGENT
-    save_all_html: bool = False
 
     # engine/scale knobs
     # partitions of the url_seen table / bloom sidecar; at 1e10 URLs raise to
     # O(10k) so each partition's filter (~1.2 GB total at 1% FPR) stays small
     seen_partitions: int = 32
-    bloom_capacity_per_partition: int = 1 << 17
-    bloom_fpp: float = 0.01
+    # bloom sizing: class constants, not fields, so no caller can set them;
+    # they stay readable off an instance for callers that pass them on to
+    # BloomSidecar (the filter will be sized from the data instead)
+    bloom_capacity_per_partition: ClassVar[int] = 1 << 17
+    bloom_fpp: ClassVar[float] = 0.01
     # politeness wave-slicing, the per-host rate cap: when >0, each BFS depth
     # wave's schedule is cut into slices of max(1, floor(slice_budget_ms /
     # effective_delay_ms)) pages per host (reported as politeness.slices); the

@@ -5,9 +5,8 @@ single-threaded oracle and the Spark engine, entirely from a fixed seed — no
 external data, no network (BASELINE input_hint: synthesize the input table
 shape `pages(url, warc_ts, html, text, lang)` deterministically).
 
-Profiles mirror FIXTURES.md: smoke (5 hosts × 8 pages), correctness
-(50 × 40), bench (500 × 2000 — for smaller runs pass a FixtureProfile
-with fewer pages_per_host). Link targets deliberately exercise
+A FixtureProfile sizes the graph (FIXTURES.md); the tests' profiles live in
+tests/fixture_profiles.py. Link targets deliberately exercise
 canonicalization edge cases: explicit :80/:443 ports, fragments, relative
 hrefs, uppercase hosts, mailto:/javascript: schemes, duplicate links, dead
 links, dot segments.
@@ -23,6 +22,10 @@ KEYWORD_SLUGS = ["gemeinderat", "stadtrat", "buergermeister-rathaus", "landrat",
 # "Bürgermeister" (ascii-substring match) — the slug includes "rathaus" so the
 # page still gates; this asymmetry is intentional coverage for F4 semantics.
 
+CROSS_HOST_FRACTION = 0.3  # share of links that may leave their host
+KEYWORD_FRACTION = 0.25  # share of page paths carrying a keyword slug
+SCRIPT_FRACTION = 0.5  # share of pages with <script> blocks
+
 
 @dataclass(frozen=True)
 class FixtureProfile:
@@ -30,36 +33,10 @@ class FixtureProfile:
     hosts: int
     pages_per_host: int
     max_links: int  # links/page ~ uniform 2..max_links
-    cross_host_fraction: float = 0.3
     hot_host_factor: int = 1  # in-link multiplier for host 0
-    keyword_fraction: float = 0.25
-    script_fraction: float = 0.5
     robots_disallow_hosts: int = 1
     robots_delay_hosts: int = 1
     seed: int = 42
-
-
-SMOKE = FixtureProfile("smoke", hosts=5, pages_per_host=8, max_links=6, hot_host_factor=1)
-CORRECTNESS = FixtureProfile(
-    "correctness",
-    hosts=50,
-    pages_per_host=40,
-    max_links=12,
-    hot_host_factor=10,
-    robots_disallow_hosts=10,
-    robots_delay_hosts=5,
-)
-BENCH = FixtureProfile(
-    "bench",
-    hosts=500,
-    pages_per_host=2000,
-    max_links=20,
-    hot_host_factor=100,
-    robots_disallow_hosts=100,
-    robots_delay_hosts=50,
-)
-
-PROFILES = {p.name: p for p in (SMOKE, CORRECTNESS, BENCH)}
 
 
 @dataclass
@@ -76,8 +53,8 @@ def _host(i: int) -> str:
     return f"host{i:04d}.example.de"
 
 
-def _page_path(rng: random.Random, j: int, keyword_fraction: float) -> str:
-    if rng.random() < keyword_fraction:
+def _page_path(rng: random.Random, j: int) -> str:
+    if rng.random() < KEYWORD_FRACTION:
         slug = rng.choice(KEYWORD_SLUGS)
         return f"/seite/{j}-{slug}"
     return f"/seite/{j}"
@@ -87,16 +64,14 @@ def _page_url(i: int, path: str) -> str:
     return f"https://{_host(i)}{path}"
 
 
-def generate(profile: FixtureProfile | str = SMOKE) -> WebFixture:
-    if isinstance(profile, str):
-        profile = PROFILES[profile]
+def generate(profile: FixtureProfile) -> WebFixture:
     rng = random.Random(f"{profile.name}-{profile.seed}")
 
     # --- page URL universe -------------------------------------------------
     paths: dict[int, list[str]] = {}
     urls: dict[int, list[str]] = {}
     for i in range(profile.hosts):
-        host_paths = [_page_path(rng, j, profile.keyword_fraction) for j in range(profile.pages_per_host)]
+        host_paths = [_page_path(rng, j) for j in range(profile.pages_per_host)]
         paths[i] = host_paths
         urls[i] = [_page_url(i, p) for p in host_paths]
 
@@ -105,7 +80,7 @@ def generate(profile: FixtureProfile | str = SMOKE) -> WebFixture:
 
     # --- links -------------------------------------------------------------
     def random_target(src_host: int) -> tuple[int, int]:
-        if profile.hosts > 1 and rng.random() < profile.cross_host_fraction:
+        if profile.hosts > 1 and rng.random() < CROSS_HOST_FRACTION:
             tgt_host = rng.choices(range(profile.hosts), weights=host_weights, k=1)[0]
         else:
             tgt_host = src_host
@@ -159,7 +134,7 @@ def generate(profile: FixtureProfile | str = SMOKE) -> WebFixture:
                 hrefs.append("javascript:void(0)")
 
             scripts = ""
-            if rng.random() < profile.script_fraction:
+            if rng.random() < SCRIPT_FRACTION:
                 for _ in range(rng.randint(1, 3)):
                     scripts += f"<script>var x_{rng.randrange(100)} = {rng.randrange(1000)};</script>"
             anchors = "".join(

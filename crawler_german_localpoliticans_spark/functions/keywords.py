@@ -3,11 +3,11 @@
 reference: src/main.rs:446-462 `matches_keywords`; configured keywords
 worker_config.toml:28-35. Case-insensitive substring match of any trimmed,
 non-empty keyword against the *full URL string*; an empty keyword list never
-matches; the SAVE_ALL_HTML override (src/main.rs:615-617,824) is modeled as
-`save_all=True`.
+matches. The crawl passes `DEFAULT_KEYWORDS`; the reference's SAVE_ALL_HTML
+override (src/main.rs:615-617,824) is not modeled.
 
 On the Spark side this is a pure Column expression (no UDF): see
-operators/textstats.py / plans/crawl.py `keyword_hit_col`.
+functions/udfs.py `keyword_hit_col`.
 """
 
 from __future__ import annotations
@@ -38,9 +38,7 @@ def effective_keywords(keywords: list[str] | tuple[str, ...]) -> list[str]:
     return out
 
 
-def matches_keywords(url: str, keywords: list[str] | tuple[str, ...], *, save_all: bool = False) -> bool:
-    if save_all:
-        return True
+def matches_keywords(url: str, keywords: list[str] | tuple[str, ...]) -> bool:
     needles = effective_keywords(keywords)
     if not needles:
         return False

@@ -59,7 +59,7 @@ class _Group:
         return bool(self.allow or self.disallow or self.delay_ms is not None)
 
 
-def parse_robots(text: str, ua: str = DEFAULT_USER_AGENT) -> RobotsPolicy:
+def parse_robots(text: str, ua: str) -> RobotsPolicy:
     """reference: src/main.rs:187-271, quirks preserved exactly."""
     groups: list[_Group] = []
     cur = _Group()

@@ -113,15 +113,13 @@ def normalize_ingest(urls: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(cols)
 
 
-def keyword_hit_col(url_col: Column, keywords: list[str] | tuple[str, ...], save_all: bool = False) -> Column:
+def keyword_hit_col(url_col: Column, keywords: list[str] | tuple[str, ...]) -> Column:
     """F4 as a pure Column expression (whole-stage-codegen'd, no UDF).
 
     Canonical URLs are ASCII (non-ASCII is percent-encoded at
     canonicalization), so JVM `lower` equals the reference's
     ascii-lowercase on this domain (src/main.rs:446-462).
     """
-    if save_all:
-        return F.lit(True)
     needles = effective_keywords(list(keywords))
     if not needles:
         return F.lit(False)

@@ -8,9 +8,11 @@ fast path, per the north rule: "partitioned bloom/cuckoo-filter URL-seen
 structure keyed by canonicalized URL hash".
 
 Design (scale posture first):
-- `url_seen` rows carry (h1, h2, part) where h1 = xxhash64(url),
+- Rows entering the filter (the crawl's seeds and deduped children, see
+  `with_hashes`) carry (h1, h2, part) where h1 = xxhash64(url),
   h2 = xxhash64(url, GOLDEN_GAMMA) — both computed JVM-side — and
-  part = pmod(h1, P). One bloom bitset per part.
+  part = pmod(h1, P). One bloom bitset per part. The `url_seen` table
+  itself holds only the url.
 - Bitsets live as one .npy file per partition under
   `<root>/bloom/v=K/part-N.npy`, versioned per insertion event (round).
   Executors read ONLY their group's file inside `applyInPandas` — no

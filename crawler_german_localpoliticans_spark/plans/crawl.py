@@ -66,7 +66,8 @@ from pyspark.sql import types as T
 
 from ..config import CrawlConfig, DEFAULT_CONFIG
 from ..functions import udfs
-from ..functions.robots import parse_robots
+from ..functions.keywords import DEFAULT_KEYWORDS
+from ..functions.robots import DEFAULT_USER_AGENT, parse_robots
 from ..sources import tables as tbl
 from .bloom import BloomSidecar, with_hashes
 from .checkpoint import CheckpointLog, partition_lineage
@@ -92,7 +93,7 @@ POLICY_SCHEMA = T.StructType(
 )
 
 
-def parse_policies_df(robots_df: DataFrame, config: CrawlConfig) -> DataFrame:
+def parse_policies_df(robots_df: DataFrame) -> DataFrame:
     """robots table -> policies(host_key, allow, disallow, crawl_delay_ms).
 
     X3 (src/main.rs:187-271) runs on executors as a pandas UDF over the
@@ -101,13 +102,12 @@ def parse_policies_df(robots_df: DataFrame, config: CrawlConfig) -> DataFrame:
     verdict's flagship-path scale flag). Hosts without a row get the empty
     allow-all policy via the left join in `evaluate_robots`
     (src/main.rs:138-141)."""
-    ua = config.user_agent
 
     @F.pandas_udf(POLICY_SCHEMA)
     def parse(txts: pd.Series) -> pd.DataFrame:
         allow, disallow, delay = [], [], []
         for txt in txts:
-            p = parse_robots(txt or "", ua)
+            p = parse_robots(txt or "", DEFAULT_USER_AGENT)
             allow.append(p.allow)
             disallow.append(p.disallow)
             delay.append(p.crawl_delay_ms)
@@ -178,8 +178,9 @@ class CrawlDriver:
             work_dir, config.seen_partitions, config.bloom_capacity_per_partition, config.bloom_fpp
         )
         self.pages_path = pages_path
-        # the pages corpus is read once and cached across rounds (at 100 TB
-        # scale: a bucketed-by-url Iceberg table instead of a cache).
+        # the pages corpus is read once and cached across the rounds of a
+        # run (at 100 TB scale: a bucketed-by-url Iceberg table instead of a
+        # cache).
         # NOTE (r6): caching it pre-hash-partitioned by url (to let the
         # per-round join skip the pages-side exchange, guide §2.4) was
         # tried and measured SLOWER at sandbox scale — the wave join
@@ -188,11 +189,11 @@ class CrawlDriver:
         # payload is pure cost (receipt in BENCH/NOTES.md r6). At cluster
         # scale, where BOTH sides are big, url-bucketed storage is still
         # the right layout, as documented in the module header.
-        self.pages = tbl.read_pages(spark, pages_path).persist()
+        self.pages = tbl.read_pages(spark, pages_path)
         # robots policies stay a DataFrame (parsed once on executors, reused
         # every round via persist); Spark picks the join strategy from its
         # own size estimate, so no driver-side count is taken
-        self.policies_df = parse_policies_df(robots_df, config).persist()
+        self.policies_df = parse_policies_df(robots_df)
 
     # ---------------------------------------------------------------- enqueue
     def _enqueue(
@@ -244,10 +245,10 @@ class CrawlDriver:
         #    gate (pure Column expr), politeness schedule (host partitions,
         #    priority order, per-host slots + slices)
         frontier = evaluate_robots(
-            cat.read_round("frontier", r, tbl.FRONTIER_SCHEMA), self.policies_df
+            cat.read_rounds("frontier", [r], tbl.FRONTIER_SCHEMA), self.policies_df
         ).withColumn(
             "keyword_hit",
-            udfs.keyword_hit_col(F.col("url"), cfg.keywords, cfg.save_all_html),
+            udfs.keyword_hit_col(F.col("url"), DEFAULT_KEYWORDS),
         )
         # blocked rows ride the same scan/window (they sort last per host and
         # get null schedule columns) — a split+union here would scan the
@@ -416,7 +417,18 @@ class CrawlDriver:
     # ------------------------------------------------------------------ run
     def run(self, seeds_df: DataFrame | None = None, resume: bool = False) -> CrawlTables:
         """Run (or resume) the crawl to max_depth. `seeds_df` needs columns
-        (raw_url, seed_order) — see sources/seeds.py."""
+        (raw_url, seed_order) — see sources/seeds.py. The pages and policies
+        caches live for this call only: the returned tables read the round
+        dirs, not them."""
+        self.pages.persist()
+        self.policies_df.persist()
+        try:
+            return self._run(seeds_df, resume)
+        finally:
+            self.pages.unpersist()
+            self.policies_df.unpersist()
+
+    def _run(self, seeds_df: DataFrame | None, resume: bool) -> CrawlTables:
         cfg = self.config
         cat = self.catalog
 
@@ -475,9 +487,7 @@ class CrawlDriver:
         )
         # url_seen == distinct frontier urls (D2 invariant); materialized as a
         # view over the frontier rounds rather than a second table
-        url_seen = with_hashes(
-            frontier.select("url").distinct(), "url", self.config.seen_partitions
-        ).select("url", "h1", "h2", "part")
+        url_seen = frontier.select("url").distinct()
         return CrawlTables(
             fetched=self.catalog.read_rounds("fetched", rounds, tbl.FETCHED_SCHEMA),
             url_seen=url_seen,

@@ -28,8 +28,8 @@ from dataclasses import dataclass, field
 
 from ..config import CrawlConfig, DEFAULT_CONFIG
 from ..functions.html import clean_and_extract, extract_links
-from ..functions.keywords import matches_keywords
-from ..functions.robots import RobotsPolicy, parse_robots
+from ..functions.keywords import DEFAULT_KEYWORDS, matches_keywords
+from ..functions.robots import DEFAULT_USER_AGENT, RobotsPolicy, parse_robots
 from ..functions.urls import (
     canonicalize_url,
     derive_custom_id,
@@ -139,10 +139,10 @@ def crawl_oracle(
 
         hk = host_key(url)
         if hk not in policy_cache:
-            policy_cache[hk] = parse_robots(robots.get(hk, ""), config.user_agent)
+            policy_cache[hk] = parse_robots(robots.get(hk, ""), DEFAULT_USER_AGENT)
         policy = policy_cache[hk]
 
-        keyword_hit = matches_keywords(url, list(config.keywords), save_all=config.save_all_html)
+        keyword_hit = matches_keywords(url, DEFAULT_KEYWORDS)
 
         if not policy.is_allowed(url_path(url)):
             # dequeued but not fetched (src/main.rs:684-686); stays in seen

@@ -131,9 +131,6 @@ class Catalog:
             if rno > last_committed or ".tmp-" in name:
                 shutil.rmtree(os.path.join(tdir, name))
 
-    def read_round(self, table: str, round_no: int, schema: T.StructType) -> DataFrame:
-        return self.spark.read.schema(schema).parquet(self.round_dir(table, round_no))
-
     def read_rounds(self, table: str, rounds: list[int], schema: T.StructType) -> DataFrame:
         """Union of the given round dirs. Every requested round must exist: a
         lost frontier dir would silently shrink the URL-seen set and

@@ -29,15 +29,17 @@ def spark():
 @pytest.fixture(scope="session")
 def smoke_fixture():
     from crawler_german_localpoliticans_spark import fixtures
+    from fixture_profiles import SMOKE
 
-    return fixtures.generate(fixtures.SMOKE)
+    return fixtures.generate(SMOKE)
 
 
 @pytest.fixture(scope="session")
 def correctness_fixture():
     from crawler_german_localpoliticans_spark import fixtures
+    from fixture_profiles import CORRECTNESS
 
-    return fixtures.generate(fixtures.CORRECTNESS)
+    return fixtures.generate(CORRECTNESS)
 
 
 @pytest.fixture(scope="session")

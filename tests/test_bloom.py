@@ -95,7 +95,7 @@ def test_crawl_bloom_versions_equal_cumulative_frontier_inserts(spark, smoke_dir
         str(tmp_path / "fresh"), PARTS, config.bloom_capacity_per_partition, config.bloom_fpp
     )
     for k in versions:
-        rnd = driver.catalog.read_round("frontier", k, FRONTIER_SCHEMA)
+        rnd = driver.catalog.read_rounds("frontier", [k], FRONTIER_SCHEMA)
         fresh.insert(with_hashes(rnd, "url", PARTS), k - 1 if k else None, k).count()
         crawl_dir, fresh_dir = driver.bloom._vdir(k), fresh._vdir(k)
         names = sorted(n for n in os.listdir(crawl_dir) if n.startswith("part-"))

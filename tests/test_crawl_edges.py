@@ -14,7 +14,8 @@ from oracle_reference import crawl_order
 
 
 def run_both(spark, tmp_path, seeds, pages, robots, config):
-    from crawler_german_localpoliticans_spark.fixtures import WebFixture, SMOKE
+    from crawler_german_localpoliticans_spark.fixtures import WebFixture
+    from fixture_profiles import SMOKE
 
     fx = WebFixture(
         SMOKE, seeds, pages, robots,

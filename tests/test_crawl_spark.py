@@ -46,7 +46,8 @@ def assert_exact_match(tables, oracle_res):
         assert e["robots_blocked"] == o.robots_blocked, o.url
         assert e["fetch_failed"] == o.fetch_failed, o.url
 
-    # URL-seen set exact
+    # URL-seen set exact; the table carries the url alone
+    assert tables.url_seen.columns == ["url"]
     engine_seen = {r["url"] for r in tables.url_seen.select("url").collect()}
     assert engine_seen == oracle_res.url_seen
 
@@ -104,6 +105,16 @@ def test_dedup_idempotent_rerun(spark, smoke_fixture, smoke_dir, tmp_path):
     resumed = driver.run(resume=True)  # nothing left to do: same tables
     after = sorted((r["depth"], r["seq"], r["url"]) for r in resumed.fetched.collect())
     assert before == after
+
+
+def test_run_releases_the_pages_and_policies_caches(spark, smoke_dir, tmp_path):
+    """The driver caches the pages corpus and the parsed policies for the
+    rounds of one run() and releases both when it returns."""
+    from pyspark import StorageLevel
+
+    _, driver = run_engine(spark, smoke_dir, tmp_path, CrawlConfig(seen_partitions=8))
+    assert driver.pages.storageLevel == StorageLevel.NONE
+    assert driver.policies_df.storageLevel == StorageLevel.NONE
 
 
 def test_metrics_recorded(spark, smoke_dir, tmp_path):

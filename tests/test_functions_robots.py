@@ -31,19 +31,19 @@ def test_equal_length_allows():
 
 
 def test_empty_disallow_line_has_no_effect():
-    p = parse_robots("User-agent: *\nDisallow:\n")
+    p = parse_robots("User-agent: *\nDisallow:\n", DEFAULT_USER_AGENT)
     assert p.is_allowed("/x")  # empty prefix has len 0 -> d>0 false
 
 
 def test_wildcard_group():
-    p = parse_robots("User-agent: *\nDisallow: /privat\nCrawl-delay: 2.5\n")
+    p = parse_robots("User-agent: *\nDisallow: /privat\nCrawl-delay: 2.5\n", DEFAULT_USER_AGENT)
     assert not p.is_allowed("/privat/x")
     assert p.is_allowed("/oeffentlich")
     assert p.crawl_delay_ms == 2500  # ceil(2.5 * 1000)
 
 
 def test_fractional_delay_ceil():
-    p = parse_robots("User-agent: *\nCrawl-delay: 0.0001\n")
+    p = parse_robots("User-agent: *\nCrawl-delay: 0.0001\n", DEFAULT_USER_AGENT)
     assert p.crawl_delay_ms == 1  # ceil to ms (src/main.rs:219-222)
 
 
@@ -91,7 +91,7 @@ def test_multiple_matching_groups_merge_first_delay_wins():
 def test_comments_blanks_and_case_insensitive_keys():
     txt = "# kommentar\n\nUSER-AGENT: *\n  DISALLOW :/x\nCrawl-Delay: 1\n"
     # note "DISALLOW :" -> key "disallow" after trim, value "/x"
-    p = parse_robots(txt)
+    p = parse_robots(txt, DEFAULT_USER_AGENT)
     assert not p.is_allowed("/x/y")
     assert p.crawl_delay_ms == 1000
 
@@ -103,7 +103,7 @@ def test_no_matching_group_allows_all():
 
 def test_rules_before_any_ua_line():
     # rules accumulate into the headless group; it has no UA so never matches
-    p = parse_robots("Disallow: /x\nUser-agent: *\nDisallow: /y\n")
+    p = parse_robots("Disallow: /x\nUser-agent: *\nDisallow: /y\n", DEFAULT_USER_AGENT)
     assert p.is_allowed("/x")
     assert not p.is_allowed("/y")
 
@@ -113,12 +113,16 @@ def test_nonfinite_and_negative_delay_saturating_cast():
     (src/main.rs:219-221) — a SATURATING float cast: NaN -> 0, negative -> 0,
     +inf -> u64::MAX. The port clamps +inf to i64::MAX (the engine's delay
     columns are signed 64-bit); everything else matches bit-for-bit."""
-    assert parse_robots("User-agent: *\nCrawl-delay: inf\n").crawl_delay_ms == 2**63 - 1
-    assert parse_robots("User-agent: *\nCrawl-delay: Infinity\n").crawl_delay_ms == 2**63 - 1
-    assert parse_robots("User-agent: *\nCrawl-delay: nan\n").crawl_delay_ms == 0
-    assert parse_robots("User-agent: *\nCrawl-delay: -3\n").crawl_delay_ms == 0
-    assert parse_robots("User-agent: *\nCrawl-delay: -inf\n").crawl_delay_ms == 0
+
+    def delay(value: str):
+        return parse_robots(f"User-agent: *\nCrawl-delay: {value}\n", DEFAULT_USER_AGENT).crawl_delay_ms
+
+    assert delay("inf") == 2**63 - 1
+    assert delay("Infinity") == 2**63 - 1
+    assert delay("nan") == 0
+    assert delay("-3") == 0
+    assert delay("-inf") == 0
     # huge finite values saturate too, exactly like the Rust cast
-    assert parse_robots("User-agent: *\nCrawl-delay: 1e30\n").crawl_delay_ms == 2**63 - 1
+    assert delay("1e30") == 2**63 - 1
     # unparseable stays None (Rust: parse::<f64>() Err -> no delay)
-    assert parse_robots("User-agent: *\nCrawl-delay: bald\n").crawl_delay_ms is None
+    assert delay("bald") is None

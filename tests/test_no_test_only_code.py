@@ -8,9 +8,11 @@ name is used as an attribute there (a subclass of an outside class keeps
 its methods, which the outside code may call). A mention in a docstring, a
 comment or a string does not count.
 
-Options: every defaulted parameter of a package function or method is passed
-by some call in an entry point or in the package. A parameter that no caller
-sets is a constant, and belongs in the module as one.
+Options: every defaulted parameter of a package function or method, and
+every defaulted field of a frozen package dataclass, is set by some call in
+an entry point or in the package (a field by position or by keyword in a
+call to its class). A parameter or field that no caller sets is a constant,
+and belongs in the module, or on the class as a `ClassVar`, as one.
 
 Entry points are `__spark_entry__.py`, the two bench scripts, `perfbench/`
 and `scripts/`; tests are not, so code or an option that only a test uses
@@ -96,15 +98,36 @@ def test_every_package_definition_is_reachable_from_an_entry_point():
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
+def _frozen_dataclass_fields(cls: ast.ClassDef) -> list[ast.AnnAssign] | None:
+    """The fields of a `@dataclass(frozen=True)` class in order (a `ClassVar`
+    is no field), or None for any other class."""
+    frozen = any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", getattr(d.func, "attr", None)) == "dataclass"
+        and any(k.arg == "frozen" and getattr(k.value, "value", None) is True for k in d.keywords)
+        for d in cls.decorator_list
+    )
+    if not frozen:
+        return None
+    return [s for s in cls.body if isinstance(s, ast.AnnAssign) and not (
+        isinstance(s.annotation, ast.Subscript) and getattr(s.annotation.value, "id", None) == "ClassVar")]
+
+
 def _package_functions(trees: dict[str, ast.Module]):
     """(key, lookup name, positional params, all params, defaulted params,
     node) per package def; a method's self/cls is dropped, and `__init__`
-    is looked up under its class name (a call to the class)."""
+    is looked up under its class name (a call to the class). A frozen
+    dataclass counts as its generated `__init__`: its fields are the
+    parameters, and a field with a default is a defaulted one."""
     out = []
 
     def visit(node, mod, cls):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, ast.ClassDef):
+                fields = _frozen_dataclass_fields(child)
+                if fields is not None:
+                    names = [f.target.id for f in fields]
+                    dflt = {f.target.id for f in fields if f.value is not None}
+                    out.append((f"{mod}: {child.name}", child.name, names, names, dflt, child))
                 visit(child, mod, child.name)
             elif isinstance(child, _FUNCS):
                 a = child.args
@@ -127,11 +150,11 @@ def _package_functions(trees: dict[str, ast.Module]):
 
 
 def test_every_defaulted_parameter_is_passed_by_a_caller():
-    """A call passes a parameter by position, by keyword, or through a
-    `*args` / `**kwargs` splat. It does not pass one when the argument is
-    only an enclosing package function's own defaulted parameter that
-    nothing passes in turn (forwarding an unset default sets nothing); that
-    rule is applied until nothing changes."""
+    """A call passes a parameter (or sets a field) by position, by keyword,
+    or through a `*args` / `**kwargs` splat. It does not pass one when the
+    argument is only an enclosing package function's own defaulted
+    parameter that nothing passes in turn (forwarding an unset default sets
+    nothing); that rule is applied until nothing changes."""
     trees = {str(path.relative_to(PACKAGE)): ast.parse(path.read_text())
              for path in sorted(PACKAGE.rglob("*.py"))}
     by_name: dict[str, list] = {}
@@ -180,4 +203,4 @@ def test_every_defaulted_parameter_is_passed_by_a_caller():
                   if (k, p) in defaulted - passed and (via not in defaulted or via in passed)}:
         passed |= new
     unpassed = [f"{key}({p})" for key, p in sorted(defaulted - passed)]
-    assert not unpassed, "defaulted parameters no caller passes:\n  " + "\n  ".join(unpassed)
+    assert not unpassed, "defaulted parameters and fields no caller passes:\n  " + "\n  ".join(unpassed)

@@ -143,7 +143,6 @@ def test_robots_policies_join_scales_past_broadcast(spark):
     results are exact and identical either way. Past the (cached) policy
     parse, no row crosses into Python in either mode: the longest-prefix
     match is Column expressions."""
-    from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
     from crawler_german_localpoliticans_spark.plans.crawl import (
         evaluate_robots,
         parse_policies_df,
@@ -156,7 +155,7 @@ def test_robots_policies_join_scales_past_broadcast(spark):
             F.col("id") % 3 == 0, F.lit("User-agent: *\nDisallow: /priv\nCrawl-delay: 2\n")
         ).otherwise(F.lit("")).alias("robots_txt"),
     )
-    policies = parse_policies_df(robots, DEFAULT_CONFIG).persist()
+    policies = parse_policies_df(robots).persist()
     assert policies.count() == n_hosts
     frontier = spark.range(0, n_hosts, 7).select(
         F.concat(F.lit("https://h"), F.col("id"), F.lit(".de/priv/x")).alias("url"),

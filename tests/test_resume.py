@@ -72,6 +72,34 @@ def test_kill_after_round0_resume_exact(spark, smoke_dir, tmp_path):
     assert all("lineage" in e for e in entries)
 
 
+def test_resume_with_a_missing_frontier_round_raises(spark, smoke_dir, tmp_path):
+    """A resume whose next frontier round is committed but gone from disk is
+    missing state: it raises MissingRoundError naming the table, and the
+    run's caches are released on the way out."""
+    from pyspark import StorageLevel
+
+    from crawler_german_localpoliticans_spark.sources.tables import MissingRoundError
+
+    config = CrawlConfig(seen_partitions=8)
+    robots = read_robots(spark, f"{smoke_dir}/robots.parquet")
+    seeds = seeds_from_table(spark.read.parquet(f"{smoke_dir}/seeds.parquet"))
+    work = str(tmp_path / "work")
+    CrawlDriver(spark, work, f"{smoke_dir}/pages.parquet", robots, config).run(seeds)
+
+    ckpt = os.path.join(work, "checkpoints.jsonl")
+    with open(ckpt) as f:
+        first = f.readline()
+    with open(ckpt, "w") as f:
+        f.write(first)  # only round 0 committed
+    shutil.rmtree(os.path.join(work, "frontier", "round=000001"))
+
+    driver = CrawlDriver(spark, work, f"{smoke_dir}/pages.parquet", robots, config)
+    with pytest.raises(MissingRoundError, match="frontier"):
+        driver.run(resume=True)
+    assert driver.pages.storageLevel == StorageLevel.NONE
+    assert driver.policies_df.storageLevel == StorageLevel.NONE
+
+
 def test_lineage_of_a_torn_round_file_raises(tmp_path):
     """A round dir whose part file has a torn footer is corrupt state: the
     lineage read raises instead of recording rows None. A missing dir (the

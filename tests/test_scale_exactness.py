@@ -11,26 +11,17 @@ import pytest
 
 from crawler_german_localpoliticans_spark import fixtures
 from crawler_german_localpoliticans_spark.config import CrawlConfig
-from crawler_german_localpoliticans_spark.fixtures import FixtureProfile, write_fixture_parquet
+from crawler_german_localpoliticans_spark.fixtures import write_fixture_parquet
 from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
 from crawler_german_localpoliticans_spark.plans.oracle import crawl_oracle
 from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
 from crawler_german_localpoliticans_spark.sources.tables import read_robots
 from oracle_reference import crawl_order
+from fixture_profiles import STRESS
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("SPARK_SLOW_TESTS") != "1",
     reason="large-profile stress; set SPARK_SLOW_TESTS=1",
-)
-
-STRESS = FixtureProfile(
-    "stress",
-    hosts=200,
-    pages_per_host=50,
-    max_links=16,
-    hot_host_factor=100,
-    robots_disallow_hosts=40,
-    robots_delay_hosts=20,
 )
 
 

@@ -9,7 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from crawler_german_localpoliticans_spark.functions.html import extract_links, extract_text
-from crawler_german_localpoliticans_spark.functions.robots import parse_robots
+from crawler_german_localpoliticans_spark.functions.robots import DEFAULT_USER_AGENT, parse_robots
 from crawler_german_localpoliticans_spark.functions.urls import canonicalize_url, join_url
 from html_reference import clean_html
 
@@ -96,6 +96,6 @@ def test_extract_links_total(html):
 @settings(max_examples=200, deadline=None)
 @given(st.text(max_size=400))
 def test_parse_robots_total(txt):
-    p = parse_robots(txt)
+    p = parse_robots(txt, DEFAULT_USER_AGENT)
     assert p.is_allowed("/") in (True, False)
     assert p.crawl_delay_ms is None or p.crawl_delay_ms >= 0

@@ -149,3 +149,20 @@ def test_quality_topk_ranks_only_scored_documents(spark, tmp_path):
     rel = con.sql(entrymod.oracle_sql()["quality_topk_per_source"])
     idx = [rel.columns.index(c) for c in cols]
     assert got == sorted(tuple(r[i] for i in idx) for r in rel.fetchall())
+
+
+def test_session_memo_keeps_only_the_current_sessions_entries(monkeypatch):
+    """A build under a new session drops the entries of every other one, so a
+    stopped session's cached tables are not held for the process's life."""
+    from types import SimpleNamespace
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    monkeypatch.setattr(entrymod, "_SESSION_MEMO", {})
+    a, b = session("app-a"), session("app-b")
+    assert entrymod._session_memo(a, "crawl", ("x",), lambda: "a-x") == "a-x"
+    assert entrymod._session_memo(a, "index", ("y",), lambda: "a-y") == "a-y"
+    assert entrymod._session_memo(a, "crawl", ("x",), lambda: "rebuilt") == "a-x"
+    assert entrymod._session_memo(b, "crawl", ("x",), lambda: "b-x") == "b-x"
+    assert list(entrymod._SESSION_MEMO) == [("crawl", "app-b", "x")]

@@ -142,17 +142,16 @@ def test_custom_id_udf_lineage(spark):
 def test_parse_policies_executor_parse(spark, smoke_dir, smoke_fixture):
     """Policies parsed distributed over the robots table equal the pure
     parser's output for every host."""
-    from crawler_german_localpoliticans_spark.config import DEFAULT_CONFIG
-    from crawler_german_localpoliticans_spark.functions.robots import parse_robots
+    from crawler_german_localpoliticans_spark.functions.robots import DEFAULT_USER_AGENT, parse_robots
 
     robots_df = read_robots(spark, f"{smoke_dir}/robots.parquet")
     state = {
         r["host_key"]: (tuple(r["allow"]), tuple(r["disallow"]), r["crawl_delay_ms"])
-        for r in parse_policies_df(robots_df, DEFAULT_CONFIG).collect()
+        for r in parse_policies_df(robots_df).collect()
     }
     assert set(state) == set(smoke_fixture.robots)
     for hk, txt in smoke_fixture.robots.items():
-        p = parse_robots(txt, DEFAULT_CONFIG.user_agent)
+        p = parse_robots(txt, DEFAULT_USER_AGENT)
         assert state[hk] == (tuple(p.allow), tuple(p.disallow), p.crawl_delay_ms), hk
 
 
