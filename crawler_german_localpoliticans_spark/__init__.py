@@ -16,6 +16,8 @@ operators/   DataFrame-level operators (dedup, similarity, textstats, ledger)
 sources/     table schemas, parquet-backed catalog, seed/pages sources
 plans/       the iterative crawl driver: waves, bloom sidecar, politeness,
              checkpoint/resume, and the single-threaded reference oracle
+queries/     the driver registry by family: each query's builder beside
+             the DuckDB SQL that re-derives its rows
 
 The reference is a poll-loop batch system (SURVEY.md §1.2), so incremental
 ingest maps to the iterative batch crawl; there is no streaming layer.

@@ -4,7 +4,7 @@ scoring/dedup: PII detection + redaction and a benchmark contamination check.
 Both are Spark-first:
 
 - PII is pure Column regexp work (whole-stage codegen, zero Python) with
-  regexes shared verbatim with the DuckDB oracle (__spark_entry__.py);
+  regexes shared verbatim with the DuckDB oracle (queries/curation.py);
 - the contamination check is a hashed n-gram join — the industry-standard
   "a document sharing an n-gram with the eval set is contaminated" rule (as
   used for C4/GPT-3-style decontamination) expressed as an Arrow gram-hash
@@ -33,7 +33,7 @@ except TypeError:  # Python < 3.9: no usedforsecurity kwarg (and no FIPS gate)
     _md5 = hashlib.md5
 
 # shared Spark/DuckDB regexes (keep in sync with the oracle in
-# __spark_entry__.py — both engines get THESE strings)
+# queries/curation.py — both engines get THESE strings)
 EMAIL_PAT = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 # international-ish phone: optional +country, then 3 groups of digits with
 # separators; at least 8 digits total is enforced by the shape

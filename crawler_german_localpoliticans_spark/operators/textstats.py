@@ -3,7 +3,7 @@ counting, document fingerprinting.
 
 Everything except the rolling-hash fingerprint is pure Column expressions
 (whole-stage codegen, zero Python) with exact ANSI-SQL equivalents — the
-driver's DuckDB oracle re-runs the same logic (see __spark_entry__.py).
+driver's DuckDB oracle re-runs the same logic (see queries/).
 """
 
 from __future__ import annotations

@@ -30,11 +30,12 @@ Design (scale posture first):
   previous version AND writes the next version in one grouped pass, so the
   crawl's dedup pass is also its bloom write — no separate insert job. The
   files land when the returned frame runs; each part goes to a unique temp
-  name and is renamed into place, so a retried task or a plan that runs the
-  pass twice (both branches of the definite-new/maybe-seen union) rewrites
-  identical bytes. The crawl inserts every deduped child, not only the
-  enqueued ones: the ones the anti-join drops are already in url_seen ⊆
-  the previous version, so the key set (and every bit) is the same.
+  name and is renamed into place, so a retried task rewrites identical
+  bytes. The crawl persists the returned frame, so its definite-new and
+  maybe-seen branches read one pass. The crawl inserts every deduped
+  child, not only the enqueued ones: the ones the anti-join drops are
+  already in url_seen ⊆ the previous version, so the key set (and every
+  bit) is the same.
 - Carry-forward: partitions no candidate touches are hard-linked from the
   previous version before the pass runs; a touched part replaces its link
   by rename, never writes through it (a manifest table would replace this

@@ -57,7 +57,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -81,7 +81,7 @@ class CrawlTables:
     url_seen: DataFrame
     extracted: DataFrame
     frontier: DataFrame
-    metrics: list[dict] = field(default_factory=list)
+    metrics: list[dict]
 
 
 POLICY_SCHEMA = T.StructType(
@@ -153,6 +153,9 @@ def evaluate_robots(df: DataFrame, policies_df: DataFrame) -> DataFrame:
     )
 
 
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
 class CrawlDriver:
     """Iterative BFS crawl over (pages, seeds, robots) with checkpoint/resume."""
 
@@ -167,10 +170,6 @@ class CrawlDriver:
         self.spark = spark
         self.work_dir = work_dir
         self.config = config
-        # without this, persisting the wave freezes a non-AQE plan (no
-        # broadcast conversion, no partition coalescing) — 5-20x slower
-        # rounds; measured in BENCH notes
-        spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         os.makedirs(work_dir, exist_ok=True)
         self.catalog = tbl.Catalog(spark, work_dir)
         self.checkpoints = CheckpointLog(work_dir)
@@ -373,7 +372,10 @@ class CrawlDriver:
             # r+1 = version r ∪ first. The anti-join below hides only
             # candidates already in url_seen ⊆ bloom version r, so the key
             # set (and every bit) equals version r ∪ the enqueued rows.
-            pref = self.bloom.insert(with_hashes(first, "url", cfg.seen_partitions), r, r + 1)
+            # persisted: both branches below read the one pass
+            pref = self.bloom.insert(
+                with_hashes(first, "url", cfg.seen_partitions), r, r + 1
+            ).persist()
             definite_new = pref.where(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = pref.where(F.col("maybe_seen")).drop("maybe_seen")
 
@@ -399,6 +401,7 @@ class CrawlDriver:
                 r + 1, definite_new.unionByName(survivors), ["parent_seq", "pos"], next_seq,
                 known_bounds=(0, max(next_seq - 1, 0)),
             )
+            pref.unpersist()
 
         metrics["enqueued"] = enqueued
         metrics["next_seq"] = next_seq + enqueued
@@ -419,7 +422,14 @@ class CrawlDriver:
         """Run (or resume) the crawl to max_depth. `seeds_df` needs columns
         (raw_url, seed_order) — see sources/seeds.py. The pages and policies
         caches live for this call only: the returned tables read the round
-        dirs, not them."""
+        dirs, not them. So does the session conf set here: the caller's value
+        is back when this returns."""
+        conf = self.spark.conf
+        saved = conf.get(_CACHED_PARTITIONING, None)
+        # without this, persisting the wave freezes a non-AQE plan (no
+        # broadcast conversion, no partition coalescing) — 5-20x slower
+        # rounds; measured in BENCH notes
+        conf.set(_CACHED_PARTITIONING, "true")
         self.pages.persist()
         self.policies_df.persist()
         try:
@@ -427,6 +437,10 @@ class CrawlDriver:
         finally:
             self.pages.unpersist()
             self.policies_df.unpersist()
+            if saved is None:
+                conf.unset(_CACHED_PARTITIONING)
+            else:
+                conf.set(_CACHED_PARTITIONING, saved)
 
     def _run(self, seeds_df: DataFrame | None, resume: bool) -> CrawlTables:
         cfg = self.config
@@ -465,20 +479,20 @@ class CrawlDriver:
             next_seq = self._enqueue(0, seeded, ["seed_order"], 0)
             start_round = 0
 
-        all_metrics: list[dict] = []
         for r in range(start_round, cfg.max_depth + 1):
             m = self._run_round(r, next_seq)
             next_seq = m["next_seq"]
             self.checkpoints.commit(m)
-            all_metrics.append(m)
             if m["enqueued"] == 0 and r < cfg.max_depth:
                 break  # frontier drained early
 
-        return self.result_tables(all_metrics)
+        return self.result_tables()
 
-    def result_tables(self, metrics: list[dict] | None = None) -> CrawlTables:
-        committed = [e["round"] for e in self.checkpoints.entries()]
-        rounds = sorted(set(committed))
+    def result_tables(self) -> CrawlTables:
+        """The tables and metrics of every committed round, a resumed run's
+        earlier rounds included."""
+        entries = self.checkpoints.entries()
+        rounds = sorted({e["round"] for e in entries})
         # frontier round r+1 exists by construction for every committed
         # round r that expanded (r < max_depth), even when it enqueued nothing
         expanded = [r + 1 for r in rounds if r < self.config.max_depth]
@@ -493,5 +507,5 @@ class CrawlDriver:
             url_seen=url_seen,
             extracted=self.catalog.read_rounds("extracted", rounds, tbl.EXTRACTED_SCHEMA),
             frontier=frontier,
-            metrics=metrics or self.checkpoints.entries(),
+            metrics=entries,
         )

@@ -6,8 +6,13 @@ multi-executor cluster"):
     cd /root/repo && zip -qr /tmp/engine.zip crawler_german_localpoliticans_spark
     spark-submit --py-files /tmp/engine.zip scripts/run_crawl.py \
         --pages s3://bucket/pages --seeds-csv s3://bucket/seeds.csv \
-        --robots s3://bucket/robots --work-dir s3://bucket/crawl-state \
+        --robots s3://bucket/robots --work-dir /mnt/shared/crawl-state \
         --max-depth 2 [--resume] [--salt-buckets 64] [--seen-partitions 8192]
+
+The work dir must be a local or mounted path that the driver and every
+executor see: the catalog, the checkpoint log and the bloom sidecar rename,
+open and np.load their files there with plain file-system calls, so an
+object-store URI does not work.
 
 Local smoke (what the sandbox runs):
 

@@ -117,6 +117,22 @@ def test_run_releases_the_pages_and_policies_caches(spark, smoke_dir, tmp_path):
     assert driver.policies_df.storageLevel == StorageLevel.NONE
 
 
+def test_run_leaves_the_session_conf_as_it_found_it(spark, smoke_dir, tmp_path):
+    """run() sets the cached-plan partitioning flag for its own rounds only:
+    a caller that had not set it finds it unset again afterwards."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        before = spark.conf.getAll
+        run_engine(spark, smoke_dir, tmp_path, CrawlConfig(seen_partitions=8))
+        assert spark.conf.get(key, None) is None
+        assert spark.conf.getAll == before
+    finally:
+        if saved is not None:
+            spark.conf.set(key, saved)
+
+
 def test_metrics_recorded(spark, smoke_dir, tmp_path):
     config = CrawlConfig(seen_partitions=8)
     tables, driver = run_engine(spark, smoke_dir, tmp_path, config)

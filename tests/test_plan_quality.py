@@ -230,7 +230,8 @@ def test_lsh_pair_join_reads_the_cached_window_unshuffled(spark):
     saved = {k: spark.conf.get(k, None) for k in keys}
     results = []
     try:
-        # the crawl driver sets the flag true on the shared session
+        # the assertions below need the session default, whatever an
+        # earlier test left set
         spark.conf.set(keys[2], "false")
         for broadcast_off in (False, True):
             spark.catalog.clearCache()
@@ -386,14 +387,18 @@ def test_crawl_writes_run_python_once_per_wave(spark, smoke_dir, tmp_path, monke
     Arrow pass, which the fetched write builds. The extracted write only
     reads that pass's cache, the frontier write only reads the dedup pass's
     cache, and the seq kernel applies its bucket offsets as a literal (no
-    local relation, no broadcast)."""
+    local relation, no broadcast). An expansion's frontier write runs the
+    bloom pass once: its lineage holds one FlatMapGroupsInPandas, counted
+    once however many cache scans walk into the plan that holds it."""
     from crawler_german_localpoliticans_spark.config import CrawlConfig
     from crawler_german_localpoliticans_spark.plans.crawl import CrawlDriver
     from crawler_german_localpoliticans_spark.sources.seeds import seeds_from_table
     from crawler_german_localpoliticans_spark.sources.tables import Catalog, read_robots
 
     plans: list[tuple[str, int, list, list]] = []
+    bloom_passes: dict[int, set] = {}
     write_round = Catalog.write_round
+    identity = spark._jvm.System.identityHashCode
 
     def spy(self, table, round_no, df):
         plan = df._jdf.queryExecution().executedPlan()
@@ -403,6 +408,10 @@ def test_crawl_writes_run_python_once_per_wave(spark, smoke_dir, tmp_path, monke
             [(n.nodeName(), n.simpleString(100)) for n in plan_nodes(plan, False)],
             [(n.nodeName(), n.simpleString(100)) for n in plan_nodes(plan, True)],
         ))
+        if table == "frontier":
+            bloom_passes[round_no] = {
+                identity(n) for n in plan_nodes(plan, True) if n.nodeName() == "FlatMapGroupsInPandas"
+            }
         return write_round(self, table, round_no, df)
 
     monkeypatch.setattr(Catalog, "write_round", spy)
@@ -425,6 +434,8 @@ def test_crawl_writes_run_python_once_per_wave(spark, smoke_dir, tmp_path, monke
             passes = [s for n, s in full if n == "ArrowEvalPython" and any(u in s for u in link_udfs)]
             assert len(passes) == 1, (round_no, passes)
             assert all(u in passes[0] for u in link_udfs), passes[0]
+    expansions = {r: len(ids) for r, ids in bloom_passes.items() if r > 0}
+    assert expansions and set(expansions.values()) == {1}, expansions
 
 
 # --- the scan-layout rule (sources/tables.spread) ---------------------------

@@ -64,6 +64,8 @@ def test_kill_after_round0_resume_exact(spark, smoke_dir, tmp_path):
     d2 = CrawlDriver(spark, kill_dir, f"{smoke_dir}/pages.parquet", robots, config)
     resumed = d2.run(resume=True)
     assert collect_tables(resumed) == expected
+    # the metrics cover every committed round, not only the ones this run ran
+    assert [m["round"] for m in resumed.metrics] == list(range(config.max_depth + 1))
 
     # checkpoint log is complete again and lineage re-recorded
     with open(ckpt) as f:

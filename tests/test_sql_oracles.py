@@ -159,10 +159,12 @@ def test_session_memo_keeps_only_the_current_sessions_entries(monkeypatch):
     def session(app_id):
         return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
-    monkeypatch.setattr(entrymod, "_SESSION_MEMO", {})
+    from crawler_german_localpoliticans_spark.queries import common
+
+    monkeypatch.setattr(common, "_SESSION_MEMO", {})
     a, b = session("app-a"), session("app-b")
-    assert entrymod._session_memo(a, "crawl", ("x",), lambda: "a-x") == "a-x"
-    assert entrymod._session_memo(a, "index", ("y",), lambda: "a-y") == "a-y"
-    assert entrymod._session_memo(a, "crawl", ("x",), lambda: "rebuilt") == "a-x"
-    assert entrymod._session_memo(b, "crawl", ("x",), lambda: "b-x") == "b-x"
-    assert list(entrymod._SESSION_MEMO) == [("crawl", "app-b", "x")]
+    assert common._session_memo(a, "crawl", ("x",), lambda: "a-x") == "a-x"
+    assert common._session_memo(a, "index", ("y",), lambda: "a-y") == "a-y"
+    assert common._session_memo(a, "crawl", ("x",), lambda: "rebuilt") == "a-x"
+    assert common._session_memo(b, "crawl", ("x",), lambda: "b-x") == "b-x"
+    assert list(common._SESSION_MEMO) == [("crawl", "app-b", "x")]
